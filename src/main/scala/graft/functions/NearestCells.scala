@@ -21,8 +21,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * left-to-right squared-difference accumulation per centroid, strict
   * `<` argmin (first index wins ties), and the probe list ordered by
   * (distance, index) ascending exactly as `sortBy((d, c))` produced.
+  *
+  * `absolute` switches the per-element difference to |x| − |c| — the
+  * reference's K-means variant-1 metric (src/Kmeans.java:62-70), whose
+  * expression form is `aggregate(zip_with(pow(abs(x) - abs(y), 2)))`.
+  * `StrictMath.pow(d, 2)` is `d * d` exactly (fdlibm special-cases
+  * y == 2), so the kernel's distances are bit-identical to it.
   */
-final class NearestCellsKernel(val flat: Array[Double], val dim: Int)
+final class NearestCellsKernel(val flat: Array[Double], val dim: Int,
+                               val absolute: Boolean = false)
     extends Serializable {
   // dim guard BEFORE the division: a dim=0 matrix must die with the
   // contract message, not an unexplained ArithmeticException.
@@ -30,6 +37,9 @@ final class NearestCellsKernel(val flat: Array[Double], val dim: Int)
   val n: Int = flat.length / dim
   require(n * dim == flat.length,
     s"centroid matrix ${flat.length} doubles not divisible by dim $dim")
+  require(n > 0, "centroid matrix must be non-empty")
+  // |c| once per kernel, not once per row
+  private val flatAbs: Array[Double] = if (absolute) flat.map(math.abs) else null
 
   @inline private def sqDistAt(u: Array[Double], c: Int): Double = {
     var acc = 0.0
@@ -39,21 +49,37 @@ final class NearestCellsKernel(val flat: Array[Double], val dim: Int)
     acc
   }
 
+  @inline private def absSqDistAt(u: Array[Double], c: Int): Double = {
+    var acc = 0.0
+    val off = c * dim
+    var i = 0
+    while (i < dim) {
+      val d = math.abs(u(i)) - flatAbs(off + i); acc += d * d; i += 1
+    }
+    acc
+  }
+
+  @inline private def distAt(u: Array[Double], c: Int): Double =
+    if (absolute) absSqDistAt(u, c) else sqDistAt(u, c)
+
   private def checkDim(len: Int): Unit =
     require(len == dim, s"ragged vector: $len dims vs centroid $dim")
 
   /** Nearest-centroid index (the IVF cell assign) — the single primitive
     * core; the fused IVF-PQ kernel shares it, so argmin/tie rules live
-    * in exactly one place.
+    * in exactly one place. The rule is Spark's
+    * `array_position(d, array_min(d))`: the first index of the minimum,
+    * with NaN above every number (+Inf included). On finite distances
+    * that is the plain strict-`<` scan.
     */
   def best(u: Array[Double]): Int = {
     checkDim(u.length)
     var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
+    var bestD = distAt(u, 0)
+    var c = 1
     while (c < n) {
-      val d = sqDistAt(u, c)
-      if (d < bestD) { bestD = d; best = c }
+      val d = distAt(u, c)
+      if (d < bestD || (bestD != bestD && d == d)) { bestD = d; best = c }
       c += 1
     }
     best
@@ -71,7 +97,7 @@ final class NearestCellsKernel(val flat: Array[Double], val dim: Int)
     var count = 0
     var c = 0
     while (c < n) {
-      val d = sqDistAt(u, c)
+      val d = distAt(u, c)
       if (count < cap) {
         var pos = count
         while (pos > 0 && d < dist(pos - 1)) {
@@ -137,13 +163,13 @@ case class NearestCells(child: Expression, kernel: NearestCellsKernel,
 }
 
 object NearestCells {
-  def kernel(centroids: Array[Array[Double]]): NearestCellsKernel = {
+  def kernel(centroids: Array[Array[Double]], absolute: Boolean = false): NearestCellsKernel = {
     require(centroids.nonEmpty && centroids.head.nonEmpty,
       "centroid matrix must be non-empty with non-empty rows")
     val dim = centroids.head.length
     require(centroids.forall(_.length == dim),
       s"ragged centroid matrix: dims ${centroids.map(_.length).distinct.mkString(",")}")
-    new NearestCellsKernel(centroids.flatten, dim)
+    new NearestCellsKernel(centroids.flatten, dim, absolute)
   }
 
   /** Column API: nearest-cell id of an `array<double>` vector. */

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.functions.NearestCells
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,15 +14,20 @@ import org.apache.spark.sql.functions._
   * all cols). Both re-read the centers file in every map task's setup()
   * and round-trip centroids through HDFS per iteration
   * (src/Kmeans.java:39-46,259-277); here centroid state is a driver-local
-  * k×dim array embedded as literals into the assignment expression, so one
-  * iteration = one narrow map (no shuffle) + one partial-aggregated
-  * groupBy of k×dim state — the shape that scales to 100 TB inputs.
+  * k×dim array. One Lloyd round is one Spark job of one stage with no
+  * shuffle — the reference's one MR job per iteration (map assigns,
+  * reducer averages; src/Kmeans.java:170-183) with the reduce folded
+  * into the map side, as MLlib's KMeans runs it: each task assigns its
+  * rows in-plan and folds them into k×dim sums and k counts held in
+  * primitive arrays, and the driver merges one small array pair per
+  * task. Driver state per round is O(tasks × k × dim), whatever the
+  * input size.
   *
-  * Assignment is in-plan and codegen'd, no UDF: the reference-quirk
-  * metrics as pure Catalyst expressions (zip_with/aggregate/array_min/
-  * array_position), EuclideanSq through the native NearestCells
-  * expression (same argmin, primitive loops, codegen cached across
-  * iterations).
+  * Assignment is in-plan and codegen'd, no UDF: EuclideanSq and the
+  * reference's SqEuclidean through the native NearestCells kernel
+  * (primitive loops, codegen cached across iterations), Normalized as
+  * pure Catalyst expressions (zip_with/aggregate/array_min/
+  * array_position).
   */
 object KMeans {
 
@@ -68,8 +75,10 @@ object KMeans {
       val terms = zip_with(vec, typedLit(center), (x, y) => {
         val num = abs(x) - abs(y)
         val den = abs(x) + abs(y)
-        if (zeroSafe) when(den === 0.0, lit(0.0)).otherwise(pow(num / den, 2))
-        else pow(num / den, 2)
+        // 0/0 spelled out: under ANSI mode (Spark 4's default) a double
+        // division by zero raises DIVIDE_BY_ZERO instead of giving NaN
+        when(den === 0.0, lit(if (zeroSafe) 0.0 else Double.NaN))
+          .otherwise(pow(num / den, 2))
       })
       aggregate(terms, lit(0.0), (acc, x) => acc + x)
     }
@@ -87,47 +96,90 @@ object KMeans {
     * (array_min treats NaN as greater than all numbers), matching the
     * reference's `NaN < min == false` skip.
     *
-    * EuclideanSq takes the native [[graft.functions.NearestCells]] fast
-    * path: bit-identical distances (left-to-right squared-diff sum),
-    * identical first-index tie rule, but primitive loops instead of
-    * per-element interpreted HOF evaluation — and since the centers
-    * live in a kernel REFERENCE object rather than as plan literals,
-    * the generated code is identical across Lloyd iterations, so
-    * codegen compiles once per training run instead of once per
-    * iteration. (The kernel enforces exact dims, which every caller's
-    * fixed-dim corpus satisfies; the reference-quirk metrics keep the
-    * expression form — their golden semantics include NaN behavior the
-    * kernel has no business reimplementing.)
+    * EuclideanSq and SqEuclidean take the native
+    * [[graft.functions.NearestCells]] kernel (SqEuclidean in its
+    * |x| − |c| mode): bit-identical distances to [[Metric.dist]]
+    * (left-to-right squared-difference sum), the same first-index tie
+    * rule and NaN-above-everything order, but primitive loops instead of
+    * per-element interpreted HOF evaluation — and since the centers live
+    * in a kernel REFERENCE object rather than as plan literals, the
+    * generated code is identical across Lloyd iterations, so codegen
+    * compiles once per training run instead of once per iteration. The
+    * kernel is stricter than the expression on dirty input: a ragged
+    * vector or a null element fails with a named IllegalArgumentException
+    * where the expression would yield a null cluster. Normalized keeps
+    * the expression form: its golden semantics include a per-element
+    * 0/0 rule the kernel has no business reimplementing.
     */
   def assignExpr(vec: Column, centers: Seq[Seq[Double]], metric: Metric): Column =
     metric match {
-      case EuclideanSq =>
-        val k = graft.functions.NearestCells.kernel(centers.map(_.toArray).toArray)
-        (graft.functions.NearestCells.cell(vec, k) + lit(1)).cast("int")
+      case EuclideanSq | SqEuclidean =>
+        val k = NearestCells.kernel(centers.map(_.toArray).toArray,
+          absolute = metric == SqEuclidean)
+        (NearestCells.cell(vec, k) + lit(1)).cast("int")
       case _ =>
         val dists = array(centers.map(c => metric.dist(vec, c)): _*)
         array_position(dists, array_min(dists)).cast("int")
     }
 
-  /** Adds a 1-based `cluster` column. Narrow map — centers ship as literals
-    * in the plan (the Spark analogue of the reference's per-task centers
-    * file read at src/Kmeans.java:39-46, minus the per-task I/O).
+  /** Adds a 1-based `cluster` column. Narrow map — centers ship in the
+    * plan (the Spark analogue of the reference's per-task centers file
+    * read at src/Kmeans.java:39-46, minus the per-task I/O).
     */
   def assign(df: DataFrame, vecCol: String, centers: Array[Array[Double]],
              metric: Metric): DataFrame =
     df.withColumn("cluster", assignExpr(col(vecCol), centers.map(_.toSeq).toSeq, metric))
 
-  /** Per-cluster mean vectors, computed as `dim` per-column avgs in one
-    * hash aggregate (partial map-side combine; constant state per group —
-    * replaces the reference reducer's whole-group ArrayList buffering at
-    * src/Kmeans.java:90-97). Returns centers keyed by cluster id.
+  /** One Lloyd round: per-cluster coordinate sums (row-major k×dim) and
+    * row counts of `data` assigned to `centers`. One job, one stage: each
+    * task folds its rows, in row order, into primitive arrays and returns
+    * them as its task result — never an accumulator, which a retried task
+    * would add twice — and the driver adds them up in partition order.
+    * The caller's `sum / count.toDouble` is what Spark's `avg` computes.
+    * On integer-valued vectors (PM2.5) every sum is exact, so no merge
+    * order can move a mean; on general doubles the order is fixed by the
+    * partitioning.
     */
-  def meanVectors(assigned: DataFrame, vecCol: String, dim: Int): Map[Int, Array[Double]] = {
-    val aggs = (1 to dim).map(i => avg(element_at(col(vecCol), i)).as(s"m$i"))
-    assigned.groupBy(col("cluster")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getInt(0) -> (1 to dim).map(i => r.getDouble(i)).toArray)
-      .toMap
+  private def roundSums(data: DataFrame, vecCol: String, centers: Array[Array[Double]],
+                        metric: Metric): (Array[Double], Array[Long]) = {
+    val k = centers.length
+    val dim = centers.head.length
+    val partials = assign(data, vecCol, centers, metric)
+      .select(col("cluster"), col(vecCol).cast("array<double>"))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val sums = new Array[Double](k * dim)
+        val counts = new Array[Long](k)
+        rows.foreach { r =>
+          // every metric assigns a null cluster to a null, ragged or
+          // null-element vector (the kernel metrics fail on the last two
+          // first), so a clustered row is dense with `dim` elements
+          if (r.isNullAt(0))
+            throw new IllegalArgumentException("k-means round: a row has a null " +
+              "cluster (its vector is null, ragged or has a null element) — " +
+              "filter or impute dirty vectors before training")
+          val c = r.getInt(0) - 1
+          val v = r.getArray(1)
+          val off = c * dim
+          var i = 0
+          while (i < dim) { sums(off + i) += v.getDouble(i); i += 1 }
+          counts(c) += 1
+        }
+        Iterator.single((sums, counts))
+      }
+    val perTask = try partials.collect() catch {
+      // a contract violation in a task surfaces as itself, not as the
+      // job-abort SparkException that wraps it
+      case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
+        throw e.getCause
+    }
+    val sums = new Array[Double](k * dim)
+    val counts = new Array[Long](k)
+    for ((s, n) <- perTask) {
+      for (i <- sums.indices) sums(i) += s(i)
+      for (c <- 0 until k) counts(c) += n(c)
+    }
+    (sums, counts)
   }
 
   /** Result of [[lloyd]]: final centers plus iteration count. */
@@ -135,7 +187,9 @@ object KMeans {
 
   /** Driver-side Lloyd iteration (the reference's while loop at
     * src/Kmeans.java:170-183 / kmeans.java:135-153 without the HDFS
-    * centroid round-trip).
+    * centroid round-trip), one job per round for every metric. A row
+    * whose vector is null, ragged or has a null element fails the round
+    * with an IllegalArgumentException.
     *
     * @param stopOnZeroDelta variant-2 stop rule (kmeans.java:221-224):
     *   stop when the total old-vs-new center distance is exactly 0.
@@ -164,8 +218,11 @@ object KMeans {
       var iter = 0
       var converged = false
       while (iter < maxIter && !converged) {
-        val byId = meanVectors(assign(data, vecCol, centers, metric), vecCol, dim)
-        val next = centers.zipWithIndex.map { case (old, i) => byId.getOrElse(i + 1, old) }
+        val (sums, counts) = roundSums(data, vecCol, centers, metric)
+        val next = Array.tabulate(centers.length) { c =>
+          if (counts(c) == 0L) centers(c)
+          else Array.tabulate(dim)(i => sums(c * dim + i) / counts(c).toDouble)
+        }
         iter += 1
         if (stopOnZeroDelta) {
           val delta = centers.zip(next).map { case (a, b) => metric.distLocal(a, b) }.sum

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AsOfJoin, Components, Dedup, Sampling, Similarity}
+import graft.operators.{AsOfJoin, Components, Dedup, KMeans, Sampling, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -315,6 +315,28 @@ class DegenerateInputsSpec extends SparkSpec {
         .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
       assert(msgs.toLowerCase.contains("empty"),
         s"$name on empty corpus: wanted a pointed 'empty' message, got: $msgs")
+    }
+  }
+
+  test("k-means: a null element, null vector or ragged vector fails with a named error") {
+    // a PM2.5 row with an empty cell parses to a null element. It used
+    // to die on an opaque ROW_VALUE_IS_NULL (getInt on a null cluster)
+    // deep in the mean aggregate; now the round names the contract.
+    import spark.implicits._
+    val clean = Seq(Some(Seq[Option[Double]](Some(1.0), Some(2.0))),
+      Some(Seq[Option[Double]](Some(9.0), Some(8.0))))
+    val dirty = Seq(
+      ("null element", clean :+ Some(Seq[Option[Double]](Some(3.0), None)), "null"),
+      ("null vector", clean :+ None, "null"),
+      ("ragged vector", clean :+ Some(Seq[Option[Double]](Some(3.0))), "ragged"))
+    val init = Array(Array(1.0, 2.0), Array(9.0, 8.0))
+    for ((what, vecs, word) <- dirty;
+         m <- Seq(KMeans.SqEuclidean, KMeans.Normalized())) {
+      val df = vecs.map(Tuple1(_)).toDF("vec")
+      val e = intercept[IllegalArgumentException] {
+        KMeans.lloyd(df, "vec", init, m, maxIter = 2)
+      }
+      assert(e.getMessage.contains(word), s"$what under $m: ${e.getMessage}")
     }
   }
 }

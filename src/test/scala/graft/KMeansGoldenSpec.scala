@@ -202,11 +202,7 @@ class KMeansGoldenSpec extends SparkSpec {
       val w = KMeans.wcss(pm25, "vec", centers, SqEuclidean)
       assert(w <= prev + 1e-6, s"WCSS increased: $prev -> $w")
       prev = w
-      val byId = KMeans.assign(pm25, "vec", centers, SqEuclidean)
-      centers = {
-        val m = KMeans.meanVectors(byId, "vec", 24)
-        centers.zipWithIndex.map { case (old, i) => m.getOrElse(i + 1, old) }
-      }
+      centers = KMeans.lloyd(pm25, "vec", centers, SqEuclidean, maxIter = 1).centers
     }
   }
 

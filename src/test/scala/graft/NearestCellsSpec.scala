@@ -1,11 +1,13 @@
 package graft
 
 import graft.functions.NearestCells
+import graft.operators.KMeans
 import org.apache.spark.sql.functions._
 
 /** Parity + contract tests for the native nearest-centroid expression
-  * that replaced the IVF-family cell/probe UDFs: same argmin, same
-  * (distance, index) probe order, same ragged-vector loud failure.
+  * that replaced the IVF-family cell/probe UDFs and the k-means metrics'
+  * HOF argmin: same argmin, same (distance, index) probe order, same
+  * ragged-vector loud failure.
   */
 class NearestCellsSpec extends SparkSpec {
 
@@ -90,5 +92,37 @@ class NearestCellsSpec extends SparkSpec {
       NearestCells.kernel(Array(Array(1.0, 2.0), Array(1.0)))
     }
     assert(e.getMessage.contains("ragged centroid matrix"))
+  }
+
+  test("kernel argmin equals the metric's array_position(array_min) on adversarial rows") {
+    // ties, zeros, signed values (SqEuclidean's |x| - |c| quirk maps -c
+    // onto c), distances that overflow to +Inf, and NaN from a NaN
+    // element or from Inf - Inf. The expression's rule — first index of
+    // the minimum, NaN above +Inf — is the one the kernel must follow;
+    // a NaN centroid placed first pins the NaN-vs-Inf order.
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    val base = Array(Array(1.0, 2.0, 3.0), Array(0.0, 0.0, 0.0),
+      Array(1.0, 2.0, 3.0), Array(-4.0, 5.0, -6.0), Array(1e200, 0.0, 0.0),
+      Array(nan, 1.0, 1.0))
+    val rows = Seq(Seq(1.0, 2.0, 3.0), Seq(-1.0, -2.0, -3.0), Seq(0.0, 0.0, 0.0),
+      Seq(-0.0, 0.0, -0.0), Seq(4.0, 5.0, 6.0), Seq(-4.0, -5.0, 6.0),
+      Seq(1e200, 0.0, 0.0), Seq(-1e200, 1e200, 0.0), Seq(1e300, 1e300, 1e300),
+      Seq(nan, 0.0, 0.0), Seq(0.0, nan, 0.0), Seq(inf, 0.0, 0.0),
+      Seq(-inf, 1.0, 1.0), Seq(inf, inf, inf)) ++
+      Seq.fill(40)(Seq.fill(3)((rng.nextInt(11) - 5).toDouble))
+    val df = vecsDf(rows.zipWithIndex.map { case (v, i) => i.toLong -> v.toArray })
+    for (cents <- Seq(base, base.last +: base.init);
+         metric <- Seq(KMeans.SqEuclidean, KMeans.EuclideanSq)) {
+      val k = NearestCells.kernel(cents, absolute = metric == KMeans.SqEuclidean)
+      val dists = array(cents.map(c => metric.dist(col("v"), c.toSeq)).toIndexedSeq: _*)
+      val got = df.select(col("id"), NearestCells.cell(col("v"), k).as("kernel"),
+          (array_position(dists, array_min(dists)) - 1).cast("int").as("expr"))
+        .collect()
+      for (r <- got)
+        assert(r.getInt(1) === r.getInt(2),
+          s"$metric row ${rows(r.getLong(0).toInt)}: kernel cell ${r.getInt(1)}, " +
+            s"expression cell ${r.getInt(2)}")
+    }
   }
 }
