@@ -5,62 +5,49 @@ import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` is the t2 correctness corpus: one entry per operator declared
-  * in SURVEY.md §2B; `oracleSql` carries the DuckDB-equivalent SQL for
-  * every SQL-expressible entry (hash-compared by the driver at sf0.01).
+  * `all` is the t2 correctness corpus: one [[graft.queries.Query]] per
+  * operator declared in SURVEY.md §2B, each carrying its Spark plan and
+  * the DuckDB-equivalent SQL the driver hash-compares it against at
+  * sf0.01. `queries` and `oracleSql` are name-keyed views of that list.
   */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    AggQueries.defs("q1_agg")(spark, "/root/testdata/sf0.001")
+    queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  private val defGroups: Seq[Map[String, (SparkSession, String) => DataFrame]] =
-    Seq(RelationalQueries.defs, SubqueryQueries.defs, JoinQueries.defs,
-      FlagshipQueries.defs, TpchQueries.defs, AggQueries.defs,
-      WindowQueries.defs, ScalarQueries.defs, StatsQueries.defs,
-      TextMetricsQueries.defs, FuzzQueries.defs, KMeansQueries.defs,
-      PipelineQueries.defs, DocStructQueries.defs, CurationQueries.defs,
-      GraphQueries.defs, FunnelQueries.defs, StreamQueries.defs)
-
-  /** Merge the group maps, REQUIRING disjoint names. The check is
-    * load-bearing: `++` over maps is latest-wins, so a name accidentally
-    * declared in two groups would silently REPLACE the earlier row — the
-    * corpus would shrink by one and nothing would fail (round 15 caught
-    * exactly this: a second `q_decontaminate` shadowed the existing
-    * curation row until a count diff surfaced it). A duplicate now names
-    * itself at first touch.
+  /** Return `qs`, REQUIRING distinct names. The check is load-bearing:
+    * the name-keyed views are latest-wins, so a name accidentally
+    * declared twice would silently REPLACE the earlier row — the corpus
+    * would shrink by one and nothing would fail (round 15 caught exactly
+    * this: a second `q_decontaminate` shadowed the existing curation row
+    * until a count diff surfaced it). A duplicate now names itself at
+    * first touch.
     */
-  private def disjointUnion[V](groups: Seq[Map[String, V]],
-                               what: String): Map[String, V] = {
-    val dup = groups.flatMap(_.keys)
-      .groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
+  private[graft] def distinctNames(qs: Seq[Query]): Seq[Query] = {
+    val dup = qs.groupBy(_.name).collect { case (n, xs) if xs.size > 1 => n }
     require(dup.isEmpty,
-      s"$what name(s) declared in more than one group: ${dup.mkString(", ")}")
-    groups.reduce(_ ++ _)
+      s"query name(s) declared in more than one group: ${dup.mkString(", ")}")
+    qs
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. lazy val:
-    * every suite, Verify, and Bench read this — the 18-map merge and the
-    * duplicate scan run once, not per call.
+  /** Every corpus row. lazy val: every suite, Verify, and Bench read
+    * this — the merge and the duplicate scan run once, not per call.
     */
+  lazy val all: Seq[Query] = distinctNames(
+    Seq(RelationalQueries.queries, SubqueryQueries.queries, JoinQueries.queries,
+      FlagshipQueries.queries, TpchQueries.queries, AggQueries.queries,
+      WindowQueries.queries, ScalarQueries.queries, StatsQueries.queries,
+      TextMetricsQueries.queries, FuzzQueries.queries, KMeansQueries.queries,
+      PipelineQueries.queries, DocStructQueries.queries, CurationQueries.queries,
+      GraphQueries.queries, FunnelQueries.queries, StreamQueries.queries).flatten)
+
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    disjointUnion(defGroups, "query")
+    all.map(q => q.name -> q.build).toMap
 
-  private val oracleGroups: Seq[Map[String, String]] =
-    Seq(RelationalQueries.oracles, SubqueryQueries.oracles,
-      JoinQueries.oracles, FlagshipQueries.oracles, TpchQueries.oracles,
-      AggQueries.oracles, WindowQueries.oracles, ScalarQueries.oracles,
-      StatsQueries.oracles, TextMetricsQueries.oracles, FuzzQueries.oracles,
-      KMeansQueries.oracles, PipelineQueries.oracles, DocStructQueries.oracles,
-      CurationQueries.oracles, GraphQueries.oracles, FunnelQueries.oracles,
-      StreamQueries.oracles)
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (driver records a weaker rows-only check for those). Same
-    * disjointness contract as [[queries]].
+  /** For each key in [[queries]], equivalent ANSI SQL runnable by DuckDB
+    * on the same parquet tables.
     */
   lazy val oracleSql: Map[String, String] =
-    disjointUnion(oracleGroups, "oracle")
+    all.map(q => q.name -> q.oracleSql).toMap
 }

@@ -34,20 +34,4 @@ object VectorFunctions {
     val denom = l2Norm(a) * l2Norm(b)
     when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
   }
-
-  /** Normalized distance from the reference's variant 2
-    * (`/root/reference/hadoop_tutorial/Kmeans/kmeans.java:59-65`):
-    * sum(((|p|-|q|)/(|p|+|q|))^2). With zeroSafe=true, 0/0 contributes 0;
-    * with zeroSafe=false it reproduces the reference's 0/0 -> NaN poisoning
-    * (SURVEY.md §2A hazards).
-    */
-  def normalizedDist(a: Column, b: Column, zeroSafe: Boolean = true): Column = {
-    val terms = zip_with(asD(a), asD(b), (x, y) => {
-      val num = abs(x) - abs(y)
-      val den = abs(x) + abs(y)
-      if (zeroSafe) when(den === 0.0, lit(0.0)).otherwise(pow(num / den, 2))
-      else pow(num / den, 2)
-    })
-    aggregate(terms, lit(0.0), (acc, x) => acc + x)
-  }
 }

@@ -195,6 +195,10 @@ object KMeans {
     *   stop when the total old-vs-new center distance is exactly 0.
     *   Variant 1 disables it (convergence short-circuit commented out at
     *   src/Kmeans.java:254-257) and always runs maxIter rounds.
+    *   Under `Normalized(zeroSafe = false)` a centre coordinate that stays
+    *   0 from one round to the next contributes 0/0 = NaN to the delta, so
+    *   the rule never fires and lloyd runs all maxIter rounds — as the
+    *   reference does (KMeansLloydSpec pins it).
     * Empty clusters keep their previous center (the reference would
     *   silently drop them — a k-shrinking quirk not worth preserving).
     */

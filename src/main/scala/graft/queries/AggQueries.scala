@@ -15,29 +15,44 @@ import org.apache.spark.sql.functions._
   */
 object AggQueries {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // TPC-H Q1 shape: the flagship scan->hash-agg query. Map-side partial
     // aggregation collapses 6k/60k/600k rows to 4 groups before the shuffle.
-    "q1_agg" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          Num.sumMoney(col("l_extendedprice")).as("sum_base"),
-          Num.sumDiscPrice(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
-          (sum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-          (Num.sumMoney(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
+    Query("q1_agg",
+      """SELECT l_returnflag, l_linestatus,
+                sum(l_quantity) AS sum_qty,
+                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
+                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+                         * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+                sum(l_quantity) / count(*) AS avg_qty,
+                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price,
+                count(*) AS n
+         FROM lineitem GROUP BY l_returnflag, l_linestatus
+         ORDER BY l_returnflag, l_linestatus""",
+      (s, d) => {
+        Tables.lineitem(s, d)
+          .groupBy("l_returnflag", "l_linestatus")
+          .agg(
+            sum(col("l_quantity")).as("sum_qty"),
+            Num.sumMoney(col("l_extendedprice")).as("sum_base"),
+            Num.sumDiscPrice(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
+            (sum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
+            (Num.sumMoney(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
+            count(lit(1)).as("n"))
+          .orderBy("l_returnflag", "l_linestatus")
+      }),
 
-    "q_count_distinct" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .groupBy("l_returnflag")
-        .agg(countDistinct(col("l_orderkey")).as("n_ord"),
-          countDistinct(col("l_partkey")).as("n_part"))
-        .orderBy("l_returnflag")
-    }),
+    Query("q_count_distinct",
+      """SELECT l_returnflag, count(DISTINCT l_orderkey) AS n_ord,
+                count(DISTINCT l_partkey) AS n_part
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+      (s, d) => {
+        Tables.lineitem(s, d)
+          .groupBy("l_returnflag")
+          .agg(countDistinct(col("l_orderkey")).as("n_ord"),
+            countDistinct(col("l_partkey")).as("n_part"))
+          .orderBy("l_returnflag")
+      }),
 
     // HLL sketch. Estimates differ per implementation, so the
     // driver-checkable projection is the accuracy contract: Spark computes
@@ -46,62 +61,87 @@ object AggQueries {
     // recomputes the exact count and states `true`. An HLL regression
     // outside the band flips in_band → hash mismatch → red row.
     // (Also accuracy-property-tested in QueryCorpusSpec.)
-    "q_approx_distinct" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .groupBy("l_returnflag")
-        .agg(approx_count_distinct(col("l_orderkey")).as("approx_ord"),
-          countDistinct(col("l_orderkey")).as("exact_ord"))
-        .select(col("l_returnflag"), col("exact_ord"),
-          col("approx_ord").between(col("exact_ord") * 0.9,
-            col("exact_ord") * 1.1).as("in_band"))
-        .orderBy("l_returnflag")
-    }),
+    Query("q_approx_distinct",
+      """SELECT l_returnflag, count(DISTINCT l_orderkey) AS exact_ord,
+                true AS in_band
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+      (s, d) => {
+        Tables.lineitem(s, d)
+          .groupBy("l_returnflag")
+          .agg(approx_count_distinct(col("l_orderkey")).as("approx_ord"),
+            countDistinct(col("l_orderkey")).as("exact_ord"))
+          .select(col("l_returnflag"), col("exact_ord"),
+            col("approx_ord").between(col("exact_ord") * 0.9,
+              col("exact_ord") * 1.1).as("in_band"))
+          .orderBy("l_returnflag")
+      }),
 
     // Approximate median (GK sketch / percentile_approx). Same contract
     // shape as the HLL row: Spark computes BOTH the sketch and the exact
     // percentile and emits the band check; the oracle states `true`.
     // Sketch state merges in partition order — the 1% band absorbs that
     // nondeterminism while still flagging a real accuracy regression.
-    "q_approx_quantile" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .groupBy("l_returnflag")
-        .agg(percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000))
-            .as("approx_med"),
-          expr("percentile(l_extendedprice, 0.5)").as("exact_med"))
-        .select(col("l_returnflag"),
-          (abs(col("approx_med") - col("exact_med"))
-            <= col("exact_med") * 0.01).as("med_ok"))
-        .orderBy("l_returnflag")
-    }),
+    Query("q_approx_quantile",
+      """SELECT l_returnflag, true AS med_ok
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+      (s, d) => {
+        Tables.lineitem(s, d)
+          .groupBy("l_returnflag")
+          .agg(percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000))
+              .as("approx_med"),
+            expr("percentile(l_extendedprice, 0.5)").as("exact_med"))
+          .select(col("l_returnflag"),
+            (abs(col("approx_med") - col("exact_med"))
+              <= col("exact_med") * 0.01).as("med_ok"))
+          .orderBy("l_returnflag")
+      }),
 
-    "q_rollup" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity")).as("sum_qty"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"), col("sum_qty"))
-        .orderBy("flag", "status")
-    }),
+    Query("q_rollup",
+      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
+                coalesce(l_linestatus, 'ALL') AS status,
+                sum(l_quantity) AS sum_qty
+         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+         ORDER BY flag, status""",
+      (s, d) => {
+        Tables.lineitem(s, d)
+          .rollup("l_returnflag", "l_linestatus")
+          .agg(sum(col("l_quantity")).as("sum_qty"))
+          .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
+            coalesce(col("l_linestatus"), lit("ALL")).as("status"), col("sum_qty"))
+          .orderBy("flag", "status")
+      }),
 
-    "q_cube" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .cube("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity")).as("sum_qty"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"), col("sum_qty"))
-        .orderBy("flag", "status")
-    }),
+    Query("q_cube",
+      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
+                coalesce(l_linestatus, 'ALL') AS status,
+                sum(l_quantity) AS sum_qty
+         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
+         ORDER BY flag, status""",
+      (s, d) => {
+        Tables.lineitem(s, d)
+          .cube("l_returnflag", "l_linestatus")
+          .agg(sum(col("l_quantity")).as("sum_qty"))
+          .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
+            coalesce(col("l_linestatus"), lit("ALL")).as("status"), col("sum_qty"))
+          .orderBy("flag", "status")
+      }),
 
-    "q_grouping_sets" -> ((s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT coalesce(l_returnflag, 'ALL') AS flag,
+    Query("q_grouping_sets",
+      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
+                coalesce(l_linestatus, 'ALL') AS status,
+                sum(l_quantity) AS sum_qty
+         FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
+         ORDER BY flag, status""",
+      (s, d) => {
+        Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
+        s.sql(
+          """SELECT coalesce(l_returnflag, 'ALL') AS flag,
                   coalesce(l_linestatus, 'ALL') AS status,
                   sum(l_quantity) AS sum_qty
            FROM lineitem
            GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
            ORDER BY flag, status""")
-    }),
+      }),
 
     // Planned skew mitigation as a verified query: two-phase salted
     // aggregation (operators.Skew) must be EXACTLY equivalent to the
@@ -109,18 +149,25 @@ object AggQueries {
     // salt fan-out/re-merge cannot change a bit. event_type has 5 values
     // at any scale: the unsalted plan funnels 1/5 of the table per
     // reducer task, the salted one fans each key over 16.
-    "q_skew_agg" -> ((s, d) =>
-      Skew.saltedAgg(Tables.events(s, d), "event_type", "event_id", salt = 16,
-          (col("event_id"), "id_sum"))
-        .orderBy("event_type")),
+    Query("q_skew_agg",
+      """SELECT event_type, count(*) AS n,
+                CAST(sum(event_id) AS BIGINT) AS id_sum
+         FROM events GROUP BY event_type ORDER BY event_type""",
+      (s, d) =>
+        Skew.saltedAgg(Tables.events(s, d), "event_type", "event_id", salt = 16,
+            (col("event_id"), "id_sum"))
+          .orderBy("event_type")),
 
-    "q_having" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .groupBy("l_partkey")
-        .agg(sum(col("l_quantity")).as("qty"))
-        .filter(col("qty") > 100)
-        .orderBy("l_partkey")
-    }),
+    Query("q_having",
+      """SELECT l_partkey, sum(l_quantity) AS qty FROM lineitem
+         GROUP BY l_partkey HAVING sum(l_quantity) > 100 ORDER BY l_partkey""",
+      (s, d) => {
+        Tables.lineitem(s, d)
+          .groupBy("l_partkey")
+          .agg(sum(col("l_quantity")).as("qty"))
+          .filter(col("qty") > 100)
+          .orderBy("l_partkey")
+      }),
 
     // GROUP BY ALL / ORDER BY ALL (SQL shorthand resolution: every
     // non-aggregate select item becomes a grouping key) — pure analyzer
@@ -128,84 +175,131 @@ object AggQueries {
     // oracle deliberately uses the EXPLICIT grouping/ordering lists, so
     // the row checks Spark's shorthand RESOLUTION against an
     // independent rendering — not the same text evaluated twice.
-    "q_group_by_all" -> ((s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus, count(*) AS n,
+    Query("q_group_by_all",
+      // explicit form on purpose — see the query-side comment
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+                CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+         FROM lineitem GROUP BY l_returnflag, l_linestatus
+         ORDER BY l_returnflag, l_linestatus, n, qty""",
+      (s, d) => {
+        Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
+        s.sql(
+          """SELECT l_returnflag, l_linestatus, count(*) AS n,
                   CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
            FROM lineitem GROUP BY ALL ORDER BY ALL""")
-    }),
+      }),
 
     // Pivot (long→wide reshape) with EXPLICIT pivot values: no value-
     // discovery job, one shuffle, and the plan is identical at any scale.
     // count over an absent (user, type) combo yields null → filled 0 to
     // match SQL's count FILTER semantics.
-    "q_pivot" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy("user_id")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0)
-        .orderBy("user_id")),
+    Query("q_pivot",
+      """SELECT user_id,
+                count(*) FILTER (WHERE event_type = 'click') AS click,
+                count(*) FILTER (WHERE event_type = 'error') AS error,
+                count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
+                count(*) FILTER (WHERE event_type = 'signup') AS signup,
+                count(*) FILTER (WHERE event_type = 'view') AS view
+         FROM events GROUP BY user_id ORDER BY user_id""",
+      (s, d) =>
+        Tables.events(s, d)
+          .groupBy("user_id")
+          .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
+          .agg(count(lit(1)))
+          .na.fill(0)
+          .orderBy("user_id")),
 
     // Unpivot (wide→long reshape): three measure columns melt into
     // (metric, value) rows — a narrow Expand, no shuffle before the sort.
-    "q_unpivot" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount")),
-          "metric", "value")
-        // duplicate (orderkey, linenumber) pairs exist: value completes
-        // the total order within each metric
-        .orderBy("l_orderkey", "l_linenumber", "metric", "value")),
+    Query("q_unpivot",
+      """SELECT l_orderkey, l_linenumber, metric, value FROM (
+           SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric,
+                  l_quantity AS value FROM lineitem
+           UNION ALL
+           SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
+           FROM lineitem
+           UNION ALL
+           SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
+           FROM lineitem)
+         ORDER BY l_orderkey, l_linenumber, metric, value""",
+      (s, d) =>
+        Tables.lineitem(s, d)
+          .unpivot(
+            Array(col("l_orderkey"), col("l_linenumber")),
+            Array(col("l_quantity"), col("l_extendedprice"), col("l_discount")),
+            "metric", "value")
+          // duplicate (orderkey, linenumber) pairs exist: value completes
+          // the total order within each metric
+          .orderBy("l_orderkey", "l_linenumber", "metric", "value")),
 
     // Uncorrelated scalar subquery: the planner computes the 1-row
     // aggregate once and broadcasts it into the filter (no rescan per
     // row). Threshold is max/2 — max is exact and halving a double is
     // exact, so the comparison boundary cannot drift between engines
     // (an avg() threshold would: double summation order differs).
-    "q_scalar_subq" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT o_orderkey, o_totalprice FROM orders
+    Query("q_scalar_subq",
+      """SELECT o_orderkey, o_totalprice FROM orders
+         WHERE o_totalprice > (SELECT max(o_totalprice) FROM orders) / 2
+         ORDER BY o_orderkey""",
+      (s, d) => {
+        Tables.orders(s, d).createOrReplaceTempView("orders")
+        s.sql(
+          """SELECT o_orderkey, o_totalprice FROM orders
            WHERE o_totalprice > (SELECT max(o_totalprice) FROM orders) / 2
            ORDER BY o_orderkey""")
-    }),
+      }),
 
     // Collect-style aggregation made deterministic: collect_set's order
     // is partitioning-dependent, so the verifiable projection sorts and
     // joins to a string — the discipline for ANY array-building agg.
-    "q_collect_agg" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy("l_returnflag")
-        .agg(array_join(sort_array(collect_set(col("l_linestatus"))), ",")
-          .as("statuses"), count(lit(1)).as("n"))
-        .orderBy("l_returnflag")),
+    Query("q_collect_agg",
+      """SELECT l_returnflag,
+                string_agg(DISTINCT l_linestatus, ',' ORDER BY l_linestatus)
+                  AS statuses,
+                count(*) AS n
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+      (s, d) =>
+        Tables.lineitem(s, d)
+          .groupBy("l_returnflag")
+          .agg(array_join(sort_array(collect_set(col("l_linestatus"))), ",")
+            .as("statuses"), count(lit(1)).as("n"))
+          .orderBy("l_returnflag")),
 
     // grouping() markers on CUBE: the only reliable way to tell an
     // all-level NULL from a real NULL in rollup/cube output — every BI
     // layer on top of a cube needs these bits.
-    "q_grouping_fn" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          grouping(col("l_returnflag")).cast("long").as("g_flag"),
-          grouping(col("l_linestatus")).cast("long").as("g_status"))
-        .orderBy(col("g_flag"), col("g_status"), col("l_returnflag"),
-          col("l_linestatus"))),
+    Query("q_grouping_fn",
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+                CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
+                CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status
+         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
+         ORDER BY g_flag, g_status, l_returnflag, l_linestatus""",
+      (s, d) =>
+        Tables.lineitem(s, d)
+          .cube(col("l_returnflag"), col("l_linestatus"))
+          .agg(count(lit(1)).as("n"),
+            grouping(col("l_returnflag")).cast("long").as("g_flag"),
+            grouping(col("l_linestatus")).cast("long").as("g_status"))
+          .orderBy(col("g_flag"), col("g_status"), col("l_returnflag"),
+            col("l_linestatus"))),
 
     // FILTER clause on aggregates — per-aggregate predicates without a
     // self-join or CASE spelling; one pass, partial+final as usual.
-    "q_agg_filter" -> ((s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT l_returnflag,
+    Query("q_agg_filter",
+      """SELECT l_returnflag,
+                count(*) AS n,
+                count(*) FILTER (WHERE l_quantity > 40) AS n_big,
+                sum(l_quantity) FILTER (WHERE l_discount > 0.05) AS qty_disc
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+      (s, d) => {
+        Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
+        s.sql(
+          """SELECT l_returnflag,
                   count(*) AS n,
                   count(*) FILTER (WHERE l_quantity > 40) AS n_big,
                   sum(l_quantity) FILTER (WHERE l_discount > 0.05) AS qty_disc
            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
-    }),
+      }),
 
     // Heavy-hitters sketch (freqItems — the misra-gries family),
     // completing the sketch trio: HLL distinct, quantile sketch, and
@@ -216,18 +310,22 @@ object AggQueries {
     // support 0.15 its membership is contractual; the oracle replays the
     // exact mode and expects `true`. The sketch itself is one bounded
     // row — never data-sized driver state.
-    "q_freq_items" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val sketch = ev.stat.freqItems(Array("event_type"), 0.15)
-        .select(explode(col("event_type_freqItems")).as("item"))
-      val top = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("event_type"))
-        .limit(1)
-        .select(col("event_type").as("top_type"))
-      top.join(sketch, col("item") === col("top_type"), "left")
-        .select(col("top_type"), col("item").isNotNull.as("sketch_has_top"))
-        .orderBy("top_type")
-    }),
+    Query("q_freq_items",
+      """SELECT event_type AS top_type, true AS sketch_has_top
+         FROM events GROUP BY event_type
+         ORDER BY count(*) DESC, event_type LIMIT 1""",
+      (s, d) => {
+        val ev = Tables.events(s, d)
+        val sketch = ev.stat.freqItems(Array("event_type"), 0.15)
+          .select(explode(col("event_type_freqItems")).as("item"))
+        val top = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
+          .orderBy(col("n").desc, col("event_type"))
+          .limit(1)
+          .select(col("event_type").as("top_type"))
+        top.join(sketch, col("item") === col("top_type"), "left")
+          .select(col("top_type"), col("item").isNotNull.as("sketch_has_top"))
+          .orderBy("top_type")
+      }),
 
     // EXACT percentiles (vs q_approx_quantile's sketch): Spark's
     // percentile() and DuckDB's quantile_cont() share the definition —
@@ -238,16 +336,21 @@ object AggQueries {
     // aggregation — a distinct code path from collect_list+sort: the
     // SortOrder is inside the aggregate, so the partial/final merge keeps
     // per-group buffers ordered instead of sorting a collected array).
-    "q_listagg" -> ((s, d) => {
-      Tables.nation(s, d).createOrReplaceTempView("nation")
-      Tables.region(s, d).createOrReplaceTempView("region")
-      s.sql(
-        """SELECT r_name,
+    Query("q_listagg",
+      """SELECT r_name,
+                string_agg(n_name, ',' ORDER BY n_name) AS members
+         FROM nation JOIN region ON n_regionkey = r_regionkey
+         GROUP BY r_name ORDER BY r_name""",
+      (s, d) => {
+        Tables.nation(s, d).createOrReplaceTempView("nation")
+        Tables.region(s, d).createOrReplaceTempView("region")
+        s.sql(
+          """SELECT r_name,
                   listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name)
                     AS members
            FROM nation JOIN region ON n_regionkey = r_regionkey
            GROUP BY r_name ORDER BY r_name""")
-    }),
+      }),
 
     // Linear-regression aggregates (regr_* family) — single-pass
     // covariance-form statistics; partial+final mergeable like any
@@ -270,197 +373,7 @@ object AggQueries {
     // ~n²·x̄²·ȳ ≈ 10³⁵ — ~10¹¹ rows per group at TPC-H value ranges.
     // slope/r2 stay round-6 regr_* doubles (margins 3.9e6/2e13 ulps —
     // audited safe) so the regr_* family itself remains exercised.
-    "q_regr" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"),
-          expr("CAST(round(l_quantity, 0) AS DECIMAL(18,0))").as("xd"),
-          expr("CAST(round(l_extendedprice, 2) AS DECIMAL(18,2))").as("yd"))
-        .groupBy("l_returnflag")
-        .agg(
-          expr("CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT)").as("n"),
-          round(expr("regr_slope(l_extendedprice, l_quantity)"), 6).as("slope"),
-          round(expr("regr_r2(l_extendedprice, l_quantity)"), 6).as("r2"),
-          expr("sum(xd)").as("sx"), expr("sum(yd)").as("sy"),
-          expr("sum(xd * xd)").as("sxx"), expr("sum(xd * yd)").as("sxy"))
-        .select(col("l_returnflag"), col("n"), col("slope"), col("r2"),
-          expr("(sx * 1000000) div n").as("avgx_u6"),
-          expr("(sy * 1000000) div n").as("avgy_u6"),
-          expr("((sy * sxx - sx * sxy) * 1000000) div (n * sxx - sx * sx)")
-            .as("icept_u6"))
-        .orderBy("l_returnflag")),
-
-    // Boolean and bitwise aggregates — bool_and/bool_or short-circuit
-    // logically but still run as one-byte partial aggregates; bit_*
-    // fold 8-byte words. Both are order-insensitive (commutative,
-    // associative) so shuffle order can't change the result.
-    "q_bool_bit" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy("event_type")
-        .agg(
-          bool_and(col("value") > 0).as("all_pos"),
-          bool_or(col("value") > 99).as("any_big"),
-          bit_and(col("user_id")).as("uid_and"),
-          bit_or(col("user_id")).as("uid_or"),
-          bit_xor(col("event_id")).as("eid_xor"))
-        .orderBy("event_type")),
-
-    // Mergeable HLL sketches (DataSketches hll_sketch_agg/hll_union_agg
-    // — vs q_approx_distinct's opaque approx_count_distinct): per
-    // (flag, status) sub-sketches are unioned to per-flag estimates,
-    // the pre-aggregate-then-merge shape of a 100 TB rollup where daily
-    // sketch bytes are stored and unioned at query time. The verifiable
-    // projection is the accuracy contract (±5 % of exact), not the
-    // sketch bytes.
-    "q_hll_band" -> ((s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
-        """WITH sub AS (SELECT l_returnflag, l_linestatus,
-                               hll_sketch_agg(l_orderkey) AS sk
-                        FROM lineitem GROUP BY 1, 2),
-                m AS (SELECT l_returnflag,
-                             hll_sketch_estimate(hll_union_agg(sk)) AS est
-                      FROM sub GROUP BY 1),
-                e AS (SELECT l_returnflag,
-                             count(DISTINCT l_orderkey) AS exact_ord
-                      FROM lineitem GROUP BY 1)
-           SELECT e.l_returnflag, e.exact_ord,
-                  abs(m.est - e.exact_ord) <= 0.05 * e.exact_ord AS in_band
-           FROM e JOIN m USING (l_returnflag)
-           ORDER BY l_returnflag""")
-    }),
-
-    "q_percentile" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy("l_returnflag")
-        .agg(
-          round(expr("percentile(l_quantity, 0.25)"), 6).as("p25"),
-          round(expr("percentile(l_quantity, 0.5)"), 6).as("p50"),
-          round(expr("percentile(l_quantity, 0.9)"), 6).as("p90"))
-        .orderBy("l_returnflag")),
-
-    // Winsorization: clamp each group's values into [p05, p95] — the
-    // standard outlier treatment before feature aggregation. Two-pass
-    // shape: one exact-percentile aggregation (3 rows), broadcast back
-    // over the fact scan, clamp, re-aggregate. The percentile bounds
-    // are exact cross-engine (integer data, quarter-step interpolation
-    // — the q_percentile precedent), so the clamp COMPARISONS agree;
-    // the winsorized sum goes through DECIMAL(18,6) (bounds have at
-    // most 2 fractional digits) so shuffle order cannot move a bit.
-    "q_winsorize" -> ((s, d) => {
-      val p = Tables.lineitem(s, d)
-        .groupBy("l_returnflag")
-        .agg(expr("percentile(l_quantity, 0.05)").as("p05"),
-          expr("percentile(l_quantity, 0.95)").as("p95"))
-      Tables.lineitem(s, d)
-        .join(broadcast(p), "l_returnflag")
-        .select(col("l_returnflag"),
-          col("l_quantity").as("q"), col("p05"), col("p95"),
-          least(greatest(col("l_quantity"), col("p05")), col("p95")).as("w"))
-        .groupBy("l_returnflag")
-        .agg(
-          sum(when(col("q") < col("p05"), 1).otherwise(0)).cast("long").as("n_low"),
-          sum(when(col("q") > col("p95"), 1).otherwise(0)).cast("long").as("n_high"),
-          count(lit(1)).as("n_rows"),
-          round(expr("CAST(sum(CAST(w AS DECIMAL(18,6))) AS DOUBLE)") /
-            count(lit(1)), 6).as("win_mean"))
-        .orderBy("l_returnflag")
-    }),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-                sum(l_quantity) AS sum_qty,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                         * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-                sum(l_quantity) / count(*) AS avg_qty,
-                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price,
-                count(*) AS n
-         FROM lineitem GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-    "q_count_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_orderkey) AS n_ord,
-                count(DISTINCT l_partkey) AS n_part
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_approx_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_orderkey) AS exact_ord,
-                true AS in_band
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_approx_quantile" ->
-      """SELECT l_returnflag, true AS med_ok
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-                coalesce(l_linestatus, 'ALL') AS status,
-                sum(l_quantity) AS sum_qty
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         ORDER BY flag, status""",
-    "q_cube" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-                coalesce(l_linestatus, 'ALL') AS status,
-                sum(l_quantity) AS sum_qty
-         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-         ORDER BY flag, status""",
-    "q_grouping_sets" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-                coalesce(l_linestatus, 'ALL') AS status,
-                sum(l_quantity) AS sum_qty
-         FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-         ORDER BY flag, status""",
-    // explicit form on purpose — see the query-side comment
-    "q_group_by_all" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-                CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-         FROM lineitem GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus, n, qty""",
-    "q_having" ->
-      """SELECT l_partkey, sum(l_quantity) AS qty FROM lineitem
-         GROUP BY l_partkey HAVING sum(l_quantity) > 100 ORDER BY l_partkey""",
-    "q_skew_agg" ->
-      """SELECT event_type, count(*) AS n,
-                CAST(sum(event_id) AS BIGINT) AS id_sum
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_pivot" ->
-      """SELECT user_id,
-                count(*) FILTER (WHERE event_type = 'click') AS click,
-                count(*) FILTER (WHERE event_type = 'error') AS error,
-                count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-                count(*) FILTER (WHERE event_type = 'signup') AS signup,
-                count(*) FILTER (WHERE event_type = 'view') AS view
-         FROM events GROUP BY user_id ORDER BY user_id""",
-    "q_scalar_subq" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         WHERE o_totalprice > (SELECT max(o_totalprice) FROM orders) / 2
-         ORDER BY o_orderkey""",
-    "q_collect_agg" ->
-      """SELECT l_returnflag,
-                string_agg(DISTINCT l_linestatus, ',' ORDER BY l_linestatus)
-                  AS statuses,
-                count(*) AS n
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_grouping_fn" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-                CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
-                CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status
-         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-         ORDER BY g_flag, g_status, l_returnflag, l_linestatus""",
-    "q_agg_filter" ->
-      """SELECT l_returnflag,
-                count(*) AS n,
-                count(*) FILTER (WHERE l_quantity > 40) AS n_big,
-                sum(l_quantity) FILTER (WHERE l_discount > 0.05) AS qty_disc
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_freq_items" ->
-      """SELECT event_type AS top_type, true AS sketch_has_top
-         FROM events GROUP BY event_type
-         ORDER BY count(*) DESC, event_type LIMIT 1""",
-    "q_listagg" ->
-      """SELECT r_name,
-                string_agg(n_name, ',' ORDER BY n_name) AS members
-         FROM nation JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name ORDER BY r_name""",
-    "q_regr" ->
+    Query("q_regr",
       """WITH q AS (SELECT l_returnflag, l_quantity, l_extendedprice,
                            CAST(round(l_quantity, 0) AS DECIMAL(18,0)) AS xd,
                            CAST(round(l_extendedprice, 2) AS DECIMAL(18,2)) AS yd
@@ -480,7 +393,30 @@ object AggQueries {
                 CAST(((sy_c * sxx - sx * sxy_c) * 10000)
                      // (n * sxx - sx * sx) AS BIGINT) AS icept_u6
          FROM g ORDER BY l_returnflag""",
-    "q_bool_bit" ->
+      (s, d) =>
+        Tables.lineitem(s, d)
+          .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"),
+            expr("CAST(round(l_quantity, 0) AS DECIMAL(18,0))").as("xd"),
+            expr("CAST(round(l_extendedprice, 2) AS DECIMAL(18,2))").as("yd"))
+          .groupBy("l_returnflag")
+          .agg(
+            expr("CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT)").as("n"),
+            round(expr("regr_slope(l_extendedprice, l_quantity)"), 6).as("slope"),
+            round(expr("regr_r2(l_extendedprice, l_quantity)"), 6).as("r2"),
+            expr("sum(xd)").as("sx"), expr("sum(yd)").as("sy"),
+            expr("sum(xd * xd)").as("sxx"), expr("sum(xd * yd)").as("sxy"))
+          .select(col("l_returnflag"), col("n"), col("slope"), col("r2"),
+            expr("(sx * 1000000) div n").as("avgx_u6"),
+            expr("(sy * 1000000) div n").as("avgy_u6"),
+            expr("((sy * sxx - sx * sxy) * 1000000) div (n * sxx - sx * sx)")
+              .as("icept_u6"))
+          .orderBy("l_returnflag")),
+
+    // Boolean and bitwise aggregates — bool_and/bool_or short-circuit
+    // logically but still run as one-byte partial aggregates; bit_*
+    // fold 8-byte words. Both are order-insensitive (commutative,
+    // associative) so shuffle order can't change the result.
+    Query("q_bool_bit",
       """SELECT event_type,
                 bool_and(value > 0) AS all_pos,
                 bool_or(value > 99) AS any_big,
@@ -488,17 +424,70 @@ object AggQueries {
                 bit_or(user_id) AS uid_or,
                 bit_xor(event_id) AS eid_xor
          FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_hll_band" ->
+      (s, d) =>
+        Tables.events(s, d)
+          .groupBy("event_type")
+          .agg(
+            bool_and(col("value") > 0).as("all_pos"),
+            bool_or(col("value") > 99).as("any_big"),
+            bit_and(col("user_id")).as("uid_and"),
+            bit_or(col("user_id")).as("uid_or"),
+            bit_xor(col("event_id")).as("eid_xor"))
+          .orderBy("event_type")),
+
+    // Mergeable HLL sketches (DataSketches hll_sketch_agg/hll_union_agg
+    // — vs q_approx_distinct's opaque approx_count_distinct): per
+    // (flag, status) sub-sketches are unioned to per-flag estimates,
+    // the pre-aggregate-then-merge shape of a 100 TB rollup where daily
+    // sketch bytes are stored and unioned at query time. The verifiable
+    // projection is the accuracy contract (±5 % of exact), not the
+    // sketch bytes.
+    Query("q_hll_band",
       """SELECT l_returnflag, count(DISTINCT l_orderkey) AS exact_ord,
                 true AS in_band
          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_percentile" ->
+      (s, d) => {
+        Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
+        s.sql(
+          """WITH sub AS (SELECT l_returnflag, l_linestatus,
+                               hll_sketch_agg(l_orderkey) AS sk
+                        FROM lineitem GROUP BY 1, 2),
+                m AS (SELECT l_returnflag,
+                             hll_sketch_estimate(hll_union_agg(sk)) AS est
+                      FROM sub GROUP BY 1),
+                e AS (SELECT l_returnflag,
+                             count(DISTINCT l_orderkey) AS exact_ord
+                      FROM lineitem GROUP BY 1)
+           SELECT e.l_returnflag, e.exact_ord,
+                  abs(m.est - e.exact_ord) <= 0.05 * e.exact_ord AS in_band
+           FROM e JOIN m USING (l_returnflag)
+           ORDER BY l_returnflag""")
+      }),
+
+    Query("q_percentile",
       """SELECT l_returnflag,
                 round(quantile_cont(l_quantity, 0.25), 6) AS p25,
                 round(quantile_cont(l_quantity, 0.5), 6) AS p50,
                 round(quantile_cont(l_quantity, 0.9), 6) AS p90
          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_winsorize" ->
+      (s, d) =>
+        Tables.lineitem(s, d)
+          .groupBy("l_returnflag")
+          .agg(
+            round(expr("percentile(l_quantity, 0.25)"), 6).as("p25"),
+            round(expr("percentile(l_quantity, 0.5)"), 6).as("p50"),
+            round(expr("percentile(l_quantity, 0.9)"), 6).as("p90"))
+          .orderBy("l_returnflag")),
+
+    // Winsorization: clamp each group's values into [p05, p95] — the
+    // standard outlier treatment before feature aggregation. Two-pass
+    // shape: one exact-percentile aggregation (3 rows), broadcast back
+    // over the fact scan, clamp, re-aggregate. The percentile bounds
+    // are exact cross-engine (integer data, quarter-step interpolation
+    // — the q_percentile precedent), so the clamp COMPARISONS agree;
+    // the winsorized sum goes through DECIMAL(18,6) (bounds have at
+    // most 2 fractional digits) so shuffle order cannot move a bit.
+    Query("q_winsorize",
       """WITH p AS (SELECT l_returnflag,
                            quantile_cont(l_quantity, 0.05) AS p05,
                            quantile_cont(l_quantity, 0.95) AS p95
@@ -514,16 +503,24 @@ object AggQueries {
                       / count(*), 6) AS win_mean
          FROM lineitem l JOIN p USING (l_returnflag)
          GROUP BY l.l_returnflag ORDER BY l.l_returnflag""",
-    "q_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, metric, value FROM (
-           SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric,
-                  l_quantity AS value FROM lineitem
-           UNION ALL
-           SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
-           FROM lineitem
-           UNION ALL
-           SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
-           FROM lineitem)
-         ORDER BY l_orderkey, l_linenumber, metric, value""",
+      (s, d) => {
+        val p = Tables.lineitem(s, d)
+          .groupBy("l_returnflag")
+          .agg(expr("percentile(l_quantity, 0.05)").as("p05"),
+            expr("percentile(l_quantity, 0.95)").as("p95"))
+        Tables.lineitem(s, d)
+          .join(broadcast(p), "l_returnflag")
+          .select(col("l_returnflag"),
+            col("l_quantity").as("q"), col("p05"), col("p95"),
+            least(greatest(col("l_quantity"), col("p05")), col("p95")).as("w"))
+          .groupBy("l_returnflag")
+          .agg(
+            sum(when(col("q") < col("p05"), 1).otherwise(0)).cast("long").as("n_low"),
+            sum(when(col("q") > col("p95"), 1).otherwise(0)).cast("long").as("n_high"),
+            count(lit(1)).as("n_rows"),
+            round(expr("CAST(sum(CAST(w AS DECIMAL(18,6))) AS DOUBLE)") /
+              count(lit(1)), 6).as("win_mean"))
+          .orderBy("l_returnflag")
+      }),
   )
 }

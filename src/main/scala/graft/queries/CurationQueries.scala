@@ -36,34 +36,44 @@ object CurationQueries {
              i -> array_to_string(w[i+1:i+3], ' '))))
            / (len(w) - 2)"""
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // Per-source document cap (crawl curation: no domain may dominate the
     // corpus). Deterministic keep-set: the k lowest doc_ids per source,
     // via the native TopKPerKey operator — map-side k-heaps mean the
     // `source` shuffle carries ≤ 10 rows per source, not the corpus
     // (the row_number window form ships and sorts every row). Projected
     // to two columns first: a custom node blocks column pruning.
-    "q_domain_cap" -> ((s, d) => {
-      graft.plans.TopKPerKeyNode.topKPerKey(
-          docs(s, d).select(col("doc_id"), col("source")),
-          keyCols = Seq("source"), orderSpec = Seq(("doc_id", false)), k = 10)
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id")
-    }),
+    Query("q_domain_cap",
+      """SELECT doc_id, source FROM (
+           SELECT doc_id, source,
+                  row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
+           FROM documents) t
+         WHERE rn <= 10 ORDER BY doc_id""",
+      (s, d) => {
+        graft.plans.TopKPerKeyNode.topKPerKey(
+            docs(s, d).select(col("doc_id"), col("source")),
+            keyCols = Seq("source"), orderSpec = Seq(("doc_id", false)), k = 10)
+          .select(col("doc_id"), col("source"))
+          .orderBy("doc_id")
+      }),
 
     // Repetition-ratio quality filter (the Gopher/MassiveText family):
     // fraction of duplicate word 3-grams in the document. Computed
     // entirely with codegen'd array expressions — no explode, no
     // shuffle; a 100 TB corpus scans once and filters in the map stage.
     // Docs shorter than 3 tokens have no 3-grams and are excluded.
-    "q_rep_ratio" -> ((s, d) => {
-      val w = split(col("text"), " ")
-      docs(s, d)
-        .select(col("doc_id"), w.as("w"))
-        .filter(size(col("w")) >= 3)
-        .select(col("doc_id"), round(repExpr(col("w")), 6).as("rep"))
-        .orderBy("doc_id")
-    }),
+    Query("q_rep_ratio",
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
+         SELECT doc_id, round($repSql, 6) AS rep
+         FROM t WHERE len(w) >= 3 ORDER BY doc_id""",
+      (s, d) => {
+        val w = split(col("text"), " ")
+        docs(s, d)
+          .select(col("doc_id"), w.as("w"))
+          .filter(size(col("w")) >= 3)
+          .select(col("doc_id"), round(repExpr(col("w")), 6).as("rep"))
+          .orderBy("doc_id")
+      }),
 
     // Duplicated-substring detection (boilerplate mining) — the
     // SEQUENCE-level counterpart of the document-level dedup family:
@@ -73,297 +83,10 @@ object CurationQueries {
     // 8 words ≈ Lee et al. 2022's 50-BPE-token ExactSubstr span scaled
     // to this corpus's short synthetic docs). The ordering is total:
     // ngram is unique after the group-by.
-    "q_dup_ngrams" -> ((s, d) =>
-      graft.operators.Dedup.dupNgrams(docs(s, d), "doc_id", "text")
-        .orderBy(col("n_docs").desc, col("ngram"))),
-
-    // Duplicated-span REMOVAL (Dedup.exactSubstrRemoval) — the actual
-    // Lee et al. 2022 ExactSubstr deliverable that q_dup_ngrams only
-    // detects: every occurrence of a cross-document duplicated 8-gram
-    // excised from every holding doc, overlapping spans merged (the
-    // covered-position union — no interval algebra), fully-removed docs
-    // kept as empty rows. Output is exact strings and integer counts —
-    // nothing float, so the hash gate has no representation surface.
-    "q_exact_substr_removal" -> ((s, d) =>
-      graft.operators.Dedup.exactSubstrRemoval(docs(s, d), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // INTRA-document repetition removal (Dedup.selfSubstrRemoval): the
-    // loop-collapse rule — a repeated n-gram's later occurrences are
-    // excised, the first survives intact (exact position algebra in the
-    // operator scaladoc). n = 3, not the cross-doc 8: this corpus's
-    // ~40-word vocabulary repeats trigrams WITHIN ~100-token docs often
-    // enough to exercise the subtraction rule at every scale, where
-    // 8-grams would make the row a vacuous identity.
-    "q_self_substr_removal" -> ((s, d) =>
-      graft.operators.Dedup.selfSubstrRemoval(docs(s, d), "doc_id", "text",
-          n = 3)
-        .orderBy("doc_id")),
-
-    // Sequence packing: assign documents to fixed-token-budget training
-    // sequences. This is the deterministic streaming variant — documents
-    // are packed contiguously in doc_id order within each language shard
-    // (bin = exclusive-prefix-sum of token counts div budget), so the
-    // assignment is reproducible, join-free, and one window per shard.
-    // (True greedy bin-packing is order-dependent and neither
-    // reproducible nor parallelizable — the contiguous variant is what
-    // production tokenizer pipelines run.)
-    "q_seq_pack" -> ((s, d) => {
-      val w = Window.partitionBy("lang").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      docs(s, d)
-        .select(col("doc_id"), col("lang"),
-          size(split(col("text"), " ")).as("toks"))
-        .withColumn("bin",
-          floor((sum("toks").over(w) - col("toks")) / lit(512)).cast("long"))
-        .select(col("doc_id"), col("lang"), col("bin"))
-        .orderBy("doc_id")
-    }),
-
-    // Edit distance between the raw and entity-redacted text prefixes —
-    // the scoring primitive of fuzzy dedup (here: how much a scrub
-    // changed each document). Bounded cost: levenshtein is O(m·n) per
-    // row, so production use caps the operand length exactly as done
-    // here (64 chars), keeping the pass map-only and linear in corpus
-    // size.
-    "q_edit_distance" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"),
-          levenshtein(
-            substring(col("text"), 1, 64),
-            substring(regexp_replace(col("text"),
-              "\\b(customer|supplier|user)\\b", "[ENTITY]"), 1, 64))
-            .cast("long").as("lev"))
-        .orderBy("doc_id")),
-
-    // PII-style entity redaction: map-only regexp scrub. The pattern
-    // here stands in for email/phone/SSN patterns (the synthetic corpus
-    // has none); the operator shape — regexp_replace at scan, no
-    // shuffle — is identical.
-    "q_redact" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"),
-          regexp_replace(col("text"), "\\b(customer|supplier|user)\\b",
-            "[ENTITY]").as("redacted"))
-        .orderBy("doc_id")),
-
-    // URL canonicalization dedup — crawl curation's first collapse: the
-    // same resource arrives as scheme/host-case variants, default-port
-    // spellings, trailing slashes, and utm_* tracking junk. Each doc
-    // synthesizes TWO deterministic variants (messy + clean), both
-    // canonicalize via parse_url decomposition (lowercase host, port
-    // dropped, trailing slash stripped, only the lang param kept), and
-    // the groupBy(canonical) must collapse every doc back to exactly
-    // n_variants = 2 — the oracle states the expected canonical by
-    // string algebra, so every canonicalization step is load-bearing.
-    // Map-only until the dedup's one hash shuffle; the host label is
-    // sanitized to [a-z0-9-] like q_url_fns so java.net.URI always
-    // parses.
-    "q_url_canon" -> ((s, d) => {
-      val label = regexp_replace(lower(col("source")), "[^a-z0-9-]", "-")
-      val id = col("doc_id").cast("string")
-      val messy = concat(lit("https://"),
-        when(col("doc_id") % 2 === 0, upper(label)).otherwise(label),
-        lit(".Example.COM:443/docs/"), id,
-        when(col("doc_id") % 3 === 0, lit("/")).otherwise(lit("")),
-        lit("?utm_source=x&lang="), col("lang"),
-        when(col("doc_id") % 5 === 0, lit("&utm_campaign=y")).otherwise(lit("")))
-      val clean = concat(lit("https://"), label, lit(".example.com/docs/"),
-        id, lit("?lang="), col("lang"))
-      val canon = concat(lit("https://"),
-        lower(expr("parse_url(url, 'HOST')")),
-        regexp_replace(expr("parse_url(url, 'PATH')"), "/$", ""),
-        lit("?lang="), expr("parse_url(url, 'QUERY', 'lang')"))
-      docs(s, d)
-        .select(col("doc_id"), explode(array(messy, clean)).as("url"))
-        .select(col("doc_id"), canon.as("canon"))
-        .groupBy("canon")
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_variants"))
-        .select(col("doc_id"), col("canon"), col("n_variants"))
-        .orderBy("doc_id")
-    }),
-
-    // Benchmark decontamination: flag corpus documents sharing any word
-    // 4-gram with a held-out benchmark set (stand-in: doc_id % 10 == 0 —
-    // the synthetic corpus has no real benchmark, but the operator shape
-    // is exactly the n-gram-overlap decontamination run before
-    // pretraining). Scale design: each side explodes to (gram-hash,
-    // doc_id) rows — xxhash64 narrows the shuffle row to 16 bytes vs the
-    // full gram string, at a 2^-64 false-positive risk per pair, the
-    // same accepted trade as MinHash dedup — the benchmark side is
-    // distinct-ed (small: |benchmark grams|) and the join is a plain
-    // equi-join on the hash that AQE broadcasts when the benchmark fits.
-    // No driver-side data path. (4-grams, not the 8-13 of production
-    // decontamination: corpus-calibrated so the synthetic vocab yields
-    // hits at test sf.)
-    "q_decontaminate" -> ((s, d) => {
-      val toks = split(col("text"), " ")
-      def grams(w: org.apache.spark.sql.Column) =
-        transform(sequence(lit(0), size(w) - 4),
-          i => xxhash64(array_join(slice(w, i + lit(1), lit(4)), " ")))
-      val base = graft.operators.Layout.fanOutSmall(docs(s, d))
-        .filter(size(toks) >= 4)
-        .select(col("doc_id"), explode(grams(toks)).as("g"))
-      val bench = base.filter(col("doc_id") % 10 === 0)
-        .select("g").distinct()
-      base.filter(col("doc_id") % 10 =!= 0)
-        .join(bench, "g")
-        .groupBy("doc_id")
-        .agg(countDistinct(col("g")).as("n_hit"))
-        .orderBy("doc_id")
-    }),
-
-    // Fixed-token-window chunking with overlap (window 32, stride 24) —
-    // the pre-tokenizer split of long documents into training sequences.
-    // Chunk starts are stride multiples; the final chunk is the first
-    // one whose window reaches the end, so every token lands in ≥1 chunk
-    // and no chunk is fully contained in its predecessor. All codegen'd
-    // array expressions + one generator — map-only at any corpus size,
-    // no shuffle before the contract sort.
-    "q_chunk_docs" -> ((s, d) => {
-      val w = split(col("text"), " ")
-      val nChunks =
-        floor((greatest(size(col("w")) - lit(32), lit(0)) + lit(23)) / lit(24))
-          .cast("int") + 1
-      docs(s, d)
-        .select(col("doc_id"), w.as("w"))
-        .select(col("doc_id"),
-          posexplode(transform(sequence(lit(0), nChunks - 1),
-            i => array_join(slice(col("w"), i * 24 + 1, lit(32)), " "))))
-        .withColumn("chunk_id", col("pos").cast("long")).drop("pos")
-        .withColumnRenamed("col", "chunk")
-        .select(col("doc_id"), col("chunk_id"), col("chunk"))
-        .orderBy("doc_id", "chunk_id")
-    }),
-
-    // The curation DAG end-to-end: repetition-quality gate → per-source
-    // cap → packing-ready token counts, composed exactly as a production
-    // corpus build would chain them. Each stage is individually
-    // oracle-verified above; this query verifies the COMPOSITION (stage
-    // ordering, column threading, no row leakage between stages) as one
-    // hash row set. Cost shape: one map-only scan (tokens + repetition),
-    // one keyed window (cap) — nothing quadratic, nothing global.
-    "q_curate_full" -> ((s, d) => {
-      val w = split(col("text"), " ")
-      val scored = docs(s, d)
-        .select(col("doc_id"), col("lang"), col("source"), w.as("w"))
-        .filter(size(col("w")) >= 3)
-        .withColumn("rep", repExpr(col("w")))
-        .filter(col("rep") <= 0.05)
-      // Cap via native TopKPerKey (≤ 15 rows per source cross the
-      // shuffle); toks is computed BEFORE it so the token array never
-      // ships — the exchange carries 4 scalar columns per row.
-      graft.plans.TopKPerKeyNode.topKPerKey(
-          scored.select(col("doc_id"), col("lang"), col("source"),
-            size(col("w")).cast("long").as("toks")),
-          keyCols = Seq("source"), orderSpec = Seq(("doc_id", false)), k = 15)
-        .select(col("doc_id"), col("lang"), col("source"), col("toks"))
-        .orderBy("doc_id")
-    }),
-
-    // Unigram language-model scoring — the perplexity-proxy quality
-    // filter (production pipelines score against a KenLM n-gram model;
-    // the unigram variant is the same dataflow with the model TRAINED
-    // IN-QUERY on the corpus itself). avg log p(tok) = avg(ln tf) −
-    // ln(total): two corpus scans + one vocab-sized join that AQE
-    // broadcasts when the vocabulary fits (natural text: ~1e6 words ≪
-    // corpus), else shuffles on the token — never on the document. The
-    // ln values sum through DECIMAL so partial-aggregation order cannot
-    // move a bit; ln itself is a per-engine libm call, guarded by the
-    // 1e-10 quantization (≫ 1-ulp libm divergence) before the sum.
-    "q_unigram_lm" -> ((s, d) => {
-      // fanOutSmall: parallelize the tokenize kernel past the small-file
-      // scan-split floor (no-op at scale) — see Layout.fanOutSmall
-      val toks = graft.operators.Layout.fanOutSmall(docs(s, d))
-        .select(col("doc_id"),
-          explode(split(lower(col("text")), " ")).as("tok"))
-      val freq = toks.groupBy("tok").agg(count(lit(1)).as("tf"))
-      val total = freq.agg(sum("tf").as("tot"))
-      toks.join(freq, "tok")
-        .crossJoin(broadcast(total))
-        .groupBy("doc_id")
-        .agg(round(
-          sum(expr("CAST(ln(CAST(tf AS DOUBLE)) AS DECIMAL(28,10))"))
-            .cast("double") / count(lit(1)) -
-            first(expr("ln(CAST(tot AS DOUBLE))")), 6).as("lm_score"))
-        .orderBy("doc_id")
-    }),
-
-    // Bigram LM scoring — the next rung of the perplexity-proxy ladder
-    // above q_unigram_lm: avg ln p(tok|prev) with add-0.5 smoothing
-    // over a unigram history count (the Lidstone shortcut; production
-    // scoring swaps in a pre-trained KenLM, same dataflow). Bigrams are
-    // built MAP-SIDE with zip_with over adjacent array slices — never a
-    // per-token window shuffle; the only exchanges are the two count
-    // aggregations and the count-joins back (vocab-sized — AQE
-    // broadcasts them on natural text), then one groupBy(doc_id).
-    // Smoothed ratios are exact doubles (int counts + exact halves), ln
-    // goes through the same DECIMAL(28,10) quantization as q_unigram_lm
-    // so partial-agg order cannot move a bit.
-    "q_bigram_lm" -> ((s, d) => {
-      val w = split(lower(col("text")), " ")
-      val bgs = graft.operators.Layout.fanOutSmall(docs(s, d))
-        .select(col("doc_id"),
-          explode(zip_with(
-            slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-            (a, b) => struct(a.as("prev"),
-              concat_ws(" ", a, b).as("bg")))).as("p"))
-        .select(col("doc_id"), col("p.prev").as("prev"), col("p.bg").as("bg"))
-      val tf = graft.operators.Layout.fanOutSmall(docs(s, d))
-        .select(explode(split(lower(col("text")), " ")).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("tf"))
-      // `tf > 0` is a tautology (tf is a count, always >= 1) kept for
-      // plan shape only: without it Catalyst prunes the unused count
-      // out of this branch's aggregate, de-canonicalizing its subtree
-      // from tf's — and the corpus gets re-tokenized just to count
-      // distinct tokens. Referencing tf keeps vocab on the SHARED
-      // tokenize→tf exchange (AQE ReusedExchange; guide §2.4 — the
-      // same fix as bm25FromStats' df branch), v values unchanged.
-      val vocab = tf.filter(col("tf") > 0).agg(count(lit(1)).as("v"))
-      val cbg = bgs.groupBy("bg").agg(count(lit(1)).as("cbg"))
-      bgs.join(cbg, "bg")
-        .join(tf.withColumnRenamed("tok", "prev"), "prev")
-        .crossJoin(broadcast(vocab))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          round(sum(expr(
-            "CAST(ln((cbg + 0.5) / (tf + 0.5 * v)) AS DECIMAL(28,10))"))
-            .cast("double") / count(lit(1)), 6).as("lm2_score"))
-        .orderBy("doc_id")
-    }),
-
-    // Character-class masking (Spark's mask(): upper→X, lower→x,
-    // digit→n, punctuation kept) — the shape-preserving PII transform
-    // used when downstream needs format validity (card/phone/ID fields)
-    // rather than q_redact's token replacement. Map-only at the scan.
-    // The corpus is ASCII, so the oracle's ASCII character classes are
-    // exactly Spark's unicode-aware ones.
-    "q_mask_pii" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"),
-          expr("mask(substring(text, 1, 40))").as("masked"))
-        .orderBy("doc_id")),
-  )
-
-  val oracles: Map[String, String] = Map(
-    // the canonical each doc's two variants must collapse to, stated by
-    // string algebra — any missed canonicalization step diverges
-    "q_url_canon" ->
-      """SELECT doc_id,
-                'https://' || regexp_replace(lower(source), '[^a-z0-9-]', '-', 'g')
-                  || '.example.com/docs/' || doc_id || '?lang=' || lang AS canon,
-                CAST(2 AS BIGINT) AS n_variants
-         FROM documents ORDER BY doc_id""",
-    "q_domain_cap" ->
-      """SELECT doc_id, source FROM (
-           SELECT doc_id, source,
-                  row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-           FROM documents) t
-         WHERE rn <= 10 ORDER BY doc_id""",
-    // the same 8-word windows by 1-based inclusive list slicing; the
-    // CASE mirrors the Spark side's short-doc guard (generate_series
-    // is empty where Spark's sequence would descend)
-    "q_dup_ngrams" ->
+    Query("q_dup_ngrams",
+      // the same 8-word windows by 1-based inclusive list slicing; the
+      // CASE mirrors the Spark side's short-doc guard (generate_series
+      // is empty where Spark's sequence would descend)
       """WITH w AS (
            SELECT doc_id, string_split(text, ' ') AS words FROM documents),
          g AS (
@@ -374,11 +97,22 @@ object CurationQueries {
          SELECT ngram, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occ
          FROM g GROUP BY ngram HAVING count(DISTINCT doc_id) >= 2
          ORDER BY n_docs DESC, ngram""",
-    // removal: the q_dup_ngrams windows, joined back to their start
-    // positions, expanded to covered positions (start..start+7), and
-    // every uncovered word re-assembled in position order; docs with
-    // every word covered surface as empty strings via the outer join
-    "q_exact_substr_removal" ->
+      (s, d) =>
+        graft.operators.Dedup.dupNgrams(docs(s, d), "doc_id", "text")
+          .orderBy(col("n_docs").desc, col("ngram"))),
+
+    // Duplicated-span REMOVAL (Dedup.exactSubstrRemoval) — the actual
+    // Lee et al. 2022 ExactSubstr deliverable that q_dup_ngrams only
+    // detects: every occurrence of a cross-document duplicated 8-gram
+    // excised from every holding doc, overlapping spans merged (the
+    // covered-position union — no interval algebra), fully-removed docs
+    // kept as empty rows. Output is exact strings and integer counts —
+    // nothing float, so the hash gate has no representation surface.
+    Query("q_exact_substr_removal",
+      // removal: the q_dup_ngrams windows, joined back to their start
+      // positions, expanded to covered positions (start..start+7), and
+      // every uncovered word re-assembled in position order; docs with
+      // every word covered surface as empty strings via the outer join
       """WITH w AS (
            SELECT doc_id, string_split(text, ' ') AS words FROM documents),
          tok AS (
@@ -409,10 +143,21 @@ object CurationQueries {
                 coalesce(agg.n_kept, 0) AS n_kept
          FROM w LEFT JOIN agg USING (doc_id)
          ORDER BY doc_id""",
-    // intra-doc removal: same covered-position algebra with the
-    // keep-first subtraction — later-occurrence positions minus
-    // first-occurrence positions, per doc, at n = 3
-    "q_self_substr_removal" ->
+      (s, d) =>
+        graft.operators.Dedup.exactSubstrRemoval(docs(s, d), "doc_id", "text")
+          .orderBy("doc_id")),
+
+    // INTRA-document repetition removal (Dedup.selfSubstrRemoval): the
+    // loop-collapse rule — a repeated n-gram's later occurrences are
+    // excised, the first survives intact (exact position algebra in the
+    // operator scaladoc). n = 3, not the cross-doc 8: this corpus's
+    // ~40-word vocabulary repeats trigrams WITHIN ~100-token docs often
+    // enough to exercise the subtraction rule at every scale, where
+    // 8-grams would make the row a vacuous identity.
+    Query("q_self_substr_removal",
+      // intra-doc removal: same covered-position algebra with the
+      // keep-first subtraction — later-occurrence positions minus
+      // first-occurrence positions, per doc, at n = 3
       """WITH w AS (
            SELECT doc_id, string_split(text, ' ') AS words FROM documents),
          tok AS (
@@ -453,11 +198,20 @@ object CurationQueries {
                 coalesce(agg.n_kept, 0) AS n_kept
          FROM w LEFT JOIN agg USING (doc_id)
          ORDER BY doc_id""",
-    "q_rep_ratio" ->
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-         SELECT doc_id, round($repSql, 6) AS rep
-         FROM t WHERE len(w) >= 3 ORDER BY doc_id""",
-    "q_seq_pack" ->
+      (s, d) =>
+        graft.operators.Dedup.selfSubstrRemoval(docs(s, d), "doc_id", "text",
+            n = 3)
+          .orderBy("doc_id")),
+
+    // Sequence packing: assign documents to fixed-token-budget training
+    // sequences. This is the deterministic streaming variant — documents
+    // are packed contiguously in doc_id order within each language shard
+    // (bin = exclusive-prefix-sum of token counts div budget), so the
+    // assignment is reproducible, join-free, and one window per shard.
+    // (True greedy bin-packing is order-dependent and neither
+    // reproducible nor parallelizable — the contiguous variant is what
+    // production tokenizer pipelines run.)
+    Query("q_seq_pack",
       """WITH t AS (SELECT doc_id, lang, len(string_split(text, ' ')) AS toks
                     FROM documents)
          SELECT doc_id, lang,
@@ -465,18 +219,116 @@ object CurationQueries {
                                             ROWS UNBOUNDED PRECEDING) - toks)
                            / 512) AS BIGINT) AS bin
          FROM t ORDER BY doc_id""",
-    "q_curate_full" ->
-      s"""WITH t AS (SELECT doc_id, lang, source, string_split(text, ' ') AS w
-                    FROM documents),
-            q AS (SELECT doc_id, lang, source, w FROM t
-                  WHERE len(w) >= 3 AND $repSql <= 0.05),
-            capped AS (SELECT doc_id, lang, source, len(w) AS toks,
-                              row_number() OVER (PARTITION BY source
-                                                 ORDER BY doc_id) AS rn
-                       FROM q)
-         SELECT doc_id, lang, source, toks FROM capped
-         WHERE rn <= 15 ORDER BY doc_id""",
-    "q_decontaminate" ->
+      (s, d) => {
+        val w = Window.partitionBy("lang").orderBy("doc_id")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        docs(s, d)
+          .select(col("doc_id"), col("lang"),
+            size(split(col("text"), " ")).as("toks"))
+          .withColumn("bin",
+            floor((sum("toks").over(w) - col("toks")) / lit(512)).cast("long"))
+          .select(col("doc_id"), col("lang"), col("bin"))
+          .orderBy("doc_id")
+      }),
+
+    // Edit distance between the raw and entity-redacted text prefixes —
+    // the scoring primitive of fuzzy dedup (here: how much a scrub
+    // changed each document). Bounded cost: levenshtein is O(m·n) per
+    // row, so production use caps the operand length exactly as done
+    // here (64 chars), keeping the pass map-only and linear in corpus
+    // size.
+    Query("q_edit_distance",
+      """SELECT doc_id,
+                levenshtein(substr(text, 1, 64),
+                            substr(regexp_replace(text,
+                                     '\b(customer|supplier|user)\b',
+                                     '[ENTITY]', 'g'),
+                                   1, 64)) AS lev
+         FROM documents ORDER BY doc_id""",
+      (s, d) =>
+        docs(s, d)
+          .select(col("doc_id"),
+            levenshtein(
+              substring(col("text"), 1, 64),
+              substring(regexp_replace(col("text"),
+                "\\b(customer|supplier|user)\\b", "[ENTITY]"), 1, 64))
+              .cast("long").as("lev"))
+          .orderBy("doc_id")),
+
+    // PII-style entity redaction: map-only regexp scrub. The pattern
+    // here stands in for email/phone/SSN patterns (the synthetic corpus
+    // has none); the operator shape — regexp_replace at scan, no
+    // shuffle — is identical.
+    Query("q_redact",
+      """SELECT doc_id,
+                regexp_replace(text, '\b(customer|supplier|user)\b',
+                               '[ENTITY]', 'g') AS redacted
+         FROM documents ORDER BY doc_id""",
+      (s, d) =>
+        docs(s, d)
+          .select(col("doc_id"),
+            regexp_replace(col("text"), "\\b(customer|supplier|user)\\b",
+              "[ENTITY]").as("redacted"))
+          .orderBy("doc_id")),
+
+    // URL canonicalization dedup — crawl curation's first collapse: the
+    // same resource arrives as scheme/host-case variants, default-port
+    // spellings, trailing slashes, and utm_* tracking junk. Each doc
+    // synthesizes TWO deterministic variants (messy + clean), both
+    // canonicalize via parse_url decomposition (lowercase host, port
+    // dropped, trailing slash stripped, only the lang param kept), and
+    // the groupBy(canonical) must collapse every doc back to exactly
+    // n_variants = 2 — the oracle states the expected canonical by
+    // string algebra, so every canonicalization step is load-bearing.
+    // Map-only until the dedup's one hash shuffle; the host label is
+    // sanitized to [a-z0-9-] like q_url_fns so java.net.URI always
+    // parses.
+    Query("q_url_canon",
+      // the canonical each doc's two variants must collapse to, stated by
+      // string algebra — any missed canonicalization step diverges
+      """SELECT doc_id,
+                'https://' || regexp_replace(lower(source), '[^a-z0-9-]', '-', 'g')
+                  || '.example.com/docs/' || doc_id || '?lang=' || lang AS canon,
+                CAST(2 AS BIGINT) AS n_variants
+         FROM documents ORDER BY doc_id""",
+      (s, d) => {
+        val label = regexp_replace(lower(col("source")), "[^a-z0-9-]", "-")
+        val id = col("doc_id").cast("string")
+        val messy = concat(lit("https://"),
+          when(col("doc_id") % 2 === 0, upper(label)).otherwise(label),
+          lit(".Example.COM:443/docs/"), id,
+          when(col("doc_id") % 3 === 0, lit("/")).otherwise(lit("")),
+          lit("?utm_source=x&lang="), col("lang"),
+          when(col("doc_id") % 5 === 0, lit("&utm_campaign=y")).otherwise(lit("")))
+        val clean = concat(lit("https://"), label, lit(".example.com/docs/"),
+          id, lit("?lang="), col("lang"))
+        val canon = concat(lit("https://"),
+          lower(expr("parse_url(url, 'HOST')")),
+          regexp_replace(expr("parse_url(url, 'PATH')"), "/$", ""),
+          lit("?lang="), expr("parse_url(url, 'QUERY', 'lang')"))
+        docs(s, d)
+          .select(col("doc_id"), explode(array(messy, clean)).as("url"))
+          .select(col("doc_id"), canon.as("canon"))
+          .groupBy("canon")
+          .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_variants"))
+          .select(col("doc_id"), col("canon"), col("n_variants"))
+          .orderBy("doc_id")
+      }),
+
+    // Benchmark decontamination: flag corpus documents sharing any word
+    // 4-gram with a held-out benchmark set (stand-in: doc_id % 10 == 0 —
+    // the synthetic corpus has no real benchmark, but the operator shape
+    // is exactly the n-gram-overlap decontamination run before
+    // pretraining). Scale design: each side explodes to (gram-hash,
+    // doc_id) rows — xxhash64 narrows the shuffle row to 16 bytes vs the
+    // full gram string, at a 2^-64 false-positive risk per pair, the
+    // same accepted trade as MinHash dedup — the benchmark side is
+    // distinct-ed (small: |benchmark grams|) and the join is a plain
+    // equi-join on the hash that AQE broadcasts when the benchmark fits.
+    // No driver-side data path. (4-grams, not the 8-13 of production
+    // decontamination: corpus-calibrated so the synthetic vocab yields
+    // hits at test sf.)
+    Query("q_decontaminate",
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
            g AS (SELECT doc_id,
                         unnest(list_transform(range(len(w) - 3),
@@ -487,7 +339,31 @@ object CurationQueries {
          FROM g JOIN b USING (g)
          WHERE doc_id % 10 <> 0
          GROUP BY doc_id ORDER BY doc_id""",
-    "q_chunk_docs" ->
+      (s, d) => {
+        val toks = split(col("text"), " ")
+        def grams(w: org.apache.spark.sql.Column) =
+          transform(sequence(lit(0), size(w) - 4),
+            i => xxhash64(array_join(slice(w, i + lit(1), lit(4)), " ")))
+        val base = graft.operators.Layout.fanOutSmall(docs(s, d))
+          .filter(size(toks) >= 4)
+          .select(col("doc_id"), explode(grams(toks)).as("g"))
+        val bench = base.filter(col("doc_id") % 10 === 0)
+          .select("g").distinct()
+        base.filter(col("doc_id") % 10 =!= 0)
+          .join(bench, "g")
+          .groupBy("doc_id")
+          .agg(countDistinct(col("g")).as("n_hit"))
+          .orderBy("doc_id")
+      }),
+
+    // Fixed-token-window chunking with overlap (window 32, stride 24) —
+    // the pre-tokenizer split of long documents into training sequences.
+    // Chunk starts are stride multiples; the final chunk is the first
+    // one whose window reaches the end, so every token lands in ≥1 chunk
+    // and no chunk is fully contained in its predecessor. All codegen'd
+    // array expressions + one generator — map-only at any corpus size,
+    // no shuffle before the contract sort.
+    Query("q_chunk_docs",
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w,
                            (greatest(len(string_split(text, ' ')) - 32, 0) + 23) // 24 + 1 AS nc
                     FROM documents),
@@ -495,20 +371,69 @@ object CurationQueries {
          SELECT doc_id, i AS chunk_id,
                 array_to_string(w[i*24+1:i*24+32], ' ') AS chunk
          FROM g ORDER BY doc_id, chunk_id""",
-    "q_edit_distance" ->
-      """SELECT doc_id,
-                levenshtein(substr(text, 1, 64),
-                            substr(regexp_replace(text,
-                                     '\b(customer|supplier|user)\b',
-                                     '[ENTITY]', 'g'),
-                                   1, 64)) AS lev
-         FROM documents ORDER BY doc_id""",
-    "q_redact" ->
-      """SELECT doc_id,
-                regexp_replace(text, '\b(customer|supplier|user)\b',
-                               '[ENTITY]', 'g') AS redacted
-         FROM documents ORDER BY doc_id""",
-    "q_unigram_lm" ->
+      (s, d) => {
+        val w = split(col("text"), " ")
+        val nChunks =
+          floor((greatest(size(col("w")) - lit(32), lit(0)) + lit(23)) / lit(24))
+            .cast("int") + 1
+        docs(s, d)
+          .select(col("doc_id"), w.as("w"))
+          .select(col("doc_id"),
+            posexplode(transform(sequence(lit(0), nChunks - 1),
+              i => array_join(slice(col("w"), i * 24 + 1, lit(32)), " "))))
+          .withColumn("chunk_id", col("pos").cast("long")).drop("pos")
+          .withColumnRenamed("col", "chunk")
+          .select(col("doc_id"), col("chunk_id"), col("chunk"))
+          .orderBy("doc_id", "chunk_id")
+      }),
+
+    // The curation DAG end-to-end: repetition-quality gate → per-source
+    // cap → packing-ready token counts, composed exactly as a production
+    // corpus build would chain them. Each stage is individually
+    // oracle-verified above; this query verifies the COMPOSITION (stage
+    // ordering, column threading, no row leakage between stages) as one
+    // hash row set. Cost shape: one map-only scan (tokens + repetition),
+    // one keyed window (cap) — nothing quadratic, nothing global.
+    Query("q_curate_full",
+      s"""WITH t AS (SELECT doc_id, lang, source, string_split(text, ' ') AS w
+                    FROM documents),
+            q AS (SELECT doc_id, lang, source, w FROM t
+                  WHERE len(w) >= 3 AND $repSql <= 0.05),
+            capped AS (SELECT doc_id, lang, source, len(w) AS toks,
+                              row_number() OVER (PARTITION BY source
+                                                 ORDER BY doc_id) AS rn
+                       FROM q)
+         SELECT doc_id, lang, source, toks FROM capped
+         WHERE rn <= 15 ORDER BY doc_id""",
+      (s, d) => {
+        val w = split(col("text"), " ")
+        val scored = docs(s, d)
+          .select(col("doc_id"), col("lang"), col("source"), w.as("w"))
+          .filter(size(col("w")) >= 3)
+          .withColumn("rep", repExpr(col("w")))
+          .filter(col("rep") <= 0.05)
+        // Cap via native TopKPerKey (≤ 15 rows per source cross the
+        // shuffle); toks is computed BEFORE it so the token array never
+        // ships — the exchange carries 4 scalar columns per row.
+        graft.plans.TopKPerKeyNode.topKPerKey(
+            scored.select(col("doc_id"), col("lang"), col("source"),
+              size(col("w")).cast("long").as("toks")),
+            keyCols = Seq("source"), orderSpec = Seq(("doc_id", false)), k = 15)
+          .select(col("doc_id"), col("lang"), col("source"), col("toks"))
+          .orderBy("doc_id")
+      }),
+
+    // Unigram language-model scoring — the perplexity-proxy quality
+    // filter (production pipelines score against a KenLM n-gram model;
+    // the unigram variant is the same dataflow with the model TRAINED
+    // IN-QUERY on the corpus itself). avg log p(tok) = avg(ln tf) −
+    // ln(total): two corpus scans + one vocab-sized join that AQE
+    // broadcasts when the vocabulary fits (natural text: ~1e6 words ≪
+    // corpus), else shuffles on the token — never on the document. The
+    // ln values sum through DECIMAL so partial-aggregation order cannot
+    // move a bit; ln itself is a per-engine libm call, guarded by the
+    // 1e-10 quantization (≫ 1-ulp libm divergence) before the sum.
+    Query("q_unigram_lm",
       """WITH tok AS (SELECT doc_id,
                              unnest(string_split(lower(text), ' ')) AS tok
                       FROM documents),
@@ -521,14 +446,36 @@ object CurationQueries {
                       6) AS lm_score
          FROM tok JOIN f USING (tok)
          GROUP BY doc_id ORDER BY doc_id""",
-    "q_mask_pii" ->
-      """SELECT doc_id,
-                regexp_replace(regexp_replace(regexp_replace(
-                  substr(text, 1, 40),
-                  '[A-Z]', 'X', 'g'), '[a-z]', 'x', 'g'), '[0-9]', 'n', 'g')
-                  AS masked
-         FROM documents ORDER BY doc_id""",
-    "q_bigram_lm" ->
+      (s, d) => {
+        // fanOutSmall: parallelize the tokenize kernel past the small-file
+        // scan-split floor (no-op at scale) — see Layout.fanOutSmall
+        val toks = graft.operators.Layout.fanOutSmall(docs(s, d))
+          .select(col("doc_id"),
+            explode(split(lower(col("text")), " ")).as("tok"))
+        val freq = toks.groupBy("tok").agg(count(lit(1)).as("tf"))
+        val total = freq.agg(sum("tf").as("tot"))
+        toks.join(freq, "tok")
+          .crossJoin(broadcast(total))
+          .groupBy("doc_id")
+          .agg(round(
+            sum(expr("CAST(ln(CAST(tf AS DOUBLE)) AS DECIMAL(28,10))"))
+              .cast("double") / count(lit(1)) -
+              first(expr("ln(CAST(tot AS DOUBLE))")), 6).as("lm_score"))
+          .orderBy("doc_id")
+      }),
+
+    // Bigram LM scoring — the next rung of the perplexity-proxy ladder
+    // above q_unigram_lm: avg ln p(tok|prev) with add-0.5 smoothing
+    // over a unigram history count (the Lidstone shortcut; production
+    // scoring swaps in a pre-trained KenLM, same dataflow). Bigrams are
+    // built MAP-SIDE with zip_with over adjacent array slices — never a
+    // per-token window shuffle; the only exchanges are the two count
+    // aggregations and the count-joins back (vocab-sized — AQE
+    // broadcasts them on natural text), then one groupBy(doc_id).
+    // Smoothed ratios are exact doubles (int counts + exact halves), ln
+    // goes through the same DECIMAL(28,10) quantization as q_unigram_lm
+    // so partial-agg order cannot move a bit.
+    Query("q_bigram_lm",
       """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS w
                       FROM documents),
             toks AS (SELECT unnest(string_split(lower(text), ' ')) AS tok
@@ -545,5 +492,55 @@ object CurationQueries {
                       / count(*), 6) AS lm2_score
          FROM bg JOIN cbg USING (bg) JOIN tf ON tf.tok = bg.prev
          GROUP BY doc_id ORDER BY doc_id""",
+      (s, d) => {
+        val w = split(lower(col("text")), " ")
+        val bgs = graft.operators.Layout.fanOutSmall(docs(s, d))
+          .select(col("doc_id"),
+            explode(zip_with(
+              slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
+              (a, b) => struct(a.as("prev"),
+                concat_ws(" ", a, b).as("bg")))).as("p"))
+          .select(col("doc_id"), col("p.prev").as("prev"), col("p.bg").as("bg"))
+        val tf = graft.operators.Layout.fanOutSmall(docs(s, d))
+          .select(explode(split(lower(col("text")), " ")).as("tok"))
+          .groupBy("tok").agg(count(lit(1)).as("tf"))
+        // `tf > 0` is a tautology (tf is a count, always >= 1) kept for
+        // plan shape only: without it Catalyst prunes the unused count
+        // out of this branch's aggregate, de-canonicalizing its subtree
+        // from tf's — and the corpus gets re-tokenized just to count
+        // distinct tokens. Referencing tf keeps vocab on the SHARED
+        // tokenize→tf exchange (AQE ReusedExchange; guide §2.4 — the
+        // same fix as bm25FromStats' df branch), v values unchanged.
+        val vocab = tf.filter(col("tf") > 0).agg(count(lit(1)).as("v"))
+        val cbg = bgs.groupBy("bg").agg(count(lit(1)).as("cbg"))
+        bgs.join(cbg, "bg")
+          .join(tf.withColumnRenamed("tok", "prev"), "prev")
+          .crossJoin(broadcast(vocab))
+          .groupBy("doc_id")
+          .agg(count(lit(1)).as("n_bigrams"),
+            round(sum(expr(
+              "CAST(ln((cbg + 0.5) / (tf + 0.5 * v)) AS DECIMAL(28,10))"))
+              .cast("double") / count(lit(1)), 6).as("lm2_score"))
+          .orderBy("doc_id")
+      }),
+
+    // Character-class masking (Spark's mask(): upper→X, lower→x,
+    // digit→n, punctuation kept) — the shape-preserving PII transform
+    // used when downstream needs format validity (card/phone/ID fields)
+    // rather than q_redact's token replacement. Map-only at the scan.
+    // The corpus is ASCII, so the oracle's ASCII character classes are
+    // exactly Spark's unicode-aware ones.
+    Query("q_mask_pii",
+      """SELECT doc_id,
+                regexp_replace(regexp_replace(regexp_replace(
+                  substr(text, 1, 40),
+                  '[A-Z]', 'X', 'g'), '[a-z]', 'x', 'g'), '[0-9]', 'n', 'g')
+                  AS masked
+         FROM documents ORDER BY doc_id""",
+      (s, d) =>
+        docs(s, d)
+          .select(col("doc_id"),
+            expr("mask(substring(text, 1, 40))").as("masked"))
+          .orderBy("doc_id")),
   )
 }

@@ -51,54 +51,6 @@ object DocStructQueries {
       transform(array_sort(collect_list(struct(col("seg_idx"), col("seg")))),
         x => x.getField("seg")), " ")
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // Intra-document segment dedup: keep the FIRST occurrence of each
-    // distinct segment (row_number over (doc, seg) by position — the
-    // C4 repeated-line rule applied within the document), reassemble.
-    "q_para_dedup" -> ((s, d) => {
-      val byOcc = Window.partitionBy("doc_id", "seg").orderBy("seg_idx")
-      val byDoc = Window.partitionBy("doc_id")
-      exploded(s, d)
-        .withColumn("rn", row_number().over(byOcc))
-        .withColumn("n_segs", count(lit(1)).over(byDoc))
-        .filter(col("rn") === 1)
-        .groupBy("doc_id")
-        .agg(reassembled.as("clean_text"),
-          max(col("n_segs")).as("n_segs"),
-          count(lit(1)).as("n_kept"))
-        .orderBy("doc_id")
-    }),
-
-    // Segment-quality gate: keep segments carrying a function word
-    // ('a'/'the' — the terminal-punctuation stand-in), drop documents
-    // whose kept fraction falls under 0.12 (≈ the corpus median, so
-    // both verdicts are populated at every sf). The fraction compares
-    // UNROUNDED (exact-int division, identical in both engines); the
-    // emitted column rounds to 6.
-    "q_line_filter" -> ((s, d) => {
-      val padded = concat(lit(" "), col("seg"), lit(" "))
-      val keep = when(padded.like("% a %") || padded.like("% the %"), 1)
-        .otherwise(0)
-      exploded(s, d)
-        .withColumn("keep", keep)
-        .groupBy("doc_id")
-        .agg(
-          array_join(
-            transform(
-              array_sort(collect_list(
-                when(col("keep") === 1, struct(col("seg_idx"), col("seg"))))),
-              x => x.getField("seg")), " ").as("clean_text"),
-          sum(col("keep")).cast("long").as("n_kept"),
-          count(lit(1)).as("n_total"))
-        .filter(col("n_kept") / col("n_total") >= 0.12)
-        .select(col("doc_id"), col("clean_text"), col("n_kept"),
-          col("n_total"),
-          round(col("n_kept") / col("n_total"), 6).as("kept_frac"))
-        .orderBy("doc_id")
-    })
-  )
-
   private val segsCte =
     """WITH words AS (
          SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -109,8 +61,11 @@ object DocStructQueries {
            SELECT unnest(generate_series(
              1, CAST(ceil(len(w)/2.0) AS BIGINT))) AS i) gs)"""
 
-  val oracles: Map[String, String] = Map(
-    "q_para_dedup" ->
+  val queries: Seq[Query] = Seq(
+    // Intra-document segment dedup: keep the FIRST occurrence of each
+    // distinct segment (row_number over (doc, seg) by position — the
+    // C4 repeated-line rule applied within the document), reassemble.
+    Query("q_para_dedup",
       s"""$segsCte,
          dd AS (
            SELECT doc_id, seg_idx, seg,
@@ -123,7 +78,27 @@ object DocStructQueries {
                 max(n_segs) AS n_segs, count(*) AS n_kept
          FROM dd WHERE rn = 1
          GROUP BY doc_id ORDER BY doc_id""",
-    "q_line_filter" ->
+      (s, d) => {
+        val byOcc = Window.partitionBy("doc_id", "seg").orderBy("seg_idx")
+        val byDoc = Window.partitionBy("doc_id")
+        exploded(s, d)
+          .withColumn("rn", row_number().over(byOcc))
+          .withColumn("n_segs", count(lit(1)).over(byDoc))
+          .filter(col("rn") === 1)
+          .groupBy("doc_id")
+          .agg(reassembled.as("clean_text"),
+            max(col("n_segs")).as("n_segs"),
+            count(lit(1)).as("n_kept"))
+          .orderBy("doc_id")
+      }),
+
+    // Segment-quality gate: keep segments carrying a function word
+    // ('a'/'the' — the terminal-punctuation stand-in), drop documents
+    // whose kept fraction falls under 0.12 (≈ the corpus median, so
+    // both verdicts are populated at every sf). The fraction compares
+    // UNROUNDED (exact-int division, identical in both engines); the
+    // emitted column rounds to 6.
+    Query("q_line_filter",
       s"""$segsCte,
          flag AS (
            SELECT doc_id, seg_idx, seg,
@@ -142,6 +117,27 @@ object DocStructQueries {
                 round(n_kept*1.0/n_total, 6) AS kept_frac
          FROM per
          WHERE n_kept*1.0/n_total >= 0.12
-         ORDER BY doc_id"""
+         ORDER BY doc_id""",
+      (s, d) => {
+        val padded = concat(lit(" "), col("seg"), lit(" "))
+        val keep = when(padded.like("% a %") || padded.like("% the %"), 1)
+          .otherwise(0)
+        exploded(s, d)
+          .withColumn("keep", keep)
+          .groupBy("doc_id")
+          .agg(
+            array_join(
+              transform(
+                array_sort(collect_list(
+                  when(col("keep") === 1, struct(col("seg_idx"), col("seg"))))),
+                x => x.getField("seg")), " ").as("clean_text"),
+            sum(col("keep")).cast("long").as("n_kept"),
+            count(lit(1)).as("n_total"))
+          .filter(col("n_kept") / col("n_total") >= 0.12)
+          .select(col("doc_id"), col("clean_text"), col("n_kept"),
+            col("n_total"),
+            round(col("n_kept") / col("n_total"), 6).as("kept_frac"))
+          .orderBy("doc_id")
+      }),
   )
 }

@@ -1023,63 +1023,32 @@ object FuzzQueries {
            s"${e.fold(_.sql, _.sql)} AS $a" }.mkString(", ")}
        FROM documents ORDER BY doc_id"""
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] =
-    (preds ++ preds2).map { case (name, p) =>
-      name -> ((s: SparkSession, d: String) => run(s, d, p))
-    }.toMap ++
+  val queries: Seq[Query] =
+    (preds ++ preds2).map { case (name, p) => Query(name, sqlOf(p), run(_, _, p)) } ++
       (joinPreds ++ joinPreds2).map { case (name, jt, pO, pL) =>
-        name -> ((s: SparkSession, d: String) => runJoin(s, d, jt, pO, pL))
-      }.toMap ++
+        Query(name, joinSqlOf(jt, pO, pL), runJoin(_, _, jt, pO, pL))
+      } ++
       joinPreds3.map { case (name, jt, op, vO, vL, pO, pL) =>
-        name -> ((s: SparkSession, d: String) => runJoin3(s, d, jt, op, vO, vL, pO, pL))
-      }.toMap ++
-      aggCases3.map { case (name, c, v) =>
-        name -> ((s: SparkSession, d: String) => runAgg3(s, d, c, v))
-      }.toMap ++
+        Query(name, joinSqlOf3(jt, op, vO, vL, pO, pL),
+          runJoin3(_, _, jt, op, vO, vL, pO, pL))
+      } ++
+      aggCases3.map { case (name, c, v) => Query(name, aggSqlOf3(c, v), runAgg3(_, _, c, v)) } ++
       scalarCases2.map { case (name, cols) =>
-        name -> ((s: SparkSession, d: String) => runScalar(s, d, cols))
-      }.toMap ++
+        Query(name, scalarSqlOf(cols), runScalar(_, _, cols))
+      } ++
       setCases3.map { case (name, (a, b, op, v)) =>
-        name -> ((s: SparkSession, d: String) => runSet3(s, d, a, b, op, v))
-      }.toMap ++
+        Query(name, setSqlOf3(a, b, op, v), runSet3(_, _, a, b, op, v))
+      } ++
       (winCases ++ winCases2).map { case (name, cs) =>
-        name -> ((s: SparkSession, d: String) => runWin(s, d, cs))
-      }.toMap ++
-      winCases4.map { case (name, cs) =>
-        name -> ((s: SparkSession, d: String) => runWin4(s, d, cs))
-      }.toMap ++
+        Query(name, winSqlOf(cs), runWin(_, _, cs))
+      } ++
+      winCases4.map { case (name, cs) => Query(name, winSqlOf4(cs), runWin4(_, _, cs)) } ++
       aggCases4.map { case (name, v1, v2) =>
-        name -> ((s: SparkSession, d: String) => runAgg4(s, d, v1, v2))
-      }.toMap ++
-      (aggCases ++ aggCases2).map { case (name, c) =>
-        name -> ((s: SparkSession, d: String) => runAgg(s, d, c))
-      }.toMap ++
+        Query(name, aggSqlOf4(v1, v2), runAgg4(_, _, v1, v2))
+      } ++
+      (aggCases ++ aggCases2).map { case (name, c) => Query(name, aggSqlOf(c), runAgg(_, _, c)) } ++
       (setCases ++ setCases2).map { case (name, (a, b, op)) =>
-        name -> ((s: SparkSession, d: String) => runSet(s, d, a, b, op))
-      }.toMap ++
-      scalarCases.map { case (name, cols) =>
-        name -> ((s: SparkSession, d: String) => runScalar(s, d, cols))
-      }.toMap
-
-  val oracles: Map[String, String] =
-    (preds ++ preds2).map { case (name, p) => name -> sqlOf(p) }.toMap ++
-      (joinPreds ++ joinPreds2).map { case (name, jt, pO, pL) =>
-        name -> joinSqlOf(jt, pO, pL)
-      }.toMap ++
-      joinPreds3.map { case (name, jt, op, vO, vL, pO, pL) =>
-        name -> joinSqlOf3(jt, op, vO, vL, pO, pL)
-      }.toMap ++
-      aggCases3.map { case (name, c, v) => name -> aggSqlOf3(c, v) }.toMap ++
-      scalarCases2.map { case (name, cols) => name -> scalarSqlOf(cols) }.toMap ++
-      setCases3.map { case (name, (a, b, op, v)) =>
-        name -> setSqlOf3(a, b, op, v)
-      }.toMap ++
-      (winCases ++ winCases2).map { case (name, cs) => name -> winSqlOf(cs) }.toMap ++
-      winCases4.map { case (name, cs) => name -> winSqlOf4(cs) }.toMap ++
-      aggCases4.map { case (name, v1, v2) => name -> aggSqlOf4(v1, v2) }.toMap ++
-      (aggCases ++ aggCases2).map { case (name, c) => name -> aggSqlOf(c) }.toMap ++
-      (setCases ++ setCases2).map { case (name, (a, b, op)) =>
-        name -> setSqlOf(a, b, op)
-      }.toMap ++
-      scalarCases.map { case (name, cols) => name -> scalarSqlOf(cols) }.toMap
+        Query(name, setSqlOf(a, b, op), runSet(_, _, a, b, op))
+      } ++
+      scalarCases.map { case (name, cols) => Query(name, scalarSqlOf(cols), runScalar(_, _, cols)) }
 }

@@ -28,83 +28,6 @@ object GraphQueries {
   private def docCount(s: SparkSession, d: String): Long =
     docCountCache.get(s, d)(docs(s, d).count())
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // 5-iteration integer-scaled PageRank; top-20 pages by rank.
-    // The crawl-quality-weighting signal: rank feeds corpus sampling
-    // weights the way Common Crawl's harmonic-centrality host ranks do.
-    "q_pagerank" -> ((s, d) => {
-      val dd = docs(s, d)
-      Graph.pageRank(dd, docCount(s, d), iterations = 5)
-    }),
-
-    // Global triangle census (nodes/edges/wedges/triangles) via the
-    // degree-ordered compact-forward closure — never a high-degree
-    // wedge explosion, so the same plan survives power-law graphs.
-    "q_triangle_count" -> ((s, d) => {
-      val dd = docs(s, d)
-      Graph.triangleStats(dd, docCount(s, d))
-    }),
-
-    // Bounded-depth BFS from doc 0: shortest hop distance for every
-    // page reachable in ≤4 supersteps (the crawl-frontier shape).
-    "q_bfs_reach" -> ((s, d) => {
-      val dd = docs(s, d)
-      Graph.bfsDepths(dd, docCount(s, d), source = 0L, maxDepth = 4)
-        .orderBy("doc_id")
-    }),
-
-    // HITS hubs-and-authorities, 2 iterations, L1-normalized integer
-    // fixed-point (see Graph.hits) — top-20 authorities.
-    "q_hits" -> ((s, d) => {
-      val dd = docs(s, d)
-      Graph.hits(dd, docCount(s, d), iterations = 2)
-    }),
-
-    // Degree-distribution census: the (direction, degree, n_nodes)
-    // histogram both link-analysis papers and crawl-health dashboards
-    // start from (power-law detection, dangling-node counts). Two
-    // count-aggregations over the edge list, unioned; output is
-    // O(max_degree) rows at any corpus size. Nodes with zero
-    // in-links appear via the vertex left join (deg 0) — dropping
-    // them silently is the classic histogram bug.
-    "q_degree_dist" -> ((s, d) => {
-      val dd = docs(s, d)
-      val n = docCount(s, d)
-      val edges = Graph.linkEdges(dd, n)
-      val vertices = dd.select(col("doc_id").cast("long").as("id"))
-      def dist(keyCol: String, dir: String) = {
-        val degs = edges.groupBy(col(keyCol).as("id"))
-          .agg(count(lit(1)).as("deg"))
-        vertices.join(degs, Seq("id"), "left")
-          .select(coalesce(col("deg"), lit(0L)).as("deg"))
-          .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
-          .select(lit(dir).as("direction"), col("deg"), col("n_nodes"))
-      }
-      dist("src", "out").unionAll(dist("dst", "in"))
-        .orderBy("direction", "deg")
-    }),
-
-    // Centrality-weighted corpus sampling — the graph signal composed
-    // into a curation decision (crawl pipelines keep pages with
-    // probability proportional to host rank). Keep doc iff its Knuth
-    // bucket falls under rank/(2·max_rank) of the hash space: the
-    // decision is a pure integer function of (doc_id, rank), so the
-    // sample is retry-safe and oracle-replicable — the same discipline
-    // as every Sampling operator. One broadcast 1-row max joins the
-    // lazy full-rank vector; no collect anywhere.
-    "q_rank_sample" -> ((s, d) => {
-      val dd = docs(s, d)
-      val scores = Graph.pageRankScores(dd, docCount(s, d), iterations = 5)
-      val maxr = scores.agg(max("rank").as("maxr"))
-      scores.crossJoin(broadcast(maxr))
-        .filter(Sampling.bucketOf(col("doc_id")) <
-          expr("(rank div 1000) * 4294967296 div ((maxr div 1000) * 2)"))
-        .select(col("doc_id"), col("rank"))
-        .orderBy("doc_id")
-    })
-  )
-
   /** Shared edge-derivation CTEs (DuckDB). `nn` carries |V|; `e` is the
     * directed link set; reused verbatim across the three oracles so the
     * graph under test is provably the same one.
@@ -192,29 +115,23 @@ object GraphQueries {
         ORDER BY a2.auth DESC, a2.id LIMIT 20"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "q_pagerank" -> pagerankSql,
-    "q_rank_sample" -> rankSampleSql,
-    "q_hits" -> hitsSql,
-    "q_degree_dist" ->
-      s"""$edgeCte,
-         outd AS (SELECT d.doc_id AS id, count(e.src) AS deg
-                  FROM documents d LEFT JOIN e ON e.src = d.doc_id
-                  GROUP BY d.doc_id),
-         ind AS (SELECT d.doc_id AS id, count(e.dst) AS deg
-                 FROM documents d LEFT JOIN e ON e.dst = d.doc_id
-                 GROUP BY d.doc_id)
-         SELECT 'out' AS direction, deg, count(*) AS n_nodes
-         FROM outd GROUP BY deg
-         UNION ALL
-         SELECT 'in' AS direction, deg, count(*) AS n_nodes
-         FROM ind GROUP BY deg
-         ORDER BY direction, deg""",
+  val queries: Seq[Query] = Seq(
+    // 5-iteration integer-scaled PageRank; top-20 pages by rank.
+    // The crawl-quality-weighting signal: rank feeds corpus sampling
+    // weights the way Common Crawl's harmonic-centrality host ranks do.
+    Query("q_pagerank", pagerankSql,
+      (s, d) => {
+        val dd = docs(s, d)
+        Graph.pageRank(dd, docCount(s, d), iterations = 5)
+      }),
 
-    // naive id-ordered 3-join closure: the oracle states triangle
-    // semantics the simple way; the Spark side reaches the same count
-    // via the degree-ordered orientation
-    "q_triangle_count" ->
+    // Global triangle census (nodes/edges/wedges/triangles) via the
+    // degree-ordered compact-forward closure — never a high-degree
+    // wedge explosion, so the same plan survives power-law graphs.
+    Query("q_triangle_count",
+      // naive id-ordered 3-join closure: the oracle states triangle
+      // semantics the simple way; the Spark side reaches the same count
+      // via the degree-ordered orientation
       s"""$edgeCte,
          und AS (SELECT DISTINCT least(src, dst) AS u,
                         greatest(src, dst) AS v FROM e),
@@ -230,8 +147,14 @@ object GraphQueries {
                 (SELECT CAST(sum(deg * (deg - 1)) // 2 AS BIGINT) FROM dg)
                   AS n_wedges,
                 (SELECT t FROM tri) AS n_triangles""",
+      (s, d) => {
+        val dd = docs(s, d)
+        Graph.triangleStats(dd, docCount(s, d))
+      }),
 
-    "q_bfs_reach" ->
+    // Bounded-depth BFS from doc 0: shortest hop distance for every
+    // page reachable in ≤4 supersteps (the crawl-frontier shape).
+    Query("q_bfs_reach",
       s"""$edgeCte,
          walk(id, dist) AS (
            SELECT CAST(0 AS BIGINT) AS id, 0 AS dist
@@ -240,6 +163,77 @@ object GraphQueries {
            FROM walk w JOIN e ON e.src = w.id
            WHERE w.dist < 4)
          SELECT id AS doc_id, CAST(min(dist) AS BIGINT) AS dist
-         FROM walk GROUP BY id ORDER BY doc_id"""
+         FROM walk GROUP BY id ORDER BY doc_id""",
+      (s, d) => {
+        val dd = docs(s, d)
+        Graph.bfsDepths(dd, docCount(s, d), source = 0L, maxDepth = 4)
+          .orderBy("doc_id")
+      }),
+
+    // HITS hubs-and-authorities, 2 iterations, L1-normalized integer
+    // fixed-point (see Graph.hits) — top-20 authorities.
+    Query("q_hits", hitsSql,
+      (s, d) => {
+        val dd = docs(s, d)
+        Graph.hits(dd, docCount(s, d), iterations = 2)
+      }),
+
+    // Degree-distribution census: the (direction, degree, n_nodes)
+    // histogram both link-analysis papers and crawl-health dashboards
+    // start from (power-law detection, dangling-node counts). Two
+    // count-aggregations over the edge list, unioned; output is
+    // O(max_degree) rows at any corpus size. Nodes with zero
+    // in-links appear via the vertex left join (deg 0) — dropping
+    // them silently is the classic histogram bug.
+    Query("q_degree_dist",
+      s"""$edgeCte,
+         outd AS (SELECT d.doc_id AS id, count(e.src) AS deg
+                  FROM documents d LEFT JOIN e ON e.src = d.doc_id
+                  GROUP BY d.doc_id),
+         ind AS (SELECT d.doc_id AS id, count(e.dst) AS deg
+                 FROM documents d LEFT JOIN e ON e.dst = d.doc_id
+                 GROUP BY d.doc_id)
+         SELECT 'out' AS direction, deg, count(*) AS n_nodes
+         FROM outd GROUP BY deg
+         UNION ALL
+         SELECT 'in' AS direction, deg, count(*) AS n_nodes
+         FROM ind GROUP BY deg
+         ORDER BY direction, deg""",
+      (s, d) => {
+        val dd = docs(s, d)
+        val n = docCount(s, d)
+        val edges = Graph.linkEdges(dd, n)
+        val vertices = dd.select(col("doc_id").cast("long").as("id"))
+        def dist(keyCol: String, dir: String) = {
+          val degs = edges.groupBy(col(keyCol).as("id"))
+            .agg(count(lit(1)).as("deg"))
+          vertices.join(degs, Seq("id"), "left")
+            .select(coalesce(col("deg"), lit(0L)).as("deg"))
+            .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
+            .select(lit(dir).as("direction"), col("deg"), col("n_nodes"))
+        }
+        dist("src", "out").unionAll(dist("dst", "in"))
+          .orderBy("direction", "deg")
+      }),
+
+    // Centrality-weighted corpus sampling — the graph signal composed
+    // into a curation decision (crawl pipelines keep pages with
+    // probability proportional to host rank). Keep doc iff its Knuth
+    // bucket falls under rank/(2·max_rank) of the hash space: the
+    // decision is a pure integer function of (doc_id, rank), so the
+    // sample is retry-safe and oracle-replicable — the same discipline
+    // as every Sampling operator. One broadcast 1-row max joins the
+    // lazy full-rank vector; no collect anywhere.
+    Query("q_rank_sample", rankSampleSql,
+      (s, d) => {
+        val dd = docs(s, d)
+        val scores = Graph.pageRankScores(dd, docCount(s, d), iterations = 5)
+        val maxr = scores.agg(max("rank").as("maxr"))
+        scores.crossJoin(broadcast(maxr))
+          .filter(Sampling.bucketOf(col("doc_id")) <
+            expr("(rank div 1000) * 4294967296 div ((maxr div 1000) * 2)"))
+          .select(col("doc_id"), col("rank"))
+          .orderBy("doc_id")
+      }),
   )
 }

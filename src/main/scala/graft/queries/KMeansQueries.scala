@@ -21,29 +21,6 @@ object KMeansQueries {
       .collect()
       .map(_.getSeq[Double](0).toArray)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // single assignment step: argmin over k broadcast centroids
-    "q_kmeans_assign" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      KMeans.assign(emb, "vec", seeds(s, d), KMeans.EuclideanSq)
-        .select(col("vec_id"), col("cluster").cast("long").as("cluster"))
-        .orderBy("vec_id")
-    }),
-
-    // two Lloyd mean-updates then label: cluster sizes
-    "q_kmeans_sizes" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val fit = KMeans.lloyd(emb, "vec", seeds(s, d), KMeans.EuclideanSq, maxIter = 2)
-      KMeans.assign(emb, "vec", fit.centers, KMeans.EuclideanSq)
-        .groupBy("cluster")
-        .agg(count(lit(1)).as("n"))
-        .select(col("cluster").cast("long").as("cluster"), col("n"))
-        .orderBy("cluster")
-    }),
-  )
-
   // DuckDB replay: centroid seeds = vec_id < 4; argmin via row_number over
   // (distance, cid); mean vectors via unnest + list(avg ORDER BY dim).
   //
@@ -100,8 +77,28 @@ object KMeansQueries {
        SELECT CAST(cid + 1 AS BIGINT) AS cluster, count(*) AS n FROM a3
        GROUP BY cid ORDER BY cluster"""
 
-  val oracles: Map[String, String] = Map(
-    "q_kmeans_assign" -> assignSql,
-    "q_kmeans_sizes" -> sizesSql,
+  val queries: Seq[Query] = Seq(
+    // single assignment step: argmin over k broadcast centroids
+    Query("q_kmeans_assign", assignSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        KMeans.assign(emb, "vec", seeds(s, d), KMeans.EuclideanSq)
+          .select(col("vec_id"), col("cluster").cast("long").as("cluster"))
+          .orderBy("vec_id")
+      }),
+
+    // two Lloyd mean-updates then label: cluster sizes
+    Query("q_kmeans_sizes", sizesSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val fit = KMeans.lloyd(emb, "vec", seeds(s, d), KMeans.EuclideanSq, maxIter = 2)
+        KMeans.assign(emb, "vec", fit.centers, KMeans.EuclideanSq)
+          .groupBy("cluster")
+          .agg(count(lit(1)).as("n"))
+          .select(col("cluster").cast("long").as("cluster"), col("n"))
+          .orderBy("cluster")
+      }),
   )
 }

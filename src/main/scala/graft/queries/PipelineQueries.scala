@@ -478,1577 +478,6 @@ object PipelineQueries {
   private[graft] def exactReRank(emb: DataFrame, cand: DataFrame, k: Int): DataFrame =
     AnnCalibrate.exactReRank(emb, "vec_id", "embedding", cand, k)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Exact dedup, hash-first: group on sha2-256 of the text, not the text
-    // itself, so the shuffle carries a fixed 64-byte key per surviving
-    // group instead of the whole document (map-side partial agg already
-    // collapses in-partition duplicates either way; this cuts the bytes of
-    // the survivors). Collision argument: distinct texts colliding under
-    // SHA-256 needs ~2^128 docs (birthday bound) — at 10^12 documents the
-    // collision probability is < 10^-52, far below any hardware-error
-    // floor, so no in-group text verify is needed. min-id row survives.
-    "q_dedup_exact" -> ((s, d) => {
-      Tables.documents(s, d)
-        .groupBy(sha2(col("text").cast("binary"), 256).as("h"))
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
-        .select(col("doc_id"), col("n_copies"))
-        .orderBy("doc_id")
-    }),
-
-    // Keyed dedup: first event per (user, type) — the "keep one
-    // representative per key" pattern over a big fact table, via the
-    // native TopKPerKey operator with k=1: the shuffle carries one row
-    // per (user, type) instead of every event, and no partition ever
-    // sorts a full group (the row_number window form does both).
-    // Explicit projection first — a custom node blocks Catalyst's
-    // column pruning, so the scan must be slimmed before it.
-    "q_dedup_keyed" -> ((s, d) => {
-      graft.plans.TopKPerKeyNode.topKPerKey(
-          Tables.events(s, d)
-            .select(col("user_id"), col("event_type"), col("event_id")),
-          keyCols = Seq("user_id", "event_type"),
-          orderSpec = Seq(("event_id", false)),
-          k = 1)
-        .select(col("user_id"), col("event_type"), col("event_id"))
-        .orderBy("user_id", "event_type")
-    }),
-
-    // Exact all-pairs n-gram Jaccard ≥ 0.8 via the stats-adaptive
-    // Dedup.exactJaccardPairs: a sampled df pass picks the plan. This
-    // corpus has NO hot shingles (measured max df 25 at sf0.1 — flat
-    // distribution), so it runs the count-based inverted join with a
-    // single reused exchange; a corpus with df² killers would flip to
-    // PPJoin-style prefix filtering (see the operator scaladoc — both
-    // regimes emit the exact ground truth).
-    "q_jaccard_pairs" -> ((s, d) =>
-      Dedup.exactJaccardPairs(Tables.documents(s, d), "doc_id", "text",
-          threshold = 0.8)
-        .orderBy("a_id", "b_id")),
-
-    // MinHash+LSH near-dup: signature (narrow) → band join → exact verify.
-    // Output = verified pairs, so the oracle is the same ground truth as
-    // q_jaccard_pairs — but the plan only ever touches LSH candidates.
-    "q_minhash_neardup" -> ((s, d) =>
-      Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text", threshold = 0.8)
-        .orderBy("a_id", "b_id")),
-
-    // INCREMENTAL ingest dedup: this crawl's increment (doc_id % 11 = 0)
-    // deduped against the historical corpus's PERSISTED band state —
-    // batch-sized banding + band-key joins, never a re-band or self-join
-    // of the history (Dedup.bandRows / incrementalNearDupPairs). Output
-    // = every verified pair touching the batch; the oracle is the
-    // all-pairs ground truth restricted to batch-endpoint pairs, so
-    // "incremental == from-scratch on the touching set" is the
-    // driver-gated claim (the q_bm25_incr symmetry for dedup).
-    "q_dedup_incr" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val batch = docs.filter(pmod(col("doc_id"), lit(11)) === 0)
-      Dedup.incrementalNearDupPairs(
-          incrOldBands(s, d), batch, "doc_id", "text",
-          docs, threshold = 0.8)
-        .orderBy("a_id", "b_id")
-    }),
-
-    // DELETION maintenance for the dedup band state — the third
-    // lifecycle op (build / upsert / DELETE, VERDICT r15 #5): a GDPR
-    // erasure (doc_id % 7 = 3) leaves the persisted band state by one
-    // anti-join (Dedup.deleteBandRows). Banding is a pure per-doc
-    // function, so the maintained state must be ROW-IDENTICAL to
-    // re-banding the surviving corpus — the identity is checked in-plan
-    // (exceptAll both directions over the full (id, bh) state) and
-    // emitted as a boolean the oracle pins `true`, alongside two
-    // DuckDB-computable counts (survivors; 32 band rows per doc). Any
-    // stale row surviving the anti-join, or an over-delete, flips the
-    // boolean and reds the hash.
-    "q_dedup_delete" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val deleted = docs.filter(pmod(col("doc_id"), lit(7)) === 3)
-      val survivors = docs.filter(pmod(col("doc_id"), lit(7)) =!= 3)
-      val del = Dedup.deleteBandRows(
-        Dedup.bandRows(docs, "doc_id", "text"), deleted, "doc_id")
-      val rebuilt = Dedup.bandRows(survivors, "doc_id", "text")
-      val diffs = del.exceptAll(rebuilt).select(lit(1).as("one"))
-        .unionAll(rebuilt.exceptAll(del).select(lit(1).as("one")))
-      survivors.agg(count(lit(1)).as("n_survivors"))
-        .crossJoin(del.agg(count(lit(1)).as("n_band_rows")))
-        .crossJoin(diffs.agg((count(lit(1)) === 0).as("equals_rebuild")))
-    }),
-
-    // Near-dup CLUSTERS: the MinHash+LSH verified pair set (= the exact
-    // Jaccard ≥ 0.8 ground truth) closed under transitivity via
-    // Components.connectedComponents (hash-to-min label propagation);
-    // each doc in the near-dup graph gets its component's min doc_id as
-    // the canonical survivor. This is the step pairwise dedup misses:
-    // A~B and B~C must collapse to ONE survivor even when A~C itself
-    // falls under the threshold. Oracle = recursive CTE over the same
-    // ground-truth pairs.
-    "q_dedup_components" -> ((s, d) => {
-      val pairs = Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text",
-        threshold = 0.8)
-      Components.connectedComponents(pairs, "a_id", "b_id")
-        .select(col("id").as("doc_id"), col("comp").as("component"))
-        .orderBy("doc_id")
-    }),
-
-    // Same clustering through the star-contraction variant (large-star/
-    // small-star, O(log n) rounds regardless of diameter) — both
-    // algorithms hash-check against the identical recursive-CTE oracle,
-    // proving they are interchangeable behind the dedup pipeline.
-    "q_dedup_components_star" -> ((s, d) => {
-      val pairs = Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text",
-        threshold = 0.8)
-      Components.connectedComponentsStar(pairs, "a_id", "b_id")
-        .select(col("id").as("doc_id"), col("comp").as("component"))
-        .orderBy("doc_id")
-    }),
-
-    // INCREMENTAL cluster maintenance (Components.incrementalComponents
-    // — VERDICT r15 #7, the one pipeline state without an upsert path):
-    // the historical corpus's component labels absorb this crawl's
-    // verified touching pairs (the q_dedup_incr edge batch) by
-    // contract-solve-relabel — the historical EDGE SET never reappears;
-    // only the batch-sized supernode graph iterates, and merged old
-    // components rewrite via one comp-keyed join. The oracle is the
-    // from-scratch recursive CTE over the FULL corpus's ground-truth
-    // pairs — old ∪ touching IS the full pair set, so maintenance ==
-    // rebuild is the gated identity, vertex-for-vertex.
-    "q_dedup_components_incr" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val batch = docs.filter(pmod(col("doc_id"), lit(11)) === 0)
-      val newPairs = Dedup.incrementalNearDupPairs(
-        incrOldBands(s, d), batch, "doc_id", "text", docs, threshold = 0.8)
-      Components.incrementalComponents(incrOldComponents(s, d), newPairs,
-          "a_id", "b_id")
-        .select(col("id").as("doc_id"), col("comp").as("component"))
-        .orderBy("doc_id")
-    }),
-
-    // DELETION maintenance for the cluster labeling — the erase twin of
-    // q_dedup_components_incr and the hard direction: removing a doc
-    // can SPLIT its component (a bridge doc erased leaves its neighbors
-    // disconnected), so no label arithmetic suffices — connectivity is
-    // re-SOLVED, but only over the components a deleted id touches
-    // (Components.deleteFromComponents: untouched components pass
-    // through verbatim, affected ones re-run hash-to-min on their
-    // surviving pairs, edgeless survivors become singleton clusters, the
-    // erased ids leave no trace). Oracle = recursive-CTE closure over
-    // the SURVIVING pairs with its reach base widened to every surviving
-    // endpoint of the ORIGINAL pair set — exactly the maintained vertex
-    // contract (a doc does not vanish from the cluster state because its
-    // duplicates were erased).
-    "q_dedup_components_delete" -> ((s, d) => {
-      val (pairs, prev) = fullPairsAndComponents(s, d)
-      val del = Tables.documents(s, d)
-        .filter(pmod(col("doc_id"), lit(13)) === 0)
-        .select(col("doc_id").as("id"))
-      Components.deleteFromComponents(prev, pairs, "a_id", "b_id", del)
-        .select(col("id").as("doc_id"), col("comp").as("component"))
-        .orderBy("doc_id")
-    }),
-
-    // Corpus mixing: deterministic per-language downsample equalizing
-    // language sizes (Sampling.balancedSample) — exact integer
-    // cross-multiplied thresholds, replayed verbatim by the oracle.
-    "q_lang_balance" -> ((s, d) =>
-      Sampling.balancedSample(Tables.documents(s, d), "lang", "doc_id")
-        .select(col("doc_id"), col("lang"))
-        .orderBy("doc_id")),
-
-    // Temperature-mixed corpus sampling at α = 1/2 (exponentiated
-    // stratum smoothing — the multilingual-LM mixing rule): big
-    // languages down-weight softly instead of slamming to the smallest
-    // stratum's size; keep-rate per language = √(n_min/n_i), decided by
-    // the exact integer rule bucket²·n_i < n_min·2^64 on BOTH engines
-    // (squaring clears the square root — the one temperature with a
-    // float-free oracle; see Sampling.sqrtTemperatureSample).
-    "q_temp_mixture" -> ((s, d) =>
-      Sampling.sqrtTemperatureSample(Tables.documents(s, d), "lang", "doc_id")
-        .select(col("doc_id"), col("lang"))
-        .orderBy("doc_id")),
-
-    // Token-budget mixing — the unit real mix specs are written in:
-    // each language keeps its hash-ordered document prefix until HALF
-    // its total whitespace tokens are consumed (budgets derived in-plan
-    // as exact `div 2` longs, so the row binds — is a strict subset —
-    // at every scale by construction). Pure integer running-sum rule,
-    // replayed verbatim by the oracle's window; the budget frame is a
-    // k-row broadcast (Sampling.tokenBudgetSample).
-    "q_token_budget_mix" -> ((s, d) => {
-      val t = Tables.documents(s, d).select(col("doc_id"), col("lang"),
-        size(TextFunctions.tokens(col("text"))).cast("long").as("n_tok"))
-      val budgets = t.groupBy("lang").agg(expr("sum(n_tok) div 2").as("budget"))
-      Sampling.tokenBudgetSample(t, "lang", "doc_id", "n_tok", budgets)
-        .orderBy("doc_id")
-    }),
-
-    // Leakage-safe corpus split: near-dup CLUSTERS (MinHash pairs closed
-    // under transitivity) are the split unit, so no near-duplicate pair
-    // can straddle train/test — the eval-contamination guard a doc-keyed
-    // split (q_split_sample) structurally lacks. Oracle = the recursive-
-    // CTE component closure over the same ground-truth pairs + the same
-    // binary-exact bucket cuts, keyed on the cluster canonical.
-    "q_cluster_split" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
-      Sampling.clusterSafeSplit(docs.select(col("doc_id")), "doc_id", pairs,
-          "a_id", "b_id",
-          Seq("train" -> 0.75, "valid" -> 0.125, "test" -> 0.125))
-        .orderBy("doc_id")
-    }),
-
-    // Adaptive per-language quality gate: keep the top 3/5 of each
-    // language by the shared quality heuristic (round-6 double — its
-    // cross-engine equality is already pinned by q_quality_score, so
-    // ordering on it plus the doc_id tie-break cannot diverge). The
-    // keep rule is exact integer cross-multiplication rank·5 ≤ cnt·3 —
-    // floor(0.6·cnt) rows per language, scaling with the stratum where
-    // q_domain_cap's fixed k cannot.
-    "q_quality_gate" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"),
-        TextFunctions.qualityScore(col("text")).as("quality"))
-      Sampling.stratumQuantileGate(docs, "lang", 3, 5,
-          col("quality").desc, col("doc_id"))
-        .orderBy("doc_id")
-    }),
-
-    // Near-dup dedup END-TO-END: the survivor set after transitive
-    // clustering — every doc either outside the near-dup graph or the
-    // canonical (min-id) member of its component. This is the actual
-    // pipeline deliverable (pairs and components are its intermediate
-    // stages); the final step is one anti-join of the corpus against the
-    // non-canonical component members (a set the size of the dup graph,
-    // tiny next to the corpus).
-    "q_neardup_survivors" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
-      val losers = Components.connectedComponents(pairs, "a_id", "b_id")
-        .filter(col("id") =!= col("comp"))
-        .select(col("id").as("doc_id"))
-      docs.select(col("doc_id"))
-        .join(losers, Seq("doc_id"), "left_anti")
-        .orderBy("doc_id")
-    }),
-
-    // INCREMENTAL corpus-statistics maintenance — the pre-aggregated
-    // per-language stats table (doc count, token count, distinct-term
-    // sketch) kept current by MERGING the increment's partial stats
-    // with the persisted ones, never rescanning the history: counts and
-    // sums merge by addition (snapshot doc sets are disjoint — the
-    // ingest contract), and the HLL sketch is count-distinct in its
-    // MERGEABLE-state form (register-wise union; the only way distinct
-    // counts can be maintained incrementally at all). The oracle
-    // recomputes from scratch over the full corpus: maintenance ==
-    // rebuild EXACTLY for the algebraic stats, and the sketch estimate
-    // lands in the ±10% band vs the exact distinct count (the
-    // q_approx_distinct discipline — and at this vocabulary size the
-    // HLL sparse mode is exact in practice).
-    "q_stats_incr" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      def partial(df: DataFrame) = df
-        .select(col("lang"), col("doc_id"),
-          explode(TextFunctions.tokens(col("text"))).as("term"))
-        .groupBy("lang")
-        .agg(countDistinct(col("doc_id")).as("n_docs"),
-          count(lit(1)).as("n_tok"),
-          hll_sketch_agg(col("term")).as("sk"))
-      val merged = partial(docs.filter(pmod(col("doc_id"), lit(11)) =!= 0))
-        .unionByName(partial(docs.filter(pmod(col("doc_id"), lit(11)) === 0)))
-        .groupBy("lang")
-        .agg(sum("n_docs").as("n_docs"), sum("n_tok").as("n_tok"),
-          hll_union_agg(col("sk")).as("sk"))
-      val exact = docs
-        .select(col("lang"), explode(TextFunctions.tokens(col("text"))).as("term"))
-        .groupBy("lang").agg(countDistinct(col("term")).as("nd_exact"))
-      merged.join(exact, Seq("lang"))
-        .select(col("lang"), col("n_docs"), col("n_tok"), col("nd_exact"),
-          hll_sketch_estimate(col("sk"))
-            .between(col("nd_exact") * 0.9, col("nd_exact") * 1.1)
-            .as("in_band"))
-        .orderBy("lang")
-    }),
-
-    // DELETION maintenance for corpus STATISTICS — the decrement twin of
-    // q_stats_incr, and the design point it exists to pin: the insert-only
-    // HLL sketch CANNOT decrement (register-wise max is not invertible),
-    // so a stats table that must survive erasure keeps the DECREMENTABLE
-    // sufficient statistic instead — per-(lang, term) counts,
-    // n-proportional state whose delete is a subtraction. The algebraic
-    // stats (doc/token counts) decrement by subtracting the deleted
-    // batch's OWN partials (O(deleted), never a survivor rescan); the
-    // distinct-term count re-derives EXACTLY as count(cnt > 0) from the
-    // maintained count table, where the sketch's only post-delete move is
-    // a full rebuild. A language whose every doc is erased drops out of
-    // the maintained table entirely (the n_docs > 0 gate), matching the
-    // oracle's GROUP BY over survivors. Oracle = from-scratch recompute
-    // over the surviving corpus; maintenance == rebuild EXACTLY for every
-    // column — no sketch band needed, which is the point.
-    "q_stats_delete" -> ((s, d) => {
-      val del = Tables.documents(s, d)
-        .filter(pmod(col("doc_id"), lit(11)) === 0)
-      def tok(df: DataFrame) = df.select(col("lang"), col("doc_id"),
-        explode(TextFunctions.tokens(col("text"))).as("term"))
-      // the persisted decrementable state over the FULL corpus —
-      // memoized setup (statsDeleteState), not the gated operator
-      val (counts, stats) = statsDeleteState(s, d)
-      // the delete batch's own partials — the decrement, O(deleted)
-      val dcounts = tok(del).groupBy("lang", "term")
-        .agg(count(lit(1)).as("dcnt"))
-      val dstats = tok(del).groupBy("lang")
-        .agg(countDistinct(col("doc_id")).as("d_docs"),
-          count(lit(1)).as("d_tok"))
-      val keptCounts = counts.join(dcounts, Seq("lang", "term"), "left")
-        .filter(col("cnt") - coalesce(col("dcnt"), lit(0L)) > 0)
-      val maintained = stats.join(dstats, Seq("lang"), "left")
-        .select(col("lang"),
-          (col("n_docs") - coalesce(col("d_docs"), lit(0L))).as("n_docs"),
-          (col("n_tok") - coalesce(col("d_tok"), lit(0L))).as("n_tok"))
-        .filter(col("n_docs") > 0)
-      maintained.join(
-          keptCounts.groupBy("lang").agg(count(lit(1)).as("nd_exact")),
-          Seq("lang"))
-        .orderBy("lang")
-    }),
-
-    // LOG-STRUCTURED index-state composition (StateLog.composeFrames —
-    // the read path of the O(batch)-per-epoch maintenance log, run
-    // in-plan): base = the compacted tf state at epoch 0; epoch 1
-    // tombstones docs (ownership claim with NO rows); epoch 2 re-crawls
-    // docs with CHANGED text — including a RESURRECTION where a doc
-    // tombstoned at 1 is re-crawled at 2 (doc_id % 221 == 0 at sf≥0.01,
-    // so the case is non-vacuous). Highest-epoch-wins arg-max per
-    // doc_id, one union + one max-agg + one join, all relational.
-    // Oracle replays the winner algebra directly on the documents
-    // table: survivors = NOT tombstoned OR re-crawled, re-crawled text
-    // replaced — then the shared tf CTE.
-    "q_tf_log_compose" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val base = Retrieval.termFreq(docs)
-      val tomb = docs.filter(pmod(col("doc_id"), lit(13)) === 0)
-        .select(col("doc_id"))
-      val re = docs.filter(pmod(col("doc_id"), lit(17)) === 0)
-        .select(col("doc_id"), concat(col("text"), lit(" v2")).as("text"))
-      StateLog.composeFrames("doc_id",
-          Some(0L -> base),
-          Seq((1L, tomb, base.limit(0)),
-            (2L, re.select(col("doc_id")), Retrieval.termFreq(re))))
-        .orderBy("doc_id", "term")
-    }),
-
-    // Corpus VERSION DIFF — the snapshot comparison that drives every
-    // incremental operator above: classify each doc_id across two
-    // corpus versions as added / removed / changed / same. Version A is
-    // derived in-plan from the corpus (mod-13 ids absent = "B added
-    // them", mod-17 texts suffixed = "B changed them", mod-23 ghost
-    // rows at shifted ids = "B removed them" — shift from max+1, the
-    // serveWorkload idiom); the comparison is a sha2-256 full-outer
-    // join, so at corpus scale the shuffle carries 64-byte digests,
-    // never the payloads (the q_dedup_exact discipline). The
-    // changed ∪ added output is exactly what a deployment feeds to
-    // upsertTermFreq / ivfUpsert / upsertBandRows.
-    "q_corpus_diff" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val shift = docs.agg((max(col("doc_id")) + 1L).as("shift"))
-      val ghosts = docs.filter(pmod(col("doc_id"), lit(23)) === 0)
-        .crossJoin(broadcast(shift))
-        .select((col("doc_id") + col("shift")).as("doc_id"), col("text"))
-      val a = docs.filter(pmod(col("doc_id"), lit(13)) =!= 0)
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(17)) === 0,
-            concat(col("text"), lit(" v2"))).otherwise(col("text")).as("text"))
-        .unionByName(ghosts)
-      // presence is tested on explicit marker columns, NEVER on digest
-      // nullity (sha2 of a NULL text is NULL — a present null-text doc
-      // must classify by presence + null-safe equality, not read as
-      // absent), and the digest compare is null-safe for the same
-      // reason: two null texts are the same document state
-      def h(df: DataFrame, c: String, in: String) = df.select(col("doc_id"),
-        sha2(col("text").cast("binary"), 256).as(c), lit(1).as(in))
-      h(a, "ha", "in_a").join(h(docs, "hb", "in_b"), Seq("doc_id"), "full_outer")
-        .select(col("doc_id"),
-          when(col("in_a").isNull, "added")
-            .when(col("in_b").isNull, "removed")
-            .when(col("ha") <=> col("hb"), "same")
-            .otherwise("changed").as("status"))
-        .orderBy("doc_id")
-    }),
-
-    // Quality-aware dedup survivors: within each near-dup cluster keep
-    // the HIGHEST-QUALITY copy (argmax quality, doc_id tie-break) — the
-    // production survivor rule. q_neardup_survivors' min-id canonical
-    // picks an ARBITRARY copy; a real pipeline keeps the best one.
-    // Composition of three shared, already-gated pieces: the
-    // ground-truth pair set, the component closure, and the SHARED
-    // quality score (qualityCtes — round-6, so the argmax cannot
-    // tie-break differently across engines). The per-cluster window
-    // ranks dup-graph-sized groups only; the corpus pays one anti-join.
-    "q_best_survivors" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
-      val members = Components.connectedComponents(pairs, "a_id", "b_id")
-        .select(col("id").as("doc_id"), col("comp"))
-        .join(docs.select(col("doc_id"),
-          TextFunctions.qualityScore(col("text")).as("q")), "doc_id")
-      val w = Window.partitionBy("comp").orderBy(col("q").desc, col("doc_id"))
-      val losers = members.withColumn("rn", row_number().over(w))
-        .filter(col("rn") > 1).select("doc_id")
-      docs.select(col("doc_id"))
-        .join(losers, Seq("doc_id"), "left_anti")
-        .orderBy("doc_id")
-    }),
-
-    // Normalized exact dedup: q_text_normalize's canonicalization feeding
-    // the hash-first dedup — trivially-variant copies (case, punctuation,
-    // whitespace) collapse to one survivor. Same sha2 grouping and
-    // collision bound as q_dedup_exact.
-    "q_dedup_normalized" -> ((s, d) => {
-      Tables.documents(s, d)
-        .select(col("doc_id"), normExpr(col("text")).as("norm"))
-        .groupBy(sha2(col("norm").cast("binary"), 256).as("h"))
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
-        .select(col("doc_id"), col("n_copies"))
-        .orderBy("doc_id")
-    }),
-
-    // SimHash near-dup: pigeonhole chunking makes candidates COMPLETE for
-    // hamming ≤ 3 (the Manku et al. WWW'07 standard radius for 64-bit
-    // SimHash — and the pigeonhole sweet spot: 4 chunks of 16 bits give
-    // 65k buckets, vs 9 7-bit chunks at radius 8 whose 128 buckets
-    // produced a measured ~44M candidate pairs at sf0.1), so the output
-    // equals the all-pairs hamming set and the DuckDB oracle recomputes
-    // the identical poly-hash fingerprints.
-    "q_simhash_neardup" -> ((s, d) =>
-      Dedup.simhashNearDups(Tables.documents(s, d), "doc_id", "text", maxHamming = 3)
-        .orderBy("a_id", "b_id")),
-
-    // Exact cosine top-5 per vector, brute force (the correctness anchor
-    // for the ANN path) via the blocked block-pair grid — no driver
-    // collect, O(n/blocks) memory per task. Double-precision left-to-right
-    // folds — replicated op-for-op in the oracle SQL.
-    "q_cosine_topk" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.bruteForceTopK(emb, "vec_id", "embedding", k = 5,
-          blocks = AnnParams.bruteBlocks(embCount(s, d)))
-        .withColumn("sim", round(col("sim"), 6))
-        .orderBy("qid", "rank")
-    }),
-
-    // Hard-negative mining: per anchor, the 3 most-similar vectors with
-    // a DIFFERENT label, from a deterministic 25% Knuth-hash candidate
-    // pool (Similarity.hardNegatives — anchors expand by the broadcast
-    // label dim, then ONE equi-join on the label key; no cross join).
-    "q_hard_negatives" -> ((s, d) =>
-      Similarity.hardNegatives(Tables.embeddings(s, d), "vec_id",
-          "embedding", "label", k = 3)
-        .withColumn("sim", round(col("sim"), 6))
-        .orderBy("qid", "rank")),
-
-    // LSH-bucketed approximate top-k (the 100 TB path).
-    //
-    // Oracle shape: ANN output is approximate by construction, so the
-    // driver-checkable projection is the recall contract itself — Spark
-    // measures recall@5 of the LSH path against its own exact brute-force
-    // anchor (which IS hash-verified against DuckDB in q_cosine_topk) and
-    // emits (n_queries, recall_band, recall_ok); the oracle states the
-    // expected constants. recall_band = recall@5 bucketized to 0.1, so
-    // the hash pins the ACHIEVED band, not just a boolean: any parameter
-    // or code drift that moves recall across a 0.1 boundary turns the row
-    // red. The operating point derives from corpus cardinality like
-    // every other ANN knob (AnnParams.lshBits): bits =
-    // ⌈log2(tables/frac)⌉ sizes the hash space so the expected
-    // candidate FRACTION — not any bucket count — is the invariant,
-    // under an ⌈log2(n)⌉ occupancy bound. At the grid-measured point
-    // (LshTables = 16, LshCandFrac = 0.5: these near-random
-    // embeddings — max pairwise cos ≈ 0.51 — need coarse buckets) the
-    // rule derives 5-bit tables at every tested cardinality, the
-    // configuration the bands were measured at: recall@5 = 0.768 at
-    // sf0.001 / 0.768 at sf0.01 / 0.771 at sf0.1 — ONE constant 0.7
-    // band with ≥0.068 edge margin at every scale, and the
-    // near-identical recall at n = 500 and n = 2000 is the
-    // fraction-invariance the derivation exists for (the one-bit-
-    // deeper 0.25-fraction point reads 0.616/0.628/0.597 — a 0.003
-    // band-edge brush at sf0.1 — and is what calibrateLsh returns
-    // when the caller only needs the 0.5 floor). Re-measure with
-    // RecallGrid before touching AnnParams.lshBits or the
-    // hyperplane kernel.
-    // Recall is audited on a DETERMINISTIC 10% query sample
-    // (Sampling.hashSample) — the 100 TB shape: the exact anchor is
-    // affordable for a sample of queries against ALL candidates, never
-    // for every query. The sample is keyed (reproducible, engine-
-    // replicable) so the oracle can state its exact size.
-    "q_ann_lsh" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      // the 10% query sample is applied on the QUERY SIDE of the bucket
-      // join (queryPred), not as a post-filter on the finished top-k:
-      // per-query results are independent, so the rows are identical,
-      // but the discarded 90% of queries never pay candidate scoring or
-      // the per-query top-k exchange
-      val n = embCount(s, d)
-      val lsh = Similarity.lshTopK(emb, "vec_id", "embedding",
-          k = 5, dim = 64, tables = AnnParams.LshTables,
-          bitsPerTable = AnnParams.lshBits(n),
-          queryPred = Some(Sampling.samplePred(0.1)))
-      val bf = bfAnchor(s, d)
-      // ceiling-bind warnings ride every derived-knob row as a named
-      // Observation (VERDICT r13 #6) — identity below the caps (all
-      // tested scales), so plan and oracle hash are untouched here
-      AnnParams.observeClamps(recallContract(bf, lsh), n)._1
-    }),
-
-    // IVF-ANN (the data-adaptive second ANN architecture: k-means cells +
-    // nprobe probing — Similarity.ivfTopK). Same recall-contract oracle
-    // shape as q_ann_lsh: Spark measures recall@5 against its own exact
-    // anchor (hash-verified in q_cosine_topk), and the hash pins the
-    // achieved band. The operating points derive from corpus cardinality
-    // (AnnParams): nlist = ⌈√n⌉, nprobe = ⌈ρ·nlist⌉ at the IVF probe
-    // fraction ρ = 0.46 (exact scoring inside probed cells means cell
-    // recall is the ONLY recall term, so the fraction — not any absolute
-    // count — is what the band depends on; a fixed nlist would instead
-    // let per-cell size, and so per-probe cost, grow linearly with the
-    // corpus). Derived points and grid-measured recall@5 (RecallGrid):
-    // n=500 → (23, 11), recall 0.872/0.840 (sf0.001/sf0.01 — the two
-    // same-cardinality datasets MUST share a band, the binding
-    // constraint on ρ); n=2000 → (45, 21), recall 0.843 — one constant
-    // 0.8 band, every scale ≥0.028 from a band edge and ≥0.34 above
-    // the 0.5 floor. AnnParamsSpec pins the derived values.
-    "q_ann_ivf" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      // query-side sample via queryPred, same reasoning as q_ann_lsh
-      val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding",
-          k = 5, nlist = AnnParams.nlist(n),
-          nprobe = AnnParams.nprobe(n, AnnParams.IvfProbeFrac),
-          queryPred = Some(Sampling.samplePred(0.1)))
-      val bf = bfAnchor(s, d)
-      AnnParams.observeClamps(recallContract(bf, ivf), n)._1
-    }),
-
-    // External-workload ANN serving (the production shape: queries are
-    // NOT corpus rows — Similarity.ivfProbeFor over a trained
-    // IvfIndex). Probed at FULL width (nprobe = nlist), so the result
-    // is EXACT by construction (every cell is scanned; PqOpsSpec pins
-    // full-probe ≡ brute force bit-for-bit) — which converts this row
-    // from a recall band into a deterministic cross-engine HASH of the
-    // whole serving plumbing: external-id normalization, cell
-    // equi-join, id-keyed self-exclusion, (sim desc, nid) tie-breaks,
-    // rank emission. The approximate operating points of the SAME path
-    // are gated by the recall-contract rows; the workload here is a
-    // modulo sample (not hashSample) because the oracle must replicate
-    // it in SQL, and its ids shift out of the corpus id space — BY
-    // max(vec_id)+1, derived in-plan on both engines (a fixed shift
-    // constant silently collides with the corpus id space the first
-    // time a scale's ids outgrow it, firing Spark's id-keyed
-    // self-exclusion while the oracle keeps the pair), via the
-    // broadcast-1-row scalar-join pattern — so no self-exclusion
-    // fires on either engine at ANY scale.
-    // INCREMENTAL dense ingest: last epoch's index (trained on
-    // vec_id % 9 != 0) absorbs this epoch's increment (% 9 == 0) by
-    // frozen-quantizer assignment + anti-join upsert — no Lloyd re-run,
-    // no corpus re-encode (Similarity.ivfUpsert — the q_bm25_incr
-    // symmetry for the ANN family). A full-width probe is exact
-    // REGARDLESS of the quantizer, so the merged index must reproduce
-    // the exact serving oracle VERBATIM: incremental ingest == full
-    // rebuild under the exact probe, hash-pinned cross-engine.
-    "q_ann_incr" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val batch = emb.filter(pmod(col("vec_id"), lit(9)) === 0)
-      val nOld = incrOldCount(s, d)
-      val nl = AnnParams.nlist(nOld)
-      // memoized old-snapshot training (incrIvfIndex); the upsert — the
-      // gated operator — runs per call
-      val up = Similarity.ivfUpsert(incrIvfIndex(s, d), batch,
-        "vec_id", "embedding")
-      AnnParams.observeClamps(
-        Similarity.ivfProbeFor(up, serveWorkload(emb), "vec_id", "embedding",
-            k = 5, nprobe = nl)
-          .withColumn("sim", round(col("sim"), 6))
-          .orderBy("qid", "rank"),
-        nOld)._1
-    }),
-
-    // IVF-PQ incremental ingest (Similarity.ivfPqUpsert — BOTH
-    // quantizers frozen, batch runs the fused encode kernel, stale ids
-    // replaced by anti-join). Gate: full probe width × candK = n makes
-    // the candidate set the whole corpus, and the exact cosine re-rank
-    // of a complete candidate set is the exact brute force REGARDLESS
-    // of the quantizers — so the merged index must reproduce the exact
-    // serving oracle verbatim, proving every batch row searchable
-    // end-to-end through the upserted encoded table. (The approximate-
-    // width quality claim needs no new grid: PqOpsSpec pins the upsert
-    // bit-identical to a frozen-kernel re-encode of the merged corpus,
-    // so the family's measured recall properties transfer.)
-    "q_ann_incr_ivfpq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val batch = emb.filter(pmod(col("vec_id"), lit(9)) === 0)
-      val nl = AnnParams.nlist(incrOldCount(s, d))
-      // memoized old-snapshot training; the upsert runs per call
-      val up = Similarity.ivfPqUpsert(incrIvfPqIndex(s, d), batch,
-        "vec_id", "embedding")
-      val workload = serveWorkload(emb)
-      val cand = Similarity.ivfPqProbe(up, workload, "vec_id", "embedding",
-        k = embCount(s, d).toInt, nprobe = nl)
-      exactTop5(emb, workload, cand)
-    }),
-
-    // Flat-ADC incremental ingest (Similarity.pqUpsert — frozen
-    // codebooks). Same exact gate: candK = n candidates, exact re-rank,
-    // the exact serving oracle verbatim.
-    "q_ann_incr_pq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val batch = emb.filter(pmod(col("vec_id"), lit(9)) === 0)
-      val (model, enc) = incrPqState(s, d)
-      val up = Similarity.pqUpsert(enc, model, batch, "vec_id", "embedding")
-      val workload = serveWorkload(emb)
-      val cand = Similarity.pqSearch(up, model, workload, "vec_id",
-        "embedding", embCount(s, d).toInt)
-      exactTop5(emb, workload, cand)
-    }),
-
-    // LSH incremental ingest (Similarity.lshUpsert). LSH is
-    // data-oblivious, so the upserted banded table is BIT-IDENTICAL to
-    // a from-scratch rebuild over the merged corpus under the same
-    // config — the probe therefore lands on exactly q_ann_serve_lsh's
-    // results, and this row rides that row's interval oracle verbatim.
-    "q_ann_incr_lsh" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val old = emb.filter(pmod(col("vec_id"), lit(9)) =!= 0)
-      val batch = emb.filter(pmod(col("vec_id"), lit(9)) === 0)
-      // the deployment's pinned index CONFIG (set when the index was
-      // created over the full corpus — the serving row's parameters)
-      val idx = Similarity.lshIndex(old, "vec_id", "embedding", dim = 64,
-        tables = AnnParams.LshTables, bitsPerTable = AnnParams.lshBits(n))
-      val up = Similarity.lshUpsert(idx, batch, "vec_id", "embedding")
-      val ann = Similarity.lshProbeFor(up, serveWorkload(emb, every = 7),
-        "vec_id", "embedding", k = 5)
-      AnnParams.observeClamps(
-        recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.73, hi = 0.86),
-        n)._1
-    }),
-
-    "q_ann_serve" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val nlist = AnnParams.nlist(n)
-      // memoized trained index (servingIvfIndex — bit-identical to
-      // training in-row; the persisted row keeps its own training)
-      val idx = servingIvfIndex(s, d)
-      AnnParams.observeClamps(
-        Similarity.ivfProbeFor(idx, serveWorkload(emb), "vec_id", "embedding",
-            k = 5, nprobe = nlist)
-          .withColumn("sim", round(col("sim"), 6))
-          .orderBy("qid", "rank"),
-        n)._1
-    }),
-
-    // DELETION maintenance for the IVF family (Similarity.ivfDelete —
-    // the tombstone twin of q_ann_incr's upsert, VERDICT r15 #5): every
-    // mod-8-1 vector is erased from the serving index by one anti-join,
-    // quantizer frozen. A full-width probe is exact over whatever rows
-    // the inverted file holds, so the deleted index must reproduce the
-    // exact brute force over the SURVIVING corpus verbatim — the oracle
-    // is the serving oracle with its candidate side filtered, and any
-    // ghost posting (a deleted vector still surfacing) or over-delete
-    // breaks the hash. Queries stay the full shifted workload: erased
-    // docs may still be queried; they must simply never be RETURNED.
-    "q_ann_delete" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val nlist = AnnParams.nlist(n)
-      val deleted = emb.filter(pmod(col("vec_id"), lit(8)) === 1)
-      val del = Similarity.ivfDelete(servingIvfIndex(s, d), deleted, "vec_id")
-      AnnParams.observeClamps(
-        Similarity.ivfProbeFor(del, serveWorkload(emb), "vec_id", "embedding",
-            k = 5, nprobe = nlist)
-          .withColumn("sim", round(col("sim"), 6))
-          .orderBy("qid", "rank"),
-        n)._1
-    }),
-
-    // IVF-PQ deletion (Similarity.ivfPqDelete — both quantizers frozen,
-    // one anti-join over the code table). Same exact gate as
-    // q_ann_incr_ivfpq: full probe width × full candK makes the
-    // candidate set the whole SURVIVING corpus, and the exact re-rank
-    // of a complete candidate set is the exact brute force over the
-    // survivors regardless of the quantizers.
-    "q_ann_delete_ivfpq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val deleted = emb.filter(pmod(col("vec_id"), lit(8)) === 1)
-      val nl = AnnParams.nlist(embCount(s, d))
-      val del = Similarity.ivfPqDelete(servingIvfPqIndex(s, d), deleted,
-        "vec_id")
-      val workload = serveWorkload(emb)
-      val cand = Similarity.ivfPqProbe(del, workload, "vec_id", "embedding",
-        k = embCount(s, d).toInt, nprobe = nl)
-      exactTop5(emb, workload, cand)
-    }),
-
-    // Flat-ADC deletion (Similarity.pqDelete — frozen codebooks). Same
-    // exact gate: full candK over the surviving codes, exact re-rank,
-    // the filtered serving oracle verbatim.
-    "q_ann_delete_pq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val deleted = emb.filter(pmod(col("vec_id"), lit(8)) === 1)
-      val (model, enc) = servingPq(s, d)
-      val del = Similarity.pqDelete(enc, deleted, "vec_id")
-      val workload = serveWorkload(emb)
-      val cand = Similarity.pqSearch(del, model, workload, "vec_id",
-        "embedding", embCount(s, d).toInt)
-      exactTop5(emb, workload, cand)
-    }),
-
-    // LSH deletion (Similarity.lshDelete). LSH is data-oblivious, so
-    // the deleted index must be ROW-IDENTICAL to a from-scratch rebuild
-    // over the surviving corpus under the same config — checked in-plan
-    // (exceptAll both directions over banded AND slim state) and
-    // emitted as booleans the oracle pins `true`, with the survivor
-    // count as the DuckDB-computable anchor. `no_deleted_rows`
-    // additionally pins that no erased id survives anywhere in the
-    // maintained state — the GDPR claim itself, independent of the
-    // rebuild identity.
-    "q_ann_delete_lsh" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val deleted = emb.filter(pmod(col("vec_id"), lit(8)) === 1)
-      val survivors = emb.filter(pmod(col("vec_id"), lit(8)) =!= 1)
-      val del = Similarity.lshDelete(servingLshIndex(s, d), deleted, "vec_id")
-      val rebuilt = Similarity.lshIndex(survivors, "vec_id", "embedding",
-        dim = 64, tables = AnnParams.LshTables,
-        bitsPerTable = AnnParams.lshBits(n))
-      val diffs = del.banded.exceptAll(rebuilt.banded).select(lit(1).as("one"))
-        .unionAll(rebuilt.banded.exceptAll(del.banded).select(lit(1).as("one")))
-        .unionAll(del.slim.exceptAll(rebuilt.slim).select(lit(1).as("one")))
-        .unionAll(rebuilt.slim.exceptAll(del.slim).select(lit(1).as("one")))
-      val ghosts = del.banded
-        .join(deleted.select(col("vec_id").as("id")), Seq("id"))
-      survivors.agg(count(lit(1)).as("n_survivors"))
-        .crossJoin(diffs.agg((count(lit(1)) === 0).as("equals_rebuild")))
-        .crossJoin(ghosts.agg((count(lit(1)) === 0).as("no_deleted_rows")))
-    }),
-
-    // The DEPLOYMENT path of the same serving row: train → SAVE → LOAD →
-    // probe. IndexStoreSpec pins loaded probes bit-identical per family,
-    // but a spec pin is not the cross-engine gate — this row runs the
-    // full persistence round-trip inside the query (deliberately
-    // re-paying the save+load each call: that IS the operator under
-    // test) and probes the LOADED index at full width over the shifted
-    // workload, so the whole save→load→probe chain must reproduce
-    // q_ann_serve's deterministic hash (parquet stores IEEE double
-    // BITS, so a loaded index probes bit-identically — the exactness
-    // this row converts from a spec pin into a driver-gated fact). The
-    // executed plan scans the index directory's parquet (PlanSpec pins
-    // it), which is exactly what a serving job that never saw training
-    // does at 100 TB.
-    "q_ann_serve_persisted" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val nlist = AnnParams.nlist(n)
-      val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", nlist)
-      // session-unique per-sf path under the build's target dir (the
-      // one scratch space this repo owns — see idxScratch for the
-      // concurrency contract)
-      val path = idxScratch(s, "", d)
-      IndexStore.saveIvf(idx, path)
-      val loaded = IndexStore.loadIvf(s, path)
-      AnnParams.observeClamps(
-        Similarity.ivfProbeFor(loaded, serveWorkload(emb), "vec_id",
-            "embedding", k = 5, nprobe = nlist)
-          .withColumn("sim", round(col("sim"), 6))
-          .orderBy("qid", "rank"),
-        n)._1
-    }),
-
-    // External-workload serving at the APPROXIMATE operating point —
-    // the regime a deployment actually runs (q_ann_serve gates the
-    // serving plumbing exactly at full probe width; this row gates the
-    // same path at the DERIVED (nlist, nprobe) the q_ann_ivf fraction
-    // produces, under the recall-contract oracle). The anchor is the
-    // exact brute force over the SAME external workload
-    // (bruteForceTopKFor — each shifted query's nearest corpus row is
-    // its own unshifted copy at cos 1.0, found whenever its home cell
-    // is probed, which is probe rank 1 by construction; the remaining
-    // ranks measure ordinary cell recall). Grid-measured recall@5 at
-    // the derived points (RecallGrid GRID serve lines): 0.896 at
-    // sf0.001 / 0.884 at sf0.01 / 0.895 at sf0.1 — one constant 0.8
-    // band. sf0.001/sf0.1 sit 0.004-0.005 under the UPPER band edge;
-    // that distance binds only under deliberate code change (these
-    // measurements replicate bit-identically run-over-run — keyed
-    // workload, deterministic training, fixed IEEE fold order — and
-    // any ANN change already mandates a RecallGrid re-measure with
-    // lockstep band moves), and an upward flip is the contract
-    // WORKING: the hash pins the achieved band in both directions.
-    "q_ann_serve_approx" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val workload = serveWorkload(emb)
-      val idx = servingIvfIndex(s, d)
-      val ann = Similarity.ivfProbeFor(idx, workload, "vec_id", "embedding",
-        k = 5, nprobe = AnnParams.nprobe(n, AnnParams.IvfProbeFrac))
-      val bf = Similarity.bruteForceTopKFor(workload, emb, "vec_id",
-        "embedding", k = 5, blocks = AnnParams.bruteBlocks(n))
-      AnnParams.observeClamps(recallContract(bf, ann), n)._1
-    }),
-
-    // External-workload serving through LSH — lshProbeFor's recall
-    // contract, completing the serving-coverage symmetry (q_ann_serve /
-    // _approx / _persisted gate only the IVF path; lshProbeFor served
-    // under spec pins alone). The workload is the modulo-7 shifted
-    // sample (every-7th corpus vector, shift derived in-plan exactly as
-    // serveWorkload's scaladoc argues); 7 was chosen by the round-13
-    // margin sweep — see recallIntervalContract's scaladoc — as was the
-    // pinned interval [0.73, 0.86): grid-measured recall@5 at the
-    // derived bits (RecallGrid GRID servelsh, mod-7 workload) is
-    // 0.7778 at sf0.001 / 0.8000 at sf0.01 / 0.8161 at sf0.1 — every
-    // scale ≥0.0439 from both interval edges (the floor-0.1 band grid
-    // has a <0.04 edge brush at EVERY swept modulo for this family).
-    // Each shifted query's own corpus copy buckets identically
-    // (identical vector → identical signatures), so it is always a
-    // candidate and lands rank 1 at cos 1.0; the remaining ranks
-    // measure ordinary bucket recall. Re-measure with RecallGrid
-    // before touching AnnParams.lshBits or the hyperplane kernel.
-    "q_ann_serve_lsh" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val workload = serveWorkload(emb, every = 7)
-      val idx = servingLshIndex(s, d)
-      val ann = Similarity.lshProbeFor(idx, workload, "vec_id", "embedding",
-        k = 5)
-      AnnParams.observeClamps(
-        recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.73, hi = 0.86),
-        n)._1
-    }),
-
-    // External-workload serving through IVF-PQ — ivfPqProbe's recall
-    // contract over the same modulo-7 shifted workload, with the
-    // candidate list exactly re-ranked against the workload's own query
-    // vectors (the q_ann_ivfpq contract shape brought to serving). The
-    // operating point is fully derived: (nlist, nprobe, candK) from
-    // corpus cardinality via AnnParams. Pinned interval [0.80, 0.93),
-    // grid-measured recall@5 (RecallGrid GRID serveivfpq, mod-7
-    // workload): 0.8861 at sf0.001 / 0.8722 at sf0.01 / 0.8448 at
-    // sf0.1 — every scale ≥0.0439 from both edges (same margin-sweep
-    // rationale as q_ann_serve_lsh). The query's own corpus copy has
-    // near-zero ADC distance, survives the candidate cut, and the
-    // exact re-rank pins it at rank 1; the remaining ranks measure
-    // cell+code candidate recall.
-    "q_ann_serve_ivfpq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val workload = serveWorkload(emb, every = 7)
-      val idx = servingIvfPqIndex(s, d)
-      val cand = Similarity.ivfPqProbe(idx, workload, "vec_id", "embedding",
-        k = AnnParams.candK(n, 5), nprobe = AnnParams.nprobe(n))
-      val ann = AnnCalibrate.exactReRank(emb, "vec_id", "embedding", cand,
-        5, querySrc = Some(workload))
-      AnnParams.observeClamps(
-        recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.80, hi = 0.93),
-        n)._1
-    }),
-
-    // PQ-ANN (the memory-scale third architecture: 8-byte product-
-    // quantization codes + ADC scoring + EXACT re-rank of the candidate
-    // list — Similarity.pqTrain/pqEncode/pqSearch). The query
-    // batch is the same deterministic 10% hash-sample, passed as a
-    // DataFrame — per-query ADC tables are computed in the plan on the
-    // query side, then broadcast into the flat scan (the broadcast is
-    // the deliberate bounded-batch contract of flat ADC: tables DO
-    // transit the driver, sized |queries| x m x codes doubles; the
-    // corpus-scale path is ivfPqSearch's cell equi-join).
-    // Same recall-contract oracle as LSH/IVF; the exact re-rank means
-    // the band measures CANDIDATE recall, which is what PQ owes the
-    // pipeline. The candidate depth is NOT a constant: it is derived
-    // from corpus cardinality by AnnParams.flatCandK (flat ADC scans the
-    // whole corpus, so depth scales as a fixed fraction γflat·n with a
-    // small-corpus floor of 50) — the round-5 incident proved a constant
-    // depth decays with scale (candidate recall 0.448 < the 0.5 floor at
-    // sf0.1, because 50 candidates were a 4× smaller fraction of a 4×
-    // larger corpus). codes=64 (6-bit subquantizers), measured by
-    // graft.RecallGrid at the DERIVED depths: recall@5 = 0.776
-    // (sf0.001, n=500 → candK 50) / 0.764 (sf0.01, n=500 → 50) / 0.757
-    // (sf0.1, n=2000 → candK 100) — band 0.7 at every measured scale
-    // with ≥0.057 margin to the band edge, ≥0.25 above the 0.5 floor
-    // (so the oracle is the constant band). These vectors are near-random
-    // (background cos ≈ 0.5), the hard regime for any short code (see
-    // the planted-dup test for the structured regime, where PQ recovers
-    // cos ≈ 0.999 neighbors reliably). Re-measure with RecallGrid
-    // before touching AnnParams or the code shape.
-    "q_ann_pq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val sampleQ = Sampling.hashSample(emb, "vec_id", 0.1)
-      val model = Similarity.pqTrain(emb, "vec_id", "embedding",
-        m = 8, codes = 64)
-      val encoded = Similarity.pqEncode(emb, "vec_id", "embedding", model)
-      val cand = Similarity
-        .pqSearch(encoded, model, sampleQ, "vec_id", "embedding",
-          k = AnnParams.flatCandK(n, 5))
-        .filter(col("qid") =!= col("id"))
-      val bf = bfAnchor(s, d)
-      AnnParams.observeClamps(recallContract(bf, exactReRank(emb, cand, 5)), n)._1
-    }),
-
-    // IVF-PQ (the fourth ANN architecture, and the one production
-    // billion-vector systems actually run): coarse cells bound WHICH
-    // vectors each query scans, PQ codes bound the BYTES per scanned
-    // vector — flat ADC (q_ann_pq) still reads every code at 10^11
-    // vectors; this reads nprobe/nlist of them. Candidate list + exact
-    // re-rank contract as q_ann_pq. The operating points (nlist, nprobe,
-    // candK) are NOT constants: they are derived from corpus cardinality
-    // by graft.operators.AnnParams — nlist = ⌈√n⌉ (Jégou/FAISS sizing),
-    // nprobe = ⌈ρ·nlist⌉ at the grid-measured probe fraction ρ = 0.625,
-    // candK = max(80, ⌈γ·ρ·n⌉) at γ = 0.10 (candidate depth a fixed
-    // fraction of the expected scanned set — the quantity whose FIXED
-    // predecessor caused the round-5 recall collapse: nprobe=8/candK=50
-    // sat EXACTLY at the 0.5 floor at sf0.1, 0.566 → band 0.5, because
-    // a constant depth is a shrinking fraction of a growing scanned
-    // set). Derived points and grid-measured recall@5 (graft.RecallGrid):
-    // n=500 (sf0.001/sf0.01) → (23, 15, 80), recall 0.896/0.872 → band
-    // 0.8; n=2000 (sf0.1) → (45, 29, 125), recall 0.762 → band 0.7 —
-    // every scale ≥0.062 above its band edge and ≥0.26 above the
-    // contractual ≥0.5 floor. AnnParamsSpec pins the derived values
-    // at these two cardinalities so rule and bands can only move
-    // together; re-measure with RecallGrid before touching either.
-    "q_ann_ivfpq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val sampleQ = Sampling.hashSample(emb, "vec_id", 0.1)
-      // queries stay a DataFrame: probe cells + ADC tables are computed
-      // in the plan and meet the codes through one cell equi-join — the
-      // 10% sample never passes through the driver, so the same path
-      // serves a corpus-sized query set at 100 TB.
-      val cand = Similarity.ivfPqSearch(emb, "vec_id", "embedding",
-          sampleQ, "vec_id", "embedding",
-          k = AnnParams.candK(n, 5), nlist = AnnParams.nlist(n),
-          nprobe = AnnParams.nprobe(n), m = 8, codes = 64)
-        .filter(col("qid") =!= col("id"))
-      val bf = bfAnchor(s, d)
-      // ceiling-bind warnings ride the result as an Observation (job
-      // metrics, not just driver log lines); below the caps — every
-      // tested scale — this is the identity, so the oracle hash and
-      // plan are untouched where nothing binds
-      AnnParams.observeClamps(recallContract(bf, exactReRank(emb, cand, 5)), n)._1
-    }),
-
-    // Runtime recall CALIBRATION under the cross-engine gate (VERDICT
-    // r13 #1 — the last first-class component that passed only under
-    // spec pins): run calibrateIvf at a pinned target and hash the
-    // operating point it returns. Calibration is deterministic on this
-    // corpus (hash-drawn sample, deterministic training, exact IEEE
-    // folds), so the chosen rung is a constant the oracle can state —
-    // and it is a STEP function of the measured recall, so any drift
-    // across a rung boundary turns the row red exactly like a band pin.
-    // The target 0.71 comes from a rung-margin sweep over the measured
-    // grid (ivfProbeFor over the shared 10% anchor, rungs ρ ∈
-    // {0.2, 0.35, 0.5}: recalls 0.660/0.832 sf0.001, 0.612/0.780/0.868
-    // sf0.01, 0.563/0.762/0.868 sf0.1): it is the target at which EVERY
-    // scale selects the SAME rung (ρ = 0.35 — one constant oracle, no
-    // scale CASE) with ≥0.05 margin to the rejected rung below and
-    // ≥0.052 to the accepted rung's own recall at every scale — the
-    // 0.8 spec target can't do either (the two n=500 datasets split
-    // 0.35/0.5, and sf0.01's rejected rung sits 0.020 from it). The
-    // anchor is the SHARED memoized audit (bfAnchor — identical
-    // construction to AnnCalibrate.anchorFor: same hash sample, same
-    // blocked exact top-5), passed in so the corpus sweep doesn't re-pay
-    // the exact grid; the calibration itself (train once, walk the
-    // deduped rungs cheapest-first) runs fresh each call — it IS the
-    // operator under test. Re-run the margin sweep before touching the
-    // grid, AnnParams.nprobe, or the anchor shape.
-    "q_ann_calibrate" -> ((s, d) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, d)
-      val anchor = AnnCalibrate.TopKAnchor(
-        Sampling.hashSample(emb, "vec_id", 0.1), bfAnchor(s, d),
-        embCount(s, d), k = 5, sampleFrac = 0.1)
-      val c = AnnCalibrate
-        .calibrateIvf(emb, "vec_id", "embedding", recallTarget = 0.71,
-          anchor = Some(anchor))
-        .getOrElse(throw new IllegalStateException(
-          "q_ann_calibrate: target 0.71 must be reachable on this corpus " +
-            "(re-measure the rung grid — see the row comment)"))
-      Seq((c.rho, c.nlist, c.nprobe, c.recall >= 0.71))
-        .toDF("rho", "nlist", "nprobe", "recall_ok")
-    }),
-
-    // External-workload serving through flat ADC — pqSearch's recall
-    // contract, completing the four-architecture serving symmetry
-    // (IVF exact+approx+persisted, LSH, IVF-PQ, and now flat PQ all
-    // driver-gated). Same mod-7 workload and interval-contract shape
-    // as q_ann_serve_lsh; depth is the derived flatCandK. Pinned
-    // interval [0.76, 0.90), grid-measured recall@5 (RecallGrid GRID
-    // servepq): 0.8222 at sf0.001 / 0.8306 at sf0.01 / 0.8357 at
-    // sf0.1 — every scale ≥0.062 from both edges. The broadcast
-    // bounded-batch contract holds: the workload is n/7 queries, and
-    // the per-query ADC tables ride the documented explicit broadcast.
-    "q_ann_serve_pq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val workload = serveWorkload(emb, every = 7)
-      val (model, encoded) = servingPq(s, d)
-      val cand = Similarity.pqSearch(encoded, model, workload, "vec_id",
-        "embedding", k = AnnParams.flatCandK(n, 5))
-      val ann = AnnCalibrate.exactReRank(emb, "vec_id", "embedding", cand,
-        5, querySrc = Some(workload))
-      AnnParams.observeClamps(
-        recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.76, hi = 0.90),
-        n)._1
-    }),
-
-    // The persisted-deployment row for the PRODUCTION architecture:
-    // ivfPqIndex → IndexStore.saveIvfPq → loadIvfPq → ivfPqProbe at the
-    // derived operating point, under q_ann_serve_ivfpq's interval
-    // contract (a loaded index probes bit-identically — IndexStoreSpec —
-    // so the interval transfers verbatim; what this row adds to the
-    // driver gate is the save→load plumbing of the family a
-    // billion-vector deployment actually persists: chunked quantizer
-    // state, codebook reassembly, encoded-corpus parquet). PlanSpec
-    // pins the loaded encoded parquet scan in the executed plan.
-    "q_ann_serve_persisted_ivfpq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val workload = serveWorkload(emb, every = 7)
-      val idx = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
-        AnnParams.nlist(n), m = 8, codes = 64)
-      val path = idxScratch(s, "_ivfpq", d)
-      IndexStore.saveIvfPq(idx, path)
-      val loaded = IndexStore.loadIvfPq(s, path)
-      val cand = Similarity.ivfPqProbe(loaded, workload, "vec_id",
-        "embedding", k = AnnParams.candK(n, 5), nprobe = AnnParams.nprobe(n))
-      val ann = AnnCalibrate.exactReRank(emb, "vec_id", "embedding", cand,
-        5, querySrc = Some(workload))
-      AnnParams.observeClamps(
-        recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.80, hi = 0.93),
-        n)._1
-    }),
-
-    // Persisted deployment for the remaining two families — with these,
-    // ALL FOUR architectures' save→load→probe chains pass the driver
-    // gate (IVF under the exact hash; IVF-PQ/LSH/flat-PQ under their
-    // serving intervals, which transfer verbatim because loaded probes
-    // are bit-identical — IndexStoreSpec). LSH persistence stores only
-    // the corpus + hyperplane config (data-oblivious: the load
-    // re-buckets from the seed), so this row gates exactly that
-    // re-bucketing path reading the index dir's corpus parquet.
-    "q_ann_serve_persisted_lsh" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val idx = Similarity.lshIndex(emb, "vec_id", "embedding", dim = 64,
-        tables = AnnParams.LshTables, bitsPerTable = AnnParams.lshBits(n))
-      val path = idxScratch(s, "_lsh", d)
-      IndexStore.saveLsh(idx, path)
-      val loaded = IndexStore.loadLsh(s, path)
-      val ann = Similarity.lshProbeFor(loaded, serveWorkload(emb, every = 7),
-        "vec_id", "embedding", k = 5)
-      AnnParams.observeClamps(
-        recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.73, hi = 0.86),
-        n)._1
-    }),
-
-    // Flat-PQ persistence: the family that previously retrained per
-    // serving job — savePq/loadPq round-trip the codebooks (chunked)
-    // and the encoded corpus, and the loaded pair feeds pqSearch
-    // directly. Same interval as q_ann_serve_pq (bit-identical loaded
-    // probe).
-    "q_ann_serve_persisted_pq" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val workload = serveWorkload(emb, every = 7)
-      val model = Similarity.pqTrain(emb, "vec_id", "embedding",
-        m = 8, codes = 64)
-      val encoded = Similarity.pqEncode(emb, "vec_id", "embedding", model)
-      val path = idxScratch(s, "_pq", d)
-      IndexStore.savePq(encoded, model, path)
-      val (encL, modelL) = IndexStore.loadPq(s, path)
-      val cand = Similarity.pqSearch(encL, modelL, workload, "vec_id",
-        "embedding", k = AnnParams.flatCandK(n, 5))
-      val ann = AnnCalibrate.exactReRank(emb, "vec_id", "embedding", cand,
-        5, querySrc = Some(workload))
-      AnnParams.observeClamps(
-        recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.76, hi = 0.90),
-        n)._1
-    }),
-
-    // Embedding near-dup pairs at cosine ≥ 0.45 (testdata max ≈ 0.51).
-    // Exact blocked path, NOT LSH: 0.45 sits inside the background cosine
-    // distribution of these near-random embeddings, where bucket pruning
-    // provably degenerates (see Similarity.lshNearDupPairs scaladoc); the
-    // LSH-bucketed variant covers real near-dup thresholds and is
-    // property-tested on planted near-dups in PipelineSpec.
-    "q_embed_neardup" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.cosineNearDupPairs(emb, "vec_id", "embedding", 0.45,
-          blocks = AnnParams.bruteBlocks(embCount(s, d)))
-        .withColumn("sim", round(col("sim"), 6))
-        .orderBy("a_id", "b_id")
-    }),
-
-    // Symmetric int8 quantization of the embedding column — the 4×
-    // storage/bandwidth cut every billion-vector serving layer applies
-    // before ANN. Per vector: scale = max|x|, code_i = round-half-up of
-    // x_i·127/scale — a map-only scan, no shuffle, ONE generated loop
-    // (functions.Int8Checksum native expression; the built-in HOF
-    // composition is interpreted per element and measured 2.2 s of the
-    // sf0.1 bench — UdxSpec property-checks the expression against that
-    // composition). Emitted as per-vector integer checksums (sum of
-    // codes, abs-max code — 127 for every non-zero vector by
-    // construction), which pin every code exactly without emitting 64
-    // columns. The rounding is floor(y + 0.5) SPELLED OUT on both
-    // engines (Spark round() half-up vs DuckDB round() half-even would
-    // diverge at .5 boundaries); mult-then-div order is pinned so IEEE
-    // rounding is bit-identical cross-engine. Zero vectors
-    // short-circuit to [0, 0] inside the expression; DuckDB division
-    // by zero is NULL, overridden by the oracle's CASE.
-    "q_embed_quantize" -> ((s, d) => {
-      val cs = graft.functions.Int8Checksum(col("embedding"))
-      Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          cs.getItem(0).as("q_sum"),
-          cs.getItem(1).as("q_absmax"))
-        .orderBy("vec_id")
-    }),
-
-    // Matryoshka truncation check: cosine over the 16-dim prefix vs the
-    // full 64 dims on consecutive-id pairs — the audit run before
-    // serving truncated MRL embeddings (how much does the short prefix
-    // distort similarity on MY corpus?). Map-side: the pair join is
-    // id+1 = id, an equi-join Catalyst plans without a cartesian; both
-    // cosines ride the same canonical left-to-right fold as every
-    // other similarity path (bit-identical to the oracle's
-    // list_reduce).
-    "q_matryoshka" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val a = emb.select(col("vec_id").cast("long").as("a_id"),
-        col("embedding").as("ea"))
-      val b = emb.select(col("vec_id").cast("long").as("b_id"),
-        col("embedding").as("eb"))
-      a.join(b, col("a_id") + 1 === col("b_id"))
-        .select(col("a_id"),
-          round(Similarity.cosine(col("ea"), col("eb")), 6).as("cos_full"),
-          round(Similarity.cosine(slice(col("ea"), 1, 16),
-            slice(col("eb"), 1, 16)), 6).as("cos_16"))
-        .orderBy("a_id")
-    }),
-
-    // SemDeDup contract: within-cluster semantic near-dup pairs vs the
-    // exact pair set. Precision is 1 by construction (every emitted pair
-    // is exact-cosine-verified ≥ threshold ⇒ a subset of the exact
-    // pairs — `sound` asserts exactly that); recall < 1 only when a
-    // near-dup pair straddles a k-means cell. The cluster count derives
-    // from corpus cardinality (AnnParams.semDedupNlist: ⌈n/64⌉ — the
-    // paper's shape, nlist ∝ n for a FIXED target cell size, because
-    // SemDeDup's whole scale trick is bounding the pair space at
-    // n·targetCellSize comparisons; a fixed nlist silently degrades to
-    // n²/nlist, the quadratic blow-up the operator exists to avoid).
-    // Derived: n=500 → 8 cells (the historically measured config,
-    // unchanged), n=2000 → 32. Grid-measured pair recall at the derived
-    // points (RecallGrid): 0.286 at sf0.001 (2/7 pairs in-cell), 0.714
-    // at sf0.01 (10/14), 0.215 at sf0.1 (31/144) — the 0.45 threshold
-    // sits inside this 64-dim near-random corpus's background cosine
-    // distribution (see Similarity.lshNearDupPairs scaladoc), so pairs
-    // are not tight clusters and cell-straddling is common; on a real
-    // corpus SemDeDup runs at ~0.95+ where pairs ARE tight, and the
-    // exact blocked path is the right tool for this regime (that is
-    // q_embed_neardup). The oracle CASEs the expected band on its own
-    // computed n_exact (7/14/144 — distinct at every verified sf).
-    "q_semdedup" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val n = embCount(s, d)
-      val exact = Similarity
-        .cosineNearDupPairs(emb, "vec_id", "embedding", 0.45,
-          blocks = AnnParams.bruteBlocks(n))
-        .select(col("a_id"), col("b_id"))
-      val sem = Similarity
-        .semDedupPairs(emb, "vec_id", "embedding", 0.45,
-          nlist = AnnParams.semDedupNlist(n), corpusN = Some(n))
-        .select(col("a_id"), col("b_id"), lit(1).as("hit"))
-      val nExact = sum(coalesce(col("ex"), lit(0)))
-      val hits = sum(when(col("ex") === 1 && col("hit") === 1, 1).otherwise(0))
-      val extra = sum(when(col("ex").isNull && col("hit") === 1, 1).otherwise(0))
-      AnnParams.observeClamps(
-        exact.withColumn("ex", lit(1))
-          .join(sem, Seq("a_id", "b_id"), "full")
-          .agg(nExact.as("n_exact"),
-            (floor(hits.cast("double") / nExact * 10 + lit(1e-9)) /
-              lit(10.0)).as("pair_recall_band"),
-            (extra === 0).as("sound")),
-        n)._1
-    }),
-
-    // End-to-end curation composition: language gate → quality floor →
-    // exact dedup (min-id survivor) → per-doc token budget. Every stage
-    // is hash-verified on its own elsewhere; this row verifies their
-    // INTERACTION, in the production order (cheap narrow filters first so
-    // the dedup shuffle only carries surviving docs).
-    "q_pipeline_curate" -> ((s, d) => {
-      val scored = Tables.documents(s, d).select(col("doc_id"), col("text"),
-          TextFunctions.langId(col("text")).as("lang_pred"),
-          TextFunctions.qualityScore(col("text")).as("quality"),
-          TextFunctions.tokenCount(col("text")).as("n_bpe"))
-        .filter(col("lang_pred") === "en" && col("quality") >= 0.5)
-      // stats are functions of text, so min() over a text group is just
-      // "the value" — deterministic survivor semantics. Same hash-first
-      // grouping (and collision bound) as q_dedup_exact: the dedup shuffle
-      // carries a 64-byte sha2 key + 3 numeric aggregates per group, never
-      // the document body.
-      scored.groupBy(sha2(col("text").cast("binary"), 256).as("h"))
-        .agg(min(col("doc_id")).as("doc_id"), min(col("quality")).as("quality"),
-          min(col("n_bpe")).as("n_bpe"))
-        .select(col("doc_id"), col("quality"), col("n_bpe"))
-        .orderBy("doc_id")
-    }),
-
-    // Deterministic train/valid/test split (Sampling.splitLabel): keyed
-    // Knuth-hash buckets, never rand() — reproducible across runs, task
-    // retries, and engines, hence fully hash-verifiable. Fractions
-    // 0.75/0.125/0.125 are binary-exact so the bucket thresholds are the
-    // same integers in Spark and in the oracle SQL.
-    "q_split_sample" -> ((s, d) =>
-      Tables.documents(s, d).select(col("doc_id"),
-          Sampling.splitLabel(col("doc_id"),
-            Seq("train" -> 0.75, "valid" -> 0.125, "test" -> 0.125)).as("split"))
-        .orderBy("doc_id")),
-
-    // Deterministic k-per-group sample (the reservoir-sampling job at
-    // scale): 5 hash-lowest docs per source — unbiased within each
-    // group, replayable on any engine, one shuffle on the group key.
-    "q_sample_per_key" -> ((s, d) =>
-      Sampling.samplePerKey(Tables.documents(s, d), "source", "doc_id", 5)
-        .select("source", "doc_id")
-        .orderBy("source", "doc_id")),
-
-    // Quality-weighted deterministic sampling: longer documents stand in
-    // for higher-quality ones (weight = n_chars/500, clamped) — the
-    // quality-proportional corpus selection step, keyed so every run /
-    // retry / engine replays the same keep-set. Both engines evaluate
-    // the identical IEEE sequence (int/500.0, ×2^32, compare), so the
-    // boundary cannot drift.
-    "q_weighted_sample" -> ((s, d) =>
-      Sampling.weightedSample(Tables.documents(s, d), "doc_id",
-          col("n_chars") / lit(500.0))
-        .select(col("doc_id"), col("n_chars"))
-        .orderBy("doc_id")),
-
-    // Deterministic epoch shuffle (Sampling.epochShuffle order): the
-    // reproducible permutation a training job uses to randomize example
-    // order per epoch. Position comes from Sampling.withGlobalRank's
-    // two-phase rank (parallel range sort + broadcast offsets), NOT a
-    // global row_number window — that would funnel every row through one
-    // task. The int cast exists ONLY for schema parity with the verified
-    // window-based formulation this replaced (row_number is int-typed);
-    // it reintroduces a 2^31 ceiling on THIS VERIFICATION PROJECTION, not
-    // on the operator — production callers use withGlobalRank's long pos.
-    "q_epoch_shuffle" -> ((s, d) => {
-      val b = Sampling.bucketOf(col("doc_id"), 2L)
-      Sampling.withGlobalRank(Tables.documents(s, d).select(col("doc_id")),
-          "pos", b, col("doc_id"))
-        .withColumn("pos", col("pos").cast("long"))
-        .orderBy("pos")
-    }),
-
-    // Text normalization — the standard pre-dedup canonicalization pass
-    // (lowercase, strip sentence punctuation, collapse whitespace runs).
-    // Pure per-row codegen'd expressions; at scale this runs ahead of
-    // q_dedup_exact so trivially-variant copies hash together.
-    "q_text_normalize" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), normExpr(col("text")).as("norm"))
-        .orderBy("doc_id")),
-
-    "q_token_count" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).as("n_bpe"),
-          size(TextFunctions.tokens(col("text"))).cast("long").as("n_ws"))
-        .orderBy("doc_id")),
-
-    "q_quality_score" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), TextFunctions.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")),
-
-    "q_lang_id" -> ((s, d) =>
-      // fanOutSmall: the five langScores array filters are the heavy
-      // per-row kernel; parallelize past the scan-split floor
-      graft.operators.Layout.fanOutSmall(Tables.documents(s, d))
-        .select(col("doc_id"), TextFunctions.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")),
-
-    "q_fingerprint" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")),
-
-    // TF-IDF: explode → two hash aggs (term-frequency per doc, doc-
-    // frequency per term) + a broadcast scalar N. All shuffles are on
-    // term/doc keys — map-side partial aggregation applies.
-    "q_tfidf" -> ((s, d) => {
-      val toks = Tables.documents(s, d)
-        .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("term"))
-        .filter(!col("term").isInCollection(TextFunctions.stopwords))
-      val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val dfreq = toks.groupBy("term").agg(countDistinct("doc_id").as("df"))
-      val n = Tables.documents(s, d).agg(count(lit(1)).as("n"))
-      tf.join(dfreq, "term").crossJoin(broadcast(n))
-        .withColumn("tfidf",
-          round(col("tf") * (log((col("n") + lit(1.0)) / (col("df") + lit(1.0))) + lit(1.0)), 6))
-        .select(col("doc_id"), col("term"), col("tf"), col("df"), col("tfidf"))
-        .orderBy("doc_id", "term")
-    }),
-
-    // Okapi BM25 per-(doc, term) scores — the lexical-retrieval scorer
-    // TF-IDF lacks (tf saturation + doc-length normalization). Same
-    // shuffle shape as q_tfidf plus one more doc-keyed agg (dl); the
-    // corpus scalars (N, Σtokens) broadcast as a single row. See
-    // operators.Retrieval for the scale + float-discipline notes.
-    "q_bm25" -> ((s, d) =>
-      Retrieval.bm25(Tables.documents(s, d)).orderBy("doc_id", "term")),
-
-    // Incremental BM25 index maintenance, driver-gated by the ALGEBRA:
-    // re-ingest every mod-5 doc with an appended token through
-    // Retrieval.upsertTermFreq (anti-join old postings + append new —
-    // O(changed + index), never a corpus re-tokenization), then score
-    // from the MERGED statistic. The oracle rebuilds from scratch over
-    // the post-update corpus — maintenance == rebuild is the claim, and
-    // any slip (a stale posting surviving the anti-join, a df/dl/avgdl
-    // derived from the wrong side, an N drift) breaks the hash.
-    "q_bm25_incr" -> ((s, d) => {
-      val base = Tables.documents(s, d)
-      val changed = base.filter(col("doc_id") % 5 === 0)
-        .withColumn("text", concat(col("text"), lit(" addendum")))
-      val tf = Retrieval.upsertTermFreq(Retrieval.termFreq(base), changed)
-      // update-only maintenance: N (doc count) is unchanged
-      Retrieval.bm25FromStats(tf, base.agg(count(lit(1)).as("n")))
-        .orderBy("doc_id", "term")
-    }),
-
-    // BM25 DELETION maintenance (Retrieval.deleteDocs — the tombstone
-    // twin of q_bm25_incr's upsert, VERDICT r15 #5): every mod-7-3 doc
-    // is erased from the tf statistic by one anti-join, and N SHRINKS
-    // to the surviving count (deletion, unlike the update-only upsert,
-    // changes the corpus of record — handing the old N to bm25FromStats
-    // would skew every idf and avgdl). The oracle rebuilds from scratch
-    // over the post-delete corpus: maintenance == rebuild, so a ghost
-    // posting, an over-delete, or an N/df/dl drift all break the hash.
-    "q_bm25_delete" -> ((s, d) => {
-      val base = Tables.documents(s, d)
-      val deleted = base.filter(pmod(col("doc_id"), lit(7)) === 3)
-      val tf = Retrieval.deleteDocs(Retrieval.termFreq(base), deleted)
-      Retrieval.bm25FromStats(tf,
-          base.filter(pmod(col("doc_id"), lit(7)) =!= 3)
-            .agg(count(lit(1)).as("n")))
-        .orderBy("doc_id", "term")
-    }),
-
-    // POSITIONAL-postings deletion — the same deleteDocs anti-join over
-    // the phrase index's state (tf and postings share the doc_id key;
-    // ONE maintenance definition serves both). Gate: exact-phrase
-    // search over the maintained postings == search over a rebuild of
-    // the surviving corpus; probes stay drawn from the FULL corpus
-    // (an erased doc's phrase may still be queried — its matches in
-    // surviving docs must still surface, while the erased doc itself
-    // never does).
-    "q_phrase_delete" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val deleted = docs.filter(pmod(col("doc_id"), lit(7)) === 3)
-      val postings = Retrieval.deleteDocs(
-        Retrieval.positionalPostings(docs), deleted)
-      val probes = docs
-        .filter(pmod(col("doc_id"), lit(41)) === 0 &&
-          size(TextFunctions.tokens(col("text"))) >= 3)
-        .select(col("doc_id").as("q_id"),
-          posexplode(slice(TextFunctions.tokens(col("text")), 1, 3))
-            .as(Seq("o", "term")))
-        .select(col("q_id"), col("term"), (col("o") + 1).as("off"))
-      Retrieval.phraseSearch(postings, probes, phraseLen = 3)
-        .orderBy("q_id", "doc_id")
-    }),
-
-    // Ranked BM25 top-3 retrieval over the inverted index: queries are
-    // drawn in-plan (every doc_id ≡ 3 mod 31 contributes its first five
-    // tokens, stopword-gated, DISTINCT — 2/16/161 queries across the
-    // three scales), self-matches excluded. The per-query sum is an
-    // exact ×10⁶ LONG (order-free), ranking runs on the native
-    // TopKPerKey operator, ties break on doc_id — deterministic
-    // cross-engine. See Retrieval.bm25Search for why this corpus is the
-    // candidate-explosion worst case.
-    "q_bm25_search" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val qids = docs.filter(col("doc_id") % 31 === 3)
-        .select(col("doc_id").as("q_id"))
-      Retrieval.bm25Search(docs, Retrieval.probeTerms(docs, qids), k = 3)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // Exact-PHRASE search (Retrieval.positionalPostings/phraseSearch):
-    // the token-level ExactSubstr decontamination probe — every mod-41
-    // doc's first three tokens as a contiguous phrase, every document
-    // containing that exact sequence with its occurrence count. The
-    // ~40-word vocabulary makes trigram collisions real (phrases DO
-    // recur across docs), so n_occ counting is exercised, not vacuous.
-    // Bag-of-words retrieval cannot answer this; position adjacency
-    // can, at Σ df(phrase terms) join cost — never a corpus text scan.
-    "q_phrase_search" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val probes = docs
-        .filter(pmod(col("doc_id"), lit(41)) === 0 &&
-          size(TextFunctions.tokens(col("text"))) >= 3)
-        .select(col("doc_id").as("q_id"),
-          posexplode(slice(TextFunctions.tokens(col("text")), 1, 3))
-            .as(Seq("o", "term")))
-        .select(col("q_id"), col("term"), (col("o") + 1).as("off"))
-      Retrieval.phraseSearch(Retrieval.positionalPostings(docs), probes,
-          phraseLen = 3)
-        .orderBy("q_id", "doc_id")
-    }),
-
-    // Benchmark decontamination end-to-end (Retrieval.decontaminate):
-    // the q_phrase_search probe set doubles as the stand-in eval set —
-    // every corpus doc containing one of its 3-token phrases VERBATIM
-    // is dropped (the GPT-3-style n-gram leakage rule; the probe docs
-    // drop themselves, correctly — any doc carrying eval text verbatim
-    // is leakage). Complements q_decontaminate (CurationQueries), which
-    // FLAGS gram-hash overlap: this row is the exact-POSITIONAL drop —
-    // contiguity through positionalPostings, no hash false positives,
-    // and the output is the cleaned corpus itself. Pure integer/string
-    // columns, nothing float in the hash.
-    "q_decontaminate_phrase" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val probes = docs
-        .filter(pmod(col("doc_id"), lit(41)) === 0 &&
-          size(TextFunctions.tokens(col("text"))) >= 3)
-        .select(col("doc_id").as("q_id"),
-          posexplode(slice(TextFunctions.tokens(col("text")), 1, 3))
-            .as(Seq("o", "term")))
-        .select(col("q_id"), col("term"), (col("o") + 1).as("off"))
-      Retrieval.decontaminate(docs, probes, phraseLen = 3)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy("doc_id")
-    }),
-
-    // Persisted-deployment path for the lexical index, the same
-    // save→load→probe symmetry every ANN family carries: the tf
-    // sufficient statistic lands as n-proportional parquet (one row per
-    // posting — no driver-sized state at all, unlike the quantizer
-    // families), a fresh scan loads it back, and the probe must
-    // reproduce q_bm25_search's EXACT oracle — lossless persistence is
-    // the claim. df/dl/avgdl re-derive from the loaded postings, so a
-    // truncated or stale index breaks the hash, not just a recall band.
-    "q_bm25_serve_persisted" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val dir = idxScratch(s, "bm25", d)
-      val tfW = Retrieval.termFreq(docs)
-      tfW.write.mode("overwrite").parquet(dir)
-      // read back with the EXACT schema just written — the inference
-      // (footer) job per spark.read.parquet is a measured 40-90 ms
-      // driver stall (guide §7.3), and the written frame IS the schema
-      val tf = s.read.schema(tfW.schema).parquet(dir)
-      val qids = docs.filter(col("doc_id") % 31 === 3)
-        .select(col("doc_id").as("q_id"))
-      Retrieval.bm25SearchFrom(
-          Retrieval.bm25FromStats(tf, docs.agg(count(lit(1)).as("n"))),
-          Retrieval.probeTerms(docs, qids), k = 3)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // Hybrid retrieval — reciprocal-rank fusion of the sparse (BM25) and
-    // dense (exact cosine) rankings, the standard two-tower search merge:
-    // rrf = Σ 1/(60 + rank) over the two top-10 lists, final top-3 per
-    // query. Queries = the mod-31 probe docs that HAVE an embedding
-    // (17/17/65 across scales — at sf0.1 only 2000 of 5000 docs carry
-    // embeddings, so the dense list covers a subset and `src` records
-    // which tower(s) produced each hit — the realistic partial-dense-
-    // coverage regime). Dense side: the tiny query set broadcasts
-    // against the embedding corpus (a 100 TB corpus swaps in
-    // Similarity.bruteForceTopKFor or an ANN probe — the fusion is
-    // ranking-source-agnostic); both towers exclude self-matches. The
-    // rrf sum is two fixed-order double terms over integer ranks —
-    // deterministic cross-engine; ties break on doc_id.
-    "q_hybrid_rrf" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val emb = Tables.embeddings(s, d)
-      val qv = docs.filter(col("doc_id") % 31 === 3)
-        .join(emb, col("doc_id") === col("vec_id"))
-        .select(col("doc_id").as("q_id"), col("embedding").as("qvec"))
-      val qids = qv.select("q_id")
-      val pairs = emb.alias("c")
-        .join(broadcast(qv), col("c.vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("c.vec_id").as("doc_id"),
-          Similarity.cosine(col("qvec"), col("c.embedding")).as("sim"))
-      val dense = graft.plans.TopKPerKeyNode.topKPerKey(pairs, Seq("q_id"),
-          Seq(("sim", true), ("doc_id", false)), 10)
-        .select(col("q_id"), col("doc_id"), col("rank").as("rd"))
-      val sparse = Retrieval.bm25Search(docs, Retrieval.probeTerms(docs, qids), 10)
-        .select(col("q_id"), col("doc_id"), col("rnk").as("rs"))
-      val fused = sparse.alias("sp").join(dense.alias("dn"),
-          Seq("q_id", "doc_id"), "full_outer")
-        .select(col("q_id"), col("doc_id"),
-          (coalesce(lit(1.0) / (lit(60) + col("rs")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60) + col("rd")), lit(0.0))).as("rrf"),
-          when(col("rs").isNotNull && col("rd").isNotNull, "both")
-            .when(col("rs").isNotNull, "sparse").otherwise("dense").as("src"))
-      val w = Window.partitionBy("q_id").orderBy(col("rrf").desc, col("doc_id"))
-      fused.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("rnk"), col("doc_id"), col("src"),
-          round(col("rrf"), 6).as("rrf"))
-        .orderBy("q_id", "rnk")
-    }),
-
-    // Multimodal plumbing: BinaryType payload + metadata struct; the
-    // SQL-checkable projection (byte length, header byte, meta fields).
-    // The mapPartitions decode path is exercised in PipelineSpec.
-    "q_multimodal_meta" -> ((s, d) =>
-      MultiModal.withPayload(Tables.documents(s, d))
-        .select(col("doc_id"),
-          length(col("payload")).cast("long").as("n_bytes"),
-          ascii(substring(col("payload").cast("string"), 1, 1)).as("header_byte"),
-          col("meta.lang").as("lang"), col("meta.nChars").as("n_chars"))
-        .orderBy("doc_id")),
-
-    // Multimodal DECODE path through the correctness gate: the
-    // mapPartitions feature extraction (stub codec: width/height from
-    // the leading payload bytes, rolling 131-checksum with 64-bit
-    // wraparound) and the flatMap frame sampler (frameSize=7, keep every
-    // 2nd frame) run as the REAL Dataset pipeline — per-partition
-    // decoder init, streamed rows — and the oracle recomputes all of it
-    // from first principles (the payload is the UTF-8 text bytes and the
-    // corpus is pure ASCII, so DuckDB codepoints ARE the bytes; the
-    // Long wraparound is HUGEINT mod 2^64 re-signed). This is the row
-    // that catches a broken batch shape, a frame boundary off-by-one,
-    // or a checksum-order change — q_multimodal_meta only pins the
-    // payload/metadata plumbing.
-    "q_multimodal_decode" -> ((s, d) => {
-      val media = MultiModal.media(s, Tables.documents(s, d))
-      val feats = MultiModal.extractFeatures(s, media).toDF()
-        .select(col("docId").as("doc_id"), col("width"), col("height"),
-          col("checksum"))
-      val frames = MultiModal.sampleFrames(s, media, frameSize = 7, every = 2)
-        .toDF()
-        .groupBy("docId")
-        .agg(count(lit(1)).as("n_frames"),
-          sum(length(col("bytes"))).as("frame_bytes"))
-        .select(col("docId").as("doc_id"), col("n_frames"), col("frame_bytes"))
-      feats.join(frames, "doc_id").orderBy("doc_id")
-    }),
-
-    // Multimodal RESIZE path through the correctness gate (the last
-    // family function that was spec-only): the stride-downsample stub
-    // (out[i] = payload[⌊i·L/T⌋], pass-through at L ≤ T — a real image
-    // resampler swaps in with the same narrow per-row contract) feeds
-    // the SAME decode used by q_multimodal_decode, so the checksum pins
-    // every resized byte and its order — a stride off-by-one, a
-    // truncation-vs-round slip, or a pass-through-branch break turns
-    // the row red. T = 96 exercises BOTH branches at every verified
-    // scale (45/34/436 of the docs are ≤ 96 bytes at sf0.001/0.01/0.1).
-    "q_multimodal_resize" -> ((s, d) => {
-      val resized = MultiModal.resize(s,
-        MultiModal.media(s, Tables.documents(s, d)), targetLen = 96)
-      MultiModal.extractFeatures(s, resized).toDF()
-        .select(col("docId").as("doc_id"),
-          col("nBytes").cast("long").as("n_bytes"),
-          col("width"), col("height"), col("checksum"))
-        .orderBy("doc_id")
-    }),
-  )
-
   /** Shared ground-truth CTEs for the near-dup pair set `jp` (all-pairs
     * exact n-gram Jaccard ≥ 0.8 over the inverted index; data guarantee:
     * every doc has ≥ 3 words, so the Spark short-doc fallback branch never
@@ -2186,40 +615,206 @@ object PipelineQueries {
        SELECT qid, rank, nid, round(sim, 6) AS sim
        FROM ranked WHERE rank <= 5 ORDER BY qid, rank"""
 
-  val oracles: Map[String, String] = Map(
-    "q_dedup_exact" ->
+  val queries: Seq[Query] = Seq(
+    // Exact dedup, hash-first: group on sha2-256 of the text, not the text
+    // itself, so the shuffle carries a fixed 64-byte key per surviving
+    // group instead of the whole document (map-side partial agg already
+    // collapses in-partition duplicates either way; this cuts the bytes of
+    // the survivors). Collision argument: distinct texts colliding under
+    // SHA-256 needs ~2^128 docs (birthday bound) — at 10^12 documents the
+    // collision probability is < 10^-52, far below any hardware-error
+    // floor, so no in-group text verify is needed. min-id row survives.
+    Query("q_dedup_exact",
       """SELECT min(doc_id) AS doc_id, count(*) AS n_copies
          FROM documents GROUP BY text ORDER BY doc_id""",
-    "q_dedup_keyed" ->
+      (s, d) => {
+        Tables.documents(s, d)
+          .groupBy(sha2(col("text").cast("binary"), 256).as("h"))
+          .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
+          .select(col("doc_id"), col("n_copies"))
+          .orderBy("doc_id")
+      }),
+
+    // Keyed dedup: first event per (user, type) — the "keep one
+    // representative per key" pattern over a big fact table, via the
+    // native TopKPerKey operator with k=1: the shuffle carries one row
+    // per (user, type) instead of every event, and no partition ever
+    // sorts a full group (the row_number window form does both).
+    // Explicit projection first — a custom node blocks Catalyst's
+    // column pruning, so the scan must be slimmed before it.
+    Query("q_dedup_keyed",
       """SELECT user_id, event_type, event_id FROM (
            SELECT user_id, event_type, event_id,
                   row_number() OVER (PARTITION BY user_id, event_type
                                      ORDER BY event_id) AS rn
            FROM events) t
          WHERE rn = 1 ORDER BY user_id, event_type""",
-    "q_jaccard_pairs" -> jaccardGroundTruth,
-    "q_minhash_neardup" -> jaccardGroundTruth,
-    // incremental dedup: the identical ground truth, restricted to pairs
-    // with an endpoint in the increment batch
-    "q_dedup_incr" ->
+      (s, d) => {
+        graft.plans.TopKPerKeyNode.topKPerKey(
+            Tables.events(s, d)
+              .select(col("user_id"), col("event_type"), col("event_id")),
+            keyCols = Seq("user_id", "event_type"),
+            orderSpec = Seq(("event_id", false)),
+            k = 1)
+          .select(col("user_id"), col("event_type"), col("event_id"))
+          .orderBy("user_id", "event_type")
+      }),
+
+    // Exact all-pairs n-gram Jaccard ≥ 0.8 via the stats-adaptive
+    // Dedup.exactJaccardPairs: a sampled df pass picks the plan. This
+    // corpus has NO hot shingles (measured max df 25 at sf0.1 — flat
+    // distribution), so it runs the count-based inverted join with a
+    // single reused exchange; a corpus with df² killers would flip to
+    // PPJoin-style prefix filtering (see the operator scaladoc — both
+    // regimes emit the exact ground truth).
+    Query("q_jaccard_pairs", jaccardGroundTruth,
+      (s, d) =>
+        Dedup.exactJaccardPairs(Tables.documents(s, d), "doc_id", "text",
+            threshold = 0.8)
+          .orderBy("a_id", "b_id")),
+
+    // MinHash+LSH near-dup: signature (narrow) → band join → exact verify.
+    // Output = verified pairs, so the oracle is the same ground truth as
+    // q_jaccard_pairs — but the plan only ever touches LSH candidates.
+    Query("q_minhash_neardup", jaccardGroundTruth,
+      (s, d) =>
+        Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text", threshold = 0.8)
+          .orderBy("a_id", "b_id")),
+
+    // INCREMENTAL ingest dedup: this crawl's increment (doc_id % 11 = 0)
+    // deduped against the historical corpus's PERSISTED band state —
+    // batch-sized banding + band-key joins, never a re-band or self-join
+    // of the history (Dedup.bandRows / incrementalNearDupPairs). Output
+    // = every verified pair touching the batch; the oracle is the
+    // all-pairs ground truth restricted to batch-endpoint pairs, so
+    // "incremental == from-scratch on the touching set" is the
+    // driver-gated claim (the q_bm25_incr symmetry for dedup).
+    Query("q_dedup_incr",
+      // incremental dedup: the identical ground truth, restricted to pairs
+      // with an endpoint in the increment batch
       s"""WITH $jaccardCtes
          SELECT a_id, b_id, jaccard FROM jp
          WHERE a_id % 11 = 0 OR b_id % 11 = 0
          ORDER BY a_id, b_id""",
-    // Transitive closure of the ground-truth pair set: reach(v, r) holds
-    // when r is reachable from v over near-dup edges; min(r) per v is the
-    // component's canonical id.
-    "q_dedup_components" -> componentsOracle,
-    "q_dedup_components_star" -> componentsOracle,
-    // incremental fold over (historical labels + touching pairs): old ∪
-    // touching is the full ground-truth pair set, so the from-scratch
-    // oracle gates maintenance == rebuild verbatim
-    "q_dedup_components_incr" -> componentsOracle,
-    // components deletion: closure over SURVIVING pairs, reach base
-    // widened to every surviving endpoint of the ORIGINAL pair set so a
-    // doc whose every duplicate was erased appears as its own singleton
-    // cluster (the maintained-state vertex contract)
-    "q_dedup_components_delete" ->
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val batch = docs.filter(pmod(col("doc_id"), lit(11)) === 0)
+        Dedup.incrementalNearDupPairs(
+            incrOldBands(s, d), batch, "doc_id", "text",
+            docs, threshold = 0.8)
+          .orderBy("a_id", "b_id")
+      }),
+
+    // DELETION maintenance for the dedup band state — the third
+    // lifecycle op (build / upsert / DELETE, VERDICT r15 #5): a GDPR
+    // erasure (doc_id % 7 = 3) leaves the persisted band state by one
+    // anti-join (Dedup.deleteBandRows). Banding is a pure per-doc
+    // function, so the maintained state must be ROW-IDENTICAL to
+    // re-banding the surviving corpus — the identity is checked in-plan
+    // (exceptAll both directions over the full (id, bh) state) and
+    // emitted as a boolean the oracle pins `true`, alongside two
+    // DuckDB-computable counts (survivors; 32 band rows per doc). Any
+    // stale row surviving the anti-join, or an over-delete, flips the
+    // boolean and reds the hash.
+    Query("q_dedup_delete",
+      // dedup band-state deletion: same in-plan identity gate (banding is
+      // a pure per-doc function; 32 band rows per doc)
+      """SELECT count(*) AS n_survivors,
+                count(*) * 32 AS n_band_rows,
+                true AS equals_rebuild
+         FROM documents WHERE doc_id % 7 <> 3""",
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val deleted = docs.filter(pmod(col("doc_id"), lit(7)) === 3)
+        val survivors = docs.filter(pmod(col("doc_id"), lit(7)) =!= 3)
+        val del = Dedup.deleteBandRows(
+          Dedup.bandRows(docs, "doc_id", "text"), deleted, "doc_id")
+        val rebuilt = Dedup.bandRows(survivors, "doc_id", "text")
+        val diffs = del.exceptAll(rebuilt).select(lit(1).as("one"))
+          .unionAll(rebuilt.exceptAll(del).select(lit(1).as("one")))
+        survivors.agg(count(lit(1)).as("n_survivors"))
+          .crossJoin(del.agg(count(lit(1)).as("n_band_rows")))
+          .crossJoin(diffs.agg((count(lit(1)) === 0).as("equals_rebuild")))
+      }),
+
+    // Near-dup CLUSTERS: the MinHash+LSH verified pair set (= the exact
+    // Jaccard ≥ 0.8 ground truth) closed under transitivity via
+    // Components.connectedComponents (hash-to-min label propagation);
+    // each doc in the near-dup graph gets its component's min doc_id as
+    // the canonical survivor. This is the step pairwise dedup misses:
+    // A~B and B~C must collapse to ONE survivor even when A~C itself
+    // falls under the threshold. Oracle = recursive CTE over the same
+    // ground-truth pairs.
+    Query("q_dedup_components",
+      // Transitive closure of the ground-truth pair set: reach(v, r) holds
+      // when r is reachable from v over near-dup edges; min(r) per v is the
+      // component's canonical id.
+      componentsOracle,
+      (s, d) => {
+        val pairs = Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text",
+          threshold = 0.8)
+        Components.connectedComponents(pairs, "a_id", "b_id")
+          .select(col("id").as("doc_id"), col("comp").as("component"))
+          .orderBy("doc_id")
+      }),
+
+    // Same clustering through the star-contraction variant (large-star/
+    // small-star, O(log n) rounds regardless of diameter) — both
+    // algorithms hash-check against the identical recursive-CTE oracle,
+    // proving they are interchangeable behind the dedup pipeline.
+    Query("q_dedup_components_star", componentsOracle,
+      (s, d) => {
+        val pairs = Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text",
+          threshold = 0.8)
+        Components.connectedComponentsStar(pairs, "a_id", "b_id")
+          .select(col("id").as("doc_id"), col("comp").as("component"))
+          .orderBy("doc_id")
+      }),
+
+    // INCREMENTAL cluster maintenance (Components.incrementalComponents
+    // — VERDICT r15 #7, the one pipeline state without an upsert path):
+    // the historical corpus's component labels absorb this crawl's
+    // verified touching pairs (the q_dedup_incr edge batch) by
+    // contract-solve-relabel — the historical EDGE SET never reappears;
+    // only the batch-sized supernode graph iterates, and merged old
+    // components rewrite via one comp-keyed join. The oracle is the
+    // from-scratch recursive CTE over the FULL corpus's ground-truth
+    // pairs — old ∪ touching IS the full pair set, so maintenance ==
+    // rebuild is the gated identity, vertex-for-vertex.
+    Query("q_dedup_components_incr",
+      // incremental fold over (historical labels + touching pairs): old ∪
+      // touching is the full ground-truth pair set, so the from-scratch
+      // oracle gates maintenance == rebuild verbatim
+      componentsOracle,
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val batch = docs.filter(pmod(col("doc_id"), lit(11)) === 0)
+        val newPairs = Dedup.incrementalNearDupPairs(
+          incrOldBands(s, d), batch, "doc_id", "text", docs, threshold = 0.8)
+        Components.incrementalComponents(incrOldComponents(s, d), newPairs,
+            "a_id", "b_id")
+          .select(col("id").as("doc_id"), col("comp").as("component"))
+          .orderBy("doc_id")
+      }),
+
+    // DELETION maintenance for the cluster labeling — the erase twin of
+    // q_dedup_components_incr and the hard direction: removing a doc
+    // can SPLIT its component (a bridge doc erased leaves its neighbors
+    // disconnected), so no label arithmetic suffices — connectivity is
+    // re-SOLVED, but only over the components a deleted id touches
+    // (Components.deleteFromComponents: untouched components pass
+    // through verbatim, affected ones re-run hash-to-min on their
+    // surviving pairs, edgeless survivors become singleton clusters, the
+    // erased ids leave no trace). Oracle = recursive-CTE closure over
+    // the SURVIVING pairs with its reach base widened to every surviving
+    // endpoint of the ORIGINAL pair set — exactly the maintained vertex
+    // contract (a doc does not vanish from the cluster state because its
+    // duplicates were erased).
+    Query("q_dedup_components_delete",
+      // components deletion: closure over SURVIVING pairs, reach base
+      // widened to every surviving endpoint of the ORIGINAL pair set so a
+      // doc whose every duplicate was erased appears as its own singleton
+      // cluster (the maintained-state vertex contract)
       s"""WITH RECURSIVE $jaccardCtes,
          verts AS (SELECT DISTINCT u.v FROM
                      (SELECT a_id AS v FROM jp
@@ -2236,108 +831,26 @@ object PipelineQueries {
            SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v)
          SELECT v AS doc_id, min(r) AS component FROM reach
          GROUP BY v ORDER BY doc_id""",
-    // quality-argmax survivors: the component closure joined to the
-    // SHARED quality CTEs; rank > 1 within a cluster = dropped copy
-    "q_best_survivors" ->
-      s"""WITH RECURSIVE $jaccardCtes,
-         edges AS (SELECT a_id AS a, b_id AS b FROM jp
-                   UNION ALL SELECT b_id, a_id FROM jp),
-         reach(v, r) AS (
-           SELECT DISTINCT a, a FROM edges
-           UNION
-           SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
-         comp AS (SELECT v, min(r) AS c FROM reach GROUP BY v),
-         $qualityCtes,
-         rk AS (SELECT comp.v AS doc_id,
-                  row_number() OVER (PARTITION BY comp.c
-                    ORDER BY qsc.quality DESC, comp.v) AS rn
-                FROM comp JOIN qsc ON comp.v = qsc.doc_id)
-         SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT doc_id FROM rk WHERE rn > 1)
-         ORDER BY doc_id""",
-    "q_neardup_survivors" ->
-      s"""WITH RECURSIVE $jaccardCtes,
-         edges AS (SELECT a_id AS a, b_id AS b FROM jp
-                   UNION ALL SELECT b_id, a_id FROM jp),
-         reach(v, r) AS (
-           SELECT DISTINCT a, a FROM edges
-           UNION
-           SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
-         comp AS (SELECT v, min(r) AS c FROM reach GROUP BY v)
-         SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT v FROM comp WHERE v <> c)
-         ORDER BY doc_id""",
-    // incremental stats: from-scratch recompute; exact equality for the
-    // algebraic stats, `true` for the sketch band (the engine emits the
-    // measured in-band boolean)
-    "q_stats_incr" ->
-      """WITH t AS (SELECT lang, doc_id,
-                           unnest(string_split(text, ' ')) AS term
-                    FROM documents)
-         SELECT lang, count(DISTINCT doc_id) AS n_docs, count(*) AS n_tok,
-                count(DISTINCT term) AS nd_exact, true AS in_band
-         FROM t GROUP BY lang ORDER BY lang""",
-    // log-structured composition: replay the winner algebra on the
-    // documents table — tombstoned-and-not-recrawled docs vanish,
-    // re-crawled docs carry the epoch-2 text — then the shared tf CTE
-    "q_tf_log_compose" ->
-      s"""WITH d AS (
-           SELECT doc_id,
-                  CASE WHEN doc_id % 17 = 0 THEN text || ' v2'
-                       ELSE text END AS text
-           FROM documents
-           WHERE doc_id % 13 <> 0 OR doc_id % 17 = 0),
-         tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-                 FROM d),
-         f AS (SELECT * FROM tok WHERE term NOT IN ($stopList)),
-         tf AS (SELECT doc_id, term, count(*) AS tf FROM f GROUP BY 1, 2)
-         SELECT doc_id, term, tf FROM tf ORDER BY doc_id, term""",
-    // stats deletion: from-scratch recompute over the SURVIVORS —
-    // maintenance == rebuild exactly, every column (the decrementable
-    // count-table makes even the distinct-term count exact under delete)
-    "q_stats_delete" ->
-      """WITH t AS (SELECT lang, doc_id,
-                           unnest(string_split(text, ' ')) AS term
-                    FROM documents WHERE doc_id % 11 <> 0)
-         SELECT lang, count(DISTINCT doc_id) AS n_docs, count(*) AS n_tok,
-                count(DISTINCT term) AS nd_exact
-         FROM t GROUP BY lang ORDER BY lang""",
-    // version diff: null-safe text equality stands in for the engine's
-    // null-safe digest equality (equal-or-both-null texts ⟺ <=> on the
-    // sha2 digests); presence classifies on the join keys
-    "q_corpus_diff" ->
-      """WITH s AS (SELECT max(doc_id) + 1 AS shift FROM documents),
-         a AS (
-           SELECT doc_id,
-                  CASE WHEN doc_id % 17 = 0 THEN text || ' v2'
-                       ELSE text END AS text
-           FROM documents WHERE doc_id % 13 <> 0
-           UNION ALL
-           SELECT doc_id + s.shift, text
-           FROM documents CROSS JOIN s WHERE doc_id % 23 = 0),
-         b AS (SELECT doc_id, text FROM documents)
-         SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-                CASE WHEN a.doc_id IS NULL THEN 'added'
-                     WHEN b.doc_id IS NULL THEN 'removed'
-                     WHEN a.text IS NOT DISTINCT FROM b.text THEN 'same'
-                     ELSE 'changed' END AS status
-         FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
-         ORDER BY doc_id""",
-    "q_dedup_normalized" ->
-      """WITH n AS (
-           SELECT doc_id,
-                  regexp_replace(regexp_replace(lower(text), '[.,!?;:]', '', 'g'),
-                                 ' +', ' ', 'g') AS norm
-           FROM documents)
-         SELECT min(doc_id) AS doc_id, count(*) AS n_copies
-         FROM n GROUP BY norm ORDER BY doc_id""",
-    // the count join is NULL-SAFE (IS NOT DISTINCT FROM) on both of the
-    // stratified samplers: the Spark side deliberately keeps a NULL
-    // stratum as its own group (balancedSample's <=> join), and a
-    // null-rejecting USING join here would silently drop every
-    // NULL-lang row the engine keeps — dormant on this testdata (no
-    // NULL lang) but a real divergence on the first corpus that has one
-    "q_lang_balance" ->
+      (s, d) => {
+        val (pairs, prev) = fullPairsAndComponents(s, d)
+        val del = Tables.documents(s, d)
+          .filter(pmod(col("doc_id"), lit(13)) === 0)
+          .select(col("doc_id").as("id"))
+        Components.deleteFromComponents(prev, pairs, "a_id", "b_id", del)
+          .select(col("id").as("doc_id"), col("comp").as("component"))
+          .orderBy("doc_id")
+      }),
+
+    // Corpus mixing: deterministic per-language downsample equalizing
+    // language sizes (Sampling.balancedSample) — exact integer
+    // cross-multiplied thresholds, replayed verbatim by the oracle.
+    Query("q_lang_balance",
+      // the count join is NULL-SAFE (IS NOT DISTINCT FROM) on both of the
+      // stratified samplers: the Spark side deliberately keeps a NULL
+      // stratum as its own group (balancedSample's <=> join), and a
+      // null-rejecting USING join here would silently drop every
+      // NULL-lang row the engine keeps — dormant on this testdata (no
+      // NULL lang) but a real divergence on the first corpus that has one
       """WITH c AS (SELECT lang, count(*) AS cnt FROM documents GROUP BY lang),
               m AS (SELECT min(cnt) AS minc FROM c)
          SELECT d.doc_id, d.lang
@@ -2348,9 +861,21 @@ object PipelineQueries {
                  * CAST(c.cnt AS HUGEINT)
                < CAST(m.minc AS HUGEINT) * CAST(4294967296 AS HUGEINT)
          ORDER BY d.doc_id""",
-    // α = 1/2 temperature mixing: the same Knuth bucket SQUARED clears
-    // the √(n_min/n_i) keep-rate into pure integer arithmetic
-    "q_temp_mixture" ->
+      (s, d) =>
+        Sampling.balancedSample(Tables.documents(s, d), "lang", "doc_id")
+          .select(col("doc_id"), col("lang"))
+          .orderBy("doc_id")),
+
+    // Temperature-mixed corpus sampling at α = 1/2 (exponentiated
+    // stratum smoothing — the multilingual-LM mixing rule): big
+    // languages down-weight softly instead of slamming to the smallest
+    // stratum's size; keep-rate per language = √(n_min/n_i), decided by
+    // the exact integer rule bucket²·n_i < n_min·2^64 on BOTH engines
+    // (squaring clears the square root — the one temperature with a
+    // float-free oracle; see Sampling.sqrtTemperatureSample).
+    Query("q_temp_mixture",
+      // α = 1/2 temperature mixing: the same Knuth bucket SQUARED clears
+      // the √(n_min/n_i) keep-rate into pure integer arithmetic
       """WITH c AS (SELECT lang, count(*) AS cnt FROM documents GROUP BY lang),
               m AS (SELECT min(cnt) AS minc FROM c),
               b AS (SELECT doc_id, lang,
@@ -2362,12 +887,24 @@ object PipelineQueries {
                < CAST(m.minc AS HUGEINT)
                  * CAST(4294967296 AS HUGEINT) * CAST(4294967296 AS HUGEINT)
          ORDER BY b.doc_id""",
-    // token-budget mixing: the same whitespace token count as
-    // q_token_count's n_ws, budgets = exact integer halves of each
-    // language's total, the keep rule a pure integer running sum along
-    // the Knuth-hash order (null-safe budget join — same contract as
-    // the stratified samplers above)
-    "q_token_budget_mix" ->
+      (s, d) =>
+        Sampling.sqrtTemperatureSample(Tables.documents(s, d), "lang", "doc_id")
+          .select(col("doc_id"), col("lang"))
+          .orderBy("doc_id")),
+
+    // Token-budget mixing — the unit real mix specs are written in:
+    // each language keeps its hash-ordered document prefix until HALF
+    // its total whitespace tokens are consumed (budgets derived in-plan
+    // as exact `div 2` longs, so the row binds — is a strict subset —
+    // at every scale by construction). Pure integer running-sum rule,
+    // replayed verbatim by the oracle's window; the budget frame is a
+    // k-row broadcast (Sampling.tokenBudgetSample).
+    Query("q_token_budget_mix",
+      // token-budget mixing: the same whitespace token count as
+      // q_token_count's n_ws, budgets = exact integer halves of each
+      // language's total, the keep rule a pure integer running sum along
+      // the Knuth-hash order (null-safe budget join — same contract as
+      // the stratified samplers above)
       """WITH t AS (SELECT doc_id, lang,
                len(string_split(text, ' ')) AS n_tok FROM documents),
          b AS (SELECT lang, sum(n_tok) // 2 AS budget FROM t GROUP BY lang),
@@ -2379,10 +916,24 @@ object PipelineQueries {
                FROM t JOIN b ON t.lang IS NOT DISTINCT FROM b.lang)
          SELECT doc_id, lang, n_tok FROM r WHERE cum <= budget
          ORDER BY doc_id""",
-    // leakage-safe split: component closure over the ground-truth pair
-    // set (the componentsOracle CTEs verbatim), split cuts keyed on the
-    // cluster canonical — same binary-exact thresholds as q_split_sample
-    "q_cluster_split" ->
+      (s, d) => {
+        val t = Tables.documents(s, d).select(col("doc_id"), col("lang"),
+          size(TextFunctions.tokens(col("text"))).cast("long").as("n_tok"))
+        val budgets = t.groupBy("lang").agg(expr("sum(n_tok) div 2").as("budget"))
+        Sampling.tokenBudgetSample(t, "lang", "doc_id", "n_tok", budgets)
+          .orderBy("doc_id")
+      }),
+
+    // Leakage-safe corpus split: near-dup CLUSTERS (MinHash pairs closed
+    // under transitivity) are the split unit, so no near-duplicate pair
+    // can straddle train/test — the eval-contamination guard a doc-keyed
+    // split (q_split_sample) structurally lacks. Oracle = the recursive-
+    // CTE component closure over the same ground-truth pairs + the same
+    // binary-exact bucket cuts, keyed on the cluster canonical.
+    Query("q_cluster_split",
+      // leakage-safe split: component closure over the ground-truth pair
+      // set (the componentsOracle CTEs verbatim), split cuts keyed on the
+      // cluster canonical — same binary-exact thresholds as q_split_sample
       s"""WITH RECURSIVE $jaccardCtes,
          edges AS (SELECT a_id AS a, b_id AS b FROM jp
                    UNION ALL SELECT b_id, a_id FROM jp),
@@ -2401,10 +952,26 @@ object PipelineQueries {
                  (CAST(cluster AS HUGEINT) * 2654435761) % 4294967296 AS b
                FROM x)
          ORDER BY doc_id""",
-    // adaptive quality gate: rank within language on the SHARED quality
-    // CTEs (qualityCtes — verbatim the q_quality_score quantity), keep
-    // iff rank·5 ≤ count·3 (exact integer cross-multiplication)
-    "q_quality_gate" ->
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
+        Sampling.clusterSafeSplit(docs.select(col("doc_id")), "doc_id", pairs,
+            "a_id", "b_id",
+            Seq("train" -> 0.75, "valid" -> 0.125, "test" -> 0.125))
+          .orderBy("doc_id")
+      }),
+
+    // Adaptive per-language quality gate: keep the top 3/5 of each
+    // language by the shared quality heuristic (round-6 double — its
+    // cross-engine equality is already pinned by q_quality_score, so
+    // ordering on it plus the doc_id tie-break cannot diverge). The
+    // keep rule is exact integer cross-multiplication rank·5 ≤ cnt·3 —
+    // floor(0.6·cnt) rows per language, scaling with the stratum where
+    // q_domain_cap's fixed k cannot.
+    Query("q_quality_gate",
+      // adaptive quality gate: rank within language on the SHARED quality
+      // CTEs (qualityCtes — verbatim the q_quality_score quantity), keep
+      // iff rank·5 ≤ count·3 (exact integer cross-multiplication)
       s"""WITH $qualityCtes,
          r AS (SELECT doc_id, lang, quality,
                  row_number() OVER (PARTITION BY lang
@@ -2413,11 +980,319 @@ object PipelineQueries {
                FROM qsc)
          SELECT doc_id, lang, quality FROM r
          WHERE rn * 5 <= cnt * 3 ORDER BY doc_id""",
-    // All-pairs recomputation of the poly-hash SimHash fingerprint: the
-    // same (h1<<31)|h2 rolling hash per token (codepoint fold), the same
-    // TF-weighted bit votes, then brute-force hamming ≤ 3. The Spark side
-    // reaches the identical set through complete chunk-join candidates.
-    "q_simhash_neardup" ->
+      (s, d) => {
+        val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"),
+          TextFunctions.qualityScore(col("text")).as("quality"))
+        Sampling.stratumQuantileGate(docs, "lang", 3, 5,
+            col("quality").desc, col("doc_id"))
+          .orderBy("doc_id")
+      }),
+
+    // Near-dup dedup END-TO-END: the survivor set after transitive
+    // clustering — every doc either outside the near-dup graph or the
+    // canonical (min-id) member of its component. This is the actual
+    // pipeline deliverable (pairs and components are its intermediate
+    // stages); the final step is one anti-join of the corpus against the
+    // non-canonical component members (a set the size of the dup graph,
+    // tiny next to the corpus).
+    Query("q_neardup_survivors",
+      s"""WITH RECURSIVE $jaccardCtes,
+         edges AS (SELECT a_id AS a, b_id AS b FROM jp
+                   UNION ALL SELECT b_id, a_id FROM jp),
+         reach(v, r) AS (
+           SELECT DISTINCT a, a FROM edges
+           UNION
+           SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
+         comp AS (SELECT v, min(r) AS c FROM reach GROUP BY v)
+         SELECT doc_id FROM documents
+         WHERE doc_id NOT IN (SELECT v FROM comp WHERE v <> c)
+         ORDER BY doc_id""",
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
+        val losers = Components.connectedComponents(pairs, "a_id", "b_id")
+          .filter(col("id") =!= col("comp"))
+          .select(col("id").as("doc_id"))
+        docs.select(col("doc_id"))
+          .join(losers, Seq("doc_id"), "left_anti")
+          .orderBy("doc_id")
+      }),
+
+    // INCREMENTAL corpus-statistics maintenance — the pre-aggregated
+    // per-language stats table (doc count, token count, distinct-term
+    // sketch) kept current by MERGING the increment's partial stats
+    // with the persisted ones, never rescanning the history: counts and
+    // sums merge by addition (snapshot doc sets are disjoint — the
+    // ingest contract), and the HLL sketch is count-distinct in its
+    // MERGEABLE-state form (register-wise union; the only way distinct
+    // counts can be maintained incrementally at all). The oracle
+    // recomputes from scratch over the full corpus: maintenance ==
+    // rebuild EXACTLY for the algebraic stats, and the sketch estimate
+    // lands in the ±10% band vs the exact distinct count (the
+    // q_approx_distinct discipline — and at this vocabulary size the
+    // HLL sparse mode is exact in practice).
+    Query("q_stats_incr",
+      // incremental stats: from-scratch recompute; exact equality for the
+      // algebraic stats, `true` for the sketch band (the engine emits the
+      // measured in-band boolean)
+      """WITH t AS (SELECT lang, doc_id,
+                           unnest(string_split(text, ' ')) AS term
+                    FROM documents)
+         SELECT lang, count(DISTINCT doc_id) AS n_docs, count(*) AS n_tok,
+                count(DISTINCT term) AS nd_exact, true AS in_band
+         FROM t GROUP BY lang ORDER BY lang""",
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        def partial(df: DataFrame) = df
+          .select(col("lang"), col("doc_id"),
+            explode(TextFunctions.tokens(col("text"))).as("term"))
+          .groupBy("lang")
+          .agg(countDistinct(col("doc_id")).as("n_docs"),
+            count(lit(1)).as("n_tok"),
+            hll_sketch_agg(col("term")).as("sk"))
+        val merged = partial(docs.filter(pmod(col("doc_id"), lit(11)) =!= 0))
+          .unionByName(partial(docs.filter(pmod(col("doc_id"), lit(11)) === 0)))
+          .groupBy("lang")
+          .agg(sum("n_docs").as("n_docs"), sum("n_tok").as("n_tok"),
+            hll_union_agg(col("sk")).as("sk"))
+        val exact = docs
+          .select(col("lang"), explode(TextFunctions.tokens(col("text"))).as("term"))
+          .groupBy("lang").agg(countDistinct(col("term")).as("nd_exact"))
+        merged.join(exact, Seq("lang"))
+          .select(col("lang"), col("n_docs"), col("n_tok"), col("nd_exact"),
+            hll_sketch_estimate(col("sk"))
+              .between(col("nd_exact") * 0.9, col("nd_exact") * 1.1)
+              .as("in_band"))
+          .orderBy("lang")
+      }),
+
+    // DELETION maintenance for corpus STATISTICS — the decrement twin of
+    // q_stats_incr, and the design point it exists to pin: the insert-only
+    // HLL sketch CANNOT decrement (register-wise max is not invertible),
+    // so a stats table that must survive erasure keeps the DECREMENTABLE
+    // sufficient statistic instead — per-(lang, term) counts,
+    // n-proportional state whose delete is a subtraction. The algebraic
+    // stats (doc/token counts) decrement by subtracting the deleted
+    // batch's OWN partials (O(deleted), never a survivor rescan); the
+    // distinct-term count re-derives EXACTLY as count(cnt > 0) from the
+    // maintained count table, where the sketch's only post-delete move is
+    // a full rebuild. A language whose every doc is erased drops out of
+    // the maintained table entirely (the n_docs > 0 gate), matching the
+    // oracle's GROUP BY over survivors. Oracle = from-scratch recompute
+    // over the surviving corpus; maintenance == rebuild EXACTLY for every
+    // column — no sketch band needed, which is the point.
+    Query("q_stats_delete",
+      // stats deletion: from-scratch recompute over the SURVIVORS —
+      // maintenance == rebuild exactly, every column (the decrementable
+      // count-table makes even the distinct-term count exact under delete)
+      """WITH t AS (SELECT lang, doc_id,
+                           unnest(string_split(text, ' ')) AS term
+                    FROM documents WHERE doc_id % 11 <> 0)
+         SELECT lang, count(DISTINCT doc_id) AS n_docs, count(*) AS n_tok,
+                count(DISTINCT term) AS nd_exact
+         FROM t GROUP BY lang ORDER BY lang""",
+      (s, d) => {
+        val del = Tables.documents(s, d)
+          .filter(pmod(col("doc_id"), lit(11)) === 0)
+        def tok(df: DataFrame) = df.select(col("lang"), col("doc_id"),
+          explode(TextFunctions.tokens(col("text"))).as("term"))
+        // the persisted decrementable state over the FULL corpus —
+        // memoized setup (statsDeleteState), not the gated operator
+        val (counts, stats) = statsDeleteState(s, d)
+        // the delete batch's own partials — the decrement, O(deleted)
+        val dcounts = tok(del).groupBy("lang", "term")
+          .agg(count(lit(1)).as("dcnt"))
+        val dstats = tok(del).groupBy("lang")
+          .agg(countDistinct(col("doc_id")).as("d_docs"),
+            count(lit(1)).as("d_tok"))
+        val keptCounts = counts.join(dcounts, Seq("lang", "term"), "left")
+          .filter(col("cnt") - coalesce(col("dcnt"), lit(0L)) > 0)
+        val maintained = stats.join(dstats, Seq("lang"), "left")
+          .select(col("lang"),
+            (col("n_docs") - coalesce(col("d_docs"), lit(0L))).as("n_docs"),
+            (col("n_tok") - coalesce(col("d_tok"), lit(0L))).as("n_tok"))
+          .filter(col("n_docs") > 0)
+        maintained.join(
+            keptCounts.groupBy("lang").agg(count(lit(1)).as("nd_exact")),
+            Seq("lang"))
+          .orderBy("lang")
+      }),
+
+    // LOG-STRUCTURED index-state composition (StateLog.composeFrames —
+    // the read path of the O(batch)-per-epoch maintenance log, run
+    // in-plan): base = the compacted tf state at epoch 0; epoch 1
+    // tombstones docs (ownership claim with NO rows); epoch 2 re-crawls
+    // docs with CHANGED text — including a RESURRECTION where a doc
+    // tombstoned at 1 is re-crawled at 2 (doc_id % 221 == 0 at sf≥0.01,
+    // so the case is non-vacuous). Highest-epoch-wins arg-max per
+    // doc_id, one union + one max-agg + one join, all relational.
+    // Oracle replays the winner algebra directly on the documents
+    // table: survivors = NOT tombstoned OR re-crawled, re-crawled text
+    // replaced — then the shared tf CTE.
+    Query("q_tf_log_compose",
+      // log-structured composition: replay the winner algebra on the
+      // documents table — tombstoned-and-not-recrawled docs vanish,
+      // re-crawled docs carry the epoch-2 text — then the shared tf CTE
+      s"""WITH d AS (
+           SELECT doc_id,
+                  CASE WHEN doc_id % 17 = 0 THEN text || ' v2'
+                       ELSE text END AS text
+           FROM documents
+           WHERE doc_id % 13 <> 0 OR doc_id % 17 = 0),
+         tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+                 FROM d),
+         f AS (SELECT * FROM tok WHERE term NOT IN ($stopList)),
+         tf AS (SELECT doc_id, term, count(*) AS tf FROM f GROUP BY 1, 2)
+         SELECT doc_id, term, tf FROM tf ORDER BY doc_id, term""",
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val base = Retrieval.termFreq(docs)
+        val tomb = docs.filter(pmod(col("doc_id"), lit(13)) === 0)
+          .select(col("doc_id"))
+        val re = docs.filter(pmod(col("doc_id"), lit(17)) === 0)
+          .select(col("doc_id"), concat(col("text"), lit(" v2")).as("text"))
+        StateLog.composeFrames("doc_id",
+            Some(0L -> base),
+            Seq((1L, tomb, base.limit(0)),
+              (2L, re.select(col("doc_id")), Retrieval.termFreq(re))))
+          .orderBy("doc_id", "term")
+      }),
+
+    // Corpus VERSION DIFF — the snapshot comparison that drives every
+    // incremental operator above: classify each doc_id across two
+    // corpus versions as added / removed / changed / same. Version A is
+    // derived in-plan from the corpus (mod-13 ids absent = "B added
+    // them", mod-17 texts suffixed = "B changed them", mod-23 ghost
+    // rows at shifted ids = "B removed them" — shift from max+1, the
+    // serveWorkload idiom); the comparison is a sha2-256 full-outer
+    // join, so at corpus scale the shuffle carries 64-byte digests,
+    // never the payloads (the q_dedup_exact discipline). The
+    // changed ∪ added output is exactly what a deployment feeds to
+    // upsertTermFreq / ivfUpsert / upsertBandRows.
+    Query("q_corpus_diff",
+      // version diff: null-safe text equality stands in for the engine's
+      // null-safe digest equality (equal-or-both-null texts ⟺ <=> on the
+      // sha2 digests); presence classifies on the join keys
+      """WITH s AS (SELECT max(doc_id) + 1 AS shift FROM documents),
+         a AS (
+           SELECT doc_id,
+                  CASE WHEN doc_id % 17 = 0 THEN text || ' v2'
+                       ELSE text END AS text
+           FROM documents WHERE doc_id % 13 <> 0
+           UNION ALL
+           SELECT doc_id + s.shift, text
+           FROM documents CROSS JOIN s WHERE doc_id % 23 = 0),
+         b AS (SELECT doc_id, text FROM documents)
+         SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
+                CASE WHEN a.doc_id IS NULL THEN 'added'
+                     WHEN b.doc_id IS NULL THEN 'removed'
+                     WHEN a.text IS NOT DISTINCT FROM b.text THEN 'same'
+                     ELSE 'changed' END AS status
+         FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
+         ORDER BY doc_id""",
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val shift = docs.agg((max(col("doc_id")) + 1L).as("shift"))
+        val ghosts = docs.filter(pmod(col("doc_id"), lit(23)) === 0)
+          .crossJoin(broadcast(shift))
+          .select((col("doc_id") + col("shift")).as("doc_id"), col("text"))
+        val a = docs.filter(pmod(col("doc_id"), lit(13)) =!= 0)
+          .select(col("doc_id"),
+            when(pmod(col("doc_id"), lit(17)) === 0,
+              concat(col("text"), lit(" v2"))).otherwise(col("text")).as("text"))
+          .unionByName(ghosts)
+        // presence is tested on explicit marker columns, NEVER on digest
+        // nullity (sha2 of a NULL text is NULL — a present null-text doc
+        // must classify by presence + null-safe equality, not read as
+        // absent), and the digest compare is null-safe for the same
+        // reason: two null texts are the same document state
+        def h(df: DataFrame, c: String, in: String) = df.select(col("doc_id"),
+          sha2(col("text").cast("binary"), 256).as(c), lit(1).as(in))
+        h(a, "ha", "in_a").join(h(docs, "hb", "in_b"), Seq("doc_id"), "full_outer")
+          .select(col("doc_id"),
+            when(col("in_a").isNull, "added")
+              .when(col("in_b").isNull, "removed")
+              .when(col("ha") <=> col("hb"), "same")
+              .otherwise("changed").as("status"))
+          .orderBy("doc_id")
+      }),
+
+    // Quality-aware dedup survivors: within each near-dup cluster keep
+    // the HIGHEST-QUALITY copy (argmax quality, doc_id tie-break) — the
+    // production survivor rule. q_neardup_survivors' min-id canonical
+    // picks an ARBITRARY copy; a real pipeline keeps the best one.
+    // Composition of three shared, already-gated pieces: the
+    // ground-truth pair set, the component closure, and the SHARED
+    // quality score (qualityCtes — round-6, so the argmax cannot
+    // tie-break differently across engines). The per-cluster window
+    // ranks dup-graph-sized groups only; the corpus pays one anti-join.
+    Query("q_best_survivors",
+      // quality-argmax survivors: the component closure joined to the
+      // SHARED quality CTEs; rank > 1 within a cluster = dropped copy
+      s"""WITH RECURSIVE $jaccardCtes,
+         edges AS (SELECT a_id AS a, b_id AS b FROM jp
+                   UNION ALL SELECT b_id, a_id FROM jp),
+         reach(v, r) AS (
+           SELECT DISTINCT a, a FROM edges
+           UNION
+           SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
+         comp AS (SELECT v, min(r) AS c FROM reach GROUP BY v),
+         $qualityCtes,
+         rk AS (SELECT comp.v AS doc_id,
+                  row_number() OVER (PARTITION BY comp.c
+                    ORDER BY qsc.quality DESC, comp.v) AS rn
+                FROM comp JOIN qsc ON comp.v = qsc.doc_id)
+         SELECT doc_id FROM documents
+         WHERE doc_id NOT IN (SELECT doc_id FROM rk WHERE rn > 1)
+         ORDER BY doc_id""",
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
+        val members = Components.connectedComponents(pairs, "a_id", "b_id")
+          .select(col("id").as("doc_id"), col("comp"))
+          .join(docs.select(col("doc_id"),
+            TextFunctions.qualityScore(col("text")).as("q")), "doc_id")
+        val w = Window.partitionBy("comp").orderBy(col("q").desc, col("doc_id"))
+        val losers = members.withColumn("rn", row_number().over(w))
+          .filter(col("rn") > 1).select("doc_id")
+        docs.select(col("doc_id"))
+          .join(losers, Seq("doc_id"), "left_anti")
+          .orderBy("doc_id")
+      }),
+
+    // Normalized exact dedup: q_text_normalize's canonicalization feeding
+    // the hash-first dedup — trivially-variant copies (case, punctuation,
+    // whitespace) collapse to one survivor. Same sha2 grouping and
+    // collision bound as q_dedup_exact.
+    Query("q_dedup_normalized",
+      """WITH n AS (
+           SELECT doc_id,
+                  regexp_replace(regexp_replace(lower(text), '[.,!?;:]', '', 'g'),
+                                 ' +', ' ', 'g') AS norm
+           FROM documents)
+         SELECT min(doc_id) AS doc_id, count(*) AS n_copies
+         FROM n GROUP BY norm ORDER BY doc_id""",
+      (s, d) => {
+        Tables.documents(s, d)
+          .select(col("doc_id"), normExpr(col("text")).as("norm"))
+          .groupBy(sha2(col("norm").cast("binary"), 256).as("h"))
+          .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
+          .select(col("doc_id"), col("n_copies"))
+          .orderBy("doc_id")
+      }),
+
+    // SimHash near-dup: pigeonhole chunking makes candidates COMPLETE for
+    // hamming ≤ 3 (the Manku et al. WWW'07 standard radius for 64-bit
+    // SimHash — and the pigeonhole sweet spot: 4 chunks of 16 bits give
+    // 65k buckets, vs 9 7-bit chunks at radius 8 whose 128 buckets
+    // produced a measured ~44M candidate pairs at sf0.1), so the output
+    // equals the all-pairs hamming set and the DuckDB oracle recomputes
+    // the identical poly-hash fingerprints.
+    Query("q_simhash_neardup",
+      // All-pairs recomputation of the poly-hash SimHash fingerprint: the
+      // same (h1<<31)|h2 rolling hash per token (codepoint fold), the same
+      // TF-weighted bit votes, then brute-force hamming ≤ 3. The Spark side
+      // reaches the identical set through complete chunk-join candidates.
       """WITH tok AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
          th AS (
@@ -2444,32 +1319,15 @@ object PipelineQueries {
          FROM fp a JOIN fp b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.fp, b.fp)) <= 3
          ORDER BY a_id, b_id""",
-    // ANN recall contract: the oracle states the expected constants —
-    // the sampled query count, the grid-measured recall band (recall@5
-    // bucketized to 0.1 — see the query comments for the measurements),
-    // and the ≥0.5 floor.
-    "q_ann_lsh" ->
-      """SELECT count(*) AS n_queries,
-                CAST(0.7 AS DOUBLE) AS recall_band,
-                true AS recall_ok FROM embeddings
-         WHERE (CAST(vec_id AS HUGEINT) * 2654435761) % 4294967296 < 429496729""",
-    "q_ann_ivf" ->
-      """SELECT count(*) AS n_queries,
-                CAST(0.8 AS DOUBLE) AS recall_band,
-                true AS recall_ok FROM embeddings
-         WHERE (CAST(vec_id AS HUGEINT) * 2654435761) % 4294967296 < 429496729""",
-    "q_ann_pq" ->
-      """SELECT count(*) AS n_queries,
-                CAST(0.7 AS DOUBLE) AS recall_band,
-                true AS recall_ok FROM embeddings
-         WHERE (CAST(vec_id AS HUGEINT) * 2654435761) % 4294967296 < 429496729""",
-    "q_ann_ivfpq" ->
-      """SELECT count(*) AS n_queries,
-                CAST(CASE WHEN (SELECT count(*) FROM embeddings) >= 2000
-                     THEN 0.7 ELSE 0.8 END AS DOUBLE) AS recall_band,
-                true AS recall_ok FROM embeddings
-         WHERE (CAST(vec_id AS HUGEINT) * 2654435761) % 4294967296 < 429496729""",
-    "q_cosine_topk" ->
+      (s, d) =>
+        Dedup.simhashNearDups(Tables.documents(s, d), "doc_id", "text", maxHamming = 3)
+          .orderBy("a_id", "b_id")),
+
+    // Exact cosine top-5 per vector, brute force (the correctness anchor
+    // for the ANN path) via the blocked block-pair grid — no driver
+    // collect, O(n/blocks) memory per task. Double-precision left-to-right
+    // folds — replicated op-for-op in the oracle SQL.
+    Query("q_cosine_topk",
       """WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -2493,104 +1351,19 @@ object PipelineQueries {
            FROM pairs)
          SELECT qid, rank, nid, round(sim, 6) AS sim
          FROM ranked WHERE rank <= 5 ORDER BY qid, rank""",
-    "q_ann_serve_approx" ->
-      """SELECT count(*) AS n_queries,
-                CAST(0.8 AS DOUBLE) AS recall_band,
-                true AS recall_ok FROM embeddings
-         WHERE vec_id % 10 = 0""",
-    // calibration gate: the oracle states the rung the margin-swept
-    // target must select at every scale (ρ = 0.35 — see the query
-    // comment for the sweep) and the knobs it derives at this corpus's
-    // cardinality (nlist = ⌈√n⌉, nprobe = ⌈0.35·nlist⌉)
-    "q_ann_calibrate" ->
-      """SELECT CAST(0.35 AS DOUBLE) AS rho,
-                CASE WHEN (SELECT count(*) FROM embeddings) >= 2000
-                     THEN 45 ELSE 23 END AS nlist,
-                CASE WHEN (SELECT count(*) FROM embeddings) >= 2000
-                     THEN 16 ELSE 9 END AS nprobe,
-                true AS recall_ok""",
-    // interval contracts (see recallIntervalContract): the oracle states
-    // the workload size, that the measured recall sits inside the pinned
-    // interval, and the interval bounds themselves
-    "q_ann_serve_lsh" ->
-      """SELECT count(*) AS n_queries,
-                true AS recall_in_band,
-                CAST(0.73 AS DOUBLE) AS band_lo,
-                CAST(0.86 AS DOUBLE) AS band_hi FROM embeddings
-         WHERE vec_id % 7 = 0""",
-    // the upserted LSH index is bit-identical to the rebuild (data-
-    // oblivious banding), so the incremental row rides the SAME oracle
-    "q_ann_incr_lsh" ->
-      """SELECT count(*) AS n_queries,
-                true AS recall_in_band,
-                CAST(0.73 AS DOUBLE) AS band_lo,
-                CAST(0.86 AS DOUBLE) AS band_hi FROM embeddings
-         WHERE vec_id % 7 = 0""",
-    "q_ann_serve_ivfpq" ->
-      """SELECT count(*) AS n_queries,
-                true AS recall_in_band,
-                CAST(0.80 AS DOUBLE) AS band_lo,
-                CAST(0.93 AS DOUBLE) AS band_hi FROM embeddings
-         WHERE vec_id % 7 = 0""",
-    // the persisted round-trip probes bit-identically (IndexStoreSpec),
-    // so it must land inside the same interval
-    "q_ann_serve_persisted_ivfpq" ->
-      """SELECT count(*) AS n_queries,
-                true AS recall_in_band,
-                CAST(0.80 AS DOUBLE) AS band_lo,
-                CAST(0.93 AS DOUBLE) AS band_hi FROM embeddings
-         WHERE vec_id % 7 = 0""",
-    "q_ann_serve_pq" ->
-      """SELECT count(*) AS n_queries,
-                true AS recall_in_band,
-                CAST(0.76 AS DOUBLE) AS band_lo,
-                CAST(0.90 AS DOUBLE) AS band_hi FROM embeddings
-         WHERE vec_id % 7 = 0""",
-    "q_ann_serve_persisted_lsh" ->
-      """SELECT count(*) AS n_queries,
-                true AS recall_in_band,
-                CAST(0.73 AS DOUBLE) AS band_lo,
-                CAST(0.86 AS DOUBLE) AS band_hi FROM embeddings
-         WHERE vec_id % 7 = 0""",
-    "q_ann_serve_persisted_pq" ->
-      """SELECT count(*) AS n_queries,
-                true AS recall_in_band,
-                CAST(0.76 AS DOUBLE) AS band_lo,
-                CAST(0.90 AS DOUBLE) AS band_hi FROM embeddings
-         WHERE vec_id % 7 = 0""",
-    "q_ann_serve" -> serveExactOracleSql,
-    // the persisted round-trip must land on the SAME exact rows — one
-    // oracle text, two gated paths (in-session index vs save→load)
-    "q_ann_serve_persisted" -> serveExactOracleSql,
-    // and the INCREMENTALLY-ingested indexes too: more gated paths to
-    // the same exact rows — frozen-quantizer upserts probed at full
-    // width (IVF) or full width + full candK + exact re-rank (PQ-coded)
-    "q_ann_incr" -> serveExactOracleSql,
-    "q_ann_incr_ivfpq" -> serveExactOracleSql,
-    "q_ann_incr_pq" -> serveExactOracleSql,
-    // deletion maintenance: the exact serving oracle over the
-    // POST-DELETE candidate corpus — three gated paths (IVF anti-join;
-    // IVF-PQ and flat-PQ code-table anti-joins probed at full width +
-    // full candK + exact re-rank) to the same filtered brute force
-    "q_ann_delete" -> deleteExactOracleSql,
-    "q_ann_delete_ivfpq" -> deleteExactOracleSql,
-    "q_ann_delete_pq" -> deleteExactOracleSql,
-    // LSH deletion: data-oblivious banding makes deleted-state ==
-    // rebuild an exact identity — checked in-plan, pinned `true` here;
-    // the survivor count is the DuckDB-computable anchor
-    "q_ann_delete_lsh" ->
-      """SELECT count(*) AS n_survivors,
-                true AS equals_rebuild,
-                true AS no_deleted_rows
-         FROM embeddings WHERE vec_id % 8 <> 1""",
-    // dedup band-state deletion: same in-plan identity gate (banding is
-    // a pure per-doc function; 32 band rows per doc)
-    "q_dedup_delete" ->
-      """SELECT count(*) AS n_survivors,
-                count(*) * 32 AS n_band_rows,
-                true AS equals_rebuild
-         FROM documents WHERE doc_id % 7 <> 3""",
-    "q_hard_negatives" ->
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        Similarity.bruteForceTopK(emb, "vec_id", "embedding", k = 5,
+            blocks = AnnParams.bruteBlocks(embCount(s, d)))
+          .withColumn("sim", round(col("sim"), 6))
+          .orderBy("qid", "rank")
+      }),
+
+    // Hard-negative mining: per anchor, the 3 most-similar vectors with
+    // a DIFFERENT label, from a deterministic 25% Knuth-hash candidate
+    // pool (Similarity.hardNegatives — anchors expand by the broadcast
+    // label dim, then ONE equi-join on the label key; no cross join).
+    Query("q_hard_negatives",
       """WITH v AS (
            SELECT vec_id, label,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -2618,7 +1391,762 @@ object PipelineQueries {
            FROM pairs)
          SELECT qid, rank, nid, nlabel, round(sim, 6) AS sim
          FROM ranked WHERE rank <= 3 ORDER BY qid, rank""",
-    "q_embed_neardup" ->
+      (s, d) =>
+        Similarity.hardNegatives(Tables.embeddings(s, d), "vec_id",
+            "embedding", "label", k = 3)
+          .withColumn("sim", round(col("sim"), 6))
+          .orderBy("qid", "rank")),
+
+    // LSH-bucketed approximate top-k (the 100 TB path).
+    //
+    // Oracle shape: ANN output is approximate by construction, so the
+    // driver-checkable projection is the recall contract itself — Spark
+    // measures recall@5 of the LSH path against its own exact brute-force
+    // anchor (which IS hash-verified against DuckDB in q_cosine_topk) and
+    // emits (n_queries, recall_band, recall_ok); the oracle states the
+    // expected constants. recall_band = recall@5 bucketized to 0.1, so
+    // the hash pins the ACHIEVED band, not just a boolean: any parameter
+    // or code drift that moves recall across a 0.1 boundary turns the row
+    // red. The operating point derives from corpus cardinality like
+    // every other ANN knob (AnnParams.lshBits): bits =
+    // ⌈log2(tables/frac)⌉ sizes the hash space so the expected
+    // candidate FRACTION — not any bucket count — is the invariant,
+    // under an ⌈log2(n)⌉ occupancy bound. At the grid-measured point
+    // (LshTables = 16, LshCandFrac = 0.5: these near-random
+    // embeddings — max pairwise cos ≈ 0.51 — need coarse buckets) the
+    // rule derives 5-bit tables at every tested cardinality, the
+    // configuration the bands were measured at: recall@5 = 0.768 at
+    // sf0.001 / 0.768 at sf0.01 / 0.771 at sf0.1 — ONE constant 0.7
+    // band with ≥0.068 edge margin at every scale, and the
+    // near-identical recall at n = 500 and n = 2000 is the
+    // fraction-invariance the derivation exists for (the one-bit-
+    // deeper 0.25-fraction point reads 0.616/0.628/0.597 — a 0.003
+    // band-edge brush at sf0.1 — and is what calibrateLsh returns
+    // when the caller only needs the 0.5 floor). Re-measure with
+    // RecallGrid before touching AnnParams.lshBits or the
+    // hyperplane kernel.
+    // Recall is audited on a DETERMINISTIC 10% query sample
+    // (Sampling.hashSample) — the 100 TB shape: the exact anchor is
+    // affordable for a sample of queries against ALL candidates, never
+    // for every query. The sample is keyed (reproducible, engine-
+    // replicable) so the oracle can state its exact size.
+    Query("q_ann_lsh",
+      // ANN recall contract: the oracle states the expected constants —
+      // the sampled query count, the grid-measured recall band (recall@5
+      // bucketized to 0.1 — see the query comments for the measurements),
+      // and the ≥0.5 floor.
+      """SELECT count(*) AS n_queries,
+                CAST(0.7 AS DOUBLE) AS recall_band,
+                true AS recall_ok FROM embeddings
+         WHERE (CAST(vec_id AS HUGEINT) * 2654435761) % 4294967296 < 429496729""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        // the 10% query sample is applied on the QUERY SIDE of the bucket
+        // join (queryPred), not as a post-filter on the finished top-k:
+        // per-query results are independent, so the rows are identical,
+        // but the discarded 90% of queries never pay candidate scoring or
+        // the per-query top-k exchange
+        val n = embCount(s, d)
+        val lsh = Similarity.lshTopK(emb, "vec_id", "embedding",
+            k = 5, dim = 64, tables = AnnParams.LshTables,
+            bitsPerTable = AnnParams.lshBits(n),
+            queryPred = Some(Sampling.samplePred(0.1)))
+        val bf = bfAnchor(s, d)
+        // ceiling-bind warnings ride every derived-knob row as a named
+        // Observation (VERDICT r13 #6) — identity below the caps (all
+        // tested scales), so plan and oracle hash are untouched here
+        AnnParams.observeClamps(recallContract(bf, lsh), n)._1
+      }),
+
+    // IVF-ANN (the data-adaptive second ANN architecture: k-means cells +
+    // nprobe probing — Similarity.ivfTopK). Same recall-contract oracle
+    // shape as q_ann_lsh: Spark measures recall@5 against its own exact
+    // anchor (hash-verified in q_cosine_topk), and the hash pins the
+    // achieved band. The operating points derive from corpus cardinality
+    // (AnnParams): nlist = ⌈√n⌉, nprobe = ⌈ρ·nlist⌉ at the IVF probe
+    // fraction ρ = 0.46 (exact scoring inside probed cells means cell
+    // recall is the ONLY recall term, so the fraction — not any absolute
+    // count — is what the band depends on; a fixed nlist would instead
+    // let per-cell size, and so per-probe cost, grow linearly with the
+    // corpus). Derived points and grid-measured recall@5 (RecallGrid):
+    // n=500 → (23, 11), recall 0.872/0.840 (sf0.001/sf0.01 — the two
+    // same-cardinality datasets MUST share a band, the binding
+    // constraint on ρ); n=2000 → (45, 21), recall 0.843 — one constant
+    // 0.8 band, every scale ≥0.028 from a band edge and ≥0.34 above
+    // the 0.5 floor. AnnParamsSpec pins the derived values.
+    Query("q_ann_ivf",
+      """SELECT count(*) AS n_queries,
+                CAST(0.8 AS DOUBLE) AS recall_band,
+                true AS recall_ok FROM embeddings
+         WHERE (CAST(vec_id AS HUGEINT) * 2654435761) % 4294967296 < 429496729""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        // query-side sample via queryPred, same reasoning as q_ann_lsh
+        val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding",
+            k = 5, nlist = AnnParams.nlist(n),
+            nprobe = AnnParams.nprobe(n, AnnParams.IvfProbeFrac),
+            queryPred = Some(Sampling.samplePred(0.1)))
+        val bf = bfAnchor(s, d)
+        AnnParams.observeClamps(recallContract(bf, ivf), n)._1
+      }),
+
+    // External-workload ANN serving (the production shape: queries are
+    // NOT corpus rows — Similarity.ivfProbeFor over a trained
+    // IvfIndex). Probed at FULL width (nprobe = nlist), so the result
+    // is EXACT by construction (every cell is scanned; PqOpsSpec pins
+    // full-probe ≡ brute force bit-for-bit) — which converts this row
+    // from a recall band into a deterministic cross-engine HASH of the
+    // whole serving plumbing: external-id normalization, cell
+    // equi-join, id-keyed self-exclusion, (sim desc, nid) tie-breaks,
+    // rank emission. The approximate operating points of the SAME path
+    // are gated by the recall-contract rows; the workload here is a
+    // modulo sample (not hashSample) because the oracle must replicate
+    // it in SQL, and its ids shift out of the corpus id space — BY
+    // max(vec_id)+1, derived in-plan on both engines (a fixed shift
+    // constant silently collides with the corpus id space the first
+    // time a scale's ids outgrow it, firing Spark's id-keyed
+    // self-exclusion while the oracle keeps the pair), via the
+    // broadcast-1-row scalar-join pattern — so no self-exclusion
+    // fires on either engine at ANY scale.
+    // INCREMENTAL dense ingest: last epoch's index (trained on
+    // vec_id % 9 != 0) absorbs this epoch's increment (% 9 == 0) by
+    // frozen-quantizer assignment + anti-join upsert — no Lloyd re-run,
+    // no corpus re-encode (Similarity.ivfUpsert — the q_bm25_incr
+    // symmetry for the ANN family). A full-width probe is exact
+    // REGARDLESS of the quantizer, so the merged index must reproduce
+    // the exact serving oracle VERBATIM: incremental ingest == full
+    // rebuild under the exact probe, hash-pinned cross-engine.
+    Query("q_ann_incr",
+      // the INCREMENTALLY-ingested indexes: more gated paths to the
+      // same exact rows — frozen-quantizer upserts probed at full
+      // width (IVF) or full width + full candK + exact re-rank (PQ-coded)
+      serveExactOracleSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val batch = emb.filter(pmod(col("vec_id"), lit(9)) === 0)
+        val nOld = incrOldCount(s, d)
+        val nl = AnnParams.nlist(nOld)
+        // memoized old-snapshot training (incrIvfIndex); the upsert — the
+        // gated operator — runs per call
+        val up = Similarity.ivfUpsert(incrIvfIndex(s, d), batch,
+          "vec_id", "embedding")
+        AnnParams.observeClamps(
+          Similarity.ivfProbeFor(up, serveWorkload(emb), "vec_id", "embedding",
+              k = 5, nprobe = nl)
+            .withColumn("sim", round(col("sim"), 6))
+            .orderBy("qid", "rank"),
+          nOld)._1
+      }),
+
+    // IVF-PQ incremental ingest (Similarity.ivfPqUpsert — BOTH
+    // quantizers frozen, batch runs the fused encode kernel, stale ids
+    // replaced by anti-join). Gate: full probe width × candK = n makes
+    // the candidate set the whole corpus, and the exact cosine re-rank
+    // of a complete candidate set is the exact brute force REGARDLESS
+    // of the quantizers — so the merged index must reproduce the exact
+    // serving oracle verbatim, proving every batch row searchable
+    // end-to-end through the upserted encoded table. (The approximate-
+    // width quality claim needs no new grid: PqOpsSpec pins the upsert
+    // bit-identical to a frozen-kernel re-encode of the merged corpus,
+    // so the family's measured recall properties transfer.)
+    Query("q_ann_incr_ivfpq", serveExactOracleSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val batch = emb.filter(pmod(col("vec_id"), lit(9)) === 0)
+        val nl = AnnParams.nlist(incrOldCount(s, d))
+        // memoized old-snapshot training; the upsert runs per call
+        val up = Similarity.ivfPqUpsert(incrIvfPqIndex(s, d), batch,
+          "vec_id", "embedding")
+        val workload = serveWorkload(emb)
+        val cand = Similarity.ivfPqProbe(up, workload, "vec_id", "embedding",
+          k = embCount(s, d).toInt, nprobe = nl)
+        exactTop5(emb, workload, cand)
+      }),
+
+    // Flat-ADC incremental ingest (Similarity.pqUpsert — frozen
+    // codebooks). Same exact gate: candK = n candidates, exact re-rank,
+    // the exact serving oracle verbatim.
+    Query("q_ann_incr_pq", serveExactOracleSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val batch = emb.filter(pmod(col("vec_id"), lit(9)) === 0)
+        val (model, enc) = incrPqState(s, d)
+        val up = Similarity.pqUpsert(enc, model, batch, "vec_id", "embedding")
+        val workload = serveWorkload(emb)
+        val cand = Similarity.pqSearch(up, model, workload, "vec_id",
+          "embedding", embCount(s, d).toInt)
+        exactTop5(emb, workload, cand)
+      }),
+
+    // LSH incremental ingest (Similarity.lshUpsert). LSH is
+    // data-oblivious, so the upserted banded table is BIT-IDENTICAL to
+    // a from-scratch rebuild over the merged corpus under the same
+    // config — the probe therefore lands on exactly q_ann_serve_lsh's
+    // results, and this row rides that row's interval oracle verbatim.
+    Query("q_ann_incr_lsh",
+      // the upserted LSH index is bit-identical to the rebuild (data-
+      // oblivious banding), so the incremental row rides the SAME oracle
+      // as q_ann_serve_lsh
+      """SELECT count(*) AS n_queries,
+                true AS recall_in_band,
+                CAST(0.73 AS DOUBLE) AS band_lo,
+                CAST(0.86 AS DOUBLE) AS band_hi FROM embeddings
+         WHERE vec_id % 7 = 0""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val old = emb.filter(pmod(col("vec_id"), lit(9)) =!= 0)
+        val batch = emb.filter(pmod(col("vec_id"), lit(9)) === 0)
+        // the deployment's pinned index CONFIG (set when the index was
+        // created over the full corpus — the serving row's parameters)
+        val idx = Similarity.lshIndex(old, "vec_id", "embedding", dim = 64,
+          tables = AnnParams.LshTables, bitsPerTable = AnnParams.lshBits(n))
+        val up = Similarity.lshUpsert(idx, batch, "vec_id", "embedding")
+        val ann = Similarity.lshProbeFor(up, serveWorkload(emb, every = 7),
+          "vec_id", "embedding", k = 5)
+        AnnParams.observeClamps(
+          recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.73, hi = 0.86),
+          n)._1
+      }),
+
+    Query("q_ann_serve", serveExactOracleSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val nlist = AnnParams.nlist(n)
+        // memoized trained index (servingIvfIndex — bit-identical to
+        // training in-row; the persisted row keeps its own training)
+        val idx = servingIvfIndex(s, d)
+        AnnParams.observeClamps(
+          Similarity.ivfProbeFor(idx, serveWorkload(emb), "vec_id", "embedding",
+              k = 5, nprobe = nlist)
+            .withColumn("sim", round(col("sim"), 6))
+            .orderBy("qid", "rank"),
+          n)._1
+      }),
+
+    // DELETION maintenance for the IVF family (Similarity.ivfDelete —
+    // the tombstone twin of q_ann_incr's upsert, VERDICT r15 #5): every
+    // mod-8-1 vector is erased from the serving index by one anti-join,
+    // quantizer frozen. A full-width probe is exact over whatever rows
+    // the inverted file holds, so the deleted index must reproduce the
+    // exact brute force over the SURVIVING corpus verbatim — the oracle
+    // is the serving oracle with its candidate side filtered, and any
+    // ghost posting (a deleted vector still surfacing) or over-delete
+    // breaks the hash. Queries stay the full shifted workload: erased
+    // docs may still be queried; they must simply never be RETURNED.
+    Query("q_ann_delete",
+      // deletion maintenance: the exact serving oracle over the
+      // POST-DELETE candidate corpus — three gated paths (IVF anti-join;
+      // IVF-PQ and flat-PQ code-table anti-joins probed at full width +
+      // full candK + exact re-rank) to the same filtered brute force
+      deleteExactOracleSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val nlist = AnnParams.nlist(n)
+        val deleted = emb.filter(pmod(col("vec_id"), lit(8)) === 1)
+        val del = Similarity.ivfDelete(servingIvfIndex(s, d), deleted, "vec_id")
+        AnnParams.observeClamps(
+          Similarity.ivfProbeFor(del, serveWorkload(emb), "vec_id", "embedding",
+              k = 5, nprobe = nlist)
+            .withColumn("sim", round(col("sim"), 6))
+            .orderBy("qid", "rank"),
+          n)._1
+      }),
+
+    // IVF-PQ deletion (Similarity.ivfPqDelete — both quantizers frozen,
+    // one anti-join over the code table). Same exact gate as
+    // q_ann_incr_ivfpq: full probe width × full candK makes the
+    // candidate set the whole SURVIVING corpus, and the exact re-rank
+    // of a complete candidate set is the exact brute force over the
+    // survivors regardless of the quantizers.
+    Query("q_ann_delete_ivfpq", deleteExactOracleSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val deleted = emb.filter(pmod(col("vec_id"), lit(8)) === 1)
+        val nl = AnnParams.nlist(embCount(s, d))
+        val del = Similarity.ivfPqDelete(servingIvfPqIndex(s, d), deleted,
+          "vec_id")
+        val workload = serveWorkload(emb)
+        val cand = Similarity.ivfPqProbe(del, workload, "vec_id", "embedding",
+          k = embCount(s, d).toInt, nprobe = nl)
+        exactTop5(emb, workload, cand)
+      }),
+
+    // Flat-ADC deletion (Similarity.pqDelete — frozen codebooks). Same
+    // exact gate: full candK over the surviving codes, exact re-rank,
+    // the filtered serving oracle verbatim.
+    Query("q_ann_delete_pq", deleteExactOracleSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val deleted = emb.filter(pmod(col("vec_id"), lit(8)) === 1)
+        val (model, enc) = servingPq(s, d)
+        val del = Similarity.pqDelete(enc, deleted, "vec_id")
+        val workload = serveWorkload(emb)
+        val cand = Similarity.pqSearch(del, model, workload, "vec_id",
+          "embedding", embCount(s, d).toInt)
+        exactTop5(emb, workload, cand)
+      }),
+
+    // LSH deletion (Similarity.lshDelete). LSH is data-oblivious, so
+    // the deleted index must be ROW-IDENTICAL to a from-scratch rebuild
+    // over the surviving corpus under the same config — checked in-plan
+    // (exceptAll both directions over banded AND slim state) and
+    // emitted as booleans the oracle pins `true`, with the survivor
+    // count as the DuckDB-computable anchor. `no_deleted_rows`
+    // additionally pins that no erased id survives anywhere in the
+    // maintained state — the GDPR claim itself, independent of the
+    // rebuild identity.
+    Query("q_ann_delete_lsh",
+      // LSH deletion: data-oblivious banding makes deleted-state ==
+      // rebuild an exact identity — checked in-plan, pinned `true` here;
+      // the survivor count is the DuckDB-computable anchor
+      """SELECT count(*) AS n_survivors,
+                true AS equals_rebuild,
+                true AS no_deleted_rows
+         FROM embeddings WHERE vec_id % 8 <> 1""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val deleted = emb.filter(pmod(col("vec_id"), lit(8)) === 1)
+        val survivors = emb.filter(pmod(col("vec_id"), lit(8)) =!= 1)
+        val del = Similarity.lshDelete(servingLshIndex(s, d), deleted, "vec_id")
+        val rebuilt = Similarity.lshIndex(survivors, "vec_id", "embedding",
+          dim = 64, tables = AnnParams.LshTables,
+          bitsPerTable = AnnParams.lshBits(n))
+        val diffs = del.banded.exceptAll(rebuilt.banded).select(lit(1).as("one"))
+          .unionAll(rebuilt.banded.exceptAll(del.banded).select(lit(1).as("one")))
+          .unionAll(del.slim.exceptAll(rebuilt.slim).select(lit(1).as("one")))
+          .unionAll(rebuilt.slim.exceptAll(del.slim).select(lit(1).as("one")))
+        val ghosts = del.banded
+          .join(deleted.select(col("vec_id").as("id")), Seq("id"))
+        survivors.agg(count(lit(1)).as("n_survivors"))
+          .crossJoin(diffs.agg((count(lit(1)) === 0).as("equals_rebuild")))
+          .crossJoin(ghosts.agg((count(lit(1)) === 0).as("no_deleted_rows")))
+      }),
+
+    // The DEPLOYMENT path of the same serving row: train → SAVE → LOAD →
+    // probe. IndexStoreSpec pins loaded probes bit-identical per family,
+    // but a spec pin is not the cross-engine gate — this row runs the
+    // full persistence round-trip inside the query (deliberately
+    // re-paying the save+load each call: that IS the operator under
+    // test) and probes the LOADED index at full width over the shifted
+    // workload, so the whole save→load→probe chain must reproduce
+    // q_ann_serve's deterministic hash (parquet stores IEEE double
+    // BITS, so a loaded index probes bit-identically — the exactness
+    // this row converts from a spec pin into a driver-gated fact). The
+    // executed plan scans the index directory's parquet (PlanSpec pins
+    // it), which is exactly what a serving job that never saw training
+    // does at 100 TB.
+    Query("q_ann_serve_persisted",
+      // the persisted round-trip must land on the SAME exact rows — one
+      // oracle text, two gated paths (in-session index vs save→load)
+      serveExactOracleSql,
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val nlist = AnnParams.nlist(n)
+        val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", nlist)
+        // session-unique per-sf path under the build's target dir (the
+        // one scratch space this repo owns — see idxScratch for the
+        // concurrency contract)
+        val path = idxScratch(s, "", d)
+        IndexStore.saveIvf(idx, path)
+        val loaded = IndexStore.loadIvf(s, path)
+        AnnParams.observeClamps(
+          Similarity.ivfProbeFor(loaded, serveWorkload(emb), "vec_id",
+              "embedding", k = 5, nprobe = nlist)
+            .withColumn("sim", round(col("sim"), 6))
+            .orderBy("qid", "rank"),
+          n)._1
+      }),
+
+    // External-workload serving at the APPROXIMATE operating point —
+    // the regime a deployment actually runs (q_ann_serve gates the
+    // serving plumbing exactly at full probe width; this row gates the
+    // same path at the DERIVED (nlist, nprobe) the q_ann_ivf fraction
+    // produces, under the recall-contract oracle). The anchor is the
+    // exact brute force over the SAME external workload
+    // (bruteForceTopKFor — each shifted query's nearest corpus row is
+    // its own unshifted copy at cos 1.0, found whenever its home cell
+    // is probed, which is probe rank 1 by construction; the remaining
+    // ranks measure ordinary cell recall). Grid-measured recall@5 at
+    // the derived points (RecallGrid GRID serve lines): 0.896 at
+    // sf0.001 / 0.884 at sf0.01 / 0.895 at sf0.1 — one constant 0.8
+    // band. sf0.001/sf0.1 sit 0.004-0.005 under the UPPER band edge;
+    // that distance binds only under deliberate code change (these
+    // measurements replicate bit-identically run-over-run — keyed
+    // workload, deterministic training, fixed IEEE fold order — and
+    // any ANN change already mandates a RecallGrid re-measure with
+    // lockstep band moves), and an upward flip is the contract
+    // WORKING: the hash pins the achieved band in both directions.
+    Query("q_ann_serve_approx",
+      """SELECT count(*) AS n_queries,
+                CAST(0.8 AS DOUBLE) AS recall_band,
+                true AS recall_ok FROM embeddings
+         WHERE vec_id % 10 = 0""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val workload = serveWorkload(emb)
+        val idx = servingIvfIndex(s, d)
+        val ann = Similarity.ivfProbeFor(idx, workload, "vec_id", "embedding",
+          k = 5, nprobe = AnnParams.nprobe(n, AnnParams.IvfProbeFrac))
+        val bf = Similarity.bruteForceTopKFor(workload, emb, "vec_id",
+          "embedding", k = 5, blocks = AnnParams.bruteBlocks(n))
+        AnnParams.observeClamps(recallContract(bf, ann), n)._1
+      }),
+
+    // External-workload serving through LSH — lshProbeFor's recall
+    // contract, completing the serving-coverage symmetry (q_ann_serve /
+    // _approx / _persisted gate only the IVF path; lshProbeFor served
+    // under spec pins alone). The workload is the modulo-7 shifted
+    // sample (every-7th corpus vector, shift derived in-plan exactly as
+    // serveWorkload's scaladoc argues); 7 was chosen by the round-13
+    // margin sweep — see recallIntervalContract's scaladoc — as was the
+    // pinned interval [0.73, 0.86): grid-measured recall@5 at the
+    // derived bits (RecallGrid GRID servelsh, mod-7 workload) is
+    // 0.7778 at sf0.001 / 0.8000 at sf0.01 / 0.8161 at sf0.1 — every
+    // scale ≥0.0439 from both interval edges (the floor-0.1 band grid
+    // has a <0.04 edge brush at EVERY swept modulo for this family).
+    // Each shifted query's own corpus copy buckets identically
+    // (identical vector → identical signatures), so it is always a
+    // candidate and lands rank 1 at cos 1.0; the remaining ranks
+    // measure ordinary bucket recall. Re-measure with RecallGrid
+    // before touching AnnParams.lshBits or the hyperplane kernel.
+    Query("q_ann_serve_lsh",
+      // interval contracts (see recallIntervalContract): the oracle states
+      // the workload size, that the measured recall sits inside the pinned
+      // interval, and the interval bounds themselves
+      """SELECT count(*) AS n_queries,
+                true AS recall_in_band,
+                CAST(0.73 AS DOUBLE) AS band_lo,
+                CAST(0.86 AS DOUBLE) AS band_hi FROM embeddings
+         WHERE vec_id % 7 = 0""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val workload = serveWorkload(emb, every = 7)
+        val idx = servingLshIndex(s, d)
+        val ann = Similarity.lshProbeFor(idx, workload, "vec_id", "embedding",
+          k = 5)
+        AnnParams.observeClamps(
+          recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.73, hi = 0.86),
+          n)._1
+      }),
+
+    // External-workload serving through IVF-PQ — ivfPqProbe's recall
+    // contract over the same modulo-7 shifted workload, with the
+    // candidate list exactly re-ranked against the workload's own query
+    // vectors (the q_ann_ivfpq contract shape brought to serving). The
+    // operating point is fully derived: (nlist, nprobe, candK) from
+    // corpus cardinality via AnnParams. Pinned interval [0.80, 0.93),
+    // grid-measured recall@5 (RecallGrid GRID serveivfpq, mod-7
+    // workload): 0.8861 at sf0.001 / 0.8722 at sf0.01 / 0.8448 at
+    // sf0.1 — every scale ≥0.0439 from both edges (same margin-sweep
+    // rationale as q_ann_serve_lsh). The query's own corpus copy has
+    // near-zero ADC distance, survives the candidate cut, and the
+    // exact re-rank pins it at rank 1; the remaining ranks measure
+    // cell+code candidate recall.
+    Query("q_ann_serve_ivfpq",
+      """SELECT count(*) AS n_queries,
+                true AS recall_in_band,
+                CAST(0.80 AS DOUBLE) AS band_lo,
+                CAST(0.93 AS DOUBLE) AS band_hi FROM embeddings
+         WHERE vec_id % 7 = 0""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val workload = serveWorkload(emb, every = 7)
+        val idx = servingIvfPqIndex(s, d)
+        val cand = Similarity.ivfPqProbe(idx, workload, "vec_id", "embedding",
+          k = AnnParams.candK(n, 5), nprobe = AnnParams.nprobe(n))
+        val ann = AnnCalibrate.exactReRank(emb, "vec_id", "embedding", cand,
+          5, querySrc = Some(workload))
+        AnnParams.observeClamps(
+          recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.80, hi = 0.93),
+          n)._1
+      }),
+
+    // PQ-ANN (the memory-scale third architecture: 8-byte product-
+    // quantization codes + ADC scoring + EXACT re-rank of the candidate
+    // list — Similarity.pqTrain/pqEncode/pqSearch). The query
+    // batch is the same deterministic 10% hash-sample, passed as a
+    // DataFrame — per-query ADC tables are computed in the plan on the
+    // query side, then broadcast into the flat scan (the broadcast is
+    // the deliberate bounded-batch contract of flat ADC: tables DO
+    // transit the driver, sized |queries| x m x codes doubles; the
+    // corpus-scale path is ivfPqSearch's cell equi-join).
+    // Same recall-contract oracle as LSH/IVF; the exact re-rank means
+    // the band measures CANDIDATE recall, which is what PQ owes the
+    // pipeline. The candidate depth is NOT a constant: it is derived
+    // from corpus cardinality by AnnParams.flatCandK (flat ADC scans the
+    // whole corpus, so depth scales as a fixed fraction γflat·n with a
+    // small-corpus floor of 50) — the round-5 incident proved a constant
+    // depth decays with scale (candidate recall 0.448 < the 0.5 floor at
+    // sf0.1, because 50 candidates were a 4× smaller fraction of a 4×
+    // larger corpus). codes=64 (6-bit subquantizers), measured by
+    // graft.RecallGrid at the DERIVED depths: recall@5 = 0.776
+    // (sf0.001, n=500 → candK 50) / 0.764 (sf0.01, n=500 → 50) / 0.757
+    // (sf0.1, n=2000 → candK 100) — band 0.7 at every measured scale
+    // with ≥0.057 margin to the band edge, ≥0.25 above the 0.5 floor
+    // (so the oracle is the constant band). These vectors are near-random
+    // (background cos ≈ 0.5), the hard regime for any short code (see
+    // the planted-dup test for the structured regime, where PQ recovers
+    // cos ≈ 0.999 neighbors reliably). Re-measure with RecallGrid
+    // before touching AnnParams or the code shape.
+    Query("q_ann_pq",
+      """SELECT count(*) AS n_queries,
+                CAST(0.7 AS DOUBLE) AS recall_band,
+                true AS recall_ok FROM embeddings
+         WHERE (CAST(vec_id AS HUGEINT) * 2654435761) % 4294967296 < 429496729""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val sampleQ = Sampling.hashSample(emb, "vec_id", 0.1)
+        val model = Similarity.pqTrain(emb, "vec_id", "embedding",
+          m = 8, codes = 64)
+        val encoded = Similarity.pqEncode(emb, "vec_id", "embedding", model)
+        val cand = Similarity
+          .pqSearch(encoded, model, sampleQ, "vec_id", "embedding",
+            k = AnnParams.flatCandK(n, 5))
+          .filter(col("qid") =!= col("id"))
+        val bf = bfAnchor(s, d)
+        AnnParams.observeClamps(recallContract(bf, exactReRank(emb, cand, 5)), n)._1
+      }),
+
+    // IVF-PQ (the fourth ANN architecture, and the one production
+    // billion-vector systems actually run): coarse cells bound WHICH
+    // vectors each query scans, PQ codes bound the BYTES per scanned
+    // vector — flat ADC (q_ann_pq) still reads every code at 10^11
+    // vectors; this reads nprobe/nlist of them. Candidate list + exact
+    // re-rank contract as q_ann_pq. The operating points (nlist, nprobe,
+    // candK) are NOT constants: they are derived from corpus cardinality
+    // by graft.operators.AnnParams — nlist = ⌈√n⌉ (Jégou/FAISS sizing),
+    // nprobe = ⌈ρ·nlist⌉ at the grid-measured probe fraction ρ = 0.625,
+    // candK = max(80, ⌈γ·ρ·n⌉) at γ = 0.10 (candidate depth a fixed
+    // fraction of the expected scanned set — the quantity whose FIXED
+    // predecessor caused the round-5 recall collapse: nprobe=8/candK=50
+    // sat EXACTLY at the 0.5 floor at sf0.1, 0.566 → band 0.5, because
+    // a constant depth is a shrinking fraction of a growing scanned
+    // set). Derived points and grid-measured recall@5 (graft.RecallGrid):
+    // n=500 (sf0.001/sf0.01) → (23, 15, 80), recall 0.896/0.872 → band
+    // 0.8; n=2000 (sf0.1) → (45, 29, 125), recall 0.762 → band 0.7 —
+    // every scale ≥0.062 above its band edge and ≥0.26 above the
+    // contractual ≥0.5 floor. AnnParamsSpec pins the derived values
+    // at these two cardinalities so rule and bands can only move
+    // together; re-measure with RecallGrid before touching either.
+    Query("q_ann_ivfpq",
+      """SELECT count(*) AS n_queries,
+                CAST(CASE WHEN (SELECT count(*) FROM embeddings) >= 2000
+                     THEN 0.7 ELSE 0.8 END AS DOUBLE) AS recall_band,
+                true AS recall_ok FROM embeddings
+         WHERE (CAST(vec_id AS HUGEINT) * 2654435761) % 4294967296 < 429496729""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val sampleQ = Sampling.hashSample(emb, "vec_id", 0.1)
+        // queries stay a DataFrame: probe cells + ADC tables are computed
+        // in the plan and meet the codes through one cell equi-join — the
+        // 10% sample never passes through the driver, so the same path
+        // serves a corpus-sized query set at 100 TB.
+        val cand = Similarity.ivfPqSearch(emb, "vec_id", "embedding",
+            sampleQ, "vec_id", "embedding",
+            k = AnnParams.candK(n, 5), nlist = AnnParams.nlist(n),
+            nprobe = AnnParams.nprobe(n), m = 8, codes = 64)
+          .filter(col("qid") =!= col("id"))
+        val bf = bfAnchor(s, d)
+        // ceiling-bind warnings ride the result as an Observation (job
+        // metrics, not just driver log lines); below the caps — every
+        // tested scale — this is the identity, so the oracle hash and
+        // plan are untouched where nothing binds
+        AnnParams.observeClamps(recallContract(bf, exactReRank(emb, cand, 5)), n)._1
+      }),
+
+    // Runtime recall CALIBRATION under the cross-engine gate (VERDICT
+    // r13 #1 — the last first-class component that passed only under
+    // spec pins): run calibrateIvf at a pinned target and hash the
+    // operating point it returns. Calibration is deterministic on this
+    // corpus (hash-drawn sample, deterministic training, exact IEEE
+    // folds), so the chosen rung is a constant the oracle can state —
+    // and it is a STEP function of the measured recall, so any drift
+    // across a rung boundary turns the row red exactly like a band pin.
+    // The target 0.71 comes from a rung-margin sweep over the measured
+    // grid (ivfProbeFor over the shared 10% anchor, rungs ρ ∈
+    // {0.2, 0.35, 0.5}: recalls 0.660/0.832 sf0.001, 0.612/0.780/0.868
+    // sf0.01, 0.563/0.762/0.868 sf0.1): it is the target at which EVERY
+    // scale selects the SAME rung (ρ = 0.35 — one constant oracle, no
+    // scale CASE) with ≥0.05 margin to the rejected rung below and
+    // ≥0.052 to the accepted rung's own recall at every scale — the
+    // 0.8 spec target can't do either (the two n=500 datasets split
+    // 0.35/0.5, and sf0.01's rejected rung sits 0.020 from it). The
+    // anchor is the SHARED memoized audit (bfAnchor — identical
+    // construction to AnnCalibrate.anchorFor: same hash sample, same
+    // blocked exact top-5), passed in so the corpus sweep doesn't re-pay
+    // the exact grid; the calibration itself (train once, walk the
+    // deduped rungs cheapest-first) runs fresh each call — it IS the
+    // operator under test. Re-run the margin sweep before touching the
+    // grid, AnnParams.nprobe, or the anchor shape.
+    Query("q_ann_calibrate",
+      // calibration gate: the oracle states the rung the margin-swept
+      // target must select at every scale (ρ = 0.35 — see the query
+      // comment for the sweep) and the knobs it derives at this corpus's
+      // cardinality (nlist = ⌈√n⌉, nprobe = ⌈0.35·nlist⌉)
+      """SELECT CAST(0.35 AS DOUBLE) AS rho,
+                CASE WHEN (SELECT count(*) FROM embeddings) >= 2000
+                     THEN 45 ELSE 23 END AS nlist,
+                CASE WHEN (SELECT count(*) FROM embeddings) >= 2000
+                     THEN 16 ELSE 9 END AS nprobe,
+                true AS recall_ok""",
+      (s, d) => {
+        import s.implicits._
+        val emb = Tables.embeddings(s, d)
+        val anchor = AnnCalibrate.TopKAnchor(
+          Sampling.hashSample(emb, "vec_id", 0.1), bfAnchor(s, d),
+          embCount(s, d), k = 5, sampleFrac = 0.1)
+        val c = AnnCalibrate
+          .calibrateIvf(emb, "vec_id", "embedding", recallTarget = 0.71,
+            anchor = Some(anchor))
+          .getOrElse(throw new IllegalStateException(
+            "q_ann_calibrate: target 0.71 must be reachable on this corpus " +
+              "(re-measure the rung grid — see the row comment)"))
+        Seq((c.rho, c.nlist, c.nprobe, c.recall >= 0.71))
+          .toDF("rho", "nlist", "nprobe", "recall_ok")
+      }),
+
+    // External-workload serving through flat ADC — pqSearch's recall
+    // contract, completing the four-architecture serving symmetry
+    // (IVF exact+approx+persisted, LSH, IVF-PQ, and now flat PQ all
+    // driver-gated). Same mod-7 workload and interval-contract shape
+    // as q_ann_serve_lsh; depth is the derived flatCandK. Pinned
+    // interval [0.76, 0.90), grid-measured recall@5 (RecallGrid GRID
+    // servepq): 0.8222 at sf0.001 / 0.8306 at sf0.01 / 0.8357 at
+    // sf0.1 — every scale ≥0.062 from both edges. The broadcast
+    // bounded-batch contract holds: the workload is n/7 queries, and
+    // the per-query ADC tables ride the documented explicit broadcast.
+    Query("q_ann_serve_pq",
+      """SELECT count(*) AS n_queries,
+                true AS recall_in_band,
+                CAST(0.76 AS DOUBLE) AS band_lo,
+                CAST(0.90 AS DOUBLE) AS band_hi FROM embeddings
+         WHERE vec_id % 7 = 0""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val workload = serveWorkload(emb, every = 7)
+        val (model, encoded) = servingPq(s, d)
+        val cand = Similarity.pqSearch(encoded, model, workload, "vec_id",
+          "embedding", k = AnnParams.flatCandK(n, 5))
+        val ann = AnnCalibrate.exactReRank(emb, "vec_id", "embedding", cand,
+          5, querySrc = Some(workload))
+        AnnParams.observeClamps(
+          recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.76, hi = 0.90),
+          n)._1
+      }),
+
+    // The persisted-deployment row for the PRODUCTION architecture:
+    // ivfPqIndex → IndexStore.saveIvfPq → loadIvfPq → ivfPqProbe at the
+    // derived operating point, under q_ann_serve_ivfpq's interval
+    // contract (a loaded index probes bit-identically — IndexStoreSpec —
+    // so the interval transfers verbatim; what this row adds to the
+    // driver gate is the save→load plumbing of the family a
+    // billion-vector deployment actually persists: chunked quantizer
+    // state, codebook reassembly, encoded-corpus parquet). PlanSpec
+    // pins the loaded encoded parquet scan in the executed plan.
+    Query("q_ann_serve_persisted_ivfpq",
+      // the persisted round-trip probes bit-identically (IndexStoreSpec),
+      // so it must land inside q_ann_serve_ivfpq's interval
+      """SELECT count(*) AS n_queries,
+                true AS recall_in_band,
+                CAST(0.80 AS DOUBLE) AS band_lo,
+                CAST(0.93 AS DOUBLE) AS band_hi FROM embeddings
+         WHERE vec_id % 7 = 0""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val workload = serveWorkload(emb, every = 7)
+        val idx = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
+          AnnParams.nlist(n), m = 8, codes = 64)
+        val path = idxScratch(s, "_ivfpq", d)
+        IndexStore.saveIvfPq(idx, path)
+        val loaded = IndexStore.loadIvfPq(s, path)
+        val cand = Similarity.ivfPqProbe(loaded, workload, "vec_id",
+          "embedding", k = AnnParams.candK(n, 5), nprobe = AnnParams.nprobe(n))
+        val ann = AnnCalibrate.exactReRank(emb, "vec_id", "embedding", cand,
+          5, querySrc = Some(workload))
+        AnnParams.observeClamps(
+          recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.80, hi = 0.93),
+          n)._1
+      }),
+
+    // Persisted deployment for the remaining two families — with these,
+    // ALL FOUR architectures' save→load→probe chains pass the driver
+    // gate (IVF under the exact hash; IVF-PQ/LSH/flat-PQ under their
+    // serving intervals, which transfer verbatim because loaded probes
+    // are bit-identical — IndexStoreSpec). LSH persistence stores only
+    // the corpus + hyperplane config (data-oblivious: the load
+    // re-buckets from the seed), so this row gates exactly that
+    // re-bucketing path reading the index dir's corpus parquet.
+    Query("q_ann_serve_persisted_lsh",
+      """SELECT count(*) AS n_queries,
+                true AS recall_in_band,
+                CAST(0.73 AS DOUBLE) AS band_lo,
+                CAST(0.86 AS DOUBLE) AS band_hi FROM embeddings
+         WHERE vec_id % 7 = 0""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val idx = Similarity.lshIndex(emb, "vec_id", "embedding", dim = 64,
+          tables = AnnParams.LshTables, bitsPerTable = AnnParams.lshBits(n))
+        val path = idxScratch(s, "_lsh", d)
+        IndexStore.saveLsh(idx, path)
+        val loaded = IndexStore.loadLsh(s, path)
+        val ann = Similarity.lshProbeFor(loaded, serveWorkload(emb, every = 7),
+          "vec_id", "embedding", k = 5)
+        AnnParams.observeClamps(
+          recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.73, hi = 0.86),
+          n)._1
+      }),
+
+    // Flat-PQ persistence: the family that previously retrained per
+    // serving job — savePq/loadPq round-trip the codebooks (chunked)
+    // and the encoded corpus, and the loaded pair feeds pqSearch
+    // directly. Same interval as q_ann_serve_pq (bit-identical loaded
+    // probe).
+    Query("q_ann_serve_persisted_pq",
+      """SELECT count(*) AS n_queries,
+                true AS recall_in_band,
+                CAST(0.76 AS DOUBLE) AS band_lo,
+                CAST(0.90 AS DOUBLE) AS band_hi FROM embeddings
+         WHERE vec_id % 7 = 0""",
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val workload = serveWorkload(emb, every = 7)
+        val model = Similarity.pqTrain(emb, "vec_id", "embedding",
+          m = 8, codes = 64)
+        val encoded = Similarity.pqEncode(emb, "vec_id", "embedding", model)
+        val path = idxScratch(s, "_pq", d)
+        IndexStore.savePq(encoded, model, path)
+        val (encL, modelL) = IndexStore.loadPq(s, path)
+        val cand = Similarity.pqSearch(encL, modelL, workload, "vec_id",
+          "embedding", k = AnnParams.flatCandK(n, 5))
+        val ann = AnnCalibrate.exactReRank(emb, "vec_id", "embedding", cand,
+          5, querySrc = Some(workload))
+        AnnParams.observeClamps(
+          recallIntervalContract(serveBfAnchor(s, d), ann, lo = 0.76, hi = 0.90),
+          n)._1
+      }),
+
+    // Embedding near-dup pairs at cosine ≥ 0.45 (testdata max ≈ 0.51).
+    // Exact blocked path, NOT LSH: 0.45 sits inside the background cosine
+    // distribution of these near-random embeddings, where bucket pruning
+    // provably degenerates (see Similarity.lshNearDupPairs scaladoc); the
+    // LSH-bucketed variant covers real near-dup thresholds and is
+    // property-tested on planted near-dups in PipelineSpec.
+    Query("q_embed_neardup",
       """WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -2639,9 +2167,33 @@ object PipelineQueries {
                    i -> a.v[i] * b.v[i])), (x,y) -> x+y)
                / (a.nrm * b.nrm) >= 0.45
          ORDER BY a_id, b_id""",
-    // same floor(y + 0.5) spelled-out rounding and mult-then-div order
-    // as the Spark side — see the query comment
-    "q_embed_quantize" ->
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        Similarity.cosineNearDupPairs(emb, "vec_id", "embedding", 0.45,
+            blocks = AnnParams.bruteBlocks(embCount(s, d)))
+          .withColumn("sim", round(col("sim"), 6))
+          .orderBy("a_id", "b_id")
+      }),
+
+    // Symmetric int8 quantization of the embedding column — the 4×
+    // storage/bandwidth cut every billion-vector serving layer applies
+    // before ANN. Per vector: scale = max|x|, code_i = round-half-up of
+    // x_i·127/scale — a map-only scan, no shuffle, ONE generated loop
+    // (functions.Int8Checksum native expression; the built-in HOF
+    // composition is interpreted per element and measured 2.2 s of the
+    // sf0.1 bench — UdxSpec property-checks the expression against that
+    // composition). Emitted as per-vector integer checksums (sum of
+    // codes, abs-max code — 127 for every non-zero vector by
+    // construction), which pin every code exactly without emitting 64
+    // columns. The rounding is floor(y + 0.5) SPELLED OUT on both
+    // engines (Spark round() half-up vs DuckDB round() half-even would
+    // diverge at .5 boundaries); mult-then-div order is pinned so IEEE
+    // rounding is bit-identical cross-engine. Zero vectors
+    // short-circuit to [0, 0] inside the expression; DuckDB division
+    // by zero is NULL, overridden by the oracle's CASE.
+    Query("q_embed_quantize",
+      // same floor(y + 0.5) spelled-out rounding and mult-then-div order
+      // as the Spark side — see the query comment
       """WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -2663,7 +2215,24 @@ object PipelineQueries {
                      ELSE list_max(list_transform(codes, c -> abs(c))) END
                   AS q_absmax
          FROM q ORDER BY vec_id""",
-    "q_matryoshka" ->
+      (s, d) => {
+        val cs = graft.functions.Int8Checksum(col("embedding"))
+        Tables.embeddings(s, d)
+          .select(col("vec_id"),
+            cs.getItem(0).as("q_sum"),
+            cs.getItem(1).as("q_absmax"))
+          .orderBy("vec_id")
+      }),
+
+    // Matryoshka truncation check: cosine over the 16-dim prefix vs the
+    // full 64 dims on consecutive-id pairs — the audit run before
+    // serving truncated MRL embeddings (how much does the short prefix
+    // distort similarity on MY corpus?). Map-side: the pair join is
+    // id+1 = id, an equi-join Catalyst plans without a cartesian; both
+    // cosines ride the same canonical left-to-right fold as every
+    // other similarity path (bit-identical to the oracle's
+    // list_reduce).
+    Query("q_matryoshka",
       """WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -2687,15 +2256,50 @@ object PipelineQueries {
                   / (a.nrm16 * b.nrm16), 6) AS cos_16
          FROM n a JOIN n b ON a.vec_id + 1 = b.vec_id
          ORDER BY a_id""",
-    // band/sound constants: measured contract projection (see the query
-    // comment for the measurements and the verified-sf restriction).
-    // MARGIN NOTE: the sf0.1 branch (count >= 100 → 0.2) sits only 0.015
-    // above its lower band edge (measured 0.215 = 31/144 — deterministic
-    // today: KMeans.lloyd seeds and tie-breaks are pinned), thinner than
-    // the ≥0.028 discipline the ANN bands carry. Any k-means seed or
-    // tie-break change MUST re-run RecallGrid and re-measure this band
-    // in the same commit — a 2-pair shift flips the floor() bucket.
-    "q_semdedup" ->
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val a = emb.select(col("vec_id").cast("long").as("a_id"),
+          col("embedding").as("ea"))
+        val b = emb.select(col("vec_id").cast("long").as("b_id"),
+          col("embedding").as("eb"))
+        a.join(b, col("a_id") + 1 === col("b_id"))
+          .select(col("a_id"),
+            round(Similarity.cosine(col("ea"), col("eb")), 6).as("cos_full"),
+            round(Similarity.cosine(slice(col("ea"), 1, 16),
+              slice(col("eb"), 1, 16)), 6).as("cos_16"))
+          .orderBy("a_id")
+      }),
+
+    // SemDeDup contract: within-cluster semantic near-dup pairs vs the
+    // exact pair set. Precision is 1 by construction (every emitted pair
+    // is exact-cosine-verified ≥ threshold ⇒ a subset of the exact
+    // pairs — `sound` asserts exactly that); recall < 1 only when a
+    // near-dup pair straddles a k-means cell. The cluster count derives
+    // from corpus cardinality (AnnParams.semDedupNlist: ⌈n/64⌉ — the
+    // paper's shape, nlist ∝ n for a FIXED target cell size, because
+    // SemDeDup's whole scale trick is bounding the pair space at
+    // n·targetCellSize comparisons; a fixed nlist silently degrades to
+    // n²/nlist, the quadratic blow-up the operator exists to avoid).
+    // Derived: n=500 → 8 cells (the historically measured config,
+    // unchanged), n=2000 → 32. Grid-measured pair recall at the derived
+    // points (RecallGrid): 0.286 at sf0.001 (2/7 pairs in-cell), 0.714
+    // at sf0.01 (10/14), 0.215 at sf0.1 (31/144) — the 0.45 threshold
+    // sits inside this 64-dim near-random corpus's background cosine
+    // distribution (see Similarity.lshNearDupPairs scaladoc), so pairs
+    // are not tight clusters and cell-straddling is common; on a real
+    // corpus SemDeDup runs at ~0.95+ where pairs ARE tight, and the
+    // exact blocked path is the right tool for this regime (that is
+    // q_embed_neardup). The oracle CASEs the expected band on its own
+    // computed n_exact (7/14/144 — distinct at every verified sf).
+    Query("q_semdedup",
+      // band/sound constants: measured contract projection (see the query
+      // comment for the measurements and the verified-sf restriction).
+      // MARGIN NOTE: the sf0.1 branch (count >= 100 → 0.2) sits only 0.015
+      // above its lower band edge (measured 0.215 = 31/144 — deterministic
+      // today: KMeans.lloyd seeds and tie-breaks are pinned), thinner than
+      // the ≥0.028 discipline the ANN bands carry. Any k-means seed or
+      // tie-break change MUST re-run RecallGrid and re-measure this band
+      // in the same commit — a 2-pair shift flips the floor() bucket.
       """WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -2715,7 +2319,36 @@ object PipelineQueries {
                  list_transform(generate_series(1, len(a.v)),
                    i -> a.v[i] * b.v[i])), (x,y) -> x+y)
                / (a.nrm * b.nrm) >= 0.45""",
-    "q_pipeline_curate" ->
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        val n = embCount(s, d)
+        val exact = Similarity
+          .cosineNearDupPairs(emb, "vec_id", "embedding", 0.45,
+            blocks = AnnParams.bruteBlocks(n))
+          .select(col("a_id"), col("b_id"))
+        val sem = Similarity
+          .semDedupPairs(emb, "vec_id", "embedding", 0.45,
+            nlist = AnnParams.semDedupNlist(n), corpusN = Some(n))
+          .select(col("a_id"), col("b_id"), lit(1).as("hit"))
+        val nExact = sum(coalesce(col("ex"), lit(0)))
+        val hits = sum(when(col("ex") === 1 && col("hit") === 1, 1).otherwise(0))
+        val extra = sum(when(col("ex").isNull && col("hit") === 1, 1).otherwise(0))
+        AnnParams.observeClamps(
+          exact.withColumn("ex", lit(1))
+            .join(sem, Seq("a_id", "b_id"), "full")
+            .agg(nExact.as("n_exact"),
+              (floor(hits.cast("double") / nExact * 10 + lit(1e-9)) /
+                lit(10.0)).as("pair_recall_band"),
+              (extra === 0).as("sound")),
+          n)._1
+      }),
+
+    // End-to-end curation composition: language gate → quality floor →
+    // exact dedup (min-id survivor) → per-doc token budget. Every stage
+    // is hash-verified on its own elsewhere; this row verifies their
+    // INTERACTION, in the production order (cheap narrow filters first so
+    // the dedup shuffle only carries surviving docs).
+    Query("q_pipeline_curate",
       s"""WITH m AS (
            SELECT doc_id, text,
                   CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_tok,
@@ -2747,15 +2380,30 @@ object PipelineQueries {
          SELECT min(doc_id) AS doc_id, min(quality) AS quality,
                 min(n_bpe) AS n_bpe
          FROM f GROUP BY text ORDER BY doc_id""",
-    "q_weighted_sample" ->
-      """SELECT doc_id, n_chars FROM (
-           SELECT doc_id, n_chars,
-                  (CAST(doc_id AS HUGEINT) * 2654435761) % 4294967296 AS b,
-                  least(greatest(n_chars / 500.0, 0.0), 1.0) AS w
-           FROM documents) t
-         WHERE b < w * 4294967296.0
-         ORDER BY doc_id""",
-    "q_split_sample" ->
+      (s, d) => {
+        val scored = Tables.documents(s, d).select(col("doc_id"), col("text"),
+            TextFunctions.langId(col("text")).as("lang_pred"),
+            TextFunctions.qualityScore(col("text")).as("quality"),
+            TextFunctions.tokenCount(col("text")).as("n_bpe"))
+          .filter(col("lang_pred") === "en" && col("quality") >= 0.5)
+        // stats are functions of text, so min() over a text group is just
+        // "the value" — deterministic survivor semantics. Same hash-first
+        // grouping (and collision bound) as q_dedup_exact: the dedup shuffle
+        // carries a 64-byte sha2 key + 3 numeric aggregates per group, never
+        // the document body.
+        scored.groupBy(sha2(col("text").cast("binary"), 256).as("h"))
+          .agg(min(col("doc_id")).as("doc_id"), min(col("quality")).as("quality"),
+            min(col("n_bpe")).as("n_bpe"))
+          .select(col("doc_id"), col("quality"), col("n_bpe"))
+          .orderBy("doc_id")
+      }),
+
+    // Deterministic train/valid/test split (Sampling.splitLabel): keyed
+    // Knuth-hash buckets, never rand() — reproducible across runs, task
+    // retries, and engines, hence fully hash-verifiable. Fractions
+    // 0.75/0.125/0.125 are binary-exact so the bucket thresholds are the
+    // same integers in Spark and in the oracle SQL.
+    Query("q_split_sample",
       """SELECT doc_id,
                 CASE WHEN b < 3221225472 THEN 'train'
                      WHEN b < 3758096384 THEN 'valid'
@@ -2764,16 +2412,16 @@ object PipelineQueries {
                       (CAST(doc_id AS HUGEINT) * 2654435761) % 4294967296 AS b
                FROM documents)
          ORDER BY doc_id""",
-    // epoch 2's multiplier is the seed-derived odd constant from
-    // Sampling.mixedMultiplier — interpolated, not hand-copied, so the
-    // two engines cannot drift
-    "q_epoch_shuffle" ->
-      s"""SELECT doc_id,
-                row_number() OVER (
-                  ORDER BY (CAST(doc_id AS HUGEINT) * ${graft.operators.Sampling.mixedMultiplier(2L)}) % 4294967296,
-                           doc_id) AS pos
-         FROM documents ORDER BY pos""",
-    "q_sample_per_key" ->
+      (s, d) =>
+        Tables.documents(s, d).select(col("doc_id"),
+            Sampling.splitLabel(col("doc_id"),
+              Seq("train" -> 0.75, "valid" -> 0.125, "test" -> 0.125)).as("split"))
+          .orderBy("doc_id")),
+
+    // Deterministic k-per-group sample (the reservoir-sampling job at
+    // scale): 5 hash-lowest docs per source — unbiased within each
+    // group, replayable on any engine, one shuffle on the group key.
+    Query("q_sample_per_key",
       """SELECT source, doc_id FROM (
            SELECT source, doc_id,
                   row_number() OVER (PARTITION BY source
@@ -2782,19 +2430,90 @@ object PipelineQueries {
                              doc_id) AS rn
            FROM documents)
          WHERE rn <= 5 ORDER BY source, doc_id""",
-    "q_text_normalize" ->
+      (s, d) =>
+        Sampling.samplePerKey(Tables.documents(s, d), "source", "doc_id", 5)
+          .select("source", "doc_id")
+          .orderBy("source", "doc_id")),
+
+    // Quality-weighted deterministic sampling: longer documents stand in
+    // for higher-quality ones (weight = n_chars/500, clamped) — the
+    // quality-proportional corpus selection step, keyed so every run /
+    // retry / engine replays the same keep-set. Both engines evaluate
+    // the identical IEEE sequence (int/500.0, ×2^32, compare), so the
+    // boundary cannot drift.
+    Query("q_weighted_sample",
+      """SELECT doc_id, n_chars FROM (
+           SELECT doc_id, n_chars,
+                  (CAST(doc_id AS HUGEINT) * 2654435761) % 4294967296 AS b,
+                  least(greatest(n_chars / 500.0, 0.0), 1.0) AS w
+           FROM documents) t
+         WHERE b < w * 4294967296.0
+         ORDER BY doc_id""",
+      (s, d) =>
+        Sampling.weightedSample(Tables.documents(s, d), "doc_id",
+            col("n_chars") / lit(500.0))
+          .select(col("doc_id"), col("n_chars"))
+          .orderBy("doc_id")),
+
+    // Deterministic epoch shuffle (Sampling.epochShuffle order): the
+    // reproducible permutation a training job uses to randomize example
+    // order per epoch. Position comes from Sampling.withGlobalRank's
+    // two-phase rank (parallel range sort + broadcast offsets), NOT a
+    // global row_number window — that would funnel every row through one
+    // task. The int cast exists ONLY for schema parity with the verified
+    // window-based formulation this replaced (row_number is int-typed);
+    // it reintroduces a 2^31 ceiling on THIS VERIFICATION PROJECTION, not
+    // on the operator — production callers use withGlobalRank's long pos.
+    Query("q_epoch_shuffle",
+      // epoch 2's multiplier is the seed-derived odd constant from
+      // Sampling.mixedMultiplier — interpolated, not hand-copied, so the
+      // two engines cannot drift
+      s"""SELECT doc_id,
+                row_number() OVER (
+                  ORDER BY (CAST(doc_id AS HUGEINT) * ${graft.operators.Sampling.mixedMultiplier(2L)}) % 4294967296,
+                           doc_id) AS pos
+         FROM documents ORDER BY pos""",
+      (s, d) => {
+        val b = Sampling.bucketOf(col("doc_id"), 2L)
+        Sampling.withGlobalRank(Tables.documents(s, d).select(col("doc_id")),
+            "pos", b, col("doc_id"))
+          .withColumn("pos", col("pos").cast("long"))
+          .orderBy("pos")
+      }),
+
+    // Text normalization — the standard pre-dedup canonicalization pass
+    // (lowercase, strip sentence punctuation, collapse whitespace runs).
+    // Pure per-row codegen'd expressions; at scale this runs ahead of
+    // q_dedup_exact so trivially-variant copies hash together.
+    Query("q_text_normalize",
       """SELECT doc_id,
                 regexp_replace(regexp_replace(lower(text), '[.,!?;:]', '', 'g'),
                                ' +', ' ', 'g') AS norm
          FROM documents ORDER BY doc_id""",
-    "q_token_count" ->
+      (s, d) =>
+        Tables.documents(s, d)
+          .select(col("doc_id"), normExpr(col("text")).as("norm"))
+          .orderBy("doc_id")),
+
+    Query("q_token_count",
       """SELECT doc_id,
                 len(regexp_extract_all(text, '\w+|[^\w\s]')) AS n_bpe,
                 len(string_split(text, ' ')) AS n_ws
          FROM documents ORDER BY doc_id""",
-    "q_quality_score" ->
-      s"WITH $qualityCtes SELECT doc_id, quality FROM qsc ORDER BY doc_id",
-    "q_lang_id" ->
+      (s, d) =>
+        Tables.documents(s, d)
+          .select(col("doc_id"),
+            TextFunctions.tokenCount(col("text")).as("n_bpe"),
+            size(TextFunctions.tokens(col("text"))).cast("long").as("n_ws"))
+          .orderBy("doc_id")),
+
+    Query("q_quality_score", s"WITH $qualityCtes SELECT doc_id, quality FROM qsc ORDER BY doc_id",
+      (s, d) =>
+        Tables.documents(s, d)
+          .select(col("doc_id"), TextFunctions.qualityScore(col("text")).as("quality"))
+          .orderBy("doc_id")),
+
+    Query("q_lang_id",
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          s AS (SELECT doc_id,
            len(list_filter(w, x -> list_contains(['the','a','of','and','to','in','is','that','it','for'], x))) AS s_en,
@@ -2811,7 +2530,14 @@ object PipelineQueries {
            WHEN s_zh > 0 THEN 'zh'
            ELSE 'und' END AS lang_pred
          FROM s ORDER BY doc_id""",
-    "q_fingerprint" ->
+      (s, d) =>
+        // fanOutSmall: the five langScores array filters are the heavy
+        // per-row kernel; parallelize past the scan-split floor
+        graft.operators.Layout.fanOutSmall(Tables.documents(s, d))
+          .select(col("doc_id"), TextFunctions.langId(col("text")).as("lang_pred"))
+          .orderBy("doc_id")),
+
+    Query("q_fingerprint",
       """SELECT doc_id,
                 list_reduce(
                   list_prepend(CAST(0 AS BIGINT),
@@ -2819,7 +2545,15 @@ object PipelineQueries {
                       i -> CAST(ascii(text[i]) AS BIGINT))),
                   (acc, c) -> (acc * 131 + c) % 1000000007) AS fp
          FROM documents ORDER BY doc_id""",
-    "q_tfidf" ->
+      (s, d) =>
+        Tables.documents(s, d)
+          .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
+          .orderBy("doc_id")),
+
+    // TF-IDF: explode → two hash aggs (term-frequency per doc, doc-
+    // frequency per term) + a broadcast scalar N. All shuffles are on
+    // term/doc keys — map-side partial aggregation applies.
+    Query("q_tfidf",
       s"""WITH tok AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
          f AS (SELECT * FROM tok WHERE term NOT IN ($stopList)),
@@ -2830,10 +2564,29 @@ object PipelineQueries {
                 round(tf.tf * (ln((n.n + 1.0) / (dfq.df + 1.0)) + 1.0), 6) AS tfidf
          FROM tf JOIN dfq USING (term) CROSS JOIN n
          ORDER BY doc_id, term""",
-    // BM25: identical operation order as Retrieval.bm25 — exact-integer
-    // inputs (tf, df, dl, n, ntok), one double division for avgdl, the
-    // Lucene non-negative idf, round 6
-    "q_bm25" ->
+      (s, d) => {
+        val toks = Tables.documents(s, d)
+          .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("term"))
+          .filter(!col("term").isInCollection(TextFunctions.stopwords))
+        val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+        val dfreq = toks.groupBy("term").agg(countDistinct("doc_id").as("df"))
+        val n = Tables.documents(s, d).agg(count(lit(1)).as("n"))
+        tf.join(dfreq, "term").crossJoin(broadcast(n))
+          .withColumn("tfidf",
+            round(col("tf") * (log((col("n") + lit(1.0)) / (col("df") + lit(1.0))) + lit(1.0)), 6))
+          .select(col("doc_id"), col("term"), col("tf"), col("df"), col("tfidf"))
+          .orderBy("doc_id", "term")
+      }),
+
+    // Okapi BM25 per-(doc, term) scores — the lexical-retrieval scorer
+    // TF-IDF lacks (tf saturation + doc-length normalization). Same
+    // shuffle shape as q_tfidf plus one more doc-keyed agg (dl); the
+    // corpus scalars (N, Σtokens) broadcast as a single row. See
+    // operators.Retrieval for the scale + float-discipline notes.
+    Query("q_bm25",
+      // BM25: identical operation order as Retrieval.bm25 — exact-integer
+      // inputs (tf, df, dl, n, ntok), one double division for avgdl, the
+      // Lucene non-negative idf, round 6
       s"""WITH tok AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
          f AS (SELECT * FROM tok WHERE term NOT IN ($stopList)),
@@ -2850,48 +2603,20 @@ object PipelineQueries {
                       6) AS score
          FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN g
          ORDER BY doc_id, term""",
-    // incremental maintenance oracle = FROM-SCRATCH rebuild over the
-    // post-update corpus: the row's upsert algebra must reproduce it
-    // deletion maintenance oracle = FROM-SCRATCH rebuild over the
-    // SURVIVING corpus (N shrinks with it): the row's anti-join +
-    // corrected-N algebra must reproduce it
-    "q_bm25_delete" ->
-      s"""WITH docs2 AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
-         tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM docs2),
-         f AS (SELECT * FROM tok WHERE term NOT IN ($stopList)),
-         tf AS (SELECT doc_id, term, count(*) AS tf FROM f GROUP BY 1, 2),
-         dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM f GROUP BY 1),
-         g AS (SELECT (SELECT count(*) FROM docs2) AS n,
-                      (SELECT count(*) FROM f) AS ntok)
-         SELECT tf.doc_id, tf.term, tf.tf, dfq.df, dl.dl,
-                round(ln(1.0 + (g.n - dfq.df + 0.5) / (dfq.df + 0.5))
-                      * ((tf.tf * 2.2)
-                         / (tf.tf + 1.2 * (0.25 + 0.75
-                              * (dl.dl / (CAST(g.ntok AS DOUBLE) / g.n))))),
-                      6) AS score
-         FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN g
-         ORDER BY doc_id, term""",
-    // positional-postings deletion: the q_phrase_search oracle with the
-    // POSTINGS side restricted to survivors, probes drawn from the full
-    // corpus
-    "q_phrase_delete" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         tok AS (SELECT doc_id, ws[i] AS term, i AS pos
-                 FROM w, unnest(generate_series(1, len(ws))) AS t(i)
-                 WHERE doc_id % 7 <> 3),
-         q AS (SELECT doc_id AS q_id, ws[i] AS term, i AS off
-               FROM w, unnest(generate_series(1, 3)) AS t(i)
-               WHERE doc_id % 41 = 0 AND len(ws) >= 3),
-         m AS (SELECT q.q_id, tok.doc_id, tok.pos - q.off + 1 AS start
-               FROM q JOIN tok ON q.term = tok.term),
-         hit AS (SELECT q_id, doc_id, start FROM m
-                 GROUP BY q_id, doc_id, start HAVING count(*) = 3)
-         SELECT q_id, doc_id, count(*) AS n_occ FROM hit
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_bm25_incr" ->
+      (s, d) =>
+        Retrieval.bm25(Tables.documents(s, d)).orderBy("doc_id", "term")),
+
+    // Incremental BM25 index maintenance, driver-gated by the ALGEBRA:
+    // re-ingest every mod-5 doc with an appended token through
+    // Retrieval.upsertTermFreq (anti-join old postings + append new —
+    // O(changed + index), never a corpus re-tokenization), then score
+    // from the MERGED statistic. The oracle rebuilds from scratch over
+    // the post-update corpus — maintenance == rebuild is the claim, and
+    // any slip (a stale posting surviving the anti-join, a df/dl/avgdl
+    // derived from the wrong side, an N drift) breaks the hash.
+    Query("q_bm25_incr",
+      // incremental maintenance oracle = FROM-SCRATCH rebuild over the
+      // post-update corpus: the row's upsert algebra must reproduce it
       s"""WITH docs2 AS (
            SELECT doc_id,
                   CASE WHEN doc_id % 5 = 0 THEN text || ' addendum'
@@ -2913,16 +2638,132 @@ object PipelineQueries {
                       6) AS score
          FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN g
          ORDER BY doc_id, term""",
-    // BM25 search: per-term scores (already round-6) summed as exact
-    // ×10⁶ BIGINTs per (q_id, doc_id) — order-free — then row_number
-    // ties broken on doc_id; rnk replicates the native TopKPerKey rank.
-    // q_bm25_serve_persisted shares this oracle VERBATIM: the
-    // save→load→probe chain must be lossless, so the two rows may not
-    // drift apart — the shared val makes a one-sided edit impossible.
-    "q_bm25_search" -> bm25SearchOracle,
-    // phrase search: same anchored-start vote counting in SQL — a start
-    // with 3 votes is a contiguous trigram match
-    "q_phrase_search" ->
+      (s, d) => {
+        val base = Tables.documents(s, d)
+        val changed = base.filter(col("doc_id") % 5 === 0)
+          .withColumn("text", concat(col("text"), lit(" addendum")))
+        val tf = Retrieval.upsertTermFreq(Retrieval.termFreq(base), changed)
+        // update-only maintenance: N (doc count) is unchanged
+        Retrieval.bm25FromStats(tf, base.agg(count(lit(1)).as("n")))
+          .orderBy("doc_id", "term")
+      }),
+
+    // BM25 DELETION maintenance (Retrieval.deleteDocs — the tombstone
+    // twin of q_bm25_incr's upsert, VERDICT r15 #5): every mod-7-3 doc
+    // is erased from the tf statistic by one anti-join, and N SHRINKS
+    // to the surviving count (deletion, unlike the update-only upsert,
+    // changes the corpus of record — handing the old N to bm25FromStats
+    // would skew every idf and avgdl). The oracle rebuilds from scratch
+    // over the post-delete corpus: maintenance == rebuild, so a ghost
+    // posting, an over-delete, or an N/df/dl drift all break the hash.
+    Query("q_bm25_delete",
+      // deletion maintenance oracle = FROM-SCRATCH rebuild over the
+      // SURVIVING corpus (N shrinks with it): the row's anti-join +
+      // corrected-N algebra must reproduce it
+      s"""WITH docs2 AS (
+           SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
+         tok AS (
+           SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM docs2),
+         f AS (SELECT * FROM tok WHERE term NOT IN ($stopList)),
+         tf AS (SELECT doc_id, term, count(*) AS tf FROM f GROUP BY 1, 2),
+         dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
+         dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM f GROUP BY 1),
+         g AS (SELECT (SELECT count(*) FROM docs2) AS n,
+                      (SELECT count(*) FROM f) AS ntok)
+         SELECT tf.doc_id, tf.term, tf.tf, dfq.df, dl.dl,
+                round(ln(1.0 + (g.n - dfq.df + 0.5) / (dfq.df + 0.5))
+                      * ((tf.tf * 2.2)
+                         / (tf.tf + 1.2 * (0.25 + 0.75
+                              * (dl.dl / (CAST(g.ntok AS DOUBLE) / g.n))))),
+                      6) AS score
+         FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN g
+         ORDER BY doc_id, term""",
+      (s, d) => {
+        val base = Tables.documents(s, d)
+        val deleted = base.filter(pmod(col("doc_id"), lit(7)) === 3)
+        val tf = Retrieval.deleteDocs(Retrieval.termFreq(base), deleted)
+        Retrieval.bm25FromStats(tf,
+            base.filter(pmod(col("doc_id"), lit(7)) =!= 3)
+              .agg(count(lit(1)).as("n")))
+          .orderBy("doc_id", "term")
+      }),
+
+    // POSITIONAL-postings deletion — the same deleteDocs anti-join over
+    // the phrase index's state (tf and postings share the doc_id key;
+    // ONE maintenance definition serves both). Gate: exact-phrase
+    // search over the maintained postings == search over a rebuild of
+    // the surviving corpus; probes stay drawn from the FULL corpus
+    // (an erased doc's phrase may still be queried — its matches in
+    // surviving docs must still surface, while the erased doc itself
+    // never does).
+    Query("q_phrase_delete",
+      // positional-postings deletion: the q_phrase_search oracle with the
+      // POSTINGS side restricted to survivors, probes drawn from the full
+      // corpus
+      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+         tok AS (SELECT doc_id, ws[i] AS term, i AS pos
+                 FROM w, unnest(generate_series(1, len(ws))) AS t(i)
+                 WHERE doc_id % 7 <> 3),
+         q AS (SELECT doc_id AS q_id, ws[i] AS term, i AS off
+               FROM w, unnest(generate_series(1, 3)) AS t(i)
+               WHERE doc_id % 41 = 0 AND len(ws) >= 3),
+         m AS (SELECT q.q_id, tok.doc_id, tok.pos - q.off + 1 AS start
+               FROM q JOIN tok ON q.term = tok.term),
+         hit AS (SELECT q_id, doc_id, start FROM m
+                 GROUP BY q_id, doc_id, start HAVING count(*) = 3)
+         SELECT q_id, doc_id, count(*) AS n_occ FROM hit
+         GROUP BY 1, 2 ORDER BY 1, 2""",
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val deleted = docs.filter(pmod(col("doc_id"), lit(7)) === 3)
+        val postings = Retrieval.deleteDocs(
+          Retrieval.positionalPostings(docs), deleted)
+        val probes = docs
+          .filter(pmod(col("doc_id"), lit(41)) === 0 &&
+            size(TextFunctions.tokens(col("text"))) >= 3)
+          .select(col("doc_id").as("q_id"),
+            posexplode(slice(TextFunctions.tokens(col("text")), 1, 3))
+              .as(Seq("o", "term")))
+          .select(col("q_id"), col("term"), (col("o") + 1).as("off"))
+        Retrieval.phraseSearch(postings, probes, phraseLen = 3)
+          .orderBy("q_id", "doc_id")
+      }),
+
+    // Ranked BM25 top-3 retrieval over the inverted index: queries are
+    // drawn in-plan (every doc_id ≡ 3 mod 31 contributes its first five
+    // tokens, stopword-gated, DISTINCT — 2/16/161 queries across the
+    // three scales), self-matches excluded. The per-query sum is an
+    // exact ×10⁶ LONG (order-free), ranking runs on the native
+    // TopKPerKey operator, ties break on doc_id — deterministic
+    // cross-engine. See Retrieval.bm25Search for why this corpus is the
+    // candidate-explosion worst case.
+    Query("q_bm25_search",
+      // BM25 search: per-term scores (already round-6) summed as exact
+      // ×10⁶ BIGINTs per (q_id, doc_id) — order-free — then row_number
+      // ties broken on doc_id; rnk replicates the native TopKPerKey rank.
+      // q_bm25_serve_persisted shares this oracle VERBATIM: the
+      // save→load→probe chain must be lossless, so the two rows may not
+      // drift apart — the shared val makes a one-sided edit impossible.
+      bm25SearchOracle,
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val qids = docs.filter(col("doc_id") % 31 === 3)
+          .select(col("doc_id").as("q_id"))
+        Retrieval.bm25Search(docs, Retrieval.probeTerms(docs, qids), k = 3)
+          .orderBy("q_id", "rnk")
+      }),
+
+    // Exact-PHRASE search (Retrieval.positionalPostings/phraseSearch):
+    // the token-level ExactSubstr decontamination probe — every mod-41
+    // doc's first three tokens as a contiguous phrase, every document
+    // containing that exact sequence with its occurrence count. The
+    // ~40-word vocabulary makes trigram collisions real (phrases DO
+    // recur across docs), so n_occ counting is exercised, not vacuous.
+    // Bag-of-words retrieval cannot answer this; position adjacency
+    // can, at Σ df(phrase terms) join cost — never a corpus text scan.
+    Query("q_phrase_search",
+      // phrase search: same anchored-start vote counting in SQL — a start
+      // with 3 votes is a contiguous trigram match
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          tok AS (SELECT doc_id, ws[i] AS term, i AS pos
                  FROM w, unnest(generate_series(1, len(ws))) AS t(i)),
@@ -2935,9 +2776,33 @@ object PipelineQueries {
                  GROUP BY q_id, doc_id, start HAVING count(*) = 3)
          SELECT q_id, doc_id, count(*) AS n_occ FROM hit
          GROUP BY 1, 2 ORDER BY 1, 2""",
-    // decontamination: the q_phrase_search match CTEs reduced to the
-    // contaminated-doc set, anti-joined back to the corpus
-    "q_decontaminate_phrase" ->
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val probes = docs
+          .filter(pmod(col("doc_id"), lit(41)) === 0 &&
+            size(TextFunctions.tokens(col("text"))) >= 3)
+          .select(col("doc_id").as("q_id"),
+            posexplode(slice(TextFunctions.tokens(col("text")), 1, 3))
+              .as(Seq("o", "term")))
+          .select(col("q_id"), col("term"), (col("o") + 1).as("off"))
+        Retrieval.phraseSearch(Retrieval.positionalPostings(docs), probes,
+            phraseLen = 3)
+          .orderBy("q_id", "doc_id")
+      }),
+
+    // Benchmark decontamination end-to-end (Retrieval.decontaminate):
+    // the q_phrase_search probe set doubles as the stand-in eval set —
+    // every corpus doc containing one of its 3-token phrases VERBATIM
+    // is dropped (the GPT-3-style n-gram leakage rule; the probe docs
+    // drop themselves, correctly — any doc carrying eval text verbatim
+    // is leakage). Complements q_decontaminate (CurationQueries), which
+    // FLAGS gram-hash overlap: this row is the exact-POSITIONAL drop —
+    // contiguity through positionalPostings, no hash false positives,
+    // and the output is the cleaned corpus itself. Pure integer/string
+    // columns, nothing float in the hash.
+    Query("q_decontaminate_phrase",
+      // decontamination: the q_phrase_search match CTEs reduced to the
+      // contaminated-doc set, anti-joined back to the corpus
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          tok AS (SELECT doc_id, ws[i] AS term, i AS pos
                  FROM w, unnest(generate_series(1, len(ws))) AS t(i)),
@@ -2951,11 +2816,63 @@ object PipelineQueries {
          SELECT doc_id, lang, source FROM documents
          WHERE doc_id NOT IN (SELECT DISTINCT doc_id FROM hit)
          ORDER BY doc_id""",
-    "q_bm25_serve_persisted" -> bm25SearchOracle,
-    // hybrid RRF: the bm25 CTEs at top-10, the q_cosine_topk dot-product
-    // CTEs restricted to the embedded probe set, fused with fixed-order
-    // 1/(60+rank) terms; ranks are exact ints so the doubles agree
-    "q_hybrid_rrf" ->
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val probes = docs
+          .filter(pmod(col("doc_id"), lit(41)) === 0 &&
+            size(TextFunctions.tokens(col("text"))) >= 3)
+          .select(col("doc_id").as("q_id"),
+            posexplode(slice(TextFunctions.tokens(col("text")), 1, 3))
+              .as(Seq("o", "term")))
+          .select(col("q_id"), col("term"), (col("o") + 1).as("off"))
+        Retrieval.decontaminate(docs, probes, phraseLen = 3)
+          .select(col("doc_id"), col("lang"), col("source"))
+          .orderBy("doc_id")
+      }),
+
+    // Persisted-deployment path for the lexical index, the same
+    // save→load→probe symmetry every ANN family carries: the tf
+    // sufficient statistic lands as n-proportional parquet (one row per
+    // posting — no driver-sized state at all, unlike the quantizer
+    // families), a fresh scan loads it back, and the probe must
+    // reproduce q_bm25_search's EXACT oracle — lossless persistence is
+    // the claim. df/dl/avgdl re-derive from the loaded postings, so a
+    // truncated or stale index breaks the hash, not just a recall band.
+    Query("q_bm25_serve_persisted", bm25SearchOracle,
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val dir = idxScratch(s, "bm25", d)
+        val tfW = Retrieval.termFreq(docs)
+        tfW.write.mode("overwrite").parquet(dir)
+        // read back with the EXACT schema just written — the inference
+        // (footer) job per spark.read.parquet is a measured 40-90 ms
+        // driver stall (guide §7.3), and the written frame IS the schema
+        val tf = s.read.schema(tfW.schema).parquet(dir)
+        val qids = docs.filter(col("doc_id") % 31 === 3)
+          .select(col("doc_id").as("q_id"))
+        Retrieval.bm25SearchFrom(
+            Retrieval.bm25FromStats(tf, docs.agg(count(lit(1)).as("n"))),
+            Retrieval.probeTerms(docs, qids), k = 3)
+          .orderBy("q_id", "rnk")
+      }),
+
+    // Hybrid retrieval — reciprocal-rank fusion of the sparse (BM25) and
+    // dense (exact cosine) rankings, the standard two-tower search merge:
+    // rrf = Σ 1/(60 + rank) over the two top-10 lists, final top-3 per
+    // query. Queries = the mod-31 probe docs that HAVE an embedding
+    // (17/17/65 across scales — at sf0.1 only 2000 of 5000 docs carry
+    // embeddings, so the dense list covers a subset and `src` records
+    // which tower(s) produced each hit — the realistic partial-dense-
+    // coverage regime). Dense side: the tiny query set broadcasts
+    // against the embedding corpus (a 100 TB corpus swaps in
+    // Similarity.bruteForceTopKFor or an ANN probe — the fusion is
+    // ranking-source-agnostic); both towers exclude self-matches. The
+    // rrf sum is two fixed-order double terms over integer ranks —
+    // deterministic cross-engine; ties break on doc_id.
+    Query("q_hybrid_rrf",
+      // hybrid RRF: the bm25 CTEs at top-10, the q_cosine_topk dot-product
+      // CTEs restricted to the embedded probe set, fused with fixed-order
+      // 1/(60+rank) terms; ranks are exact ints so the doubles agree
       s"""WITH tok AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
          f AS (SELECT * FROM tok WHERE term NOT IN ($stopList)),
@@ -3026,15 +2943,69 @@ object PipelineQueries {
                        ORDER BY rrf DESC, doc_id) AS rnk FROM fu)
          SELECT q_id, rnk, doc_id, src, round(rrf, 6) AS rrf FROM r
          WHERE rnk <= 3 ORDER BY q_id, rnk""",
-    "q_multimodal_meta" ->
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val emb = Tables.embeddings(s, d)
+        val qv = docs.filter(col("doc_id") % 31 === 3)
+          .join(emb, col("doc_id") === col("vec_id"))
+          .select(col("doc_id").as("q_id"), col("embedding").as("qvec"))
+        val qids = qv.select("q_id")
+        val pairs = emb.alias("c")
+          .join(broadcast(qv), col("c.vec_id") =!= col("q_id"))
+          .select(col("q_id"), col("c.vec_id").as("doc_id"),
+            Similarity.cosine(col("qvec"), col("c.embedding")).as("sim"))
+        val dense = graft.plans.TopKPerKeyNode.topKPerKey(pairs, Seq("q_id"),
+            Seq(("sim", true), ("doc_id", false)), 10)
+          .select(col("q_id"), col("doc_id"), col("rank").as("rd"))
+        val sparse = Retrieval.bm25Search(docs, Retrieval.probeTerms(docs, qids), 10)
+          .select(col("q_id"), col("doc_id"), col("rnk").as("rs"))
+        val fused = sparse.alias("sp").join(dense.alias("dn"),
+            Seq("q_id", "doc_id"), "full_outer")
+          .select(col("q_id"), col("doc_id"),
+            (coalesce(lit(1.0) / (lit(60) + col("rs")), lit(0.0)) +
+              coalesce(lit(1.0) / (lit(60) + col("rd")), lit(0.0))).as("rrf"),
+            when(col("rs").isNotNull && col("rd").isNotNull, "both")
+              .when(col("rs").isNotNull, "sparse").otherwise("dense").as("src"))
+        val w = Window.partitionBy("q_id").orderBy(col("rrf").desc, col("doc_id"))
+        fused.withColumn("rnk", row_number().over(w).cast("long"))
+          .filter(col("rnk") <= 3)
+          .select(col("q_id"), col("rnk"), col("doc_id"), col("src"),
+            round(col("rrf"), 6).as("rrf"))
+          .orderBy("q_id", "rnk")
+      }),
+
+    // Multimodal plumbing: BinaryType payload + metadata struct; the
+    // SQL-checkable projection (byte length, header byte, meta fields).
+    // The mapPartitions decode path is exercised in PipelineSpec.
+    Query("q_multimodal_meta",
       """SELECT doc_id, octet_length(CAST(text AS BLOB)) AS n_bytes,
                 ascii(substr(text, 1, 1)) AS header_byte, lang, n_chars
          FROM documents ORDER BY doc_id""",
-    // stub-codec decode + frame sampling from first principles: the
-    // payload is the UTF-8 text bytes (pure-ASCII corpus ⇒ codepoints
-    // are the bytes); checksum replicates Long wraparound via HUGEINT
-    // mod 2^64 re-signed; frames of 7 bytes, every 2nd kept
-    "q_multimodal_decode" ->
+      (s, d) =>
+        MultiModal.withPayload(Tables.documents(s, d))
+          .select(col("doc_id"),
+            length(col("payload")).cast("long").as("n_bytes"),
+            ascii(substring(col("payload").cast("string"), 1, 1)).as("header_byte"),
+            col("meta.lang").as("lang"), col("meta.nChars").as("n_chars"))
+          .orderBy("doc_id")),
+
+    // Multimodal DECODE path through the correctness gate: the
+    // mapPartitions feature extraction (stub codec: width/height from
+    // the leading payload bytes, rolling 131-checksum with 64-bit
+    // wraparound) and the flatMap frame sampler (frameSize=7, keep every
+    // 2nd frame) run as the REAL Dataset pipeline — per-partition
+    // decoder init, streamed rows — and the oracle recomputes all of it
+    // from first principles (the payload is the UTF-8 text bytes and the
+    // corpus is pure ASCII, so DuckDB codepoints ARE the bytes; the
+    // Long wraparound is HUGEINT mod 2^64 re-signed). This is the row
+    // that catches a broken batch shape, a frame boundary off-by-one,
+    // or a checksum-order change — q_multimodal_meta only pins the
+    // payload/metadata plumbing.
+    Query("q_multimodal_decode",
+      // stub-codec decode + frame sampling from first principles: the
+      // payload is the UTF-8 text bytes (pure-ASCII corpus ⇒ codepoints
+      // are the bytes); checksum replicates Long wraparound via HUGEINT
+      // mod 2^64 re-signed; frames of 7 bytes, every 2nd kept
       """WITH b AS (
            SELECT doc_id, octet_length(CAST(text AS BLOB)) AS L,
                   list_transform(generate_series(1, len(text)),
@@ -3068,12 +3039,35 @@ object PipelineQueries {
                 fs.n_frames, CAST(fs.frame_bytes AS BIGINT) AS frame_bytes
          FROM f JOIN fs ON f.doc_id = fs.doc_id
          ORDER BY f.doc_id""",
-    // stride-downsample from first principles: resized byte i (0-based)
-    // is source byte ⌊i·L/T⌋ at T = 96 (integer floor division on both
-    // engines — Scala Long division / DuckDB //), pass-through at
-    // L ≤ T; then the same width/height/rolling-131-HUGEINT checksum
-    // recomputation as q_multimodal_decode over the RESIZED bytes
-    "q_multimodal_resize" ->
+      (s, d) => {
+        val media = MultiModal.media(s, Tables.documents(s, d))
+        val feats = MultiModal.extractFeatures(s, media).toDF()
+          .select(col("docId").as("doc_id"), col("width"), col("height"),
+            col("checksum"))
+        val frames = MultiModal.sampleFrames(s, media, frameSize = 7, every = 2)
+          .toDF()
+          .groupBy("docId")
+          .agg(count(lit(1)).as("n_frames"),
+            sum(length(col("bytes"))).as("frame_bytes"))
+          .select(col("docId").as("doc_id"), col("n_frames"), col("frame_bytes"))
+        feats.join(frames, "doc_id").orderBy("doc_id")
+      }),
+
+    // Multimodal RESIZE path through the correctness gate (the last
+    // family function that was spec-only): the stride-downsample stub
+    // (out[i] = payload[⌊i·L/T⌋], pass-through at L ≤ T — a real image
+    // resampler swaps in with the same narrow per-row contract) feeds
+    // the SAME decode used by q_multimodal_decode, so the checksum pins
+    // every resized byte and its order — a stride off-by-one, a
+    // truncation-vs-round slip, or a pass-through-branch break turns
+    // the row red. T = 96 exercises BOTH branches at every verified
+    // scale (45/34/436 of the docs are ≤ 96 bytes at sf0.001/0.01/0.1).
+    Query("q_multimodal_resize",
+      // stride-downsample from first principles: resized byte i (0-based)
+      // is source byte ⌊i·L/T⌋ at T = 96 (integer floor division on both
+      // engines — Scala Long division / DuckDB //), pass-through at
+      // L ≤ T; then the same width/height/rolling-131-HUGEINT checksum
+      // recomputation as q_multimodal_decode over the RESIZED bytes
       """WITH b AS (
            SELECT doc_id, octet_length(CAST(text AS BLOB)) AS L,
                   list_transform(generate_series(1, len(text)),
@@ -3100,5 +3094,14 @@ object PipelineQueries {
                      THEN csu - 18446744073709551616 ELSE csu END
                      AS BIGINT) AS checksum
          FROM f ORDER BY doc_id""",
+      (s, d) => {
+        val resized = MultiModal.resize(s,
+          MultiModal.media(s, Tables.documents(s, d)), targetLen = 96)
+        MultiModal.extractFeatures(s, resized).toDF()
+          .select(col("docId").as("doc_id"),
+            col("nBytes").cast("long").as("n_bytes"),
+            col("width"), col("height"), col("checksum"))
+          .orderBy("doc_id")
+      }),
   )
 }

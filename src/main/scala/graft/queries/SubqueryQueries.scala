@@ -26,60 +26,87 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SubqueryQueries {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // EXISTS with a correlated predicate → left-semi join after
     // RewritePredicateSubquery. Orders having at least one high-quantity
     // line item.
-    "q_exists_corr" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT o_orderkey, o_custkey FROM orders o
+    Query("q_exists_corr",
+      """SELECT o_orderkey, o_custkey FROM orders o
+         WHERE EXISTS (SELECT 1 FROM lineitem l
+                       WHERE l.l_orderkey = o.o_orderkey
+                         AND l.l_quantity > 45)
+         ORDER BY o_orderkey""",
+      (s, d) => {
+        Tables.orders(s, d).createOrReplaceTempView("orders")
+        Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
+        s.sql(
+          """SELECT o_orderkey, o_custkey FROM orders o
            WHERE EXISTS (SELECT 1 FROM lineitem l
                          WHERE l.l_orderkey = o.o_orderkey
                            AND l.l_quantity > 45)
            ORDER BY o_orderkey""")
-    }),
+      }),
 
     // NOT EXISTS with two correlated conjuncts → left-anti join.
     // Customers with no urgent order.
-    "q_notexists_corr" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT c_custkey FROM customer c
+    Query("q_notexists_corr",
+      """SELECT c_custkey FROM customer c
+         WHERE NOT EXISTS (SELECT 1 FROM orders o
+                           WHERE o.o_custkey = c.c_custkey
+                             AND o.o_orderpriority = '1-URGENT')
+         ORDER BY c_custkey""",
+      (s, d) => {
+        Tables.customer(s, d).createOrReplaceTempView("customer")
+        Tables.orders(s, d).createOrReplaceTempView("orders")
+        s.sql(
+          """SELECT c_custkey FROM customer c
            WHERE NOT EXISTS (SELECT 1 FROM orders o
                              WHERE o.o_custkey = c.c_custkey
                                AND o.o_orderpriority = '1-URGENT')
            ORDER BY c_custkey""")
-    }),
+      }),
 
     // IN (subquery) → left-semi join on the IN expression. Customers who
     // placed at least one large order.
-    "q_in_subq" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT c_custkey, c_mktsegment FROM customer
+    Query("q_in_subq",
+      """SELECT c_custkey, c_mktsegment FROM customer
+         WHERE c_custkey IN (SELECT o_custkey FROM orders
+                             WHERE o_totalprice > 150000)
+         ORDER BY c_custkey""",
+      (s, d) => {
+        Tables.customer(s, d).createOrReplaceTempView("customer")
+        Tables.orders(s, d).createOrReplaceTempView("orders")
+        s.sql(
+          """SELECT c_custkey, c_mktsegment FROM customer
            WHERE c_custkey IN (SELECT o_custkey FROM orders
                                WHERE o_totalprice > 150000)
            ORDER BY c_custkey""")
-    }),
+      }),
 
     // LATERAL correlated subquery in FROM: per-order aggregate computed
     // "per row" syntactically, decorrelated by Catalyst into a
     // per-orderkey aggregate + join (same machinery as the scalar
     // subquery, different surface syntax). Orders with no line items get
     // a NULL mq — a scalar aggregate subquery always yields one row.
-    "q_lateral_join" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT o.o_orderkey, t.mq FROM orders o,
+    Query("q_lateral_join",
+      // LEFT JOIN LATERAL .. ON true, not comma-LATERAL: DuckDB's comma
+      // form drops outer rows whose lateral aggregate group is empty,
+      // while Spark (per the standard: a scalar aggregate yields exactly
+      // one row, NULL on empty input) keeps them — the LEFT form makes
+      // DuckDB reproduce the standard behavior Spark implements.
+      """SELECT o.o_orderkey, t.mq FROM orders o
+         LEFT JOIN LATERAL (SELECT max(l.l_quantity) AS mq FROM lineitem l
+                            WHERE l.l_orderkey = o.o_orderkey) t ON true
+         ORDER BY o_orderkey""",
+      (s, d) => {
+        Tables.orders(s, d).createOrReplaceTempView("orders")
+        Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
+        s.sql(
+          """SELECT o.o_orderkey, t.mq FROM orders o,
            LATERAL (SELECT max(l.l_quantity) AS mq FROM lineitem l
                     WHERE l.l_orderkey = o.o_orderkey) t
            ORDER BY o_orderkey""")
-    }),
+      }),
 
     // Recursive CTE (Spark 4): an ancestor walk over the implicit binary
     // hierarchy parent(k) = k div 2 — per-row varying recursion depth
@@ -87,16 +114,23 @@ object SubqueryQueries {
     // recursion supports today (UNION-distinct fixpoints, e.g. cyclic
     // graph closure, still raise UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE —
     // that use case runs through operators.Components instead).
-    "q_recursive_cte" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      s.sql(
-        """WITH RECURSIVE anc(key, a, depth) AS (
+    Query("q_recursive_cte",
+      """WITH RECURSIVE anc(key, a, depth) AS (
+           SELECT c_custkey, c_custkey, 0 FROM customer
+           UNION ALL
+           SELECT key, a // 2, depth + 1 FROM anc WHERE a > 0)
+         SELECT key, max(depth) AS levels, min(a) AS root
+         FROM anc GROUP BY key ORDER BY key""",
+      (s, d) => {
+        Tables.customer(s, d).createOrReplaceTempView("customer")
+        s.sql(
+          """WITH RECURSIVE anc(key, a, depth) AS (
              SELECT c_custkey, c_custkey, 0 FROM customer
              UNION ALL
              SELECT key, a DIV 2, depth + 1 FROM anc WHERE a > 0)
            SELECT key, max(depth) AS levels, min(a) AS root
            FROM anc GROUP BY key ORDER BY key""")
-    }),
+      }),
 
     // Correlated SCALAR subqueries: orders above their own customer's
     // average order price. avg() on DOUBLE is summation-order-dependent,
@@ -106,55 +140,7 @@ object SubqueryQueries {
     // Both engines compute DECIMAL exactly → identical row sets. Each of
     // the two subqueries decorrelates into a per-custkey aggregate
     // joined back to orders.
-    "q_scalar_corr" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT o_orderkey, o_custkey FROM orders o
-           WHERE CAST(o.o_totalprice AS DECIMAL(18,2))
-                   * (SELECT count(*) FROM orders o2
-                      WHERE o2.o_custkey = o.o_custkey)
-                 > (SELECT sum(CAST(o2.o_totalprice AS DECIMAL(18,2)))
-                    FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-           ORDER BY o_orderkey""")
-    }),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_exists_corr" ->
-      """SELECT o_orderkey, o_custkey FROM orders o
-         WHERE EXISTS (SELECT 1 FROM lineitem l
-                       WHERE l.l_orderkey = o.o_orderkey
-                         AND l.l_quantity > 45)
-         ORDER BY o_orderkey""",
-    "q_notexists_corr" ->
-      """SELECT c_custkey FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o
-                           WHERE o.o_custkey = c.c_custkey
-                             AND o.o_orderpriority = '1-URGENT')
-         ORDER BY c_custkey""",
-    "q_in_subq" ->
-      """SELECT c_custkey, c_mktsegment FROM customer
-         WHERE c_custkey IN (SELECT o_custkey FROM orders
-                             WHERE o_totalprice > 150000)
-         ORDER BY c_custkey""",
-    // LEFT JOIN LATERAL .. ON true, not comma-LATERAL: DuckDB's comma
-    // form drops outer rows whose lateral aggregate group is empty,
-    // while Spark (per the standard: a scalar aggregate yields exactly
-    // one row, NULL on empty input) keeps them — the LEFT form makes
-    // DuckDB reproduce the standard behavior Spark implements.
-    "q_lateral_join" ->
-      """SELECT o.o_orderkey, t.mq FROM orders o
-         LEFT JOIN LATERAL (SELECT max(l.l_quantity) AS mq FROM lineitem l
-                            WHERE l.l_orderkey = o.o_orderkey) t ON true
-         ORDER BY o_orderkey""",
-    "q_recursive_cte" ->
-      """WITH RECURSIVE anc(key, a, depth) AS (
-           SELECT c_custkey, c_custkey, 0 FROM customer
-           UNION ALL
-           SELECT key, a // 2, depth + 1 FROM anc WHERE a > 0)
-         SELECT key, max(depth) AS levels, min(a) AS root
-         FROM anc GROUP BY key ORDER BY key""",
-    "q_scalar_corr" ->
+    Query("q_scalar_corr",
       """SELECT o_orderkey, o_custkey FROM orders o
          WHERE CAST(o.o_totalprice AS DECIMAL(18,2))
                  * (SELECT count(*) FROM orders o2
@@ -162,5 +148,16 @@ object SubqueryQueries {
                > (SELECT sum(CAST(o2.o_totalprice AS DECIMAL(18,2)))
                   FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
          ORDER BY o_orderkey""",
+      (s, d) => {
+        Tables.orders(s, d).createOrReplaceTempView("orders")
+        s.sql(
+          """SELECT o_orderkey, o_custkey FROM orders o
+           WHERE CAST(o.o_totalprice AS DECIMAL(18,2))
+                   * (SELECT count(*) FROM orders o2
+                      WHERE o2.o_custkey = o.o_custkey)
+                 > (SELECT sum(CAST(o2.o_totalprice AS DECIMAL(18,2)))
+                    FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
+           ORDER BY o_orderkey""")
+      }),
   )
 }

@@ -1,13 +1,12 @@
 package graft
 
-import graft.queries.FunnelQueries
 import org.apache.spark.sql.functions._
 
 /** Invariants of the ordered-sequence event analytics. */
 class FunnelSpec extends SparkSpec {
 
   test("funnel stages are monotone non-increasing") {
-    val r = FunnelQueries.defs("q_funnel")(spark, sf).collect().head
+    val r = SparkEntry.queries("q_funnel")(spark, sf).collect().head
     val (v, c, p) = (r.getAs[Long]("n_view"), r.getAs[Long]("n_click"),
       r.getAs[Long]("n_purchase"))
     assert(v >= c && c >= p, s"funnel not monotone: $v >= $c >= $p")
@@ -15,7 +14,7 @@ class FunnelSpec extends SparkSpec {
   }
 
   test("markov: transition rows are row-stochastic within rounding") {
-    val m = FunnelQueries.defs("q_markov_trans")(spark, sf).collect()
+    val m = SparkEntry.queries("q_markov_trans")(spark, sf).collect()
     assert(m.nonEmpty)
     m.groupBy(_.getAs[String]("prev")).foreach { case (prev, rows) =>
       val total = rows.map(_.getAs[Double]("p")).sum
@@ -25,7 +24,7 @@ class FunnelSpec extends SparkSpec {
   }
 
   test("user paths: ten 3-step paths covering a plurality of users") {
-    val p = FunnelQueries.defs("q_user_paths")(spark, sf).collect()
+    val p = SparkEntry.queries("q_user_paths")(spark, sf).collect()
     assert(p.length === 10)
     assert(p.forall(_.getAs[String]("path").split(">").length == 3))
     val counts = p.map(_.getAs[Long]("n_users"))
@@ -33,7 +32,7 @@ class FunnelSpec extends SparkSpec {
   }
 
   test("cohort: every cohorted user is active at offset 0, totals agree") {
-    val m = FunnelQueries.defs("q_cohort_retention")(spark, sf).collect()
+    val m = SparkEntry.queries("q_cohort_retention")(spark, sf).collect()
     // a user's first high-value purchase week is itself a purchase week,
     // so summing the offset-0 column recovers the full cohorted population
     val offset0 = m.filter(_.getAs[Long]("week_offset") == 0L)

@@ -128,7 +128,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("degree distribution: each direction's histogram sums to |V|") {
-    val rows = graft.queries.GraphQueries.defs("q_degree_dist")(spark, sf)
+    val rows = SparkEntry.queries("q_degree_dist")(spark, sf)
       .collect()
     Seq("in", "out").foreach { dir =>
       val tot = rows.filter(_.getAs[String]("direction") == dir)
@@ -138,7 +138,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("rank sample: kept docs are a subset with the exact integer keep rule") {
-    val kept = graft.queries.GraphQueries.defs("q_rank_sample")(spark, sf)
+    val kept = SparkEntry.queries("q_rank_sample")(spark, sf)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rank"))
     assert(kept.nonEmpty && kept.length < n)
     val all = Graph.pageRankScores(docsDf, n, 5).collect()

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Query
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Smoke + invariants for the t2 query corpus at sf0.001.
@@ -16,17 +18,26 @@ class QueryCorpusSpec extends SparkSpec {
   }
 
   test("every oracle key has a query") {
+    // both maps are views of the one registry list; pin that they agree
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
   test("every query has an oracle (no silent rows-only demotions)") {
-    // the corpus is at FULL oracle parity (284/284); a new query shipped
-    // without its DuckDB twin would silently get the driver's weaker
-    // rows-only check instead of the hash gate — make that a red test,
-    // not a quiet coverage hole
-    val weak = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(weak.isEmpty, s"queries without oracles: $weak")
+    // a Query cannot be declared without its oracle, but a null (a val
+    // read before its initializer ran) or blank one would still ship the
+    // row to the driver's weaker rows-only check instead of the hash gate
+    val blank = SparkEntry.all.filter(q => q.oracleSql == null || q.oracleSql.trim.isEmpty)
+    assert(blank.isEmpty, s"queries without oracle SQL: ${blank.map(_.name)}")
+  }
+
+  test("the registry rejects a name declared twice, naming it") {
+    val build: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    val twice = Seq(Query("q_twice", "SELECT 1", build), Query("q_once", "SELECT 2", build),
+      Query("q_twice", "SELECT 3", build))
+    val e = intercept[IllegalArgumentException](SparkEntry.distinctNames(twice))
+    assert(e.getMessage.contains("q_twice") && !e.getMessage.contains("q_once"), e.getMessage)
+    assert(SparkEntry.distinctNames(twice.take(2)) === twice.take(2))
   }
 
   test("no final projection carries a >22-precision decimal") {
