@@ -27,7 +27,7 @@ object SparkEntry {
   private[graft] def distinctNames(qs: Seq[Query]): Seq[Query] = {
     val dup = qs.groupBy(_.name).collect { case (n, xs) if xs.size > 1 => n }
     require(dup.isEmpty,
-      s"query name(s) declared in more than one group: ${dup.mkString(", ")}")
+      s"query name(s) declared more than once: ${dup.mkString(", ")}")
     qs
   }
 

@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph analytics over a document link graph.
   *
@@ -14,8 +20,9 @@ import org.apache.spark.sql.functions._
   * reachability bounds crawl frontier depth. The reference repo's own
   * surface (`/root/reference/hadoop_tutorial/src/Kmeans.java:163-179`)
   * is an iterative driver loop over a bulk-synchronous job — the same
-  * execution shape PageRank and BFS take here, re-expressed as
-  * DataFrame self-joins per superstep instead of MR rounds.
+  * execution shape PageRank, BFS and HITS take here: DataFrame
+  * self-joins per superstep for PageRank and BFS, a co-partitioned
+  * keyed RDD loop for HITS, instead of MR rounds.
   *
   * The edge set is derived deterministically from `documents` keys
   * (each doc "links to" 1–3 pseudo-random others via fixed multiplier
@@ -27,9 +34,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (the part that matters at 100 TB):
   *  - Every superstep shuffles by vertex id only — contributions are
-  *    map-side pre-aggregated by the hash-partial of the groupBy; no
-  *    driver-held collections besides the |V| scalar and the final
-  *    bounded top-k.
+  *    map-side pre-aggregated by the hash-partial of the groupBy (or
+  *    reduceByKey); no driver-held collections besides the |V| scalar,
+  *    HITS' one L1 total per superstep and the final bounded top-k.
   *  - PageRank arithmetic is integer-scaled (rank × 10^12 as BIGINT,
   *    floor division per edge) so sums are exact and shuffle order
   *    cannot move a bit — the same order-independence discipline the
@@ -135,14 +142,21 @@ object Graph {
     val top = pageRankScores(docs, n, iterations)
       .orderBy(col("rank").desc, col("doc_id")).limit(20)
       .collect()
-    val spark = docs.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(java.util.Arrays.asList(top: _*), schema)
-      .orderBy(col("rank").desc, col("doc_id"))
+    topRows(docs.sparkSession, top, Seq("doc_id" -> false, "rank" -> false),
+      col("rank").desc, col("doc_id"))
+  }
+
+  /** A driver-held top-k as a one-partition DataFrame of BIGINT
+    * columns (name → nullable), sorted by `order`. `coalesce(1)` keeps
+    * the sort inside one task, so collecting it is one job rather than
+    * a range-partition sample, a shuffle and the result.
+    */
+  private def topRows(spark: SparkSession, rows: Array[Row],
+                      cols: Seq[(String, Boolean)], order: Column*): DataFrame = {
+    val schema = StructType(cols.map { case (c, nullable) =>
+      StructField(c, LongType, nullable) })
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .coalesce(1).orderBy(order: _*)
   }
 
   /** Global triangle census of the undirected link graph: one row of
@@ -189,105 +203,111 @@ object Graph {
 
   /** HITS hubs-and-authorities (Kleinberg 1999), integer-exact.
     *
-    * Same superstep shape as [[pageRank]] — the score exchange is a
-    * join on the edge key — but mutually recursive: authority mass
-    * flows along in-links from hub scores, hub mass along out-links
-    * from authority scores. Normalization is L1 (divide by the global
-    * sum) rather than the textbook L2 — a square root has no exact
-    * integer form; L1 is an equally valid scaling choice (any norm
-    * only fixes the scale factor) and keeps every value a BIGINT so
-    * the result is shuffle-order independent. The global sum is a
-    * 1-row aggregate broadcast back over the scores (scalar subquery
-    * in the oracle) — never a driver round-trip.
+    * Mutually recursive: authority mass flows along in-links from hub
+    * scores, hub mass along out-links from authority scores.
+    * Normalization is L1 (divide by the global sum) rather than the
+    * textbook L2 — a square root has no exact integer form; L1 is an
+    * equally valid scaling choice (any norm only fixes the scale
+    * factor) and keeps every value a BIGINT so the result is
+    * shuffle-order independent.
     *
     * Fixed-point layout: scores carry factor 10^12; the normalize
-    * step computes (x · 10^6) div (Σx div 10^6), keeping every
+    * step computes (x · 10^6) div max(1, Σx div 10^6), keeping every
     * intermediate under 2^63 for graphs up to ~10^6 vertices at
-    * in/out-degree ≤ 3 (beyond that, swap to the documented double
-    * path — exactness is a test-oracle property, not a production
-    * requirement).
+    * in/out-degree ≤ 3. Every sum and the 10^6 scaling are
+    * `Math.addExact` / `multiplyExact`, so a graph past that range
+    * fails with "long overflow" (as ANSI `sum` / `*` did) instead of
+    * wrapping.
     *
-    * `iterations` cost model: one HITS iteration = two supersteps
-    * (authority then hub), each a keyed shuffle plus an L1 normalize
-    * that materializes the score vector once (persist) and pulls ONE
-    * Long to the driver — so wall cost is linear in `iterations` with
-    * 2 shuffles + 2 bounded scalar jobs each. The default 2 is tuned
-    * to the test fixtures' convergence; a larger graph wanting more
-    * iterations pays exactly that linear increment, nothing
-    * superlinear.
+    * Execution shape: relational operators build the graph
+    * ([[linkEdges]] and the vertex set, DataFrame API); a keyed RDD
+    * loop runs the supersteps (see [[superstep]]). The edges are cached
+    * twice under ONE `HashPartitioner(spark.sql.shuffle.partitions)`,
+    * keyed by src and keyed by dst, and every score vector carries that
+    * same partitioner, so each superstep's edge join is narrow and its
+    * only exchange is the per-vertex sum. One superstep is one Spark job
+    * with no Catalyst planning: the job materializes the raw scores and
+    * folds their L1 total to the driver (one Long); the normalize is a
+    * `mapValues` that keeps the partitioner. A call runs
+    * `2 · iterations + 2` jobs while the result is built (the
+    * `linkEdges` distinct's map stage, one per superstep, the final
+    * top-20) and one more when the returned 20-row frame is collected:
+    * 6 + 1 for the default 2 iterations, down from 25 + 3 with a
+    * persist-and-collect DataFrame normalize (traced `corpus` run,
+    * seed 1). The default 2 iterations are tuned to the test fixtures'
+    * convergence; each extra iteration adds exactly two such jobs.
+    *
+    * Cached RDDs (the two edge caches, the vertex multiplicities and
+    * every raw score vector) are released in a `finally`, so a failing
+    * superstep leaks none of them.
     */
   def hits(docs: DataFrame, n: Long, iterations: Int = 2): DataFrame = {
-    val vertices = docs.select(col("doc_id").cast("long").as("id"))
-    val edges = linkEdges(docs, n).persist()
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](edges)
-    // L1 normalize with the global sum pulled to the driver as ONE Long
-    // (the k-means ΔWCSS pattern — a bounded scalar, never data). An
-    // in-plan broadcast(agg) here would nest a broadcast subquery per
-    // normalize, and each broadcast re-executes its whole upstream
-    // lineage — with 4 normalizes that compounds to ~2^4 recomputes of
-    // the edge-join chain (measured 9.6 s at sf0.1; this form is ~5×
-    // cheaper). Persisting the raw scores first means the aggregation
-    // and the division read one materialization.
-    def l1normalize(scores: DataFrame, c: String): DataFrame = {
-      val p = scores.persist()
-      cached += p
-      // sum over ZERO rows is SQL null — coalesce so a caller passing a
-      // stale n with an empty docs side gets the empty result the rest
-      // of the suite returns, not a bare NullPointerException
-      val tot = p.agg(coalesce(sum(col(c)), lit(0L))).collect()(0).getLong(0)
-      // Scala's / on Long IS floor-toward-zero integer division over
-      // positives — identical to the previous in-plan `_tot div 1000000L`.
-      // max(1L, ·) guards the tiny-graph case where the global sum is
-      // under 10^6 and the scaled divisor would be 0 (the oracle
-      // mirrors the same greatest(1, ·) guard).
-      p.select(col("id"),
-        expr(s"($c * 1000000L) div ${math.max(1L, tot / 1000000L)}L").as(c))
-    }
-    // Supersteps carry the score vectors SPARSELY: a vertex absent from
-    // `auth`/`hub` is exactly a vertex whose score is 0, because (a) a
-    // missing row contributes no terms to the next superstep's edge-join
-    // sum — identical to a present row contributing 0-valued terms, (b)
-    // the L1 total is unchanged by absent zeros, and (c) the normalize
-    // maps 0 to (0·10⁶) div d = 0, so a zero row and an absent row are
-    // interchangeable at every step. The previous form re-instated ALL
-    // vertices with a left join + coalesce(0) INSIDE every superstep —
-    // four documents scans and four joins per hits call whose only
-    // effect was materializing those zeros early (guide §1.2/§2.4:
-    // remove passes that compute nothing). The full vertex set is
-    // reinstated ONCE, at the final projection, where presence (not
-    // value) first matters — the output rows, values, and the L1 totals
-    // are bit-identical (integer arithmetic throughout).
-    var hub = vertices.select(col("id"), lit(Scale).as("hub"))
-    var auth: DataFrame = null
-    for (_ <- 1 to iterations) {
-      auth = l1normalize(
-        edges.join(hub, edges("src") === hub("id"))
-          .groupBy(col("dst").as("id")).agg(sum("hub").as("auth")),
-        "auth")
-      hub = l1normalize(
-        edges.join(auth, edges("dst") === auth("id"))
-          .groupBy(col("src").as("id")).agg(sum("auth").as("hub")),
-        "hub")
-    }
-    val joined = vertices
-      .join(auth, Seq("id"), "left")
-      .join(hub, Seq("id"), "left")
-      .select(col("id").as("doc_id"),
-        coalesce(col("auth"), lit(0L)).as("auth"),
-        coalesce(col("hub"), lit(0L)).as("hub"))
-      .orderBy(col("auth").desc, col("doc_id")).limit(20)
-      .collect()
-    cached.foreach(_.unpersist(blocking = false))
+    require(iterations >= 1, s"hits needs at least one iteration, got $iterations")
     val spark = docs.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("auth",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("hub",
-        org.apache.spark.sql.types.LongType, nullable = true)))
-    spark.createDataFrame(java.util.Arrays.asList(joined: _*), schema)
-      .orderBy(col("auth").desc, col("doc_id"))
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val cached = ArrayBuffer[RDD[_]]()
+    def keep(r: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+      cached += r
+      r.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    val top = try {
+      val edges = linkEdges(docs, n).rdd.map(r => (r.getLong(0), r.getLong(1)))
+      val bySrc = keep(edges.partitionBy(part))
+      val byDst = keep(edges.map(_.swap).partitionBy(part))
+      // A null doc_id has no edges (linkEdges' filters drop it) and is
+      // reinstated with zero scores at the end; a duplicated one counts
+      // once per row, as the vertex-set join always counted it.
+      val ids = docs.select(col("doc_id").cast("long")).rdd
+      val mult = keep(ids.filter(!_.isNullAt(0)).map(r => (r.getLong(0), 1L))
+        .reduceByKey(part, Math.addExact(_, _)))
+      // Score vectors are SPARSE: a vertex absent from `auth`/`hub` has
+      // score 0, because (a) a missing row contributes no terms to the
+      // next superstep's edge-join sum — identical to a present row
+      // contributing 0-valued terms, (b) the L1 total is unchanged by
+      // absent zeros, and (c) the normalize maps 0 to (0·10⁶) div d = 0.
+      // The full vertex set is reinstated once, in the final join.
+      var hub = mult.mapValues(m => Math.multiplyExact(m, Scale))
+      var auth: RDD[(Long, Long)] = null
+      for (_ <- 1 to iterations) {
+        auth = superstep(bySrc, hub, part, keep)
+        hub = superstep(byDst, auth, part, keep)
+      }
+      val nulls = ids.filter(_.isNullAt(0)).map(_ => (Option.empty[Long], 0L, 0L))
+      mult.leftOuterJoin(auth, part).leftOuterJoin(hub, part)
+        .flatMap { case (id, ((m, a), h)) =>
+          Iterator.fill(m.toInt)((Option(id), a.getOrElse(0L), h.getOrElse(0L)))
+        }
+        .union(nulls)
+        // auth descending, then doc_id ascending with null first — the
+        // order SQL's `ORDER BY auth DESC, doc_id` gives
+        .takeOrdered(20)(Ordering.by[(Option[Long], Long, Long), (Long, Option[Long])] {
+          case (id, a, _) => (-a, id) })
+    } finally cached.foreach(_.unpersist(blocking = false))
+    topRows(spark, top.map { case (id, a, h) => Row(id.map(Long.box).orNull, a, h) },
+      Seq("doc_id" -> false, "auth" -> true, "hub" -> true),
+      col("auth").desc, col("doc_id"))
+  }
+
+  /** One HITS superstep: every vertex's score flows along `adj`
+    * (key → neighbour) and sums per neighbour, then the sums are
+    * L1-normalized. `adj` and `scores` must both carry `part`, so the
+    * join is narrow and the sum is the step's only exchange; the raw
+    * sums are persisted through `keep` and their L1 total is folded to
+    * the driver by the one job this call runs. The returned normalized
+    * vector is a lazy `mapValues` over the cached sums and keeps `part`.
+    * (Broadcasting the total back inside one plan instead re-executes
+    * the whole upstream lineage at every normalize: ~5× slower at sf0.1.)
+    */
+  private[graft] def superstep(adj: RDD[(Long, Long)], scores: RDD[(Long, Long)],
+                               part: Partitioner,
+                               keep: RDD[(Long, Long)] => RDD[(Long, Long)]): RDD[(Long, Long)] = {
+    val raw = keep(adj.join(scores, part).values.reduceByKey(part, Math.addExact(_, _)))
+    val total = raw.values.fold(0L)(Math.addExact(_, _))
+    // max(1, ·) guards the tiny-graph case where the total is under
+    // 10^6 and the scaled divisor would be 0 (the oracle mirrors it
+    // with greatest(1, ·)); the empty graph's total is 0 likewise
+    val d = math.max(1L, total / 1000000L)
+    raw.mapValues(x => Math.multiplyExact(x, 1000000L) / d)
   }
 
   /** Shortest hop distance from `source` over directed link edges,

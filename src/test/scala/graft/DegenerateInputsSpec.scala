@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AsOfJoin, Components, Dedup, KMeans, Sampling, Similarity}
+import graft.operators.{AsOfJoin, Components, Dedup, Graph, KMeans, Sampling, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,6 +28,11 @@ class DegenerateInputsSpec extends SparkSpec {
     import spark.implicits._
     Seq.empty[(Long, String)].toDF("doc_id", "text")
   }
+
+  /** Messages of `e` and its causes, joined. */
+  private def causes(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
 
   test("search/pair operators: empty corpus in, empty result out") {
     assert(Similarity.bruteForceTopK(emptyEmb, "vec_id", "embedding", k = 3)
@@ -230,8 +235,7 @@ class DegenerateInputsSpec extends SparkSpec {
     val e = intercept[Exception] {
       Similarity.bruteForceTopK(emb, "vec_id", "embedding", k = 1).collect()
     }
-    val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
+    val msgs = causes(e)
     assert(msgs.contains("ragged vector"), msgs)
   }
 
@@ -260,8 +264,7 @@ class DegenerateInputsSpec extends SparkSpec {
         ("star", () =>
           graft.operators.Components.connectedComponentsStar(edges, "a", "b").collect()))) {
       val e = intercept[Exception] { run.apply() }
-      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-        .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
+      val msgs = causes(e)
       assert(msgs.contains("null endpoint"),
         s"$name on null endpoints: wanted the contract message, got: $msgs")
     }
@@ -279,6 +282,63 @@ class DegenerateInputsSpec extends SparkSpec {
     // normalize used to NPE on the null sum-over-zero-rows
     assert(graft.operators.Graph.hits(emptyDocs, n = 5).count() === 0)
     assert(graft.operators.Graph.pageRankScores(emptyDocs, n = 5).count() === 0)
+  }
+
+  test("hits superstep: a Long overflow in the sum or the 10^6 scaling fails loudly") {
+    import org.apache.spark.HashPartitioner
+    import org.apache.spark.rdd.RDD
+    val sc = spark.sparkContext
+    val part = new HashPartitioner(3)
+    val kept = scala.collection.mutable.ArrayBuffer[RDD[_]]()
+    def keep(r: RDD[(Long, Long)]): RDD[(Long, Long)] = { kept += r; r.persist() }
+    def keyed(xs: (Long, Long)*) = sc.parallelize(xs, 2).partitionBy(part)
+    val adj = keyed(1L -> 9L, 2L -> 9L)
+    try {
+      // two in-links of Long.MaxValue / 2 + 1 each: the per-vertex sum
+      // overflows inside the superstep's own job
+      val big = Long.MaxValue / 2 + 1
+      val sum = intercept[Exception](Graph.superstep(adj, keyed(1L -> big, 2L -> big), part, keep))
+      assert(causes(sum).contains("long overflow"), causes(sum))
+      // sum and total fit, but 10^13 · 10^6 does not: the normalize
+      // fails where the vector is read
+      val scaled = Graph.superstep(adj, keyed(1L -> 5000000000000L, 2L -> 5000000000000L), part, keep)
+      val mul = intercept[Exception](scaled.collect())
+      assert(causes(mul).contains("long overflow"), causes(mul))
+      assert(scaled.partitioner === Some(part))
+    } finally kept.foreach(_.unpersist())
+  }
+
+  test("hits: a failing call releases every RDD it cached") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // a stale n = 2 over 1000 ids sends every edge into vertex 0 or 1:
+    // about 600 in-links of 10^12 each, whose 10^6 scaling overflows in
+    // the second superstep, after the edge caches and the first score
+    // vector are persisted
+    val docs = (0L until 1000L).map(i => (i, "t")).toDF("doc_id", "text")
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[Exception](Graph.hits(docs, n = 2))
+    assert(causes(e).contains("long overflow"), causes(e))
+    assert(sc.getPersistentRDDs.keySet === before)
+  }
+
+  test("hits: a null doc_id is a vertex with no edges and zero scores") {
+    import spark.implicits._
+    val ids = (0L until 40L).map(Option(_))
+    def docs(xs: Seq[Option[Long]]) = xs.map(i => (i, "t")).toDF("doc_id", "text")
+    def rows(df: DataFrame) = df.collect().toSeq
+    // the null vertex adds no edge and no mass, so the top-20 is the
+    // top-20 without it
+    assert(rows(Graph.hits(docs(ids :+ None), n = 40)) === rows(Graph.hits(docs(ids), n = 40)))
+    // a graph with fewer than 20 vertices shows its row: auth 0 and
+    // hub 0, last. The result's doc_id column is declared non-nullable,
+    // so the null reads back as 0 there — the rows the DataFrame
+    // normalize returned, pinned value for value
+    val small = rows(Graph.hits(docs((0L until 6L).map(Option(_)) :+ None), n = 6))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(small === Seq((0L, 235294228373L, 15151518149L), (1L, 235294228373L, 242424290389L),
+      (3L, 235294228373L, 15151518149L), (4L, 235294228373L, 242424290389L),
+      (2L, 29411778546L, 242424290389L), (5L, 29411778546L, 242424290389L), (0L, 0L, 0L)))
   }
 
   test("external-query probes: empty workload in, empty result out") {
@@ -311,8 +371,7 @@ class DegenerateInputsSpec extends SparkSpec {
         Similarity.pqTrain(emptyEmb, "vec_id", "embedding", m = 2, codes = 4)))
     for ((name, run) <- cases) {
       val e = intercept[Exception] { run.apply() }
-      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-        .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
+      val msgs = causes(e)
       assert(msgs.toLowerCase.contains("empty"),
         s"$name on empty corpus: wanted a pointed 'empty' message, got: $msgs")
     }

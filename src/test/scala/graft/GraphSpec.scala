@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.operators.Graph
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.functions._
@@ -8,7 +12,8 @@ import org.apache.spark.sql.functions._
 /** Graph-analytics operator properties: the degree-ordered triangle
   * closure agrees with the naive id-ordered count, PageRank conserves
   * scaled mass and ranks a known hub first, BFS distances satisfy the
-  * triangle inequality over edges.
+  * triangle inequality over edges, HITS matches a plain-Scala integer
+  * replay bit for bit.
   */
 class GraphSpec extends SparkSpec {
 
@@ -89,6 +94,98 @@ class GraphSpec extends SparkSpec {
     })
     // L1 normalization: no single score can exceed the total scale
     assert(rows.forall(_.getAs[Long]("auth") <= Graph.Scale))
+  }
+
+  /** Plain-Scala integer HITS on `ids` (nulls already removed): the
+    * same edges, the same (x·10⁶) div max(1, Σ div 10⁶) normalize, a
+    * missing score read as 0. Returns the top-20 (doc_id, auth, hub)
+    * by auth descending, doc_id ascending.
+    */
+  private def replayHits(ids: Seq[Long], n: Long, iterations: Int): Seq[(Long, Long, Long)] = {
+    val edges = ids.distinct.flatMap(u =>
+      (1L to 1L + u % 3).map(j => (u, (u * 131L + j * 17L) % n))).filter(e => e._1 != e._2).distinct
+    def norm(m: Map[Long, Long]): Map[Long, Long] = {
+      val d = math.max(1L, m.values.sum / 1000000L)
+      m.map { case (k, v) => k -> v * 1000000L / d }
+    }
+    def flow(from: Map[Long, Long], key: ((Long, Long)) => Long,
+             nbr: ((Long, Long)) => Long): Map[Long, Long] =
+      norm(edges.groupBy(nbr).map { case (v, es) => v -> es.map(e => from.getOrElse(key(e), 0L)).sum })
+    var hub = ids.groupBy(identity).map { case (id, xs) => id -> xs.size * Graph.Scale }
+    var auth = Map.empty[Long, Long]
+    for (_ <- 1 to iterations) {
+      auth = flow(hub, _._1, _._2)
+      hub = flow(auth, _._2, _._1)
+    }
+    ids.map(id => (id, auth.getOrElse(id, 0L), hub.getOrElse(id, 0L)))
+      .sortBy { case (id, a, _) => (-a, id) }.take(20)
+  }
+
+  private def hitsRows(df: DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().toSeq.map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[Long]("auth"), r.getAs[Long]("hub")))
+
+  test("hits: top-20 equals a plain-Scala integer replay at any partitioning, AQE on or off") {
+    val ids = docsDf.select(col("doc_id").cast("long")).collect().toSeq.map(_.getLong(0))
+    val want = replayHits(ids, n, iterations = 2)
+    assert(want.length === 20)
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (parts <- Seq(1, 3, 7); aqe <- Seq(true, false)) {
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+        assert(hitsRows(Graph.hits(docsDf, n, iterations = 2)) === want,
+          s"shuffle.partitions=$parts aqe=$aqe")
+      }
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Result of `body` and the number of jobs it started. Only jobs of a
+    * job group set here are counted, so earlier tests' late events do
+    * not leak in; a sentinel job outside the group, run after `body`,
+    * drains the listener bus (it delivers events in order).
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graph-spec-${System.nanoTime()}"
+    val jobs = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == group + "-sentinel" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-sentinel", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("hits: 2·iterations + 2 jobs while built, one job to collect") {
+    val (docs, nv) = (docsDf, n)
+    for (iterations <- Seq(1, 2, 3)) {
+      val (df, built) = jobsOf(Graph.hits(docs, nv, iterations))
+      assert(built <= 2 * iterations + 2, s"iterations=$iterations")
+      val (rows, collected) = jobsOf(df.collect())
+      assert(rows.length === 20)
+      assert(collected === 1, s"iterations=$iterations")
+    }
+  }
+
+  test("pagerank: collecting the 20-row result is one job") {
+    val df = Graph.pageRank(docsDf, n, iterations = 2)
+    val (rows, collected) = jobsOf(df.collect())
+    assert(rows.length === 20)
+    assert(collected === 1)
   }
 
   test("bfs: source at 0, neighbors at 1, dist obeys edge relaxation") {

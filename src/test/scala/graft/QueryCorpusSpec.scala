@@ -37,6 +37,8 @@ class QueryCorpusSpec extends SparkSpec {
       Query("q_twice", "SELECT 3", build))
     val e = intercept[IllegalArgumentException](SparkEntry.distinctNames(twice))
     assert(e.getMessage.contains("q_twice") && !e.getMessage.contains("q_once"), e.getMessage)
+    // both copies sit in one list here, so "more than one group" would be false
+    assert(e.getMessage.contains("declared more than once"), e.getMessage)
     assert(SparkEntry.distinctNames(twice.take(2)) === twice.take(2))
   }
 
