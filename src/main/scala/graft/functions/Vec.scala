@@ -4,7 +4,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Null-guarded ArrayData → primitive-array conversion shared by every
   * native vector kernel (NearestCells, PqCode/AdcTable, IvfPq encode/
-  * probe, UnitVector, HyperplaneBuckets).
+  * probe, UnitVector, HyperplaneBuckets) and by the vector cache of
+  * `KMeans.lloyd`.
   *
   * `ArrayData.toDoubleArray` on `UnsafeArrayData` is a raw memory copy
   * that IGNORES the null bitmap — a null array element silently reads
@@ -23,7 +24,7 @@ object Vec {
       if (a.isNullAt(i))
         throw new IllegalArgumentException(
           s"$who: null element at index $i of an input vector — " +
-            "filter or impute dirty vectors upstream of the index")
+            "filter or impute dirty vectors upstream")
       i += 1
     }
     a.toDoubleArray()

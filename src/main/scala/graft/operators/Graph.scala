@@ -142,7 +142,7 @@ object Graph {
     val top = pageRankScores(docs, n, iterations)
       .orderBy(col("rank").desc, col("doc_id")).limit(20)
       .collect()
-    topRows(docs.sparkSession, top, Seq("doc_id" -> false, "rank" -> false),
+    topRows(docs.sparkSession, top, Seq("doc_id" -> true, "rank" -> false),
       col("rank").desc, col("doc_id"))
   }
 
@@ -284,7 +284,7 @@ object Graph {
           case (id, a, _) => (-a, id) })
     } finally cached.foreach(_.unpersist(blocking = false))
     topRows(spark, top.map { case (id, a, h) => Row(id.map(Long.box).orNull, a, h) },
-      Seq("doc_id" -> false, "auth" -> true, "hub" -> true),
+      Seq("doc_id" -> true, "auth" -> true, "hub" -> true),
       col("auth").desc, col("doc_id"))
   }
 

@@ -1,10 +1,12 @@
 package graft.operators
 
-import graft.functions.NearestCells
+import graft.functions.{NearestCells, Vec}
 import org.apache.spark.SparkException
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** K-means suite with the reference's semantics, re-expressed Spark-first.
   *
@@ -17,17 +19,21 @@ import org.apache.spark.sql.functions._
   * k×dim array. One Lloyd round is one Spark job of one stage with no
   * shuffle — the reference's one MR job per iteration (map assigns,
   * reducer averages; src/Kmeans.java:170-183) with the reduce folded
-  * into the map side, as MLlib's KMeans runs it: each task assigns its
-  * rows in-plan and folds them into k×dim sums and k counts held in
+  * into the map side, as MLlib's KMeans runs it. [[lloyd]] plans the
+  * input once and caches only its vectors, as an `RDD[Array[Double]]`;
+  * each task assigns its cached rows with a driver-built nearest-centre
+  * function and folds them into k×dim sums and k counts held in
   * primitive arrays, and the driver merges one small array pair per
   * task. Driver state per round is O(tasks × k × dim), whatever the
-  * input size.
+  * input size, and no round plans a query.
   *
-  * Assignment is in-plan and codegen'd, no UDF: EuclideanSq and the
-  * reference's SqEuclidean through the native NearestCells kernel
-  * (primitive loops, codegen cached across iterations), Normalized as
-  * pure Catalyst expressions (zip_with/aggregate/array_min/
-  * array_position).
+  * [[assign]], [[wcss]] and [[repRows]] are in-plan and codegen'd, no
+  * UDF: EuclideanSq and the reference's SqEuclidean through the native
+  * NearestCells kernel (primitive loops, codegen cached across calls),
+  * Normalized as pure Catalyst expressions (zip_with/aggregate/
+  * array_min/array_position). A Lloyd round picks the same cluster for
+  * every row as [[assign]] does (KMeansLloydSpec pins the two against
+  * each other).
   */
 object KMeans {
 
@@ -82,12 +88,23 @@ object KMeans {
       })
       aggregate(terms, lit(0.0), (acc, x) => acc + x)
     }
-    def distLocal(p: Array[Double], q: Array[Double]): Double =
-      p.zip(q).map { case (a, b) =>
-        val den = math.abs(a) + math.abs(b)
-        if (den == 0.0) { if (zeroSafe) 0.0 else Double.NaN }
-        else math.pow((math.abs(a) - math.abs(b)) / den, 2)
-      }.sum
+    /** [[dist]] term for term: `pow(t, 2)` as `t * t` (StrictMath.pow
+      * special-cases y == 2 to exactly that), the same 0/0 rule, a
+      * left-to-right sum from 0.0. A Lloyd round assigns with it.
+      */
+    def distLocal(p: Array[Double], q: Array[Double]): Double = {
+      var d = 0.0
+      var i = 0
+      while (i < p.length) {
+        val a = math.abs(p(i))
+        val b = math.abs(q(i))
+        val den = a + b
+        d += (if (den == 0.0) { if (zeroSafe) 0.0 else Double.NaN }
+              else { val t = (a - b) / den; t * t })
+        i += 1
+      }
+      d
+    }
   }
 
   /** 1-based cluster id of the nearest center; ties break to the lowest
@@ -103,13 +120,13 @@ object KMeans {
     * rule and NaN-above-everything order, but primitive loops instead of
     * per-element interpreted HOF evaluation — and since the centers live
     * in a kernel REFERENCE object rather than as plan literals, the
-    * generated code is identical across Lloyd iterations, so codegen
-    * compiles once per training run instead of once per iteration. The
-    * kernel is stricter than the expression on dirty input: a ragged
-    * vector or a null element fails with a named IllegalArgumentException
-    * where the expression would yield a null cluster. Normalized keeps
-    * the expression form: its golden semantics include a per-element
-    * 0/0 rule the kernel has no business reimplementing.
+    * generated code is identical whatever the centers, so codegen
+    * compiles once, not once per center set. The kernel is stricter than
+    * the expression on dirty input: a ragged vector or a null element
+    * fails with a named IllegalArgumentException where the expression
+    * would yield a null cluster. Normalized keeps the expression form:
+    * its golden semantics include a per-element 0/0 rule the kernel has
+    * no business reimplementing ([[nearest]] mirrors it for [[lloyd]]).
     */
   def assignExpr(vec: Column, centers: Seq[Seq[Double]], metric: Metric): Column =
     metric match {
@@ -130,43 +147,64 @@ object KMeans {
              metric: Metric): DataFrame =
     df.withColumn("cluster", assignExpr(col(vecCol), centers.map(_.toSeq).toSeq, metric))
 
-  /** One Lloyd round: per-cluster coordinate sums (row-major k×dim) and
-    * row counts of `data` assigned to `centers`. One job, one stage: each
-    * task folds its rows, in row order, into primitive arrays and returns
-    * them as its task result — never an accumulator, which a retried task
-    * would add twice — and the driver adds them up in partition order.
-    * The caller's `sum / count.toDouble` is what Spark's `avg` computes.
-    * On integer-valued vectors (PM2.5) every sum is exact, so no merge
-    * order can move a mean; on general doubles the order is fixed by the
-    * partitioning.
+  /** The nearest-centre function of a Lloyd round: for a dense vector,
+    * the 1-based cluster [[assignExpr]] picks, minus one. EuclideanSq and
+    * SqEuclidean call the same [[graft.functions.NearestCellsKernel]]
+    * `best` core the in-plan assign uses. Normalized scans
+    * [[Normalized.distLocal]] with `best`'s
+    * `array_position(d, array_min(d))` argmin — first index of the
+    * minimum, NaN above everything. A vector of another length than the
+    * centres fails as ragged under every metric.
     */
-  private def roundSums(data: DataFrame, vecCol: String, centers: Array[Array[Double]],
+  private[graft] def nearest(centers: Array[Array[Double]], metric: Metric): Array[Double] => Int =
+    metric match {
+      case EuclideanSq | SqEuclidean =>
+        val kernel = NearestCells.kernel(centers, absolute = metric == SqEuclidean)
+        u => kernel.best(u)
+      case m: Normalized =>
+        val dim = centers.head.length
+        u => {
+          require(u.length == dim, s"ragged vector: ${u.length} dims vs centroid $dim")
+          // from a NaN start the first centre at a number takes over;
+          // with every distance NaN, centre 0 stays best
+          var best = 0
+          var bestD = Double.NaN
+          for (c <- centers.indices) {
+            val d = m.distLocal(u, centers(c))
+            if (d < bestD || (bestD != bestD && d == d)) { bestD = d; best = c }
+          }
+          best
+        }
+    }
+
+  /** One Lloyd round: per-cluster coordinate sums (row-major k×dim) and
+    * row counts of `vecs` assigned to `centers` by [[nearest]]. One job,
+    * one stage: each task folds its rows, in row order, into primitive
+    * arrays and returns them as its task result — never an accumulator,
+    * which a retried task would add twice — and the driver adds them up
+    * in partition order. The caller's `sum / count.toDouble` is what
+    * Spark's `avg` computes. On integer-valued vectors (PM2.5) every sum
+    * is exact, so no merge order can move a mean; on general doubles the
+    * order is fixed by the partitioning.
+    */
+  private def roundSums(vecs: RDD[Array[Double]], centers: Array[Array[Double]],
                         metric: Metric): (Array[Double], Array[Long]) = {
     val k = centers.length
     val dim = centers.head.length
-    val partials = assign(data, vecCol, centers, metric)
-      .select(col("cluster"), col(vecCol).cast("array<double>"))
-      .queryExecution.toRdd
-      .mapPartitions { rows =>
-        val sums = new Array[Double](k * dim)
-        val counts = new Array[Long](k)
-        rows.foreach { r =>
-          // every metric assigns a null cluster to a null, ragged or
-          // null-element vector (the kernel metrics fail on the last two
-          // first), so a clustered row is dense with `dim` elements
-          if (r.isNullAt(0))
-            throw new IllegalArgumentException("k-means round: a row has a null " +
-              "cluster (its vector is null, ragged or has a null element) — " +
-              "filter or impute dirty vectors before training")
-          val c = r.getInt(0) - 1
-          val v = r.getArray(1)
-          val off = c * dim
-          var i = 0
-          while (i < dim) { sums(off + i) += v.getDouble(i); i += 1 }
-          counts(c) += 1
-        }
-        Iterator.single((sums, counts))
+    val near = nearest(centers, metric)
+    val partials = vecs.mapPartitions { rows =>
+      val sums = new Array[Double](k * dim)
+      val counts = new Array[Long](k)
+      rows.foreach { v =>
+        // `near` fails a ragged vector, so `v` has `dim` elements
+        val c = near(v)
+        val off = c * dim
+        var i = 0
+        while (i < dim) { sums(off + i) += v(i); i += 1 }
+        counts(c) += 1
       }
+      Iterator.single((sums, counts))
+    }
     val perTask = try partials.collect() catch {
       // a contract violation in a task surfaces as itself, not as the
       // job-abort SparkException that wraps it
@@ -187,9 +225,18 @@ object KMeans {
 
   /** Driver-side Lloyd iteration (the reference's while loop at
     * src/Kmeans.java:170-183 / kmeans.java:135-153 without the HDFS
-    * centroid round-trip), one job per round for every metric. A row
-    * whose vector is null, ragged or has a null element fails the round
-    * with an IllegalArgumentException.
+    * centroid round-trip), one job per round for every metric.
+    *
+    * The input is planned once: its `vecCol`, cast to `array<double>`,
+    * becomes an `RDD[Array[Double]]` of dense vectors, persisted
+    * MEMORY_AND_DISK when more than one round reads it (Spark's MLlib
+    * caches its training set for the same reason) and released in a
+    * `finally`. Round 1's job fills that cache; later rounds read
+    * primitive arrays, with no Catalyst planning and no re-evaluation of
+    * whatever the caller stacked under `df`. The caller's DataFrame is
+    * never persisted or unpersisted here, so a cache the caller holds
+    * survives the call. A row whose vector is null, ragged or has a
+    * null element fails the round with an IllegalArgumentException.
     *
     * @param stopOnZeroDelta variant-2 stop rule (kmeans.java:221-224):
     *   stop when the total old-vs-new center distance is exactly 0.
@@ -205,24 +252,23 @@ object KMeans {
   def lloyd(df: DataFrame, vecCol: String, init: Array[Array[Double]],
             metric: Metric, maxIter: Int, stopOnZeroDelta: Boolean = false): Fit = {
     val dim = init.head.length
-    // Every iteration re-scans the training set; without a persist that is
-    // maxIter× the source scan AND re-evaluation of whatever vector-prep
-    // expressions the caller stacked under `df` (Spark's MLlib caches its
-    // training set for the same reason). Skip for a single pass (cache
-    // written, never read back) AND for inputs the CALLER already
-    // persisted: persist() on a cached df is a no-op, but the paired
-    // unpersist() would evict the caller's cache as a side effect.
-    val cache = maxIter > 1 &&
-      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val data = if (cache)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
+    val vecs = df.select(col(vecCol).cast("array<double>")).queryExecution.toRdd
+      .map { r =>
+        if (r.isNullAt(0))
+          throw new IllegalArgumentException("k-means training: a row has a null " +
+            "vector — filter or impute dirty vectors before training")
+        Vec.dense(r.getArray(0), "k-means training")
+      }
+    // a single round reads the vectors once: a cache would be written,
+    // never read back
+    val cache = maxIter > 1
+    if (cache) vecs.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       var centers = init.map(_.clone())
       var iter = 0
       var converged = false
       while (iter < maxIter && !converged) {
-        val (sums, counts) = roundSums(data, vecCol, centers, metric)
+        val (sums, counts) = roundSums(vecs, centers, metric)
         val next = Array.tabulate(centers.length) { c =>
           if (counts(c) == 0L) centers(c)
           else Array.tabulate(dim)(i => sums(c * dim + i) / counts(c).toDouble)
@@ -235,7 +281,7 @@ object KMeans {
         centers = next
       }
       Fit(centers, iter, converged)
-    } finally if (cache) data.unpersist(blocking = false)
+    } finally if (cache) vecs.unpersist(blocking = false)
   }
 
   /** Within-cluster sum of squared (metric) distances — the quantity that

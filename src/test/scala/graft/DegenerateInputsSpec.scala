@@ -330,15 +330,24 @@ class DegenerateInputsSpec extends SparkSpec {
     // the null vertex adds no edge and no mass, so the top-20 is the
     // top-20 without it
     assert(rows(Graph.hits(docs(ids :+ None), n = 40)) === rows(Graph.hits(docs(ids), n = 40)))
-    // a graph with fewer than 20 vertices shows its row: auth 0 and
-    // hub 0, last. The result's doc_id column is declared non-nullable,
-    // so the null reads back as 0 there — the rows the DataFrame
-    // normalize returned, pinned value for value
+    // a graph with fewer than 20 vertices shows its row: doc_id null,
+    // auth 0 and hub 0, last. The real rows are the ones the DataFrame
+    // normalize returned, pinned value for value (the null row used to
+    // read back as doc_id 0, through a non-nullable column)
     val small = rows(Graph.hits(docs((0L until 6L).map(Option(_)) :+ None), n = 6))
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(small === Seq((0L, 235294228373L, 15151518149L), (1L, 235294228373L, 242424290389L),
-      (3L, 235294228373L, 15151518149L), (4L, 235294228373L, 242424290389L),
-      (2L, 29411778546L, 242424290389L), (5L, 29411778546L, 242424290389L), (0L, 0L, 0L)))
+      .map(r => (Option(r.getAs[java.lang.Long](0)).map(_.longValue), r.getLong(1), r.getLong(2)))
+    assert(small === Seq((Some(0L), 235294228373L, 15151518149L),
+      (Some(1L), 235294228373L, 242424290389L), (Some(3L), 235294228373L, 15151518149L),
+      (Some(4L), 235294228373L, 242424290389L), (Some(2L), 29411778546L, 242424290389L),
+      (Some(5L), 29411778546L, 242424290389L), (None, 0L, 0L)))
+  }
+
+  test("pageRank: a null doc_id reads back as null, not as vertex 0") {
+    import spark.implicits._
+    val docs = ((0L until 6L).map(Option(_)) :+ None).map(i => (i, "t")).toDF("doc_id", "text")
+    val ids = Graph.pageRank(docs, n = 6).collect().toSeq
+      .map(r => Option(r.getAs[java.lang.Long](0)).map(_.longValue))
+    assert(ids.count(_.isEmpty) === 1 && ids.flatten.sorted === (0L until 6L), ids)
   }
 
   test("external-query probes: empty workload in, empty result out") {
@@ -375,6 +384,32 @@ class DegenerateInputsSpec extends SparkSpec {
       assert(msgs.toLowerCase.contains("empty"),
         s"$name on empty corpus: wanted a pointed 'empty' message, got: $msgs")
     }
+  }
+
+  test("k-means: lloyd releases its vector cache and leaves the caller's cache alone") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val df = Seq(Seq(1.0, 2.0), Seq(9.0, 8.0), Seq(2.0, 1.0), Seq(8.0, 9.0))
+      .map(Tuple1(_)).toDF("vec")
+    val dirty = Seq(Some(Seq[Option[Double]](Some(1.0), Some(2.0))),
+      Some(Seq[Option[Double]](Some(3.0), None))).map(Tuple1(_)).toDF("vec")
+    val init = Array(Array(1.0, 2.0), Array(9.0, 8.0))
+    val before = sc.getPersistentRDDs.keySet
+    for (m <- Seq(KMeans.SqEuclidean, KMeans.Normalized())) {
+      KMeans.lloyd(df, "vec", init, m, maxIter = 3)
+      assert(sc.getPersistentRDDs.keySet === before, s"$m, after a run")
+      KMeans.lloyd(df, "vec", init, m, maxIter = 1)
+      assert(sc.getPersistentRDDs.keySet === before, s"$m, after one round")
+      intercept[IllegalArgumentException](KMeans.lloyd(dirty, "vec", init, m, maxIter = 3))
+      assert(sc.getPersistentRDDs.keySet === before, s"$m, after a failed round")
+    }
+    // a frame the caller persisted stays persisted
+    val held = df.persist()
+    try {
+      held.count()
+      KMeans.lloyd(held, "vec", init, KMeans.EuclideanSq, maxIter = 3)
+      assert(held.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally held.unpersist()
   }
 
   test("k-means: a null element, null vector or ragged vector fails with a named error") {

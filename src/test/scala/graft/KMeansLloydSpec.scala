@@ -152,10 +152,13 @@ class KMeansLloydSpec extends SparkSpec {
   }
 
   test("each round is one job of one stage") {
+    import spark.implicits._
     val sc = spark.sparkContext
-    // cached by the caller, so the count holds from the first round on
-    val df = frame(3).persist()
-    df.count()
+    // cached by the caller, and not: a local frame with no shuffle, whose
+    // vector cache is filled by round 1's own job
+    val cached = frame(3).persist()
+    cached.count()
+    val uncached = rows.map(_.toSeq).toDF("vec")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val listener = new SparkListener {
@@ -163,7 +166,7 @@ class KMeansLloydSpec extends SparkSpec {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         stages.incrementAndGet()
     }
-    for (m <- metrics) {
+    for ((input, df) <- Seq("cached" -> cached, "uncached" -> uncached); m <- metrics) {
       jobs.set(0); stages.set(0)
       sc.addSparkListener(listener)
       try {
@@ -174,9 +177,44 @@ class KMeansLloydSpec extends SparkSpec {
         while (stages.get() < fit.iterations && System.nanoTime() < deadline)
           Thread.sleep(20)
         Thread.sleep(200)
-        assert((jobs.get(), stages.get()) === (fit.iterations, fit.iterations), s"$m")
+        assert((jobs.get(), stages.get()) === (fit.iterations, fit.iterations),
+          s"$m, $input input")
       } finally sc.removeSparkListener(listener)
     }
-    df.unpersist()
+    cached.unpersist()
+  }
+
+  test("a round assigns every row to the cluster KMeans.assign gives it") {
+    import spark.implicits._
+    // centre 0 has zero coordinates, so under Normalized(zeroSafe = false)
+    // a row with zeros there is NaN from centre 0 and must fall through
+    // to a finite later centre; centre 4 duplicates centre 1 (every
+    // distance ties)
+    val centers = Array(Array(0.0, 5.0, 0.0), Array(1.0, 2.0, 3.0), Array(3.0, 2.0, 1.0),
+      Array(-1.0, 0.0, 4.0), Array(1.0, 2.0, 3.0))
+    val rnd = new scala.util.Random(5)
+    val edge = Seq(
+      Array(2.0, 2.0, 2.0),                 // ties centres 1, 2 and 4
+      Array(-2.0, -2.0, -2.0),              // the same under |.|, not under EuclideanSq
+      Array(0.0, 5.0, 0.0),                 // 0/0 against centre 0
+      Array(0.0, 1.0, 0.0),                 // 0/0 against centre 0 only
+      Array(0.0, 0.0, 0.0),                 // 0/0 against centres 0 and 3
+      Array(-0.0, 0.0, 4.0),                // 0/0 against centre 3, negative zero
+      Array(1e200, -1e200, 1e200),          // squared distances overflow to +Inf
+      Array(Double.PositiveInfinity, 0.0, 1.0),
+      Array(Double.NaN, 1.0, 2.0))          // NaN from every centre
+    val signed = Seq.fill(60)(Array.fill(3)((rnd.nextInt(13) - 6).toDouble))
+    val vecs = (edge ++ signed).toIndexedSeq
+    val df = vecs.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toDF("id", "vec")
+    for (m <- metrics) {
+      val local = vecs.map(KMeans.nearest(centers, m)).map(_ + 1)
+      val inPlan = KMeans.assign(df, "vec", centers, m).orderBy("id")
+        .select("cluster").collect().map(_.getInt(0)).toSeq
+      assert(local === inPlan, s"$m")
+    }
+    // the 0/0 rule and the NaN rule both decide a row here
+    val lenient = vecs.map(KMeans.nearest(centers, Normalized()))
+    val strict = vecs.map(KMeans.nearest(centers, Normalized(zeroSafe = false)))
+    assert((lenient(2), strict(2)) === (0, 1) && strict(3) === 1)
   }
 }
