@@ -7,13 +7,14 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition,
   PartitionReader, PartitionReaderFactory, Scan, ScanBuilder,
   SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -126,14 +127,12 @@ private[sources] class Pm25ReaderFactory(requiredNames: Array[String],
 private[sources] class Pm25Reader(file: String, requiredNames: Array[String],
                                   hadoopProps: Map[String, String])
     extends PartitionReader[InternalRow] {
-  // source-position and type per required field, resolved once
+  // source position per required field, resolved once
   private val fieldIdx: Array[Int] = requiredNames.map { n =>
     val i = Pm25.schema.fieldNames.indexOf(n)
     require(i >= 0, s"unknown pm25 column $n")
     i
   }
-  private val isInt: Array[Boolean] =
-    fieldIdx.map(i => Pm25.schema.fields(i).dataType == IntegerType)
 
   private val in = {
     val p = new Path(file)
@@ -143,29 +142,20 @@ private[sources] class Pm25Reader(file: String, requiredNames: Array[String],
   }
   private var current: InternalRow = _
 
+  private def nextLine(): UTF8String = {
+    val text = in.readLine()
+    if (text == null) null else UTF8String.fromString(text)
+  }
+
+  // cells parse by Pm25.read's rule (Pm25Line), so the two readers
+  // agree on every line, dirty ones included
   override def next(): Boolean = {
-    var line = in.readLine()
-    while (line != null && line.trim.isEmpty) line = in.readLine()
-    if (line == null) { current = null; false }
-    else {
-      val toks = line.split(",", -1)
-      val vals = new Array[Any](fieldIdx.length)
-      var j = 0
-      while (j < fieldIdx.length) {
-        val t = if (fieldIdx(j) < toks.length) toks(fieldIdx(j)).trim else null
-        vals(j) =
-          if (t == null || t.isEmpty) null
-          // toIntOption, not toInt: the CSV-based Pm25.read is
-          // permissive (a non-numeric cell parses as null) and the two
-          // readers are parity-tested over the same declared layout —
-          // this one must not crash the job where its sibling yields null
-          else if (isInt(j)) t.toIntOption.map(Int.box).orNull
-          else UTF8String.fromString(t)
-        j += 1
-      }
-      current = InternalRow.fromSeq(vals.toSeq)
-      true
-    }
+    var line = nextLine()
+    while (line != null && !Pm25Line.keep(line)) line = nextLine()
+    current =
+      if (line == null) null
+      else new GenericInternalRow(fieldIdx.map(f => Pm25Line.cell(line, f)))
+    line != null
   }
   override def get(): InternalRow = current
   override def close(): Unit = in.close()

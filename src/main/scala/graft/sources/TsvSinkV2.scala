@@ -65,8 +65,8 @@ private[sources] class TsvSinkTable(path: String, writeSchema: StructType)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write {
-        // reject unsupported column types at BUILD time: the per-row
-        // check in fmt still guards, but without this a full
+        // reject unsupported column types at BUILD time: the writer's
+        // formatter lookup still guards, but without this a full
         // distributed job launches, opens temp files on every task,
         // and fails row-by-row for an error knowable before any task
         for (f <- info.schema().fields)
@@ -130,36 +130,44 @@ private[sources] class TsvDataWriter(dir: String, schema: StructType,
 
   // A string cell must never forge a column/row boundary: escape the
   // separator chars (and backslash, so the escaping is reversible).
-  private def esc(s: String): String =
+  private def writeEscaped(s: String): Unit =
     if (s.indexOf('\t') < 0 && s.indexOf('\n') < 0 &&
-        s.indexOf('\r') < 0 && s.indexOf('\\') < 0) s
+        s.indexOf('\r') < 0 && s.indexOf('\\') < 0) out.write(s)
     else {
-      val sb = new java.lang.StringBuilder(s.length + 8)
-      s.foreach {
-        case '\t' => sb.append("\\t")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\\' => sb.append("\\\\")
-        case c    => sb.append(c)
+      var i = 0
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '\t' => out.write("\\t")
+          case '\n' => out.write("\\n")
+          case '\r' => out.write("\\r")
+          case '\\' => out.write("\\\\")
+          case c    => out.write(c)
+        }
+        i += 1
       }
-      sb.toString
     }
 
-  private def fmt(row: InternalRow, i: Int, dt: DataType): String =
-    if (row.isNullAt(i)) ""
-    else dt match {
-      case IntegerType => row.getInt(i).toString
-      case LongType    => row.getLong(i).toString
-      case DoubleType  => row.getDouble(i).toString
-      case BooleanType => row.getBoolean(i).toString
-      case StringType  => esc(row.getUTF8String(i).toString)
-      case other => throw new UnsupportedOperationException(
-        s"TsvSinkV2 supports atomic columns only, got $other")
-    }
+  /** Writes a non-null cell of type `dt` straight to `out`. */
+  private def formatter(dt: DataType): (InternalRow, Int) => Unit = dt match {
+    case IntegerType => (r, i) => out.write(Integer.toString(r.getInt(i)))
+    case LongType    => (r, i) => out.write(java.lang.Long.toString(r.getLong(i)))
+    case DoubleType  => (r, i) => out.write(java.lang.Double.toString(r.getDouble(i)))
+    case BooleanType => (r, i) => out.write(if (r.getBoolean(i)) "true" else "false")
+    case StringType  => (r, i) => writeEscaped(r.getUTF8String(i).toString)
+    case other => throw new UnsupportedOperationException(
+      s"TsvSinkV2 supports atomic columns only, got $other")
+  }
+  // one formatter per column, resolved once per writer
+  private val cells = schema.fields.map(f => formatter(f.dataType))
 
+  /** Cells tab-separated, NULL as the empty string, one line per row. */
   override def write(row: InternalRow): Unit = {
-    out.write(schema.fields.indices
-      .map(i => fmt(row, i, schema.fields(i).dataType)).mkString("\t"))
+    var i = 0
+    while (i < cells.length) {
+      if (i > 0) out.write('\t')
+      if (!row.isNullAt(i)) cells(i)(row, i)
+      i += 1
+    }
     out.write('\n')
   }
 
@@ -175,8 +183,8 @@ private[sources] class TsvDataWriter(dir: String, schema: StructType,
 }
 
 private[sources] object TsvDataWriter {
-  /** The type set fmt renders — kept next to the writer so the
-    * build-time validation and the per-row formatter cannot drift.
+  /** The type set the writer's formatters render — kept next to the
+    * writer so the build-time validation and the formatters cannot drift.
     */
   def supported(dt: DataType): Boolean = dt match {
     case IntegerType | LongType | DoubleType | BooleanType | StringType => true

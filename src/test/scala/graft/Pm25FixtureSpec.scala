@@ -4,13 +4,16 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
-import graft.sources.{Pm25, Pm25V2}
+import graft.sources.{Pm25, Pm25Cell, Pm25Hours, Pm25V2}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 
 /** The pm25 readers on a generated 27-column fixture: the same checks as
   * the reference-bound tests in Pm25V2Spec and KMeansGoldenSpec (v2/v1
   * value parity, column pruning, `centersFrom` on a nested tree and on
-  * CR-only line ends), needing no reference bytes.
+  * CR-only line ends), needing no reference bytes. A dirty fixture holds
+  * both readers to Spark's CSV reader cell for cell.
   */
 class Pm25FixtureSpec extends SparkSpec {
 
@@ -37,11 +40,13 @@ class Pm25FixtureSpec extends SparkSpec {
   private def write(p: Path, text: String): Unit =
     Files.write(p, text.getBytes(StandardCharsets.UTF_8))
 
-  private def v2 = spark.read.format(classOf[Pm25V2].getName).load(fixture)
+  private def v2 = v2Of(fixture)
+  private def v2Of(path: String) = spark.read.format(classOf[Pm25V2].getName).load(path)
+  private def csvOf(path: String) = spark.read.schema(Pm25.schema).csv(path)
 
   test("generated fixture: v2 source matches the v1 CSV reader value for value") {
     val cols = Pm25.schema.fieldNames.map(col).toSeq
-    val want = Pm25.read(spark, fixture).select(cols: _*)
+    val want = csvOf(fixture).select(cols: _*)
       .collect().map(_.toString).sorted
     val got = v2.select(cols: _*).collect().map(_.toString).sorted
     assert(got.length === lines.length && got.toSeq === want.toSeq)
@@ -79,5 +84,83 @@ class Pm25FixtureSpec extends SparkSpec {
     write(dir.resolve("centers.txt"), centerLines.mkString("\r"))
     val got = Pm25.centersFrom(spark, dir.toString, skipCols = 3)
     assert(got.map(_.toSeq).toSeq === parsed(centerLines))
+  }
+
+  /** Int cells of every shape, each with the value Spark's CSV reader
+    * (`Integer.parseInt`, null where it throws) gives it.
+    */
+  private val oddInts: Seq[(String, Integer)] = Seq(
+    " 12" -> null, "12 " -> null, "\t5" -> null, "+12" -> 12, "-0" -> 0,
+    "012" -> 12, "-2147483648" -> Int.MinValue, "2147483648" -> null,
+    "1.5" -> null, "1e2" -> null, "abc" -> null, "٣" -> 3,
+    "１２" -> 12)
+  private val hourCells = (1 to 24).map(_.toString)
+  private def row(date: String, station: String, metric: String,
+                  hours: Seq[String]): String =
+    (Seq(date, station, metric) ++ hours).mkString(",")
+  private val dirtyLines: Seq[String] = Seq(
+    row("2015/01/01", "Dali", "PM2.5", "" +: hourCells.tail),
+    row("", "Dali", "PM2.5", hourCells),
+    "2015/01/03,Dali,PM2.5,1,2,3",
+    row("2015/01/04", "Dali", "PM2.5", hourCells :+ "99" :+ "x"),
+    row("2015/01/05", "Dali", "PM2.5",
+      oddInts.map(_._1) ++ hourCells.drop(oddInts.length)),
+    row("2015/01/06", " 大里 ", "PM\\2.5", hourCells))
+  /** The dirty lines with blank, all-space and tab-only lines between
+    * them, CRLF and LF line ends, and no newline after the last line.
+    */
+  private lazy val dirty: String = {
+    val Seq(l0, l1, l2, l3, l4, l5) = dirtyLines
+    val dir = Files.createTempDirectory("pm25-dirty")
+    write(dir.resolve("pm25.txt"), Seq(l0, "\r\n", "", "\r\n", l1, "\n", "   ", "\n",
+      l2, "\r\n", "\t\t", "\n", l3, "\n", l4, "\r\n", l5).mkString)
+    dir.toString
+  }
+
+  test("dirty fixture: both readers parse every cell as Spark's CSV reader does") {
+    val cols = Pm25.schema.fieldNames.map(col).toSeq
+    def rows(df: DataFrame): Seq[Seq[Any]] =
+      df.select(cols: _*).collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val want = rows(csvOf(dirty))
+    assert(want.length === dirtyLines.length)
+    assert(rows(Pm25.read(spark, dirty)) === want)
+    assert(rows(v2Of(dirty)) === want)
+    // the CSV reader's own reading of the odd int cells, pinned
+    val odd = Pm25.read(spark, dirty).filter(col("date") === "2015/01/05").head
+    assert(oddInts.indices.map(i => odd.get(3 + i)) === oddInts.map(_._2))
+  }
+
+  test("dirty fixture: vec is the hours as doubles, raw is the line") {
+    val got = Pm25.read(spark, dirty).collect()
+    for (r <- got) {
+      val hours = (0 until 24).map(h =>
+        if (r.isNullAt(3 + h)) null else r.getInt(3 + h).toDouble)
+      assert(r.getAs[Seq[Any]]("vec") === hours, r.getAs[String]("raw"))
+    }
+    assert(got.map(_.getAs[String]("raw").getBytes(StandardCharsets.UTF_8).toSeq)
+      .toSeq.sortBy(_.toString) ===
+      dirtyLines.map(_.getBytes(StandardCharsets.UTF_8).toSeq).sortBy(_.toString))
+  }
+
+  test("a line holding a quote fails both readers with a named error") {
+    val dir = Files.createTempDirectory("pm25-quote")
+    val quoted = row("\"2015/01/02\"", "Dali", "PM2.5", hourCells)
+    write(dir.resolve("pm25.txt"), lines.head + "\n" + quoted + "\n")
+    for (df <- Seq(Pm25.read(spark, dir.toString), v2Of(dir.toString))) {
+      val e = intercept[Exception](df.collect())
+      val chain = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists { case t: IllegalArgumentException =>
+          t.getMessage.contains("pm25 line holds a quote") && t.getMessage.contains(quoted)
+        case _ => false }, chain.mkString("; "))
+    }
+  }
+
+  test("a plan over vec parses no other cell") {
+    val plan = Pm25.read(spark, fixture).select("vec").queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions)
+    assert(!exprs.exists(_.exists(_.isInstanceOf[Pm25Cell])), plan.toString)
+    assert(exprs.exists(_.exists(_.isInstanceOf[Pm25Hours])), plan.toString)
+    val named = plan.collect { case p: Project => p.projectList.map(_.name) }.flatten
+    assert(named === Seq("vec"), plan.toString)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.sources.TsvSinkV2
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -110,4 +111,24 @@ class TsvSinkV2Spec extends SparkSpec {
     assert(leftovers.isEmpty, leftovers.map(_.getName).mkString(","))
   }
 
+  test("cells of every type render byte for byte") {
+    val dir = tmpDir()
+    val schema = StructType(Seq(
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("d0", DoubleType), StructField("d1", DoubleType),
+      StructField("d2", DoubleType), StructField("b", BooleanType),
+      StructField("n", StringType), StructField("s", StringType)))
+    val rows = Seq(
+      Row(-7, Long.MinValue, -0.0, Double.NaN, 1.0e-7, true, null, "a\tb\\c\nd\re \u00fc"),
+      Row(null, 42L, 1.0, Double.NegativeInfinity, 1.5e300, false, "x", ""))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+      .write.format(classOf[TsvSinkV2].getName).mode("append").save(dir)
+    val part = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-")).head
+    val want = "-7\t-9223372036854775808\t-0.0\tNaN\t1.0E-7\ttrue\t\t" +
+      "a\\tb\\\\c\\nd\\re \u00fc\n" +
+      "\t42\t1.0\t-Infinity\t1.5E300\tfalse\tx\t\n"
+    assert(Files.readAllBytes(part.toPath).toSeq ===
+      want.getBytes(java.nio.charset.StandardCharsets.UTF_8).toSeq)
+  }
 }
