@@ -19,10 +19,11 @@ object GraftSession {
     SparkSession.builder()
       .master(master)
       .appName(appName)
-      // engine optimizer extensions (e.g. HOF dot-product → native
-      // codegen expression); also reachable via the standard
-      // spark.sql.extensions=graft.plans.GraftExtensions conf for
-      // sessions not built through this factory
+      // engine extensions (the per-key top-k strategy and the SQL names
+      // vec_dot/vec_cosine of the native dot-product expression); also
+      // reachable via the standard spark.sql.extensions=
+      // graft.plans.GraftExtensions conf for sessions not built through
+      // this factory
       .withExtensions(new graft.plans.GraftExtensions()(_))
       .config("spark.sql.shuffle.partitions", defaultCpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -7,9 +7,13 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** Native Catalyst dot product over two `array<double>` columns, with
-  * whole-stage codegen (`doGenCode` emits the primitive loop inline in the
-  * generated stage — no UDF call boundary, no row conversion, no boxing).
+/** The engine's one dot-product kernel: a native Catalyst expression over
+  * two `array<double>` columns, with whole-stage codegen (`doGenCode`
+  * emits the primitive loop inline in the generated stage — no UDF call
+  * boundary, no row conversion, no boxing). Every dot-product entry point
+  * builds it: [[VectorFunctions]]' `dot`/`l2Norm`/`cosine`, the exact
+  * similarity joins in [[graft.operators.Similarity]], and the SQL names
+  * `vec_dot`/`vec_cosine` ([[graft.plans.GraftExtensions]]).
   *
   * Preference order for custom scalar ops (project brief): compose
   * built-ins < native Expression < Scala UDF. The built-in composition
@@ -17,17 +21,18 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * per-call array conversion. This expression is the top tier: the
   * generated code indexes both unsafe arrays directly.
   *
-  * Fold order is the same left-to-right accumulation as
-  * [[VectorFunctions.dot]] and the DuckDB oracle's `list_reduce`, so
-  * results are bit-identical across all three paths.
-  *
-  * Null semantics match binary arithmetic: null if either side is null.
-  * Null ELEMENTS fail loudly (same contract as the [[Vec.dense]] kernel
-  * family — `getDouble` on UnsafeArrayData ignores the null bitmap, so
-  * an unguarded loop would silently score a null as 0.0); the guard is
-  * emitted only when a side's array type admits null elements, so
-  * kernel-produced `containsNull=false` inputs pay nothing.
-  * Mismatched lengths use the common prefix (callers validate upstream).
+  * Contract (the [[Vec.dense]] kernel family's):
+  *   - null if either array is null (binary-arithmetic null semantics);
+  *   - a null ELEMENT fails with [[DotProduct.nullElement]] —
+  *     `getDouble` on UnsafeArrayData ignores the null bitmap, so an
+  *     unguarded loop would silently score a null as 0.0; the guard is
+  *     emitted only when a side's array type admits null elements, so
+  *     kernel-produced `containsNull=false` inputs pay nothing;
+  *   - a length mismatch fails with [[DotProduct.ragged]] — a
+  *     common-prefix clamp would launder upstream corruption into a
+  *     plausible score;
+  *   - otherwise the left-to-right IEEE fold, the same accumulation as
+  *     the DuckDB oracle's `list_reduce`, so results are bit-identical.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -45,7 +50,8 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (y.numElements() != n) throw DotProduct.ragged(n, y.numElements())
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -67,7 +73,9 @@ case class DotProduct(left: Expression, right: Expression)
              |    throw graft.functions.DotProduct.nullElement($i);""".stripMargin
         else ""
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |if ($b.numElements() != $n)
+         |  throw graft.functions.DotProduct.ragged($n, $b.numElements());
          |double ${ev.value}Acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $check
@@ -95,4 +103,10 @@ object DotProduct {
     new IllegalArgumentException(
       s"dot product: null element at index $i of an input vector — " +
         "filter or impute dirty vectors upstream of the scorer")
+
+  /** Called from generated code too — keep it a plain static-shaped helper. */
+  def ragged(n: Int, m: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"dot product: ragged vector: $n vs $m dims — " +
+        "filter or repair dirty vectors upstream of the scorer")
 }

@@ -5,23 +5,22 @@ import org.apache.spark.sql.functions._
 
 /** Column-level vector math over ArrayType embedding columns.
   *
-  * Built from `zip_with`/`aggregate` (higher-order functions) so the whole
-  * computation stays inside Catalyst/whole-stage-codegen — no UDF
-  * serialization boundary, which matters when this runs over billions of
-  * rows. Inputs are cast to array<double> so float32 embeddings are
-  * computed in double (stable across engines).
-  *
-  * `aggregate` folds left-to-right, so summation order is deterministic
-  * and independent of partitioning (it is per-row).
+  * `dot`, `l2Norm` and `cosine` are the engine's only definitions of
+  * those three functions: each builds the native [[DotProduct]]
+  * expression, so they share its contract (null array → null; null
+  * element or length mismatch → a named error) and its left-to-right
+  * IEEE fold. The SQL names `vec_dot`/`vec_cosine` are these same
+  * expressions ([[graft.plans.GraftExtensions]]). Inputs are cast to
+  * array<double>, so float32 embeddings are computed in double (stable
+  * across engines).
   */
 object VectorFunctions {
   private def asD(c: Column): Column = c.cast("array<double>")
 
   /** Dot product of two equal-length numeric arrays. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(asD(a), asD(b), (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+  def dot(a: Column, b: Column): Column = DotProduct(a, b)
 
-  /** Squared L2 distance. */
+  /** Squared L2 distance (`zip_with`/`aggregate`, folded left-to-right). */
   def sqDist(a: Column, b: Column): Column =
     aggregate(zip_with(asD(a), asD(b), (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
@@ -29,7 +28,10 @@ object VectorFunctions {
   /** L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity; 0.0 when either vector has zero norm. */
+  /** Cosine similarity; 0.0 when either vector has zero norm (decided
+    * before the pair's lengths are compared, so a zero-norm ragged pair
+    * scores 0.0 rather than failing).
+    */
   def cosine(a: Column, b: Column): Column = {
     val denom = l2Norm(a) * l2Norm(b)
     when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)

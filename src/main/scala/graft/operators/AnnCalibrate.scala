@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -146,7 +147,7 @@ object AnnCalibrate {
       .join(qv, col("qid") === col("q_vid"))
       .join(v, col("id") === col("vid"))
       .select(col("qid"), col("id").as("nid"),
-        Similarity.cosine(col("q_emb"), col("emb")).as("sim"))
+        VectorFunctions.cosine(col("q_emb"), col("emb")).as("sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("sim").desc, col("nid"))
     scored.withColumn("rk", row_number().over(w))

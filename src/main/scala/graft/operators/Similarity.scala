@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.AdcScore
+import graft.functions.VectorFunctions.{dot, l2Norm}
 import graft.plans.TopKPerKeyNode
 
 /** Similarity search over an embedding column (ArrayType(FloatType)).
@@ -59,32 +60,6 @@ object Similarity {
                    k: Int): DataFrame =
     TopKPerKeyNode.topKPerKey(scored, Seq("qid"), order, k)
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** Codegen'd dot product for the O(pairs) join hot path: the native
-    * [[graft.functions.DotProduct]] expression (same left-to-right IEEE
-    * fold as [[dot]] — bit-identical results). The built-in HOF composition
-    * is interpreted per element (~5× slower over a 4M-pair join) and a
-    * Scala UDF pays per-call array conversion; the native expression
-    * indexes both unsafe arrays inline in the generated stage.
-    */
-  private def dotFast(a: Column, b: Column): Column =
-    graft.functions.DotProduct(a, b)
-
-  /** sqrt(Σx²) — spelled as the self-dot so [[graft.plans.RewriteHofDotProduct]]
-    * rewrites it to the native HofDotProduct expression (the previous
-    * `aggregate(transform(v, x*x), …)` AST evaded the rule and ran the
-    * interpreted HOF per row on every normed scan). Same IEEE sequence —
-    * x·x terms summed left-to-right — so norms are bit-identical.
-    */
-  def l2Norm(v: Column): Column = sqrt(dot(v, v))
-
-  def cosine(a: Column, b: Column): Column = {
-    val (ad, bd) = (asDouble(a), asDouble(b))
-    dot(ad, bd) / (l2Norm(ad) * l2Norm(bd))
-  }
-
   /** (id, vec, norm) rows with the id's block in [0, blocks). */
   private def normed(df: DataFrame, idCol: String, vecCol: String) =
     df.select(col(idCol).as("id").cast("long"), asDouble(col(vecCol)).as("v"))
@@ -129,12 +104,13 @@ object Similarity {
     if (d == 0.0) 0.0 else acc / d
   }
 
-  /** Column form of [[simOf]]'s zero-norm rule for the join-shaped exact
-    * paths: same dotFast numerator, 0.0 whenever either norm is 0.
+  /** Column form of [[simOf]] for the join-shaped exact paths: the native
+    * [[graft.functions.DotProduct]] numerator (same fold, same ragged and
+    * null-element failures), 0.0 whenever either norm is 0.
     */
   private def simCol(av: Column, bv: Column, an: Column, bn: Column): Column = {
     val d = an * bn
-    when(d === 0.0, lit(0.0)).otherwise(dotFast(av, bv) / d)
+    when(d === 0.0, lit(0.0)).otherwise(dot(av, bv) / d)
   }
 
   /** Bounded insertion-list top-k of ONE query row against a candidate
@@ -206,8 +182,8 @@ object Similarity {
     * both).
     *
     * IEEE-order note: [[simOf]] is the same left-to-right loop as
-    * [[dot]]/dotFast, so results are bit-identical to the join formulation
-    * (and to the DuckDB oracle's list_reduce fold).
+    * [[graft.functions.DotProduct]], so results are bit-identical to the
+    * join formulation (and to the DuckDB oracle's list_reduce fold).
     */
   def bruteForceTopK(df: DataFrame, idCol: String, vecCol: String,
                      k: Int, blocks: Int = 8): DataFrame = {
@@ -258,8 +234,8 @@ object Similarity {
     * nested-loop against a |S|-row side, S = label vocabulary), then
     * one equi-join ON THE LABEL KEY delivers candidate batches; no
     * cross join of data-sized inputs ever appears. Exactness: the
-    * similarity is the canonical [[dotFast]] loop, so the result is
-    * bit-comparable to the oracle's fold.
+    * similarity is the canonical [[graft.functions.DotProduct]] loop, so
+    * the result is bit-comparable to the oracle's fold.
     */
   def hardNegatives(df: DataFrame, idCol: String, vecCol: String,
                     labelCol: String, k: Int = 3,

@@ -1,0 +1,33 @@
+package graft.plans
+
+import graft.functions.VectorFunctions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.Bridge
+
+/** Engine extensions, installed by [[graft.GraftSession]] (or by naming
+  * this class in `spark.sql.extensions`):
+  *
+  *   - the per-key top-k planner strategy (partial heaps before the
+  *     shuffle + rank-emitting final) — see [[TopKPerKeyNode]];
+  *   - `vec_dot(a, b)` and `vec_cosine(a, b)`, SQL names for
+  *     [[VectorFunctions.dot]] and [[VectorFunctions.cosine]]: the same
+  *     native [[graft.functions.DotProduct]] expressions the Column API
+  *     builds, so SQL and Column callers get identical plans and values.
+  */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
+    ext.injectFunction(binary("vec_dot", VectorFunctions.dot))
+    ext.injectFunction(binary("vec_cosine", VectorFunctions.cosine))
+  }
+
+  private def binary(name: String, f: (Column, Column) => Column) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classOf[graft.functions.DotProduct].getName, name),
+      (args: Seq[Expression]) => {
+        require(args.length == 2, s"$name takes 2 arguments, got ${args.length}")
+        Bridge.resolvable(f(Bridge.column(args(0)), Bridge.column(args(1))))
+      })
+}

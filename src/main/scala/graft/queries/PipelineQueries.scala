@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, VectorFunctions}
 import graft.operators.{AnnCalibrate, AnnParams, Components, Dedup, IndexStore, MultiModal, Retrieval, Sampling, Similarity}
 import graft.streaming.StateLog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -2264,8 +2264,8 @@ object PipelineQueries {
           col("embedding").as("eb"))
         a.join(b, col("a_id") + 1 === col("b_id"))
           .select(col("a_id"),
-            round(Similarity.cosine(col("ea"), col("eb")), 6).as("cos_full"),
-            round(Similarity.cosine(slice(col("ea"), 1, 16),
+            round(VectorFunctions.cosine(col("ea"), col("eb")), 6).as("cos_full"),
+            round(VectorFunctions.cosine(slice(col("ea"), 1, 16),
               slice(col("eb"), 1, 16)), 6).as("cos_16"))
           .orderBy("a_id")
       }),
@@ -2953,7 +2953,7 @@ object PipelineQueries {
         val pairs = emb.alias("c")
           .join(broadcast(qv), col("c.vec_id") =!= col("q_id"))
           .select(col("q_id"), col("c.vec_id").as("doc_id"),
-            Similarity.cosine(col("qvec"), col("c.embedding")).as("sim"))
+            VectorFunctions.cosine(col("qvec"), col("c.embedding")).as("sim"))
         val dense = graft.plans.TopKPerKeyNode.topKPerKey(pairs, Seq("q_id"),
             Seq(("sim", true), ("doc_id", false)), 10)
           .select(col("q_id"), col("doc_id"), col("rank").as("rd"))

@@ -14,6 +14,15 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** [[expression]] converted NOW: `ExpressionUtils.expression` wraps the
+    * column in a placeholder that only a consuming Dataset expands, so an
+    * expression handed straight to the analyzer (a SQL function builder
+    * registered through `SparkSessionExtensions.injectFunction`) must be
+    * converted eagerly.
+    */
+  def resolvable(c: Column): Expression =
+    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
   /** DataFrame from a (resolved) LogicalPlan — `Dataset.ofRows` went
     * `private[sql]` with the Spark 4 classic split; custom logical
     * operators (e.g. graft.plans.TopKPerKeyNode) still need a public

@@ -225,6 +225,18 @@ class DegenerateInputsSpec extends SparkSpec {
     val pairs = Similarity.cosineNearDupPairs(emb, "vec_id", "embedding", 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSet === Set((1L, 2L), (1L, 3L), (2L, 3L)))
+    // column-form cosine: the zero norm scores 0.0 (never a
+    // DIVIDE_BY_ZERO under ANSI mode), directly and inside the exact
+    // re-rank join of the ANN calibration audit
+    val colCos = emb.as("a").join(emb.as("b"), col("a.vec_id") === 4L)
+      .select(graft.functions.VectorFunctions.cosine(
+        col("a.embedding"), col("b.embedding")))
+      .collect().map(_.getDouble(0))
+    assert(colCos.length === 4 && colCos.forall(_ == 0.0), colCos.toSeq)
+    val reRank = graft.operators.AnnCalibrate.exactTopK(emb, "vec_id",
+        "embedding", Seq((4L, 1L), (1L, 4L)).toDF("qid", "id"), k = 1)
+      .collect().map(r => r.getAs[Double]("sim"))
+    assert(reRank.toSeq === Seq(0.0, 0.0))
   }
 
   test("ragged vectors fail loudly in the exact blocked scorer") {

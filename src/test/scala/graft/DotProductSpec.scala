@@ -1,22 +1,83 @@
 package graft
 
 import graft.functions.{DotProduct, VectorFunctions}
+import graft.operators.Similarity
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** The native codegen expression must agree bit-for-bit with the HOF
-  * composition, survive whole-stage codegen, and keep null semantics.
+/** The engine's one dot-product kernel: the native expression must agree
+  * bit-for-bit with Spark's own fold, survive whole-stage codegen, and
+  * hold ONE contract (null array → null; null element / ragged pair →
+  * named error; zero-norm cosine → 0.0) through every entry point, with
+  * codegen on and off.
   */
 class DotProductSpec extends SparkSpec {
+
+  /** Messages of `e` and its causes, joined. */
+  private def causes(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
+
+  /** Runs `body` with generated code forced on (whole-stage codegen, no
+    * interpreted fallback) or off (interpreted expression eval). */
+  private def withCodegen[T](on: Boolean)(body: => T): T = {
+    val confs = Seq(
+      "spark.sql.codegen.wholeStage" -> on.toString,
+      "spark.sql.codegen.factoryMode" -> (if (on) "CODEGEN_ONLY" else "NO_CODEGEN"))
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** One (a, b) row over an RDD scan, so the optimizer cannot fold or
+    * locally evaluate the expressions under test before they run. */
+  private def pair(a: Seq[java.lang.Double], b: Seq[java.lang.Double]): DataFrame = {
+    val t = ArrayType(DoubleType, containsNull = true)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(a, b)), 1),
+      StructType(Seq(StructField("a", t), StructField("b", t))))
+  }
+
+  private def d(xs: Double*): Seq[java.lang.Double] = xs.map(Double.box)
+
+  /** Every dot-product entry point over columns a and b. */
+  private val entryPoints: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "dot" -> (_.select(VectorFunctions.dot(col("a"), col("b")))),
+    "l2Norm" -> (_.select(VectorFunctions.l2Norm(col("a")))),
+    "cosine" -> (_.select(VectorFunctions.cosine(col("a"), col("b")))),
+    "vec_dot" -> (_.select(expr("vec_dot(a, b)"))),
+    "vec_cosine" -> (_.select(expr("vec_cosine(a, b)"))))
+
+  /** The exact blocked scorer and the simCol join scorer, over (a, b)
+    * spelled as a two-row corpus. */
+  private def scorers(a: Seq[java.lang.Double], b: Seq[java.lang.Double])
+      : Seq[(String, () => Array[Row])] = {
+    import spark.implicits._
+    val corpus = Seq((1L, a, 0), (2L, b, 1)).toDF("vec_id", "embedding", "label")
+    Seq(
+      "bruteForceTopKFor" -> (() => Similarity.bruteForceTopKFor(
+        corpus.filter(col("vec_id") === 1L), corpus.filter(col("vec_id") === 2L),
+        "vec_id", "embedding", k = 1).collect()),
+      "hardNegatives" -> (() => Similarity.hardNegatives(corpus, "vec_id",
+        "embedding", "label", k = 1, poolBound = 1L << 32).collect()))
+  }
+
+  private val modes = Seq(true, false)
 
   test("DotProduct == HOF dot, bit-identical, on real embeddings") {
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    // the reference is Spark's own interpreted fold, spelled here
+    val hof = aggregate(zip_with(col("a.v"), col("b.v"), (x, y) => x * y),
+      lit(0.0), (acc, x) => acc + x)
     val pairs = e.as("a").join(e.as("b"),
         col("a.vec_id") % 17 === col("b.vec_id") % 17 &&
           col("a.vec_id") < col("b.vec_id"))
-      .select(
-        DotProduct(col("a.v"), col("b.v")).as("native"),
-        VectorFunctions.dot(col("a.v"), col("b.v")).as("hof"))
+      .select(DotProduct(col("a.v"), col("b.v")).as("native"), hof.as("hof"))
+    val plan = pairs.queryExecution.optimizedPlan.toString
+    assert(plan.contains("lambda") && plan.contains("dotproduct"), plan.take(600))
     assert(pairs.count() > 0)
     assert(pairs.filter(col("native") =!= col("hof")).count() === 0)
   }
@@ -31,107 +92,88 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("null semantics: null if either side is null") {
-    import spark.implicits._
-    val df = Seq(
-      (Some(Seq(1.0, 2.0)), Some(Seq(3.0, 4.0))),
-      (None, Some(Seq(3.0, 4.0))),
-      (Some(Seq(1.0, 2.0)), None)).toDF("a", "b")
-      .select(DotProduct(col("a"), col("b")).as("d"))
-    val got = df.collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    assert(got.toSeq === Seq(Some(11.0), None, None))
+    for (on <- modes; (name, f) <- entryPoints;
+         (a, b) <- Seq[(Seq[java.lang.Double], Seq[java.lang.Double])](
+           (null, d(3.0, 4.0)), (d(1.0, 2.0), null))
+         if name != "l2Norm" || a == null) {
+      val r = withCodegen(on)(f(pair(a, b)).head)
+      assert(r.isNullAt(0), s"$name (codegen=$on) on a null array gave ${r.get(0)}")
+    }
   }
 
   test("null ELEMENTS fail loudly (the kernel family's contract)") {
     // getDouble on UnsafeArrayData ignores the null bitmap: unguarded,
     // a null element scores as 0.0 — a plausible-but-wrong similarity
-    // on the exact-cosine paths (HofDotProduct NULL-poisons instead,
-    // matching the HOF it replaces; this is the hand-placed fast path).
-    import spark.implicits._
-    val dirty = Seq((Seq[java.lang.Double](1.0, null, 3.0), Seq[java.lang.Double](1.0, 1.0, 1.0)))
-      .toDF("a", "b")
-    val e = intercept[Exception] {
-      dirty.select(DotProduct(col("a"), col("b"))).collect()
+    val dirty = (d(1.0, 2.0, 3.0).updated(1, null), d(1.0, 1.0, 1.0))
+    for (on <- modes) {
+      val runs = entryPoints.map { case (n, f) =>
+          n -> (() => f(pair(dirty._1, dirty._2)).collect()) } ++
+        scorers(dirty._1, dirty._2)
+      for ((name, run) <- runs) {
+        val msgs = causes(intercept[Exception](withCodegen(on)(run())))
+        assert(msgs.contains("null element"), s"$name (codegen=$on): $msgs")
+      }
     }
-    val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
-    assert(msgs.contains("null element"), msgs)
   }
 
-  test("interpreted eval path agrees with codegen (mismatched lengths = common prefix)") {
+  test("ragged pairs fail with the named error at every entry point, codegen on/off") {
+    // a common-prefix clamp would score [1,2,5]·[3,4] as 11.0 — a
+    // plausible number laundered out of a corrupt row
+    for (on <- modes) {
+      val runs = entryPoints.filter(_._1 != "l2Norm").map { case (n, f) =>
+          n -> (() => f(pair(d(1.0, 2.0, 5.0), d(3.0, 4.0))).collect()) } ++
+        scorers(d(1.0, 2.0, 5.0), d(3.0, 4.0))
+      for ((name, run) <- runs) {
+        val msgs = causes(intercept[Exception](withCodegen(on)(run())))
+        // the pair scorers may meet the rows in either order
+        assert(msgs.contains("ragged vector: 3 vs 2 dims") ||
+          (name == "hardNegatives" && msgs.contains("ragged vector: 2 vs 3 dims")),
+          s"$name (codegen=$on): $msgs")
+      }
+    }
+  }
+
+  test("zero-norm vectors score 0.0 at every entry point, codegen on/off") {
+    for (on <- modes) {
+      for ((name, f) <- entryPoints) {
+        val got = withCodegen(on)(f(pair(d(0.0, 0.0), d(1.0, 1.0))).head.getDouble(0))
+        assert(got === 0.0, s"$name (codegen=$on)")
+      }
+      for ((name, run) <- scorers(d(0.0, 0.0), d(1.0, 1.0))) {
+        val sims = withCodegen(on)(run()).map(r => r.getAs[Double]("sim"))
+        assert(sims.nonEmpty && sims.forall(_ == 0.0), s"$name (codegen=$on): ${sims.toSeq}")
+      }
+    }
+  }
+
+  test("l2Norm, cosine and vec_dot plan to the native dotproduct, with no lambda") {
+    Tables.embeddings(spark, sf).createOrReplaceTempView("emb_plan_test")
+    val e = spark.table("emb_plan_test")
+    for ((name, df) <- Seq(
+        "l2Norm" -> e.select(VectorFunctions.l2Norm(col("embedding"))),
+        "cosine" -> e.select(VectorFunctions.cosine(col("embedding"), col("embedding"))),
+        "vec_dot" -> spark.sql("SELECT vec_dot(embedding, embedding) FROM emb_plan_test"))) {
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert(plan.contains("dotproduct") && !plan.contains("lambda"), s"$name: ${plan.take(600)}")
+      assert(df.count() > 0)
+    }
+  }
+
+  test("vec_dot and vec_cosine are the Column API's expressions under SQL names") {
     import spark.implicits._
-    val df = Seq((Seq(1.0, 2.0, 5.0), Seq(3.0, 4.0))).toDF("a", "b")
-    val viaExpr = df.select(DotProduct(col("a"), col("b"))).head.getDouble(0)
-    assert(viaExpr === 11.0)
-  }
-
-  test("Similarity.l2Norm rewrites to the native dot expression") {
-    // l2Norm is spelled sqrt(dot(v, v)) precisely so the rule catches it
-    // — the transform-based AST it replaced evaded the matcher and ran
-    // interpreted on every normed corpus scan
-    val e = Tables.embeddings(spark, sf)
-      .select(col("embedding").cast("array<double>").as("v"))
-      .select(graft.operators.Similarity.l2Norm(col("v")).as("nrm"))
-    assert(e.queryExecution.optimizedPlan.toString.contains("hofdotproduct"),
-      e.queryExecution.optimizedPlan.toString.take(600))
-  }
-
-  test("optimizer rule rewrites the HOF dot idiom to the native expression") {
-    // both the Column-API spelling and raw SQL must land on HofDotProduct
-    val e = Tables.embeddings(spark, sf)
-      .select(col("embedding").cast("array<double>").as("v"))
-      .select(VectorFunctions.dot(col("v"), col("v")).as("d"))
-    assert(e.queryExecution.optimizedPlan.toString.contains("hofdotproduct"),
-      e.queryExecution.optimizedPlan.toString.take(600))
-    // SQL spelling over non-foldable input (a real scan: literal arrays
-    // are constant-folded and VALUES relations are locally evaluated
-    // before user rules run)
-    Tables.embeddings(spark, sf).createOrReplaceTempView("emb_rule_test")
-    val sqlDf = spark.sql(
-      """SELECT aggregate(zip_with(CAST(embedding AS ARRAY<DOUBLE>),
-        |                          CAST(embedding AS ARRAY<DOUBLE>),
-        |                          (x, y) -> x * y), 0.0D,
-        |       (acc, v) -> acc + v) AS d
-        |FROM emb_rule_test""".stripMargin)
-    assert(sqlDf.queryExecution.optimizedPlan.toString.contains("hofdotproduct"),
-      sqlDf.queryExecution.optimizedPlan.toString.take(600))
-    assert(sqlDf.count() > 0)
-  }
-
-  test("rewrite is observationally identical to the HOF: nulls and length mismatch") {
-    // zip_with pads the shorter array with nulls, so the HOF yields NULL
-    // on length mismatch and on null elements — the rewrite target must
-    // reproduce exactly that (it is NOT DotProduct's common-prefix rule)
-    val rows = spark.sql(
-      """SELECT aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D,
-        |       (acc, v) -> acc + v) AS d
-        |FROM VALUES
-        |  (array(1.0D, 2.0D), array(3.0D, 4.0D)),
-        |  (array(1.0D, 2.0D), array(3.0D, 4.0D, 5.0D)),
-        |  (array(1.0D, CAST(NULL AS DOUBLE)), array(3.0D, 4.0D)),
-        |  (CAST(NULL AS ARRAY<DOUBLE>), array(3.0D, 4.0D))
-        |  AS t(a, b)""".stripMargin)
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    assert(rows.toSeq === Seq(Some(11.0), None, None, None))
-  }
-
-  test("rewritten codegen path keeps HOF null-on-length-mismatch semantics") {
-    // slice() forces a genuine runtime length mismatch through the scan →
-    // zip_with pads with null → the rewritten HofDotProduct must yield
-    // NULL on every row, exactly like the interpreted HOF
-    val e = Tables.embeddings(spark, sf)
-      .select(col("embedding").cast("array<double>").as("v"))
-      .select(VectorFunctions.dot(col("v"), expr("slice(v, 1, 63)")).as("d"))
-    assert(e.queryExecution.optimizedPlan.toString.contains("hofdotproduct"))
-    assert(e.count() > 0)
-    assert(e.filter(col("d").isNotNull).count() === 0)
-  }
-
-  test("non-dot HOF folds are left alone") {
-    // a sum-of-squares aggregate over transform() must NOT be rewritten
-    val sq = spark.sql(
-      """SELECT aggregate(transform(array(1.0D, 2.0D), x -> x * x), 0.0D,
-        |  (acc, v) -> acc + v) AS s""".stripMargin)
-    assert(!sq.queryExecution.optimizedPlan.toString.contains("hofdotproduct"))
-    assert(sq.head.getDouble(0) === 5.0)
+    val df = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")
+    val viaSql = df.select(expr("vec_dot(a, b)"), expr("vec_cosine(a, b)"))
+    val viaCol = df.select(VectorFunctions.dot(col("a"), col("b")),
+      VectorFunctions.cosine(col("a"), col("b")))
+    def exprs(df: DataFrame) = df.queryExecution.analyzed.expressions.map {
+      case a: org.apache.spark.sql.catalyst.expressions.Alias => a.child
+      case other => other
+    }
+    exprs(viaSql).zip(exprs(viaCol)).foreach { case (s, c) =>
+      assert(s.semanticEquals(c), s"$s vs $c")
+    }
+    assert(viaSql.head === Row(11.0, 11.0 / (math.sqrt(5.0) * math.sqrt(25.0))))
+    val e = intercept[Exception](spark.sql("SELECT vec_dot(array(1.0D))").collect())
+    assert(causes(e).contains("vec_dot takes 2 arguments"), causes(e))
   }
 }

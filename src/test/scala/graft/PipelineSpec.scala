@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, MultiModal, Similarity}
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, VectorFunctions}
 import org.apache.spark.sql.functions._
 
 /** Property tests for the LLM-pipeline operators whose outputs are
@@ -125,7 +125,7 @@ class PipelineSpec extends SparkSpec {
         col("embedding").as("qe")), "qid")
       .join(embeddings.select(col("vec_id").as("nid"),
         col("embedding").as("ne")), "nid")
-      .withColumn("true_sim", Similarity.cosine(col("qe"), col("ne")))
+      .withColumn("true_sim", VectorFunctions.cosine(col("qe"), col("ne")))
     val bad = joined.filter(abs(col("sim") - col("true_sim")) > 1e-9).count()
     assert(bad === 0)
   }
@@ -139,7 +139,7 @@ class PipelineSpec extends SparkSpec {
         col("embedding").as("qe")), "qid")
       .join(embeddings.select(col("vec_id").as("nid"),
         col("embedding").as("ne")), "nid")
-      .withColumn("true_sim", Similarity.cosine(col("qe"), col("ne")))
+      .withColumn("true_sim", VectorFunctions.cosine(col("qe"), col("ne")))
     val bad = joined.filter(abs(col("sim") - col("true_sim")) > 1e-9).count()
     assert(bad === 0)
   }

@@ -32,10 +32,10 @@ class UdxSpec extends SparkSpec {
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
 
     assert(viaSql.nonEmpty && viaSql.keySet === viaCol.keySet)
+    // vec_dot/vec_cosine ARE the Column API's expressions: exact equality
     viaSql.foreach { case (k, (d, c, s)) =>
       val (d2, c2, s2) = viaCol(k)
-      assert(math.abs(d - d2) < 1e-9 && math.abs(c - c2) < 1e-9 &&
-        math.abs(s - s2) < 1e-9, s"$k")
+      assert(d === d2 && c === c2 && math.abs(s - s2) < 1e-9, s"$k")
     }
   }
 
@@ -48,16 +48,19 @@ class UdxSpec extends SparkSpec {
       "SELECT vec_dot(a, b), vec_cosine(b, a), vec_sqdist(a, b) FROM nullvec")
       .head
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2))
-    // null ELEMENTS get the family's pointed message, not the encoder's
-    // opaque NOT_NULL_ASSERT_VIOLATION
-    for (f <- Seq("vec_dot", "vec_cosine", "vec_sqdist")) {
+    // null ELEMENTS and ragged pairs get the family's pointed messages,
+    // not the encoder's opaque NOT_NULL_ASSERT_VIOLATION or a
+    // common-prefix sum
+    for (f <- Seq("vec_dot", "vec_cosine", "vec_sqdist");
+         (args, want) <- Seq(
+           ("array(1.0, CAST(NULL AS DOUBLE)), array(1.0, 1.0)", "null element"),
+           ("array(1.0, 2.0, 5.0), array(3.0, 4.0)", "ragged vector: 3 vs 2 dims"))) {
       val e = intercept[Exception] {
-        spark.sql(s"SELECT $f(array(1.0, CAST(NULL AS DOUBLE)), array(1.0, 1.0))")
-          .collect()
+        spark.sql(s"SELECT $f($args)").collect()
       }
       val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
         .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
-      assert(msgs.contains("null element"), s"$f -> $msgs")
+      assert(msgs.contains(want), s"$f($args) -> $msgs")
     }
   }
 
