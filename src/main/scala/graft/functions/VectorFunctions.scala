@@ -9,21 +9,18 @@ import org.apache.spark.sql.functions._
   * those three functions: each builds the native [[DotProduct]]
   * expression, so they share its contract (null array → null; null
   * element or length mismatch → a named error) and its left-to-right
-  * IEEE fold. The SQL names `vec_dot`/`vec_cosine` are these same
-  * expressions ([[graft.plans.GraftExtensions]]). Inputs are cast to
+  * IEEE fold. `sqDist` builds [[SqDistance]], which shares that loop and
+  * contract. The SQL names `vec_dot`/`vec_cosine`/`vec_sqdist` are these
+  * same expressions ([[graft.plans.GraftExtensions]]). Inputs are cast to
   * array<double>, so float32 embeddings are computed in double (stable
   * across engines).
   */
 object VectorFunctions {
-  private def asD(c: Column): Column = c.cast("array<double>")
-
   /** Dot product of two equal-length numeric arrays. */
   def dot(a: Column, b: Column): Column = DotProduct(a, b)
 
-  /** Squared L2 distance (`zip_with`/`aggregate`, folded left-to-right). */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(asD(a), asD(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
+  /** Squared L2 distance: the native [[SqDistance]], under `dot`'s contract. */
+  def sqDist(a: Column, b: Column): Column = SqDistance(a, b)
 
   /** L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))

@@ -1,13 +1,10 @@
 package graft.operators
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.{HashPartitioner, Partitioner}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.{Aggregator, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph analytics over a document link graph.
   *
@@ -21,8 +18,9 @@ import org.apache.spark.storage.StorageLevel
   * surface (`/root/reference/hadoop_tutorial/src/Kmeans.java:163-179`)
   * is an iterative driver loop over a bulk-synchronous job — the same
   * execution shape PageRank, BFS and HITS take here: DataFrame
-  * self-joins per superstep for PageRank and BFS, a co-partitioned
-  * keyed RDD loop for HITS, instead of MR rounds.
+  * self-joins per superstep for PageRank and BFS, a chain of
+  * co-partitioned keyed RDD shuffles for HITS that runs as one Spark
+  * job, instead of MR rounds.
   *
   * The edge set is derived deterministically from `documents` keys
   * (each doc "links to" 1–3 pseudo-random others via fixed multiplier
@@ -35,8 +33,13 @@ import org.apache.spark.storage.StorageLevel
   * Scale notes (the part that matters at 100 TB):
   *  - Every superstep shuffles by vertex id only — contributions are
   *    map-side pre-aggregated by the hash-partial of the groupBy (or
-  *    reduceByKey); no driver-held collections besides the |V| scalar,
-  *    HITS' one L1 total per superstep and the final bounded top-k.
+  *    the shuffle's map-side combine); no driver-held collections
+  *    besides the |V| scalar and the final bounded top-k. HITS' L1
+  *    totals travel as shuffle records, never through the driver: each
+  *    of a superstep's P map tasks sends one total record to each of
+  *    its P reduce partitions, P² records per superstep for
+  *    P = `spark.sql.shuffle.partitions` (4·10⁴ at the default 200,
+  *    10⁸ at 10⁴), so a large P costs HITS a quadratic shuffle floor.
   *  - PageRank arithmetic is integer-scaled (rank × 10^12 as BIGINT,
   *    floor division per edge) so sums are exact and shuffle order
   *    cannot move a bit — the same order-independence discipline the
@@ -67,7 +70,14 @@ object Graph {
     * pass. `n` is passed in (one driver-held scalar, counted once by
     * the caller).
     */
-  def linkEdges(docs: DataFrame, n: Long): DataFrame = {
+  def linkEdges(docs: DataFrame, n: Long): DataFrame = edgeRows(docs, n).distinct()
+
+  /** The edge formula of [[linkEdges]], one row per (doc row, j), so a
+    * duplicated doc_id (or 17·Δj ≡ 0 mod n) repeats an edge. A null
+    * doc_id yields no row. No exchange: turning it into an RDD starts
+    * no job.
+    */
+  private def edgeRows(docs: DataFrame, n: Long): DataFrame = {
     // every Graph entry point funnels through here before any `/ n` or
     // `% n`: an empty corpus must die with the contract message, not a
     // bare ArithmeticException (or an ANSI-dependent null modulo)
@@ -79,7 +89,6 @@ object Graph {
       .select(col("src"),
         ((col("src") * 131L + col("j") * 17L) % n).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
   }
 
   /** Undirected edge list with u < v, deduplicated. */
@@ -142,22 +151,16 @@ object Graph {
     val top = pageRankScores(docs, n, iterations)
       .orderBy(col("rank").desc, col("doc_id")).limit(20)
       .collect()
-    topRows(docs.sparkSession, top, Seq("doc_id" -> true, "rank" -> false),
-      col("rank").desc, col("doc_id"))
+    topRows(docs.sparkSession, top, Seq("doc_id" -> true, "rank" -> false))
   }
 
-  /** A driver-held top-k as a one-partition DataFrame of BIGINT
-    * columns (name → nullable), sorted by `order`. `coalesce(1)` keeps
-    * the sort inside one task, so collecting it is one job rather than
-    * a range-partition sample, a shuffle and the result.
+  /** A driver-held, already ordered top-k as a local relation of
+    * BIGINT columns (name → nullable): collecting it starts no job.
     */
   private def topRows(spark: SparkSession, rows: Array[Row],
-                      cols: Seq[(String, Boolean)], order: Column*): DataFrame = {
-    val schema = StructType(cols.map { case (c, nullable) =>
-      StructField(c, LongType, nullable) })
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      .coalesce(1).orderBy(order: _*)
-  }
+                      cols: Seq[(String, Boolean)]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      cols.map { case (c, nullable) => StructField(c, LongType, nullable) }))
 
   /** Global triangle census of the undirected link graph: one row of
     * (n_nodes, n_edges, n_wedges, n_triangles). Wedge count is the
@@ -219,95 +222,142 @@ object Graph {
     * fails with "long overflow" (as ANSI `sum` / `*` did) instead of
     * wrapping.
     *
-    * Execution shape: relational operators build the graph
-    * ([[linkEdges]] and the vertex set, DataFrame API); a keyed RDD
-    * loop runs the supersteps (see [[superstep]]). The edges are cached
-    * twice under ONE `HashPartitioner(spark.sql.shuffle.partitions)`,
-    * keyed by src and keyed by dst, and every score vector carries that
-    * same partitioner, so each superstep's edge join is narrow and its
-    * only exchange is the per-vertex sum. One superstep is one Spark job
-    * with no Catalyst planning: the job materializes the raw scores and
-    * folds their L1 total to the driver (one Long); the normalize is a
-    * `mapValues` that keeps the partitioner. A call runs
-    * `2 · iterations + 2` jobs while the result is built (the
-    * `linkEdges` distinct's map stage, one per superstep, the final
-    * top-20) and one more when the returned 20-row frame is collected:
-    * 6 + 1 for the default 2 iterations, down from 25 + 3 with a
-    * persist-and-collect DataFrame normalize (traced `corpus` run,
-    * seed 1). The default 2 iterations are tuned to the test fixtures'
-    * convergence; each extra iteration adds exactly two such jobs.
-    *
-    * Cached RDDs (the two edge caches, the vertex multiplicities and
-    * every raw score vector) are released in a `finally`, so a failing
-    * superstep leaks none of them.
+    * Execution shape: relational operators build the graph (the
+    * [[linkEdges]] formula and the vertex set, DataFrame API); a chain
+    * of keyed RDD shuffles runs the supersteps (see [[superstep]]), all
+    * under ONE [[VertexPartitioner]] of `spark.sql.shuffle.partitions`
+    * partitions. The edges are shuffled by src, which also drops
+    * duplicate edges (pairs that share a src share a partition), then
+    * by dst; every score vector carries the same partitioner, so each
+    * superstep's edge join is narrow and its only exchange is the
+    * per-vertex sum, which carries the L1 total beside it. Nothing is
+    * persisted and nothing returns to the driver between supersteps:
+    * the final `cogroup` of multiplicities, authorities and hubs and
+    * its bounded top-20 are the call's only action, so a call runs ONE
+    * Spark job (2 · iterations + 4 stages) while the result is built,
+    * and collecting the returned local 20-row frame runs none. A later
+    * superstep re-reads the edge shuffles' files instead of a cache.
+    * The totals cost each superstep P² small shuffle records for
+    * P = `spark.sql.shuffle.partitions` (see [[superstep]]).
+    * The default 2 iterations are tuned to the test fixtures'
+    * convergence; each extra iteration adds exactly two stages.
     */
   def hits(docs: DataFrame, n: Long, iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"hits needs at least one iteration, got $iterations")
     val spark = docs.sparkSession
-    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val cached = ArrayBuffer[RDD[_]]()
-    def keep(r: RDD[(Long, Long)]): RDD[(Long, Long)] = {
-      cached += r
-      r.persist(StorageLevel.MEMORY_AND_DISK)
+    val part = VertexPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val bySrc = edgeRows(docs, n).rdd.map(r => ((r.getLong(0), r.getLong(1)), ()))
+      .reduceByKey(part, (u, _) => u)
+      .mapPartitions(_.map(_._1), preservesPartitioning = true)
+    val byDst = bySrc.map(_.swap).partitionBy(part)
+    // A null doc_id has no edges (edgeRows drops it) and is reinstated
+    // with zero scores at the end; a duplicated one counts once per
+    // row, as the vertex-set join always counted it.
+    val ids = docs.select(col("doc_id").cast("long")).rdd
+    val mult = ids.filter(!_.isNullAt(0)).map(r => (r.getLong(0), 1L))
+      .reduceByKey(part, Math.addExact(_, _))
+    // Score vectors are SPARSE: a vertex absent from `auth`/`hub` has
+    // score 0, because (a) a missing row contributes no terms to the
+    // next superstep's edge-join sum — identical to a present row
+    // contributing 0-valued terms, (b) the L1 total is unchanged by
+    // absent zeros, and (c) the normalize maps 0 to (0·10⁶) div d = 0.
+    // The full vertex set is reinstated once, in the final cogroup.
+    var hub = mult.mapValues(m => Math.multiplyExact(m, Scale))
+    var auth: RDD[(Long, Long)] = null
+    for (_ <- 1 to iterations) {
+      auth = superstep(bySrc, hub, part)
+      hub = superstep(byDst, auth, part)
     }
-    val top = try {
-      val edges = linkEdges(docs, n).rdd.map(r => (r.getLong(0), r.getLong(1)))
-      val bySrc = keep(edges.partitionBy(part))
-      val byDst = keep(edges.map(_.swap).partitionBy(part))
-      // A null doc_id has no edges (linkEdges' filters drop it) and is
-      // reinstated with zero scores at the end; a duplicated one counts
-      // once per row, as the vertex-set join always counted it.
-      val ids = docs.select(col("doc_id").cast("long")).rdd
-      val mult = keep(ids.filter(!_.isNullAt(0)).map(r => (r.getLong(0), 1L))
-        .reduceByKey(part, Math.addExact(_, _)))
-      // Score vectors are SPARSE: a vertex absent from `auth`/`hub` has
-      // score 0, because (a) a missing row contributes no terms to the
-      // next superstep's edge-join sum — identical to a present row
-      // contributing 0-valued terms, (b) the L1 total is unchanged by
-      // absent zeros, and (c) the normalize maps 0 to (0·10⁶) div d = 0.
-      // The full vertex set is reinstated once, in the final join.
-      var hub = mult.mapValues(m => Math.multiplyExact(m, Scale))
-      var auth: RDD[(Long, Long)] = null
-      for (_ <- 1 to iterations) {
-        auth = superstep(bySrc, hub, part, keep)
-        hub = superstep(byDst, auth, part, keep)
+    val nulls = ids.filter(_.isNullAt(0)).map(_ => (Option.empty[Long], 0L, 0L))
+    val top = mult.cogroup(auth, hub, part)
+      .flatMap { case (id, (ms, as, hs)) =>
+        val (a, h) = (as.headOption.getOrElse(0L), hs.headOption.getOrElse(0L))
+        ms.iterator.flatMap(m => Iterator.fill(m.toInt)((Option(id), a, h)))
       }
-      val nulls = ids.filter(_.isNullAt(0)).map(_ => (Option.empty[Long], 0L, 0L))
-      mult.leftOuterJoin(auth, part).leftOuterJoin(hub, part)
-        .flatMap { case (id, ((m, a), h)) =>
-          Iterator.fill(m.toInt)((Option(id), a.getOrElse(0L), h.getOrElse(0L)))
-        }
-        .union(nulls)
-        // auth descending, then doc_id ascending with null first — the
-        // order SQL's `ORDER BY auth DESC, doc_id` gives
-        .takeOrdered(20)(Ordering.by[(Option[Long], Long, Long), (Long, Option[Long])] {
-          case (id, a, _) => (-a, id) })
-    } finally cached.foreach(_.unpersist(blocking = false))
+      .union(nulls)
+      // auth descending, then doc_id ascending with null first — the
+      // order SQL's `ORDER BY auth DESC, doc_id` gives
+      .takeOrdered(20)(Ordering.by[(Option[Long], Long, Long), (Long, Option[Long])] {
+        case (id, a, _) => (-a, id) })
     topRows(spark, top.map { case (id, a, h) => Row(id.map(Long.box).orNull, a, h) },
-      Seq("doc_id" -> true, "auth" -> true, "hub" -> true),
-      col("auth").desc, col("doc_id"))
+      Seq("doc_id" -> true, "auth" -> true, "hub" -> true))
   }
 
   /** One HITS superstep: every vertex's score flows along `adj`
     * (key → neighbour) and sums per neighbour, then the sums are
     * L1-normalized. `adj` and `scores` must both carry `part`, so the
-    * join is narrow and the sum is the step's only exchange; the raw
-    * sums are persisted through `keep` and their L1 total is folded to
-    * the driver by the one job this call runs. The returned normalized
-    * vector is a lazy `mapValues` over the cached sums and keeps `part`.
+    * join is narrow and the sum is the step's only exchange.
+    *
+    * The L1 total rides that same exchange: each map task adds up the
+    * contributions it sends and, after them, sends its partial total
+    * to every reduce partition, keyed by a [[StepKey]] total record
+    * for that partition. The shuffle sums them like any key, and its
+    * key ordering hands each reduce task the exact global total before
+    * its first vertex, so the task normalizes its vertices as it
+    * streams them: no driver round trip, no cache, no accumulator (a
+    * retried map task replaces its whole output, total included), and
+    * the shuffle's own spillable sort is the only buffer. With P =
+    * `part.numPartitions` map tasks each sending P total records, a
+    * superstep shuffles P² total records beside the contributions
+    * (4·10⁴ at P = 200, 10⁸ at P = 10⁴). The returned
+    * vector is lazy and keeps `part`; evaluating it fails with "long
+    * overflow" if a sum or the 10⁶ scaling leaves Long range.
     * (Broadcasting the total back inside one plan instead re-executes
     * the whole upstream lineage at every normalize: ~5× slower at sf0.1.)
     */
   private[graft] def superstep(adj: RDD[(Long, Long)], scores: RDD[(Long, Long)],
-                               part: Partitioner,
-                               keep: RDD[(Long, Long)] => RDD[(Long, Long)]): RDD[(Long, Long)] = {
-    val raw = keep(adj.join(scores, part).values.reduceByKey(part, Math.addExact(_, _)))
-    val total = raw.values.fold(0L)(Math.addExact(_, _))
-    // max(1, ·) guards the tiny-graph case where the total is under
-    // 10^6 and the scaled divisor would be 0 (the oracle mirrors it
-    // with greatest(1, ·)); the empty graph's total is 0 likewise
-    val d = math.max(1L, total / 1000000L)
-    raw.mapValues(x => Math.multiplyExact(x, 1000000L) / d)
+                               part: VertexPartitioner): RDD[(Long, Long)] = {
+    val sends = adj.join(scores, part).mapPartitions { it =>
+      var total = 0L
+      // `++` reads its operand only once the contributions are spent,
+      // so every total record carries this task's whole sum
+      it.map { case (_, (to, s)) =>
+        total = Math.addExact(total, s)
+        (StepKey(total = false, to), s)
+      } ++ Iterator.tabulate(part.numPartitions)(q => (StepKey(total = true, q), total))
+    }
+    val add = (a: Long, b: Long) => Math.addExact(a, b)
+    new ShuffledRDD[StepKey, Long, Long](sends, part)
+      .setAggregator(Aggregator[StepKey, Long, Long]((x: Long) => x, add, add))
+      .setMapSideCombine(true)
+      .setKeyOrdering(StepKey.TotalFirst)
+      .mapPartitions({ it =>
+        val (first, total) = it.next()
+        assert(first.total, s"superstep reduce task read $first before its total")
+        // max(1, ·) guards the tiny-graph case where the total is under
+        // 10^6 and the scaled divisor would be 0 (the oracle mirrors it
+        // with greatest(1, ·)); the empty graph's total is 0 likewise
+        val d = math.max(1L, total / 1000000L)
+        it.map { case (k, x) => (k.id, Math.multiplyExact(x, 1000000L) / d) }
+      }, preservesPartitioning = true)
+  }
+
+  /** A HITS superstep's shuffle key: the summed score of vertex `id`,
+    * or (`total`) the L1-total record bound for reduce partition `id`.
+    */
+  private[graft] final case class StepKey(total: Boolean, id: Long)
+
+  private[graft] object StepKey {
+    /** Total record first, then vertices by id. */
+    val TotalFirst: Ordering[StepKey] = new Ordering[StepKey] {
+      def compare(a: StepKey, b: StepKey): Int =
+        if (a.total != b.total) (if (a.total) -1 else 1)
+        else java.lang.Long.compare(a.id, b.id)
+    }
+  }
+
+  /** HITS' one partitioner: a vertex id, an edge (by its src) and a
+    * vertex [[StepKey]] go to the vertex's hash partition; a total
+    * [[StepKey]] goes to the partition it names.
+    */
+  private[graft] final case class VertexPartitioner(numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key match {
+      case v: Long => vertex(v)
+      case (src: Long, _) => vertex(src)
+      case StepKey(false, v) => vertex(v)
+      case StepKey(true, q) => q.toInt
+    }
+    private def vertex(v: Long): Int = Math.floorMod(java.lang.Long.hashCode(v), numPartitions)
   }
 
   /** Shortest hop distance from `source` over directed link edges,

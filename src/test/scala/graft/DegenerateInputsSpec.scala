@@ -297,27 +297,23 @@ class DegenerateInputsSpec extends SparkSpec {
   }
 
   test("hits superstep: a Long overflow in the sum or the 10^6 scaling fails loudly") {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
     val sc = spark.sparkContext
-    val part = new HashPartitioner(3)
-    val kept = scala.collection.mutable.ArrayBuffer[RDD[_]]()
-    def keep(r: RDD[(Long, Long)]): RDD[(Long, Long)] = { kept += r; r.persist() }
+    val part = Graph.VertexPartitioner(3)
     def keyed(xs: (Long, Long)*) = sc.parallelize(xs, 2).partitionBy(part)
     val adj = keyed(1L -> 9L, 2L -> 9L)
-    try {
-      // two in-links of Long.MaxValue / 2 + 1 each: the per-vertex sum
-      // overflows inside the superstep's own job
-      val big = Long.MaxValue / 2 + 1
-      val sum = intercept[Exception](Graph.superstep(adj, keyed(1L -> big, 2L -> big), part, keep))
-      assert(causes(sum).contains("long overflow"), causes(sum))
-      // sum and total fit, but 10^13 · 10^6 does not: the normalize
-      // fails where the vector is read
-      val scaled = Graph.superstep(adj, keyed(1L -> 5000000000000L, 2L -> 5000000000000L), part, keep)
-      val mul = intercept[Exception](scaled.collect())
-      assert(causes(mul).contains("long overflow"), causes(mul))
-      assert(scaled.partitioner === Some(part))
-    } finally kept.foreach(_.unpersist())
+    // the superstep is lazy: both overflows surface where the returned
+    // vector is evaluated, inside the one job that evaluation runs
+    // two in-links of Long.MaxValue / 2 + 1 each: the per-vertex sum
+    // (and the L1 total beside it) overflows
+    val big = Long.MaxValue / 2 + 1
+    val summed = Graph.superstep(adj, keyed(1L -> big, 2L -> big), part)
+    val sum = intercept[Exception](summed.collect())
+    assert(causes(sum).contains("long overflow"), causes(sum))
+    // sum and total fit, but 10^13 · 10^6 does not: the normalize fails
+    val scaled = Graph.superstep(adj, keyed(1L -> 5000000000000L, 2L -> 5000000000000L), part)
+    val mul = intercept[Exception](scaled.collect())
+    assert(causes(mul).contains("long overflow"), causes(mul))
+    assert(scaled.partitioner === Some(part))
   }
 
   test("hits: a failing call releases every RDD it cached") {
@@ -325,8 +321,9 @@ class DegenerateInputsSpec extends SparkSpec {
     val sc = spark.sparkContext
     // a stale n = 2 over 1000 ids sends every edge into vertex 0 or 1:
     // about 600 in-links of 10^12 each, whose 10^6 scaling overflows in
-    // the second superstep, after the edge caches and the first score
-    // vector are persisted
+    // the second superstep. HITS caches nothing (its supersteps re-read
+    // shuffle files), so this pins that a failing call leaves no RDD
+    // persisted and fails with "long overflow", not a wrapped score
     val docs = (0L until 1000L).map(i => (i, "t")).toDF("doc_id", "text")
     val before = sc.getPersistentRDDs.keySet
     val e = intercept[Exception](Graph.hits(docs, n = 2))

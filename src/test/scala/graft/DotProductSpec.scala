@@ -19,18 +19,6 @@ class DotProductSpec extends SparkSpec {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
 
-  /** Runs `body` with generated code forced on (whole-stage codegen, no
-    * interpreted fallback) or off (interpreted expression eval). */
-  private def withCodegen[T](on: Boolean)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.codegen.wholeStage" -> on.toString,
-      "spark.sql.codegen.factoryMode" -> (if (on) "CODEGEN_ONLY" else "NO_CODEGEN"))
-    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   /** One (a, b) row over an RDD scan, so the optimizer cannot fold or
     * locally evaluate the expressions under test before they run. */
   private def pair(a: Seq[java.lang.Double], b: Seq[java.lang.Double]): DataFrame = {

@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.operators.Graph
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.functions._
@@ -125,67 +121,80 @@ class GraphSpec extends SparkSpec {
     df.collect().toSeq.map(r =>
       (r.getAs[Long]("doc_id"), r.getAs[Long]("auth"), r.getAs[Long]("hub")))
 
+  private def withParts[T](parts: Int, aqe: Boolean)(body: => T): T = withConf(
+    "spark.sql.shuffle.partitions" -> parts.toString,
+    "spark.sql.adaptive.enabled" -> aqe.toString)(body)
+
+  private def idDocs(ids: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (i, "t")).toDF("doc_id", "text")
+  }
+
   test("hits: top-20 equals a plain-Scala integer replay at any partitioning, AQE on or off") {
     val ids = docsDf.select(col("doc_id").cast("long")).collect().toSeq.map(_.getLong(0))
-    val want = replayHits(ids, n, iterations = 2)
-    assert(want.length === 20)
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      for (parts <- Seq(1, 3, 7); aqe <- Seq(true, false)) {
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
-        assert(hitsRows(Graph.hits(docsDf, n, iterations = 2)) === want,
-          s"shuffle.partitions=$parts aqe=$aqe")
-      }
-    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
-  /** Result of `body` and the number of jobs it started. Only jobs of a
-    * job group set here are counted, so earlier tests' late events do
-    * not leak in; a sentinel job outside the group, run after `body`,
-    * drains the listener bus (it delivers events in order).
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"graph-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == group + "-sentinel" => drained.countDown()
-          case _ => ()
-        }
+    for (iterations <- Seq(1, 2, 3)) {
+      val want = replayHits(ids, n, iterations)
+      assert(want.length === 20)
+      for (parts <- Seq(1, 3, 7); aqe <- Seq(true, false))
+        assert(withParts(parts, aqe)(hitsRows(Graph.hits(docsDf, n, iterations))) === want,
+          s"iterations=$iterations shuffle.partitions=$parts aqe=$aqe")
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-sentinel", "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
   }
 
-  test("hits: 2·iterations + 2 jobs while built, one job to collect") {
+  test("hits: a one-document corpus has only a self-loop, so no edges and zero scores") {
+    // 0 → (17j) mod 1 = 0 for every j: the one candidate edge is a
+    // self-loop, so every superstep's total is 0 and max(1, ·) divides
+    for (iterations <- Seq(1, 2); parts <- Seq(1, 3)) {
+      val got = withParts(parts, aqe = true)(hitsRows(Graph.hits(idDocs(Seq(0L)), n = 1, iterations)))
+      assert(got === Seq((0L, 0L, 0L)), s"iterations=$iterations shuffle.partitions=$parts")
+      assert(got === replayHits(Seq(0L), 1, iterations))
+    }
+  }
+
+  test("hits: more shuffle partitions than vertices, so some reduce tasks see only the total") {
+    val ids = Seq(0L, 1L, 2L, 3L, 4L, 5L, 5L)
+    for (iterations <- Seq(1, 2, 3))
+      assert(withParts(16, aqe = false)(hitsRows(Graph.hits(idDocs(ids), n = 6, iterations))) ===
+        replayHits(ids, 6, iterations), s"iterations=$iterations")
+  }
+
+  test("hits superstep: a total under 10^6 divides by max(1, ·), not by 0") {
+    val sc = spark.sparkContext
+    for (parts <- Seq(1, 3, 7)) {
+      val part = Graph.VertexPartitioner(parts)
+      def keyed(xs: (Long, Long)*) = sc.parallelize(xs, 2).partitionBy(part)
+      // 9 ← 1 and 2, 8 ← 3: raw sums 5 and 4, total 9, so d = max(1, 0) = 1
+      val out = Graph.superstep(keyed(1L -> 9L, 2L -> 9L, 3L -> 8L),
+        keyed(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 7L), part)
+      assert(out.collect().toMap === Map(9L -> 5000000L, 8L -> 4000000L), s"partitions=$parts")
+      assert(out.partitioner === Some(part))
+    }
+  }
+
+  test("hits: collecting the result twice and calling hits twice give identical rows") {
+    val df = Graph.hits(docsDf, n)
+    val once = hitsRows(df)
+    assert(once.length === 20)
+    assert(hitsRows(df) === once)
+    assert(hitsRows(Graph.hits(docsDf, n)) === once)
+  }
+
+  test("hits: one job while built (2·iterations + 4 stages), none to collect") {
     val (docs, nv) = (docsDf, n)
     for (iterations <- Seq(1, 2, 3)) {
       val (df, built) = jobsOf(Graph.hits(docs, nv, iterations))
-      assert(built <= 2 * iterations + 2, s"iterations=$iterations")
+      assert(built === Ran(jobs = 1, stages = 2 * iterations + 4), s"iterations=$iterations")
       val (rows, collected) = jobsOf(df.collect())
       assert(rows.length === 20)
-      assert(collected === 1, s"iterations=$iterations")
+      assert(collected === Ran(0, 0), s"iterations=$iterations")
     }
   }
 
-  test("pagerank: collecting the 20-row result is one job") {
+  test("pagerank: collecting the 20-row result starts no job") {
     val df = Graph.pageRank(docsDf, n, iterations = 2)
     val (rows, collected) = jobsOf(df.collect())
     assert(rows.length === 20)
-    assert(collected === 1)
+    assert(collected === Ran(0, 0))
   }
 
   test("bfs: source at 0, neighbors at 1, dist obeys edge relaxation") {

@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.operators.KMeans
 import graft.operators.KMeans.{EuclideanSq, Metric, Normalized, SqEuclidean}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
 
 /** `KMeans.lloyd` against a plain-Scala Lloyd replay on a generated,
@@ -153,33 +150,14 @@ class KMeansLloydSpec extends SparkSpec {
 
   test("each round is one job of one stage") {
     import spark.implicits._
-    val sc = spark.sparkContext
     // cached by the caller, and not: a local frame with no shuffle, whose
     // vector cache is filled by round 1's own job
     val cached = frame(3).persist()
     cached.count()
     val uncached = rows.map(_.toSeq).toDF("vec")
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stages.incrementAndGet()
-    }
     for ((input, df) <- Seq("cached" -> cached, "uncached" -> uncached); m <- metrics) {
-      jobs.set(0); stages.set(0)
-      sc.addSparkListener(listener)
-      try {
-        val fit = KMeans.lloyd(df, "vec", seeds, m, maxIter = 3)
-        // listener events arrive asynchronously: wait for the expected
-        // ones, then a little longer for any extra job's
-        val deadline = System.nanoTime() + 10000000000L
-        while (stages.get() < fit.iterations && System.nanoTime() < deadline)
-          Thread.sleep(20)
-        Thread.sleep(200)
-        assert((jobs.get(), stages.get()) === (fit.iterations, fit.iterations),
-          s"$m, $input input")
-      } finally sc.removeSparkListener(listener)
+      val (fit, ran) = jobsOf(KMeans.lloyd(df, "vec", seeds, m, maxIter = 3))
+      assert(ran === Ran(fit.iterations, fit.iterations), s"$m, $input input")
     }
     cached.unpersist()
   }

@@ -346,35 +346,25 @@ class PlanSpec extends SparkSpec {
   }
 
   test("exact similarity ops: blocked grid, no join, no driver-side data path") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    // the parquet source itself runs file-listing jobs — build it (and let
-    // those jobs finish) before counting
+    // the parquet source itself runs file-listing jobs — build it
+    // before counting
     val emb = Tables.embeddings(spark, sf)
     emb.queryExecution.sparkPlan
-    Thread.sleep(200)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      // building these DataFrames must launch NO job — the former
-      // implementation ran a full-table collect() at build time
+    // building these DataFrames must launch NO job — the former
+    // implementation ran a full-table collect() at build time
+    val ((pTopk, pPairs), ran) = jobsOf {
       val topk = graft.operators.Similarity.bruteForceTopK(
         emb, "vec_id", "embedding", 5)
       val pairs = graft.operators.Similarity.cosineNearDupPairs(
         emb, "vec_id", "embedding", 0.45)
-      val pTopk = topk.queryExecution.sparkPlan.toString
-      val pPairs = pairs.queryExecution.sparkPlan.toString
-      Thread.sleep(300) // let any (unexpected) async job-start events land
-      assert(jobs.get() === 0, "exact similarity op ran a driver-side job at build time")
-      // blocked all-pairs shape: groupByKey + MapGroups, never a join
-      Seq(pTopk, pPairs).foreach { p =>
-        assert(p.contains("MapGroups"), p.take(800))
-        assert(!p.contains("Join"), p.take(800))
-      }
-    } finally sc.removeSparkListener(listener)
+      (topk.queryExecution.sparkPlan.toString, pairs.queryExecution.sparkPlan.toString)
+    }
+    assert(ran === Ran(0, 0), "exact similarity op ran a driver-side job at build time")
+    // blocked all-pairs shape: groupByKey + MapGroups, never a join
+    Seq(pTopk, pPairs).foreach { p =>
+      assert(p.contains("MapGroups"), p.take(800))
+      assert(!p.contains("Join"), p.take(800))
+    }
   }
 
   test("ivf-pq: query side meets the codes through a cell equi-join") {

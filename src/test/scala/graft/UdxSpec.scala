@@ -1,7 +1,9 @@
 package graft
 
 import graft.functions.{Udx, VectorFunctions}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** SQL-registered UDx surface (SURVEY §2B UDx row): each registration must
   * be callable from spark.sql and agree with its Column-API hot path.
@@ -32,10 +34,11 @@ class UdxSpec extends SparkSpec {
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
 
     assert(viaSql.nonEmpty && viaSql.keySet === viaCol.keySet)
-    // vec_dot/vec_cosine ARE the Column API's expressions: exact equality
+    // vec_dot/vec_cosine/vec_sqdist ARE the Column API's expressions:
+    // exact equality
     viaSql.foreach { case (k, (d, c, s)) =>
       val (d2, c2, s2) = viaCol(k)
-      assert(d === d2 && c === c2 && math.abs(s - s2) < 1e-9, s"$k")
+      assert(d === d2 && c === c2 && s === s2, s"$k")
     }
   }
 
@@ -61,6 +64,37 @@ class UdxSpec extends SparkSpec {
       val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
         .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
       assert(msgs.contains(want), s"$f($args) -> $msgs")
+    }
+  }
+
+  test("sqDist and vec_sqdist share one contract on dirty rows, codegen on/off") {
+    // one (a, b) row over an RDD scan, so the optimizer cannot fold the
+    // expression before it runs
+    def pair(a: Seq[java.lang.Double], b: Seq[java.lang.Double]) = {
+      val t = ArrayType(DoubleType, containsNull = true)
+      spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(a, b)), 1),
+        StructType(Seq(StructField("a", t), StructField("b", t))))
+    }
+    def d(xs: java.lang.Double*): Seq[java.lang.Double] = xs
+    val spellings = Seq[(String, DataFrame => DataFrame)](
+      "sqDist" -> (_.select(VectorFunctions.sqDist(col("a"), col("b")))),
+      "vec_sqdist" -> (_.select(expr("vec_sqdist(a, b)"))))
+    for ((name, f) <- spellings; on <- Seq(true, false)) {
+      def run(a: Seq[java.lang.Double], b: Seq[java.lang.Double]) =
+        withCodegen(on)(f(pair(a, b)).collect().head)
+      assert(run(d(1.0, 2.0), d(4.0, 6.0)).getDouble(0) === 25.0, s"$name (codegen=$on)")
+      assert(run(d(1.0, 2.0), null).isNullAt(0), s"$name (codegen=$on)")
+      assert(run(null, d(1.0)).isNullAt(0), s"$name (codegen=$on)")
+      for ((a, b, want) <- Seq(
+          (d(1.0, null), d(1.0, 1.0), "null element at index 1"),
+          (d(1.0, 1.0), d(null, 1.0), "null element at index 0"),
+          (d(1.0, 2.0, 5.0), d(3.0, 4.0), "ragged vector: 3 vs 2 dims"),
+          (d(3.0, 4.0), d(1.0, 2.0, 5.0), "ragged vector: 2 vs 3 dims"))) {
+        val e = intercept[Exception](run(a, b))
+        val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+          .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
+        assert(msgs.contains(want), s"$name (codegen=$on) on ($a, $b): $msgs")
+      }
     }
   }
 
